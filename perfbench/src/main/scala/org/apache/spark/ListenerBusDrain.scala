@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** Waits until every listener event posted so far has been delivered. The
+  * bus is asynchronous and `waitUntilEmpty` is Spark-private, hence this
+  * package.
+  */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
