@@ -62,6 +62,11 @@ object Status {
 /** Per-partition lineage/metrics row — the resume checkpoint unit
   * (reference: tika-pipes PipesReporter; north rule "checkpoints
   * per-partition lineage ... into a metrics table").
+  *
+  * The task that extracts a partition folds this row from the documents
+  * it yields (`Pipeline.run`), so it describes exactly the rows that
+  * partition committed under `run_id`. `wall_ms` is that task's own time,
+  * from its first shuffle read to its last extracted row, not the run's.
   */
 final case class PartitionMetrics(
     partition_id: Int,
@@ -72,6 +77,7 @@ final case class PartitionMetrics(
     n_chars: Long,
     n_success: Long,
     n_failed: Long,
+    run_id: String,
     parser_version: String,
     wall_ms: Long
 )

@@ -1,8 +1,12 @@
 package graft.engine
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core._
 
 /** The Dataset-level extraction pipeline — the reference's tika-pipes
@@ -14,10 +18,14 @@ import graft.core._
   *    initialized once per partition, mirroring Tika's parser reuse —
   *    parser/Parser.java thread-safety contract);
   *  - per-partition lineage rows (doc_id ranges, parser version, span
-  *    counts, wall time) are the resume checkpoint (PipesReporter / the
-  *    north rule's Iceberg metrics table);
-  *  - skew: oversized docs are spread by hash-repartitioning on doc_id
-  *    before the parse stage (salting); AQE coalesces small partitions.
+  *    counts, the task's own wall time) are the resume checkpoint
+  *    (PipesReporter / the north rule's Iceberg metrics table). The
+  *    extracting task folds them from the rows it yields, so the job
+  *    never reads its own output back;
+  *  - skew: [[run]] hash-partitions on doc_id into the session's
+  *    `spark.sql.shuffle.partitions` before the parse stage, so oversized
+  *    docs generated in runs (or packed into one input file) land on
+  *    distinct partitions.
   *
   * At 100 TB the input is a partitioned Parquet/Iceberg table: Catalyst
   * prunes to the (doc_id, spans) columns, and the resume filter is a
@@ -30,115 +38,104 @@ object Pipeline {
       cfg: Extractor.Config = Extractor.DefaultConfig): Dataset[ExtractedDoc] = {
     import ds.sparkSession.implicits._
     ds.mapPartitions { it =>
-      // per-partition init happens here (registry is a JVM-singleton; at
-      // cluster scale it would be a broadcast value — see extractSalted)
+      // per-partition init happens here (the registry is a JVM singleton;
+      // at cluster scale it would be a broadcast value)
       it.map(row => Extractor.extract(row, cfg))
     }
   }
 
-  /** Skew-aware variant: estimate payload weight, spread heavy rows
-    * uniformly across `numPartitions` before parsing (salting; SURVEY.md
-    * §4 "salting of oversized-document partitions").
-    */
-  def extractSalted(ds: Dataset[DocRow], numPartitions: Int,
-      cfg: Extractor.Config = Extractor.DefaultConfig): Dataset[ExtractedDoc] = {
-    import ds.sparkSession.implicits._
-    // hash-spread on doc_id: oversized docs generated in runs (or packed
-    // into the same input file) land on distinct partitions
-    val spread = ds.repartition(numPartitions, col("doc_id"))
-    extract(spread, cfg)
-  }
-
-  /** Output schema with the physical partition id for lineage. */
-  def extractWithPartitionId(ds: Dataset[DocRow],
-      cfg: Extractor.Config = Extractor.DefaultConfig): DataFrame = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      it.map { row =>
-        val d = Extractor.extract(row, cfg)
-        (pid, d.doc_id, d.mime, d.status, d.spans, d.meta, d.n_spans, d.n_chars)
-      }
-    }.toDF("partition_id", "doc_id", "mime", "status", "spans", "meta",
-      "n_spans", "n_chars")
-  }
-
-  /** End-to-end job: extract → write output table → append per-partition
-    * lineage/metrics. Idempotent per run; see [[resumeFilter]].
+  /** End-to-end job: hash-partition on doc_id → extract → write output
+    * table → append per-partition lineage. Idempotent per run; see
+    * [[resumeFilter]].
     */
   def run(spark: SparkSession, input: Dataset[DocRow], outDir: String,
-      metricsDir: String, numPartitions: Int = 32,
+      metricsDir: String,
       cfg: Extractor.Config = Extractor.DefaultConfig): Unit =
-    writeWithMetrics(spark,
-      extractWithPartitionId(
-        input.repartition(numPartitions, col("doc_id")), cfg),
-      outDir, metricsDir)
+    writeWithLineage(spark,
+      input.repartition(width(spark), col("doc_id")), outDir, metricsDir, cfg)
 
-  /** Write output + per-partition lineage. Each run lands in its own
-    * `run_id=<uuid>/` partition directory, so the lineage aggregation
-    * reads back ONLY this run's committed files — O(this run), never
-    * O(all data ever written) (the same scale bug fixed in BucketedRun's
-    * manifest this round), and it is exactly what the sink committed.
-    * (Aggregating a cached pre-write frame instead is unsound here: the
-    * append invalidates any cached plan that references outDir — e.g. a
-    * resume anti-join input — and the recompute re-lists the directory
-    * it just wrote to.) Readers of outDir get `run_id` back via
-    * partition discovery. Metrics are written only after the data write
-    * commits, so a failed run leaves no lineage row.
-    *
-    * Layout note: outDir uses Hive-style `run_id=` directories from this
-    * version on; an outDir written by the flat pre-run_id layout cannot
-    * be appended to (Spark partition discovery rejects mixed depths,
-    * loudly) — resume into a fresh directory instead of mixing layouts.
+  /** One output file and one lineage row per partition of this width. */
+  private def width(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+  /** The entries of `dir` a Spark reader would see (not `_`/`.`-named);
+    * none when `dir` is missing or holds only the `_SUCCESS` of a job that
+    * wrote no rows — exactly "nothing committed".
     */
-  private def writeWithMetrics(spark: SparkSession,
-      extracted: DataFrame, outDir: String, metricsDir: String): Unit = {
+  private def entries(spark: SparkSession, dir: String): Seq[FileStatus] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.filterNot { st =>
+      val n = st.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+  }
+
+  /** Extract, write output into its own `run_id=<uuid>/` directory
+    * (readers get `run_id` back via partition discovery), then append this
+    * run's lineage.
+    *
+    * Each extracting task folds the rows it yields into its partition's
+    * [[PartitionMetrics]] and adds that row to a per-run accumulator. The
+    * extraction runs in the write job's result stage, and Spark applies a
+    * result task's accumulator update once per partition, from the
+    * successful (committed) attempt only, so the driver holds one row per
+    * non-empty committed partition once the write returns. A failed write
+    * throws before any lineage is written; an empty input (a fully-resumed
+    * rerun) writes neither a run directory nor a lineage row.
+    */
+  private def writeWithLineage(spark: SparkSession, input: Dataset[DocRow],
+      outDir: String, metricsDir: String, cfg: Extractor.Config): Unit = {
     import spark.implicits._
     // Legacy-layout guard: an outDir written by the flat pre-run_id
     // layout (parquet files at the top level) cannot take a run_id=
     // append — partition discovery would fail at READ time with an
     // inscrutable mixed-depth error. Fail the write with an explicit
     // migration message instead (see FIXTURES.md "Output layout").
-    val hPath = new org.apache.hadoop.fs.Path(outDir)
-    val hFs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (hFs.exists(hPath) &&
-        hFs.listStatus(hPath).exists(st =>
+    if (entries(spark, outDir).exists(st =>
           st.isFile && st.getPath.getName.endsWith(".parquet")))
       throw new IllegalStateException(
         s"outDir $outDir holds a legacy flat (pre-run_id) layout; " +
           "write this run into a fresh directory — mixing layouts breaks " +
           "partition discovery for every reader")
-    val t0 = System.currentTimeMillis()
     val runId = java.util.UUID.randomUUID().toString
-    extracted.withColumn("run_id", lit(runId))
-      .write.mode("append").partitionBy("run_id").parquet(outDir)
-    val wall = System.currentTimeMillis() - t0
-    // an empty input (fully-resumed rerun) writes no rows and therefore
-    // no run directory — a no-op run adds no lineage row. ONLY the
-    // missing-path case may be swallowed: any other failure must
-    // surface, or a committed run would silently lack its lineage row
-    // and later resumes would re-extract it.
-    val committed =
-      try spark.read.parquet(s"$outDir/run_id=$runId")
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND") => return
+    val lineage = spark.sparkContext.collectionAccumulator[PartitionMetrics]("lineage")
+    input.mapPartitions { it =>
+      val t0 = System.nanoTime()
+      val pid = TaskContext.getPartitionId()
+      var lo, hi: String = null
+      var n, spans, chars, ok = 0L
+      val docs = it.map { row =>
+        val d = Extractor.extract(row, cfg)
+        // bounds skip null ids, as SQL min/max do
+        if (d.doc_id != null) {
+          if (lo == null || sqlOrder(d.doc_id, lo) < 0) lo = d.doc_id
+          if (hi == null || sqlOrder(d.doc_id, hi) > 0) hi = d.doc_id
+        }
+        n += 1; spans += d.n_spans; chars += d.n_chars
+        if (d.status.startsWith(Status.ParseSuccess)) ok += 1
+        (pid, d.doc_id, d.mime, d.status, d.spans, d.meta, d.n_spans, d.n_chars)
       }
-    val metrics = committed
-      .groupBy($"partition_id")
-      .agg(
-        min($"doc_id").as("doc_id_min"), max($"doc_id").as("doc_id_max"),
-        count(lit(1)).as("n_docs"), sum($"n_spans").as("n_spans"),
-        sum($"n_chars").as("n_chars"),
-        sum(when($"status".startsWith("parse_success"), 1L).otherwise(0L))
-          .as("n_success"),
-        sum(when($"status".startsWith("parse_success"), 0L).otherwise(1L))
-          .as("n_failed"))
+      // the by-name tail runs once, after the writer drained the last row
+      docs ++ {
+        if (n > 0) lineage.add(PartitionMetrics(pid, lo, hi, n, spans, chars,
+          ok, n - ok, runId, Model.ParserVersion, (System.nanoTime() - t0) / 1000000))
+        Iterator.empty
+      }
+    }.toDF("partition_id", "doc_id", "mime", "status", "spans", "meta",
+      "n_spans", "n_chars")
       .withColumn("run_id", lit(runId))
-      .withColumn("parser_version", lit(Model.ParserVersion))
-      .withColumn("wall_ms", lit(wall))
-    metrics.write.mode("append").parquet(metricsDir)
+      .write.mode("append").partitionBy("run_id").parquet(outDir)
+    val rows = lineage.value.asScala.toSeq.sortBy(_.partition_id)
+    if (rows.nonEmpty) rows.toDS().coalesce(1).write.mode("append").parquet(metricsDir)
   }
+
+  /** Spark's string order (UTF-8 bytes), the order `min`/`max` and
+    * [[resumeFilterByRange]]'s `between` compare doc ids in.
+    */
+  private def sqlOrder(a: String, b: String): Int =
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
 
   /** Per-partition wall-time instrumentation: runs the full extraction on
     * each partition and emits one timing row per partition — the
@@ -171,9 +168,11 @@ object Pipeline {
   def resumeFilter(input: Dataset[DocRow], outDir: String): Dataset[DocRow] = {
     val spark = input.sparkSession
     import spark.implicits._
-    val done =
-      try spark.read.parquet(outDir).select("doc_id").distinct()
-      catch { case _: Exception => return input }
+    // only an outDir with nothing in it means "nothing committed"; any
+    // read failure must surface, or the job would re-extract and
+    // duplicate every committed row
+    if (entries(spark, outDir).isEmpty) return input
+    val done = spark.read.parquet(outDir).select("doc_id").distinct()
     input.join(done, Seq("doc_id"), "left_anti").as[DocRow]
   }
 
@@ -183,12 +182,10 @@ object Pipeline {
     * a pure predicate instead of an anti-join.
     */
   def runRanged(spark: SparkSession, input: Dataset[DocRow], outDir: String,
-      metricsDir: String, numPartitions: Int = 32,
+      metricsDir: String,
       cfg: Extractor.Config = Extractor.DefaultConfig): Unit =
-    writeWithMetrics(spark,
-      extractWithPartitionId(
-        input.repartitionByRange(numPartitions, col("doc_id")), cfg),
-      outDir, metricsDir)
+    writeWithLineage(spark,
+      input.repartitionByRange(width(spark), col("doc_id")), outDir, metricsDir, cfg)
 
   /** Resume as a partition-prunable range predicate (the variant the
     * round-1 comment promised): committed (doc_id_min, doc_id_max)
@@ -209,13 +206,13 @@ object Pipeline {
   def resumeFilterByRange(input: Dataset[DocRow], metricsDir: String): Dataset[DocRow] = {
     val spark = input.sparkSession
     import spark.implicits._
-    val intervals =
-      try spark.read.parquet(metricsDir)
-        .select("doc_id_min", "doc_id_max")
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)))
-        .sortBy(_._1)
-      catch { case _: Exception => return input }
+    // as in resumeFilter: read failures surface
+    if (entries(spark, metricsDir).isEmpty) return input
+    val intervals = spark.read.parquet(metricsDir)
+      .select("doc_id_min", "doc_id_max")
+      .collect()
+      .map(r => (r.getString(0), r.getString(1)))
+      .sortBy(_._1)
     if (intervals.isEmpty) return input
     // merge overlapping/adjacent intervals (doc ids are fixed-width, so
     // lexicographic order == numeric order)

@@ -123,14 +123,14 @@ class AdviceRound3Spec extends AnyFunSuite {
       .toDF().write.parquet(s"$dir/out")
     val e = intercept[IllegalStateException] {
       graft.engine.Pipeline.run(spark, graft.corpus.Corpus.docRows(spark, 20, 2),
-        s"$dir/out", s"$dir/metrics", numPartitions = 2)
+        s"$dir/out", s"$dir/metrics")
     }
     assert(e.getMessage.contains("legacy flat"))
     // a fresh directory (and subsequent run_id= appends) still work
     graft.engine.Pipeline.run(spark, graft.corpus.Corpus.docRows(spark, 20, 2),
-      s"$dir/out2", s"$dir/metrics2", numPartitions = 2)
+      s"$dir/out2", s"$dir/metrics2")
     graft.engine.Pipeline.run(spark, graft.corpus.Corpus.docRows(spark, 20, 2),
-      s"$dir/out2", s"$dir/metrics2", numPartitions = 2)
+      s"$dir/out2", s"$dir/metrics2")
     assert(spark.read.parquet(s"$dir/out2").select("run_id").distinct().count() == 2)
   }
 

@@ -36,9 +36,8 @@ class LzwSpec extends AnyFunSuite {
   test("the reference's .Z OOM vector is rejected at the header") {
     // testZ_oom.Z is 4 bytes with maxbits=30 — an allocation bomb against
     // decoders that size tables from the header; rejected as malformed
-    intercept[Lzw.LzwMalformed] {
-      Lzw.decompress(fixture("testZ_oom.Z"))
-    }
+    val oom = fixture("testZ_oom.Z")
+    intercept[Lzw.LzwMalformed] { Lzw.decompress(oom) }
   }
 
   test(".tar.Z recurses through the engine") {

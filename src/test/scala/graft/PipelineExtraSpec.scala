@@ -127,8 +127,7 @@ class BucketedRunSpec extends AnyFunSuite {
   test("runRanged + resumeFilterByRange: pure-predicate resume, no join") {
     val base = java.nio.file.Files.createTempDirectory("graftrange").toString
     val outDir = s"$base/out"; val metricsDir = s"$base/metrics"
-    Pipeline.runRanged(spark, Corpus.docRows(spark, 200, 4), outDir, metricsDir,
-      numPartitions = 4)
+    Pipeline.runRanged(spark, Corpus.docRows(spark, 200, 4), outDir, metricsDir)
     // full coverage → nothing left
     assert(Pipeline.resumeFilterByRange(Corpus.docRows(spark, 200, 4),
       metricsDir).count() == 0)

@@ -69,11 +69,11 @@ class ReviewRegressionSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     val dir = java.nio.file.Files.createTempDirectory("graftrun2").toString
     val a = Corpus.docRows(spark, 100, 4)
-    graft.engine.Pipeline.run(spark, a, s"$dir/out", s"$dir/metrics", 4)
+    graft.engine.Pipeline.run(spark, a, s"$dir/out", s"$dir/metrics")
     // second run with the delta only (as resume would)
     val b = Corpus.docRows(spark, 150, 4)
     val delta = graft.engine.Pipeline.resumeFilter(b, s"$dir/out")
-    graft.engine.Pipeline.run(spark, delta, s"$dir/out", s"$dir/metrics", 4)
+    graft.engine.Pipeline.run(spark, delta, s"$dir/out", s"$dir/metrics")
     val m = spark.read.parquet(s"$dir/metrics")
     import org.apache.spark.sql.functions._
     assert(m.select("run_id").distinct().count() == 2)

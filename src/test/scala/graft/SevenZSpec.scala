@@ -44,12 +44,11 @@ class SevenZSpec extends AnyFunSuite {
   }
 
   test("encrypted 7z archives fail the parse, not the task") {
-    intercept[SevenZ.SevenZMalformed] {
-      // full_encrypted.7z: even the header is AES-coded
-      SevenZ.entries(fixture("full_encrypted.7z"))
-    }
+    // full_encrypted.7z: even the header is AES-coded
+    val enc = fixture("full_encrypted.7z")
+    intercept[SevenZ.SevenZMalformed] { SevenZ.entries(enc) }
     val out = Extractor.extract(DocRow("enc",
-      Seq(Span("bytes", Corpus.b64(fixture("full_encrypted.7z")), null, 0))))
+      Seq(Span("bytes", Corpus.b64(enc), null, 0))))
     assert(out.status == Status.ParseException)
   }
 

@@ -41,7 +41,7 @@ class PipelineSpec extends AnyFunSuite {
   test("pipeline run writes output + lineage metrics; resume skips done rows") {
     val dir = java.nio.file.Files.createTempDirectory("graftpipe").toString
     val input = Corpus.docRows(spark, 200, 4)
-    Pipeline.run(spark, input, s"$dir/out", s"$dir/metrics", numPartitions = 4)
+    Pipeline.run(spark, input, s"$dir/out", s"$dir/metrics")
     val out = spark.read.parquet(s"$dir/out")
     assert(out.count() == 200)
     val metrics = spark.read.parquet(s"$dir/metrics")
@@ -55,6 +55,61 @@ class PipelineSpec extends AnyFunSuite {
     // resume with a larger input: only the delta remains
     val bigger = Corpus.docRows(spark, 250, 4)
     assert(Pipeline.resumeFilter(bigger, s"$dir/out").count() == 50)
+  }
+
+  test("lineage rows equal a re-aggregation of the committed output") {
+    val dir = java.nio.file.Files.createTempDirectory("graftlineage").toString
+    // ids descend within each input split, so no extracting task sees
+    // its partition's ids in order
+    import spark.implicits._
+    val input = Corpus.docRows(spark, 300, 3).mapPartitions(_.toVector.reverseIterator)
+    Pipeline.run(spark, input, s"$dir/out", s"$dir/metrics")
+    val metrics = spark.read.parquet(s"$dir/metrics")
+    val runId = metrics.select("run_id").distinct().collect()
+      .map(_.getString(0)).toSeq match {
+      case Seq(id) => id
+      case ids => fail(s"expected one run_id, got $ids")
+    }
+    // the oracle: the grouping the job used to run over its own output
+    val committed = spark.read.parquet(s"$dir/out/run_id=$runId")
+    val oracle = committed.groupBy(col("partition_id")).agg(
+      min(col("doc_id")).as("doc_id_min"), max(col("doc_id")).as("doc_id_max"),
+      count(lit(1)).as("n_docs"), sum(col("n_spans")).as("n_spans"),
+      sum(col("n_chars")).as("n_chars"),
+      sum(when(col("status").startsWith("parse_success"), 1L).otherwise(0L))
+        .as("n_success"),
+      sum(when(col("status").startsWith("parse_success"), 0L).otherwise(1L))
+        .as("n_failed"))
+    val cols = Seq("partition_id", "doc_id_min", "doc_id_max", "n_docs",
+      "n_spans", "n_chars", "n_success", "n_failed")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    assert(rows(metrics) == rows(oracle))
+    assert(metrics.filter(col("run_id") =!= runId ||
+      col("parser_version") =!= graft.core.Model.ParserVersion ||
+      col("wall_ms") < 0).count() == 0)
+    val nLineage = metrics.count()
+    assert(nLineage <= spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    assert(committed.count() == 300)
+    // a rerun whose resume delta is empty adds no lineage row and no output
+    val delta = Pipeline.resumeFilter(input, s"$dir/out")
+    Pipeline.run(spark, delta, s"$dir/out", s"$dir/metrics")
+    assert(spark.read.parquet(s"$dir/metrics").count() == nLineage)
+    assert(spark.read.parquet(s"$dir/out").count() == 300)
+  }
+
+  test("resume surfaces an unreadable outDir instead of re-extracting") {
+    val dir = java.nio.file.Files.createTempDirectory("graftgarbage").toString
+    val part = java.nio.file.Paths.get(dir, "out", "run_id=x", "part-0.parquet")
+    java.nio.file.Files.createDirectories(part.getParent)
+    java.nio.file.Files.write(part, "not parquet".getBytes("UTF-8"))
+    val input = Corpus.docRows(spark, 20, 2)
+    intercept[Exception] { Pipeline.resumeFilter(input, s"$dir/out") }
+    // only a missing outDir, or one whose runs wrote no rows, reads as
+    // "nothing committed"
+    assert(Pipeline.resumeFilter(input, s"$dir/absent").count() == 20)
+    Pipeline.run(spark, input.limit(0), s"$dir/empty", s"$dir/emptym")
+    assert(Pipeline.resumeFilter(input, s"$dir/empty").count() == 20)
   }
 
   test("entry smoke: rows > 0") {
