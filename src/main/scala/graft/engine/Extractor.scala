@@ -3,15 +3,23 @@ package graft.engine
 import java.util.Base64
 import graft.core._
 import graft.html.HtmlExtractor
-import graft.mime.{EncodingDetector, MediaTypes, MimeRegistry}
+import graft.mime.{EncodingDetector, MediaTypes, MimeDb, MimeRegistry}
+import graft.ole2.{Cfb, Ole2Detector, OleProps}
 import graft.ooxml.DocxExtractor
 import graft.pdf.PdfExtractor
+import graft.textparse.MiscBinExtractor
+import graft.warc.WarcExtractor
 import graft.zipx.{OpcDetector, ZipUtil}
 
 /** Per-document detect→dispatch→parse→spans function — the reference's
   * `AutoDetectParser.parse` (tika-core parser/AutoDetectParser.java:147-232)
   * + `RecursiveParserWrapper` (parser/RecursiveParserWrapper.java:129-303)
   * re-expressed as one pure function over row bytes.
+  *
+  * Dispatch is `CompositeParser`'s type → parser map
+  * (parser/CompositeParser.java:102-110): one exact lookup in `Routes`,
+  * then the prefix families in `PrefixRoutes`, then the supertype walk
+  * (:245-268).
   *
   * Container recursion carries ordinal `embeddedIdPath`s ("/1", "/1/2",
   * 1-indexed — RecursiveParserWrapper.java:239-244); the char budget and
@@ -53,33 +61,6 @@ object Extractor {
       regexWriteContent: Boolean = false
   )
   val DefaultConfig: Config = Config()
-
-  /** Media mime families that pass through as media spans. */
-  private val MediaMimes: Set[String] = Set(
-    MediaTypes.Png, MediaTypes.Jpeg, MediaTypes.Gif, MediaTypes.Tiff,
-    MediaTypes.Bmp, MediaTypes.Webp, MediaTypes.Mp3, MediaTypes.Wav,
-    MediaTypes.Ogg, MediaTypes.Mp4, MediaTypes.Avi, MediaTypes.Matroska,
-    graft.mime.MimeDb.Midi, graft.mime.MimeDb.M4a,
-    graft.mime.MimeDb.M4v, graft.mime.MimeDb.Flv, graft.mime.MimeDb.MpegVideo,
-    graft.mime.MimeDb.QuickTime, graft.mime.MimeDb.WebmVideo,
-    graft.mime.MimeDb.Heic, graft.mime.MimeDb.Avif, graft.mime.MimeDb.Jp2,
-    graft.mime.MimeDb.Ico, graft.mime.MimeDb.Psd,
-    // round-3 second magic tranche — media containers pass through as
-    // media spans (metadata-only), like the rest of this family
-    graft.mime.MimeDb.OggVorbis, graft.mime.MimeDb.OggOpus,
-    graft.mime.MimeDb.OggTheora, graft.mime.MimeDb.OggSpeex,
-    graft.mime.MimeDb.OggFlacA, graft.mime.MimeDb.Asf,
-    graft.mime.MimeDb.Caf, graft.mime.MimeDb.AmrWb, graft.mime.MimeDb.Sid,
-    graft.mime.MimeDb.RealAudio, graft.mime.MimeDb.Mng, graft.mime.MimeDb.Jng,
-    graft.mime.MimeDb.Ac3, graft.mime.MimeDb.CanonCr2, graft.mime.MimeDb.Pcx,
-    graft.mime.MimeDb.Pam, graft.mime.MimeDb.SgiRgb, graft.mime.MimeDb.Bpg,
-    graft.mime.MimeDb.Icns, graft.mime.MimeDb.Dpx, graft.mime.MimeDb.Nitf,
-    graft.mime.MimeDb.Aiff, graft.mime.MimeDb.AuBasic, graft.mime.MimeDb.Jxl,
-    // round-5 detect-only formats gaining native dimension reads
-    graft.mime.MimeDb.Pbm, graft.mime.MimeDb.Pgm, graft.mime.MimeDb.Ppm,
-    graft.mime.MimeDb.Djvu, graft.mime.MimeDb.Pict, graft.mime.MimeDb.Swf,
-    graft.mime.MimeDb.Amr, "audio/x-aac", "image/vnd.zbrush.dcx",
-    "image/x-jbig2")
 
   private val MediaExt: Map[String, String] = Map(
     MediaTypes.Jpeg -> "jpg", MediaTypes.Tiff -> "tif", MediaTypes.Mp3 -> "mp3",
@@ -128,6 +109,49 @@ object Extractor {
     java.util.Arrays.copyOf(win.buf, win.len)
   }
 
+  /** Codec wrappers — CompressorParser analog (pkg/CompressorStreamFactory
+    * routes): decode, then re-detect the inner payload, so
+    * .tar.{gz,bz2,xz,lz4,zst,Z} recurse exactly like .tar.gz. Brotli has
+    * no magic — name-detected, like the reference's BROTLI entry.
+    * `Unpack` walks a subset of these.
+    */
+  val Codecs: Map[String, Array[Byte] => Array[Byte]] = Map(
+    MediaTypes.Gzip -> ZipUtil.gunzip _,
+    MimeDb.Zlib -> inflateZlib _,
+    MimeDb.SnappyFramed -> graft.pkgx.Snappy.decompressFramed _,
+    MimeDb.Lzma -> decodeLzmaFile _,
+    MimeDb.Brotli -> graft.pkgx.Brotli.decompress _,
+    MimeDb.Bzip2 -> graft.pkgx.Bzip2.decompress _,
+    MimeDb.Xz -> graft.pkgx.Xz.decompress _,
+    MimeDb.Lz4 -> graft.pkgx.Lz4.decompress _,
+    MimeDb.Zstd -> graft.pkgx.Zstd.decompress _,
+    MimeDb.UnixCompress -> graft.pkgx.Lzw.decompress _)
+
+  /** Archive members as (name, bytes) in archive order, given the
+    * payload and the configured password. */
+  type Entries = (Array[Byte], Option[String]) => IndexedSeq[(String, Array[Byte])]
+
+  /** Named-member archives — PackageParser.parseEntry
+    * (pkg/PackageParser.java:164-193): each member becomes an embedded
+    * doc named by its header. .deb is an ar of control/data tarballs and
+    * recurses all the way down through the codecs. Encrypted 7z decrypts
+    * with the supplied password (the PasswordProvider route) or throws →
+    * recorded parse exception, like the reference's
+    * EncryptedDocumentException. Cabinet is beyond reference parity (the
+    * reference only detects it); QUANTUM/LZX folders throw → recorded
+    * parse exception. `Unpack` walks a subset of these.
+    */
+  val ArchiveEntries: Map[String, Entries] = {
+    val tar: Entries = (b, _) => graft.pkgx.TarUtil.entries(b).map(e => (e.name, e.data))
+    val ar: Entries = (b, _) => graft.pkgx.ArCpio.arEntries(b).map(e => (e.name, e.data))
+    val cpio: Entries = (b, _) => graft.pkgx.ArCpio.cpioEntries(b).map(e => (e.name, e.data))
+    val sevenZ: Entries = (b, pw) =>
+      graft.pkgx.SevenZ.entries(b, password = pw).map(e => (e.name, e.data))
+    val cab: Entries = (b, _) => graft.pkgx.Cab.entries(b).map(e => (e.name, e.data))
+    Map(MimeDb.Tar -> tar, MimeDb.Gtar -> tar, MimeDb.Ar -> ar, MimeDb.Deb -> ar,
+      MimeDb.Cpio -> cpio, MimeDb.SevenZ -> sevenZ, MimeDb.Cab -> cab)
+  }
+
   def payloadBytes(s: Span): Array[Byte] =
     if (s.text == null || s.text.isEmpty) Array.emptyByteArray
     else if (BinaryKinds.contains(s.kind))
@@ -136,64 +160,119 @@ object Extractor {
         s.text.getBytes(java.nio.charset.StandardCharsets.UTF_8) }
     else s.text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
-  def extract(row: DocRow, cfg: Config = DefaultConfig): ExtractedDoc = {
-    val payloadTotal = row.spans.iterator.map { s =>
-      if (s.kind == Span.KindMedia) 0L else (if (s.text == null) 0L else s.text.length.toLong)
-    }.sum
-    val deadline =
-      if (cfg.softDeadlineMs <= 0) Long.MaxValue
-      else System.nanoTime() + cfg.softDeadlineMs * 1000000L
-    val sink = new SpanSink(cfg.writeLimit, payloadTotal, cfg.bombOutputThreshold,
-      cfg.bombMaxRatio, deadline)
-    val meta0 = new MetaSink
-    val meta = meta0
+  /** Content detection plus container specialization, which needs the
+    * full bytes (OPCPackageDetector, POIFSContainerDetector). */
+  private def detect(bytes: Array[Byte], nameHint: Option[String]): String = {
+    val mime0 = MimeRegistry.detect(bytes, nameHint)
+    if (mime0 == MediaTypes.Zip || mime0 == MediaTypes.TikaOoxml)
+      try OpcDetector.specialize(bytes, nameHint)
+      catch { case _: Exception => mime0 }
+    else if (mime0 == MediaTypes.TikaMsOffice)
+      try Ole2Detector.specialize(bytes)
+      catch { case _: Exception => mime0 }
+    else if (bytes.length >= 8 && (bytes(0) & 0xff) == 0xd0 &&
+        (bytes(1) & 0xff) == 0xcf && (bytes(2) & 0xff) == 0x11 &&
+        (bytes(3) & 0xff) == 0xe0) {
+      // a name hint (.doc/.xls/...) specialized the generic CFB type,
+      // but POIFSContainerDetector's checkEncrypted runs on EVERY
+      // OLE2 container and outranks it (TIKA-3666: DRM dataspaces
+      // inside a shell that still carries a WordDocument stream)
+      val byDir =
+        try Ole2Detector.specialize(bytes)
+        catch { case _: Exception => mime0 }
+      if (byDir == Ole2Detector.OoxmlProtected ||
+          byDir == Ole2Detector.DrmEncrypted) byDir
+      else mime0
+    } else mime0
+  }
+
+  /** One payload being parsed: its bytes, ordinal id path ("" at the
+    * root), name hint, nesting depth, detected type, and the metadata
+    * view scoped to its path (RecursiveParserWrapper-style per-document
+    * metadata).
+    */
+  private final class Node(val bytes: Array[Byte], val idPath: String,
+      val nameHint: Option[String], val depth: Int, val mime: String,
+      val meta: MetaSink) {
+    def at: String = if (idPath.isEmpty) "/" else idPath
+  }
+
+  /** A container member awaiting its ordinal: payload, name hint, and
+    * `onPop`, which records per-child metadata once the path is known. */
+  private final case class Member(data: Array[Byte], name: Option[String],
+      onPop: String => Unit)
+
+  private val NoMeta: String => Unit = _ => ()
+
+  /** A member recorded as `embedded:path` = "<path>:<name>". */
+  private def member(n: Node, name: String, data: Array[Byte]): Member =
+    Member(data, Some(name), p => n.meta.add("embedded:path", s"$p:$name"))
+
+  // ---- explicit embedded-doc frame stack ---------------------------------
+  // Container recursion (zip/tar/warc/mbox/gzip/bzip2/xz/lz4/zstd chains —
+  // the unbounded-nesting inputs) runs over this heap stack, NOT the JVM
+  // stack: a node's children are pushed as NodeFrames and popped LIFO, so
+  // the traversal order (and therefore every span, ordinal id path and
+  // meta record) is byte-identical to direct recursion while stack depth
+  // stays O(1) JVM frames regardless of nesting. Only the mid-parse
+  // callback parsers (HTML data-URIs, PDF attachments, EML parts) still
+  // parse children inline — their content must land at the emission point
+  // inside the parent's own span stream — and those are hard-capped by
+  // cfg.maxDepth bounded parser frames.
+  private sealed trait Frame
+  /** A child payload awaiting its ordinal; the ordinal is assigned when
+    * the frame is POPPED (not scheduled) so id-path numbering matches the
+    * recursive traversal exactly. `onDrop` applies the branch's
+    * budget-exhaustion policy (silent for zip, recorded for the other
+    * archives and codecs, counted for mbox).
+    */
+  private final case class NodeFrame(m: Member, parentPath: String, depth: Int,
+      onDrop: () => Unit) extends Frame
+  private final case class CloseFrame(path: String) extends Frame
+  /** Runs after every frame a branch scheduled has completed (mbox's
+    * dropped-count summary). */
+  private final case class AfterFrame(run: () => Unit) extends Frame
+
+  /** Per-document traversal state: the sinks, the frame stack, the
+    * embedded budget and the status flags. One per `extract` call. */
+  private final class Walk(val cfg: Config, val sink: SpanSink) {
+    val meta = new MetaSink
     var embeddedCount = 0
     var sawException = false
     var sawUnsupported = false
     var bomb = false
     var topMime: String = null
+    val flagUnsupported: () => Unit = () => sawUnsupported = true
+    private val stack = new java.util.ArrayDeque[Frame]
 
-    def noteMime(m: String): Unit = if (topMime == null) topMime = m
+    def exception(n: Node, what: String): Unit = {
+      sawException = true
+      n.meta.add("parse:exception", s"$what at ${n.at}")
+    }
 
-    // ---- explicit embedded-doc frame stack -------------------------------
-    // Container recursion (zip/tar/warc/mbox/gzip/bzip2/xz/lz4/zstd chains —
-    // the unbounded-nesting inputs) runs over this heap stack, NOT the JVM
-    // stack: a node's children are pushed as NodeFrames and popped LIFO, so
-    // the traversal order (and therefore every span, ordinal id path and
-    // meta record) is byte-identical to direct recursion while stack depth
-    // stays O(1) JVM frames regardless of nesting. Only the mid-parse
-    // callback parsers (HTML data-URIs, PDF attachments, EML parts) still
-    // parse children inline — their content must land at the emission point
-    // inside the parent's own span stream — and those are hard-capped by
-    // cfg.maxDepth bounded parser frames.
-    sealed trait Frame
-    /** A child payload awaiting its ordinal; the ordinal is assigned when
-      * the frame is POPPED (not scheduled) so id-path numbering matches the
-      * recursive traversal exactly. `onPop` records per-child metadata once
-      * the path is known; `onDrop` applies the branch's budget-exhaustion
-      * policy (silent for zip, recorded for tar/warc, counted for mbox).
-      */
-    final case class NodeFrame(bytes: Array[Byte], parentPath: String,
-        nameHint: Option[String], depth: Int,
-        onPop: String => Unit, onDrop: () => Unit) extends Frame
-    final case class CloseFrame(path: String) extends Frame
-    /** Runs after every frame a branch scheduled has completed (mbox's
-      * dropped-count summary). */
-    final case class AfterFrame(run: () => Unit) extends Frame
+    def push(n: Node, m: Member, onDrop: () => Unit): Unit =
+      stack.push(NodeFrame(m, n.idPath, n.depth + 1, onDrop))
 
-    val stack = new java.util.ArrayDeque[Frame]
+    /** Schedules `entries` as children of `n` in archive order; each
+      * member is built at push time, last entry first, exactly like the
+      * recursive traversal. */
+    def schedule[E](n: Node, entries: IndexedSeq[E], onDrop: () => Unit)(
+        m: E => Member): Unit =
+      entries.reverseIterator.foreach(e => push(n, m(e), onDrop))
 
-    def popOne(f: Frame): Unit = f match {
+    def after(run: () => Unit): Unit = stack.push(AfterFrame(run))
+
+    private def popOne(f: Frame): Unit = f match {
       case CloseFrame(p) => sink.embeddedClose(p)
       case AfterFrame(run) => run()
-      case NodeFrame(bytes, parentPath, nameHint, depth, onPop, onDrop) =>
+      case NodeFrame(m, parentPath, depth, onDrop) =>
         if (embeddedCount < cfg.maxEmbedded) {
           embeddedCount += 1
           val childPath = s"$parentPath/$embeddedCount"
-          onPop(childPath)
+          m.onPop(childPath)
           sink.embeddedOpen(childPath)
           stack.push(CloseFrame(childPath))
-          parseNode(bytes, childPath, nameHint, depth)
+          parseNode(m.data, childPath, m.name, depth)
         } else onDrop()
     }
 
@@ -205,19 +284,21 @@ object Extractor {
       * child (and its whole deferred subtree) completes before the parent
       * parser resumes, so embedded content lands at its source position.
       */
-    def inlineChild(idPath: String, depth: Int)(name: Option[String],
-        data: Array[Byte]): Unit = {
-      if (embeddedCount < cfg.maxEmbedded && depth < cfg.maxDepth) {
+    def inlineChild(n: Node)(name: Option[String], data: Array[Byte]): Unit =
+      if (embeddedCount < cfg.maxEmbedded && n.depth < cfg.maxDepth) {
         embeddedCount += 1
-        val childPath = s"$idPath/$embeddedCount"
+        val childPath = s"${n.idPath}/$embeddedCount"
         name.foreach(nm => meta.add("embedded:path", s"$childPath:$nm"))
         sink.embeddedOpen(childPath)
         val mark = stack.size
-        parseNode(data, childPath, name, depth + 1)
+        parseNode(data, childPath, name, n.depth + 1)
         drain(mark)
         sink.embeddedClose(childPath)
       }
-    }
+
+    def child(n: Node): (Option[String], Array[Byte]) => Unit = inlineChild(n)
+    def named(n: Node): (String, Array[Byte]) => Unit =
+      (name, data) => inlineChild(n)(Some(name), data)
 
     /** Parse of one payload; per-node failures are recorded and the parse
       * continues (CompositeParser.java:323-352 hoists embedded exceptions
@@ -228,829 +309,25 @@ object Extractor {
         depth: Int): Unit = {
       // embedded nodes write document-level metadata under their own path
       // (per-document metadata, RecursiveParserWrapper-style)
-      val meta = if (idPath.isEmpty) meta0 else meta0.scoped(idPath)
+      val nodeMeta = if (idPath.isEmpty) meta else meta.scoped(idPath)
       if (bytes.isEmpty) {
         // a zero-byte payload is a legitimate empty document (the
         // reference's EmptyParser yields no content and no exception;
         // RecursiveParserWrapper still records the embedded resource,
         // typed by its name glob when the empty stream is named)
         if (idPath.nonEmpty)
-          meta.add("embedded:" + idPath, nameHint
+          nodeMeta.add("embedded:" + idPath, nameHint
             .flatMap(MimeRegistry.fromName)
             .getOrElse(MediaTypes.OctetStream))
         return
       }
-      val mime0 = MimeRegistry.detect(bytes, nameHint)
-      // container specialization needs full bytes (OPCPackageDetector)
-      val mime =
-        if (mime0 == MediaTypes.Zip || mime0 == MediaTypes.TikaOoxml)
-          try OpcDetector.specialize(bytes, nameHint)
-          catch { case _: Exception => mime0 }
-        else if (mime0 == MediaTypes.TikaMsOffice)
-          try graft.ole2.Ole2Detector.specialize(bytes)
-          catch { case _: Exception => mime0 }
-        else if (bytes.length >= 8 && (bytes(0) & 0xff) == 0xd0 &&
-            (bytes(1) & 0xff) == 0xcf && (bytes(2) & 0xff) == 0x11 &&
-            (bytes(3) & 0xff) == 0xe0) {
-          // a name hint (.doc/.xls/...) specialized the generic CFB type,
-          // but POIFSContainerDetector's checkEncrypted runs on EVERY
-          // OLE2 container and outranks it (TIKA-3666: DRM dataspaces
-          // inside a shell that still carries a WordDocument stream)
-          val byDir =
-            try graft.ole2.Ole2Detector.specialize(bytes)
-            catch { case _: Exception => mime0 }
-          if (byDir == graft.ole2.Ole2Detector.OoxmlProtected ||
-              byDir == graft.ole2.Ole2Detector.DrmEncrypted) byDir
-          else mime0
-        } else mime0
-      if (idPath.isEmpty) noteMime(mime)
-      else meta.add("embedded:" + idPath, mime)
-
+      val mime = detect(bytes, nameHint)
+      if (idPath.isEmpty) { if (topMime == null) topMime = mime }
+      else nodeMeta.add("embedded:" + idPath, mime)
+      val n = new Node(bytes, idPath, nameHint, depth, mime, nodeMeta)
       try {
-        mime match {
-          case MediaTypes.Html =>
-            HtmlExtractor.extract(EncodingDetector.decode(bytes), sink, meta,
-              (name, data) => inlineChild(idPath, depth)(name, data))
-          case MediaTypes.AtomXml | MediaTypes.RssXml =>
-            graft.xmlx.FeedExtractor.extract(bytes, sink, meta)
-          case MediaTypes.Xml | MediaTypes.SvgXml =>
-            XmlExtractor.extract(bytes, sink, meta)
-          case MediaTypes.TextPlain
-              if cfg.regexCaptures.nonEmpty || cfg.regexMatches.nonEmpty =>
-            // configured RegexCaptureParser replaces the text parser
-            graft.textparse.RegexCapture.extract(
-              EncodingDetector.decode(bytes), cfg.regexCaptures,
-              cfg.regexMatches, cfg.regexWriteContent, sink, meta)
-          case MediaTypes.TextPlain =>
-            // TextAndCSVParser semantics: sniff a consistent delimiter →
-            // table markup; otherwise TXTParser.java:75-121 — charset
-            // decode, one <p> of raw chars
-            val text = EncodingDetector.decode(bytes)
-            graft.textparse.CsvExtractor.sniff(text) match {
-              case Some(d) =>
-                if (idPath.isEmpty && topMime == MediaTypes.TextPlain)
-                  topMime = MediaTypes.Csv
-                graft.textparse.CsvExtractor.extract(text, d, sink, meta)
-              case None =>
-                sink.chars(text)
-                sink.newline()
-            }
-          case MediaTypes.Pdf =>
-            PdfExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(name, data),
-              cfg.password, cfg.extractMarkedContent)
-          case MediaTypes.Docx =>
-            DocxExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data))
-          case MediaTypes.Xlsx =>
-            graft.ooxml.XlsxExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data))
-          case MediaTypes.Xlsb =>
-            graft.ooxml.XlsbExtractor.extract(bytes, sink, meta)
-          case MediaTypes.Pptx =>
-            graft.ooxml.PptxExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data))
-          case MediaTypes.Xps =>
-            graft.ooxml.XpsExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data))
-          case m if m.startsWith("application/vnd.ms-visio.") =>
-            graft.ooxml.VsdxExtractor.extract(bytes, sink, meta)
-          case graft.xmlx.MsXml2003Extractor.WordMl =>
-            graft.xmlx.MsXml2003Extractor.extractWordMl(bytes, sink, meta)
-          case graft.xmlx.MsXml2003Extractor.SpreadsheetMl =>
-            graft.xmlx.MsXml2003Extractor.extractSpreadsheetMl(bytes, sink, meta)
-          case MediaTypes.TikaOoxml =>
-            // recognized OPC container without a known core document
-            sawUnsupported = true
-          case MediaTypes.Rtf =>
-            graft.textparse.RtfExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data))
-          case m if m == graft.mime.MimeDb.Markdown =>
-            // reached via the .md name-hint glob (no magic exists);
-            // reference analog: tika text-module MarkdownParser
-            graft.textparse.MarkdownExtractor.extract(bytes, sink, meta)
-          case "text/x-java-source" | "text/x-groovy" | "text/x-c++src" =>
-            // the reference's SourceCodeParser types (code-module) —
-            // verbatim code lines + LoC/@author metadata + from-scratch
-            // lexer token-class counts; other source types (.c/.py/...)
-            // keep landing on the text parser like the reference's
-            // supertype fallback
-            graft.textparse.SourceCodeExtractor.extract(bytes, sink, meta,
-              mime)
-          case m if m == graft.mime.MimeDb.Anpa =>
-            // IPTC 7901 / ANPA-1312 newswire (news-module IptcAnpaParser)
-            graft.textparse.IptcAnpaExtractor.extract(bytes, sink, meta)
-          // round-5 detect-only formats gaining native readers — the
-          // reference detects each of these without a parser; text /
-          // metadata extraction is beyond-reference, like Cab/Hfs
-          case m if m == graft.mime.MimeDb.Marc =>
-            graft.textparse.MarcExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.MsWrite =>
-            graft.textparse.WriExtractor.extract(bytes, sink, meta)
-          case m if m.startsWith(graft.mime.MimeDb.Lotus123) =>
-            graft.textparse.LotusExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.StataDta =>
-            graft.sci.StataExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.HprofBin =>
-            graft.textparse.MiscBinExtractor.extractHprof(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Jks =>
-            graft.textparse.MiscBinExtractor.extractJks(bytes, sink, meta)
-          case "model/x.stl-binary" =>
-            graft.textparse.MiscBinExtractor.extractStl(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.PostScript =>
-            graft.textparse.MiscBinExtractor.extractPostScript(bytes, sink, meta)
-          case "application/x-x509-ca-cert" =>
-            graft.crypto.DerKeyExtractor.extract(bytes, sink, meta)
-          case m if m.startsWith(graft.mime.MimeDb.BerkeleyDb) =>
-            graft.db.BdbExtractor.extract(bytes, sink, meta)
-          case MediaTypes.Mbox =>
-            // each member message becomes an embedded rfc822 doc; members
-            // past the resource budget are counted in mbox:dropped and
-            // mark the status (ParseSuccessWithException)
-            val msgs = graft.mail.EmlExtractor.splitMbox(bytes)
-            if (depth >= cfg.maxDepth) {
-              if (msgs.nonEmpty) {
-                meta.set("mbox:dropped", msgs.size.toString)
-                sawUnsupported = true
-              }
-            } else {
-              val droppedBox = new java.util.concurrent.atomic.AtomicInteger(0)
-              stack.push(AfterFrame { () =>
-                if (droppedBox.get > 0) {
-                  meta.set("mbox:dropped", droppedBox.get.toString)
-                  sawUnsupported = true
-                }
-              })
-              msgs.zipWithIndex.reverseIterator.foreach { case (msg, idx) =>
-                stack.push(NodeFrame(msg, idPath, Some("message.eml"), depth + 1,
-                  onPop = p => meta.add("embedded:path", s"$p:message-${idx + 1}.eml"),
-                  onDrop = () => { droppedBox.incrementAndGet(); () }))
-              }
-            }
-          case MediaTypes.Eml =>
-            graft.mail.EmlExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(name, data))
-          case MediaTypes.Odt | MediaTypes.Ods | MediaTypes.Odp =>
-            graft.odf.OdtExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data),
-              cfg.extractMacros)
-          case m if m == graft.mime.MimeDb.Word2006Ml =>
-            graft.xmlx.Word2006MlExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data))
-          case m if m == graft.mime.MimeDb.FlatOd ||
-              m == graft.mime.MimeDb.FlatOdt || m == graft.mime.MimeDb.FlatOds ||
-              m == graft.mime.MimeDb.FlatOdp =>
-            graft.odf.OdtExtractor.extractFlat(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data),
-              cfg.extractMacros)
-          case MediaTypes.Epub =>
-            // OPF metadata + spine-ordered content into the parent,
-            // resources as children (EpubParser/OPFParser semantics);
-            // packages without an OPF fall back to zip recursion
-            val handled =
-              try graft.zipx.EpubExtractor.extract(bytes, sink, meta,
-                (name, data) => inlineChild(idPath, depth)(Some(name), data))
-              catch { case _: Exception => false }
-            if (!handled) recurseZip(bytes, idPath, depth)
-          case MediaTypes.Zip =>
-            recurseZip(bytes, idPath, depth)
-          case m if m == graft.mime.MimeDb.Tar || m == graft.mime.MimeDb.Gtar =>
-            // PackageParser.parseEntry (pkg/PackageParser.java:164-193):
-            // each archive member becomes an embedded doc with an ordinal
-            // id path; tar.gz arrives here through the gzip branch's
-            // inner re-detect. Budget exhaustion is RECORDED (like
-            // recurseZip) — a depth-capped tar must not read as a clean
-            // empty success.
-            if (depth >= cfg.maxDepth) sawUnsupported = true
-            else graft.pkgx.TarUtil.entries(bytes).reverseIterator.foreach { e =>
-              stack.push(NodeFrame(e.data, idPath, Some(e.name), depth + 1,
-                onPop = p => meta.add("embedded:path", s"$p:${e.name}"),
-                onDrop = () => sawUnsupported = true))
-            }
-          case m if m == graft.mime.MimeDb.Ar || m == graft.mime.MimeDb.Deb ||
-              m == graft.mime.MimeDb.Cpio =>
-            // PackageParser ar/deb/cpio member recursion (commons-compress
-            // dispatch in the reference); .deb is an ar of control/data
-            // tarballs and recurses all the way down through the codec
-            // branches
-            if (depth >= cfg.maxDepth) sawUnsupported = true
-            else {
-              val entries =
-                if (m == graft.mime.MimeDb.Cpio) graft.pkgx.ArCpio.cpioEntries(bytes)
-                else graft.pkgx.ArCpio.arEntries(bytes)
-              entries.reverseIterator.foreach { e =>
-                stack.push(NodeFrame(e.data, idPath, Some(e.name), depth + 1,
-                  onPop = p => meta.add("embedded:path", s"$p:${e.name}"),
-                  onDrop = () => sawUnsupported = true))
-              }
-            }
-          case m if m == graft.mime.MimeDb.UnixDump =>
-            // PackageParser dump dispatch (commons-compress
-            // DumpArchiveInputStream): every regular-file inode is an
-            // embedded doc named by its dirent-resolved path
-            if (depth >= cfg.maxDepth) sawUnsupported = true
-            else {
-              val s = graft.pkgx.DumpArchive.summary(bytes)
-              if (s.label.nonEmpty) meta.set("dump:label", s.label)
-              if (s.hostname.nonEmpty) meta.set("dump:hostname", s.hostname)
-              if (s.filesystem.nonEmpty) meta.set("dump:filesystem", s.filesystem)
-              graft.pkgx.DumpArchive.entries(bytes).reverseIterator.foreach { e =>
-                stack.push(NodeFrame(e.data, idPath, Some(e.name), depth + 1,
-                  onPop = p => meta.add("embedded:path", s"$p:${e.name}"),
-                  onDrop = () => sawUnsupported = true))
-              }
-            }
-          case m if m == graft.mime.MimeDb.SevenZ =>
-            // SevenZParser.java semantics via PackageParser dispatch: each
-            // member is an embedded doc with its header name; encrypted
-            // archives decrypt with the supplied password (the
-            // PasswordProvider route) or throw inside SevenZ.entries →
-            // recorded parse exception, like the reference's
-            // EncryptedDocumentException
-            if (depth >= cfg.maxDepth) sawUnsupported = true
-            else graft.pkgx.SevenZ.entries(bytes, password = cfg.password)
-              .reverseIterator.foreach { e =>
-              stack.push(NodeFrame(e.data, idPath, Some(e.name), depth + 1,
-                onPop = p => meta.add("embedded:path", s"$p:${e.name}"),
-                onDrop = () => sawUnsupported = true))
-            }
-          case m if m == graft.mime.MimeDb.Cab =>
-            // Microsoft Cabinet — beyond reference parity (the reference
-            // only detects this type); members recurse like any archive,
-            // QUANTUM/LZX folders throw inside Cab.entries → recorded
-            // parse exception
-            if (depth >= cfg.maxDepth) sawUnsupported = true
-            else graft.pkgx.Cab.entries(bytes).reverseIterator.foreach { e =>
-              stack.push(NodeFrame(e.data, idPath, Some(e.name), depth + 1,
-                onPop = p => meta.add("embedded:path", s"$p:${e.name}"),
-                onDrop = () => sawUnsupported = true))
-            }
-          case m if m == graft.mime.MimeDb.Dmg =>
-            // raw HFS+/HFSX Apple disk images — beyond reference parity
-            // (the reference only glob-detects .dmg); catalog files
-            // recurse with their full volume paths, UDIF-wrapped images
-            // throw inside Hfs.entries → recorded parse exception
-            if (depth >= cfg.maxDepth) sawUnsupported = true
-            else if (!graft.pkgx.Hfs.isHfs(bytes)) sawUnsupported = true
-            else graft.pkgx.Hfs.entries(bytes).reverseIterator.foreach { e =>
-              stack.push(NodeFrame(e.data, idPath, Some(e.name), depth + 1,
-                onPop = p => meta.add("embedded:path", s"$p:${e.name}"),
-                onDrop = () => sawUnsupported = true))
-            }
-          case m if m == graft.mime.MimeDb.Arj =>
-            // ARJ: stored entries recurse; compressed entries recorded
-            // unsupported — exact commons-compress ArjArchiveInputStream
-            // capability, which is what the reference dispatches to
-            val es = graft.pkgx.Arj.entries(bytes)
-            es.foreach(e => meta.add("arj:entry", s"${e.name}:${e.originalSize}"))
-            if (es.exists(_.data.isEmpty)) sawUnsupported = true
-            if (depth < cfg.maxDepth)
-              es.reverseIterator.filter(_.data.isDefined).foreach { e =>
-                stack.push(NodeFrame(e.data.get, idPath, Some(e.name),
-                  depth + 1,
-                  onPop = p => meta.add("embedded:path", s"$p:${e.name}"),
-                  onDrop = () => sawUnsupported = true))
-              }
-            else if (es.exists(_.data.isDefined))
-              sawUnsupported = true // depth cap drops children, like zip
-          case m if m == graft.mime.MimeDb.Rar =>
-            // RAR container walk (RarUtil): entry names/sizes always
-            // surface as metadata; STORED entries recurse; compressed
-            // entries are recorded unsupported (the RAR compression
-            // algorithm is a declared license exclusion — the reference
-            // uses junrar here)
-            val ar = graft.pkgx.RarUtil.parse(bytes, cfg.password)
-            if (ar.headersEncrypted && ar.entries.isEmpty) {
-              // no (or wrong) password: the reference throws
-              // EncryptedDocumentException here; with a good password the
-              // decrypted entries recurse below (exceeds the reference)
-              sawException = true
-              meta.add("parse:exception",
-                s"rar encrypted headers at ${if (idPath.isEmpty) "/" else idPath}")
-            }
-            ar.entries.foreach { e =>
-              meta.add("rar:entry", s"${e.name}:${e.unpSize}")
-            }
-            if (ar.entries.exists(e => e.stored.isEmpty))
-              sawUnsupported = true
-            if (depth < cfg.maxDepth)
-              ar.entries.reverseIterator.filter(_.stored.isDefined).foreach {
-                e =>
-                  stack.push(NodeFrame(e.stored.get, idPath, Some(e.name),
-                    depth + 1,
-                    onPop = p => meta.add("embedded:path", s"$p:${e.name}"),
-                    onDrop = () => sawUnsupported = true))
-              }
-            else if (ar.entries.exists(_.stored.isDefined))
-              sawUnsupported = true // depth cap drops children, like zip
-          case m if m == graft.mime.MimeDb.Pkcs7Mime ||
-              m == graft.mime.MimeDb.Pkcs7Sig || m == graft.mime.MimeDb.Tsd =>
-            // CMS/PKCS#7: unwrap the signed / timestamped / compressed
-            // payload and recurse it (crypto-module Pkcs7Parser/TSDParser
-            // behavior); enveloped/digested/encrypted are labelled with
-            // their smime-type and yield an empty document (no throw),
-            // detached signatures yield metadata only
-            val un = graft.crypto.Pkcs7Extractor.unwrap(bytes)
-            if (un.contentType != null)
-              meta.set("cms:content-type", un.contentType)
-            if (un.smimeType != null) meta.set("cms:smime-type", un.smimeType)
-            if (un.truncated) {
-              // bomb cap clipped the inflated payload: keep the prefix
-              // but mark the document (Pkcs7Parser truncation warning)
-              meta.set("cms:truncated", "true")
-              sawUnsupported = true
-            }
-            if (un.content.isEmpty) {
-              if (un.contentType != null &&
-                  (un.smimeType == null || un.smimeType == "certs-only"))
-                meta.set("cms:detached", "true")
-            }
-            else if (depth < cfg.maxDepth)
-              stack.push(NodeFrame(un.content, idPath, None, depth + 1,
-                onPop = _ => (), onDrop = () => sawUnsupported = true))
-            else sawUnsupported = true
-          case m if m == graft.mime.MimeDb.HttpResponse =>
-            // a raw captured HTTP response: record the head as metadata,
-            // recurse the body through re-detection (the supertype walk
-            // would otherwise dump headers as document text)
-            graft.warc.WarcExtractor.parseHttpHead(bytes) match {
-              case Some(h) if depth < cfg.maxDepth =>
-                meta.add("http:status", h.status.toString)
-                h.headers.foreach { case (k, v) => meta.add(s"http:$k", v) }
-                val body = java.util.Arrays.copyOfRange(bytes,
-                  h.payloadOffset, bytes.length)
-                if (body.nonEmpty)
-                  stack.push(NodeFrame(body, idPath, None, depth + 1,
-                    onPop = _ => (), onDrop = () => sawUnsupported = true))
-              case _ =>
-                sink.chars(EncodingDetector.decode(bytes))
-                sink.newline()
-            }
-          case m if m == graft.mime.MimeDb.ArcArchive =>
-            // pre-WARC web archives: each record is an embedded doc with
-            // arc: metadata; HTTP heads are stripped like the warc branch
-            if (depth >= cfg.maxDepth) sawUnsupported = true
-            else graft.warc.ArcExtractor.records(bytes)
-              .filter(_.body.nonEmpty).reverseIterator.foreach { rec =>
-                val head = graft.warc.WarcExtractor.parseHttpHead(rec.body)
-                val payload = head match {
-                  case Some(h) => java.util.Arrays.copyOfRange(rec.body,
-                    h.payloadOffset, rec.body.length)
-                  case None => rec.body
-                }
-                val nameHint = Some(rec.url)
-                  .map(u => u.substring(u.lastIndexOf('/') + 1))
-                  .filter(_.nonEmpty)
-                stack.push(NodeFrame(payload, idPath, nameHint, depth + 1,
-                  onPop = { childPath =>
-                    meta.add("embedded:path", s"$childPath:${rec.url}")
-                    meta.add(s"arc:$childPath:date", rec.date)
-                    meta.add(s"arc:$childPath:mime", rec.mime)
-                    head.foreach(h =>
-                      meta.add(s"arc:$childPath:status", h.status.toString))
-                  },
-                  onDrop = () => sawUnsupported = true))
-              }
-          case m if m == graft.mime.MimeDb.Warc =>
-            // WARCParser.java:57 semantics: each `response` record is an
-            // embedded document carrying its WARC headers (warc:) and
-            // HTTP response head (warc:http:, warc:http:status) as
-            // metadata, keyed by the ordinal id path; warcinfo and other
-            // record types are skipped. .warc.gz reaches here via the
-            // gzip branch's inner re-detect.
-            if (depth >= cfg.maxDepth) sawUnsupported = true
-            else graft.warc.WarcExtractor.records(bytes)
-              .filter(r => r.warcType == "response" && r.body.nonEmpty)
-              .reverseIterator.foreach { rec =>
-                // record → payload/head is pure, so computing it at schedule
-                // time is observationally identical to the recursive order
-                val uri = rec.targetUri.getOrElse("")
-                val isHttp = rec.header("Content-Type")
-                  .exists(_.startsWith("application/http"))
-                val head =
-                  if (isHttp) graft.warc.WarcExtractor.parseHttpHead(rec.body)
-                  else None
-                val payload = head match {
-                  case Some(h) => java.util.Arrays.copyOfRange(rec.body,
-                    h.payloadOffset, rec.body.length)
-                  case None => rec.body
-                }
-                val nameHint = Some(uri).filter(_.nonEmpty)
-                  .map(u => u.substring(u.lastIndexOf('/') + 1))
-                  .filter(_.nonEmpty)
-                stack.push(NodeFrame(payload, idPath, nameHint, depth + 1,
-                  onPop = { childPath =>
-                    if (uri.nonEmpty) meta.add("embedded:path", s"$childPath:$uri")
-                    rec.headers.foreach { case (k, v) =>
-                      meta.add(s"warc:$childPath:$k", v)
-                    }
-                    head.foreach { h =>
-                      meta.add(s"warc:http:$childPath:status", h.status.toString)
-                      if (h.reason.nonEmpty)
-                        meta.add(s"warc:http:$childPath:status:reason", h.reason)
-                      h.headers.foreach { case (k, v) =>
-                        meta.add(s"warc:http:$childPath:$k", v)
-                      }
-                    }
-                  },
-                  onDrop = () => sawUnsupported = true))
-              }
-          case m if m == graft.mime.MimeDb.AppleSingle =>
-            // AppleSingle wrapper: the data fork is the real document
-            // (apple/AppleSingleFileParser.java) — unwrap + re-detect
-            if (depth >= cfg.maxDepth || embeddedCount >= cfg.maxEmbedded)
-              sawUnsupported = true
-            else {
-              val (name, fork) = graft.textparse.AppleSingle.unwrap(bytes)
-              stack.push(NodeFrame(fork, idPath, name, depth + 1,
-                onPop = p => name.foreach(n => meta.add("embedded:path", s"$p:$n")),
-                onDrop = () => sawUnsupported = true))
-            }
-          case MediaTypes.Gzip =>
-            if (depth >= cfg.maxDepth || embeddedCount >= cfg.maxEmbedded)
-              sawUnsupported = true
-            else {
-              // the frame pops immediately after this node returns (nothing
-              // else is scheduled in between), so the budget just checked
-              // still holds at pop time
-              val inner = ZipUtil.gunzip(bytes)
-              stack.push(NodeFrame(inner, idPath, None, depth + 1,
-                onPop = _ => (), onDrop = () => sawUnsupported = true))
-            }
-          case m if m == graft.mime.MimeDb.Zlib ||
-              m == graft.mime.MimeDb.SnappyFramed ||
-              m == graft.mime.MimeDb.Lzma ||
-              m == graft.mime.MimeDb.Brotli =>
-            // CompressorParser's zlib / snappy-framed / raw-LZMA /
-            // brotli routes (brotli has no magic — name-detected, like
-            // the reference's CompressorStreamFactory BROTLI entry)
-            if (depth >= cfg.maxDepth || embeddedCount >= cfg.maxEmbedded)
-              sawUnsupported = true
-            else {
-              val inner =
-                if (m == graft.mime.MimeDb.Zlib) inflateZlib(bytes)
-                else if (m == graft.mime.MimeDb.SnappyFramed)
-                  graft.pkgx.Snappy.decompressFramed(bytes)
-                else if (m == graft.mime.MimeDb.Brotli)
-                  graft.pkgx.Brotli.decompress(bytes)
-                else decodeLzmaFile(bytes)
-              stack.push(NodeFrame(inner, idPath, None, depth + 1,
-                onPop = _ => (), onDrop = () => sawUnsupported = true))
-            }
-          case m if m == graft.mime.MimeDb.Bzip2 || m == graft.mime.MimeDb.Xz ||
-              m == graft.mime.MimeDb.Lz4 || m == graft.mime.MimeDb.Zstd ||
-              m == graft.mime.MimeDb.UnixCompress =>
-            // CompressorParser analog (pkg/CompressorStreamFactory route):
-            // from-scratch bzip2/xz/lz4/zstd decode, then inner re-detect —
-            // .tar.{bz2,xz,lz4,zst} recurse exactly like .tar.gz
-            // (graft.pkgx.{Bzip2, Xz, Lz4, Zstd})
-            if (depth >= cfg.maxDepth || embeddedCount >= cfg.maxEmbedded)
-              sawUnsupported = true
-            else {
-              val inner =
-                if (m == graft.mime.MimeDb.Xz) graft.pkgx.Xz.decompress(bytes)
-                else if (m == graft.mime.MimeDb.Lz4) graft.pkgx.Lz4.decompress(bytes)
-                else if (m == graft.mime.MimeDb.Zstd) graft.pkgx.Zstd.decompress(bytes)
-                else if (m == graft.mime.MimeDb.UnixCompress)
-                  graft.pkgx.Lzw.decompress(bytes)
-                else graft.pkgx.Bzip2.decompress(bytes)
-              stack.push(NodeFrame(inner, idPath, None, depth + 1,
-                onPop = _ => (), onDrop = () => sawUnsupported = true))
-            }
-          case m if MediaMimes.contains(m) =>
-            // image/audio/video payloads: metadata-only extraction, like
-            // the reference's JpegParser/Mp3Parser/MP4Parser (SURVEY
-            // §2.7) — dimensions/duration/sample-rate parsed from the
-            // container bytes into metadata, payload rides along as a
-            // media span with a synthetic name ("embedded-N.ext",
-            // EmbeddedDocumentUtil.java:225-262)
-            embeddedCount += 1
-            val ext = MediaExt.getOrElse(mime, mime.substring(mime.indexOf('/') + 1))
-            val ref = s"embedded:embedded-$embeddedCount.$ext"
-            graft.media.MediaParser.parse(bytes).foreach { mm =>
-              if (mm.width > 0) {
-                meta.add(s"media:$ref:width", mm.width.toString)
-                meta.add(s"media:$ref:height", mm.height.toString)
-              }
-              if (mm.durationMs > 0)
-                meta.add(s"media:$ref:duration_ms", mm.durationMs.toString)
-              if (mm.sampleRate > 0)
-                meta.add(s"media:$ref:sample_rate", mm.sampleRate.toString)
-              if (mm.orientation > 0)
-                meta.add(s"media:$ref:orientation", mm.orientation.toString)
-              // descriptive tags (ID3 title/artist/album, xmp:*) ride
-              // under the same media:<ref> namespace
-              mm.tags.foreach { case (k, v) => meta.add(s"media:$ref:$k", v) }
-              // attached pictures (ID3 APIC cover art) recurse as inline
-              // embedded documents, like the reference's Mp3Parser
-              mm.attachments.foreach { case (name, data) =>
-                inlineChild(idPath, depth)(Some(name), data) }
-            }
-            sink.media(ref)
-          case m if m == graft.mime.MimeDb.Netcdf =>
-            graft.sci.NetcdfExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Hdf =>
-            graft.sci.HdfExtractor.extract(bytes, meta)
-          case m if m == graft.mime.MimeDb.Fits =>
-            graft.sci.FitsExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Grib =>
-            graft.sci.GribExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Matlab =>
-            graft.sci.MatExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.EnviHdr =>
-            graft.sci.EnviExtractor.extract(bytes, sink, meta)
-          case m if m == graft.zipx.Iwork13Extractor.Keynote13 ||
-              m == graft.zipx.Iwork13Extractor.Numbers13 ||
-              m == graft.zipx.Iwork13Extractor.Pages13 ||
-              m == graft.zipx.Iwork13Extractor.Unknown13 =>
-            graft.zipx.Iwork13Extractor.extract(bytes, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data))
-          case m if m == graft.mime.MimeDb.ActiveMime =>
-            graft.ole2.ActiveMimeExtractor.extract(bytes, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data))
-          case m if m == graft.mime.MimeDb.SasData =>
-            graft.sci.SasExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Sqlite =>
-            graft.db.SqliteExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(name, data))
-          case m if m == graft.mime.MimeDb.MsAccess =>
-            graft.db.AccessExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data))
-          case m if m == graft.mime.MimeDb.OneNote =>
-            graft.onenote.OneNoteExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Chm =>
-            graft.chm.ChmExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.HwpV5 =>
-            graft.ole2.HwpExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Wpd =>
-            graft.textparse.WordPerfectExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Qpw =>
-            graft.textparse.QpwExtractor.extract(bytes, sink, meta)
-          case graft.mime.MimeDb.QpwDos14 | graft.mime.MimeDb.QpwDos5 |
-              graft.mime.MimeDb.QpwWin15 | graft.mime.MimeDb.QpwWin6 =>
-            // pre-v9 QuattroPro record streams — the reference throws
-            // UnsupportedFormatException here (beyond-reference, r5)
-            graft.textparse.QpwExtractor.extractLegacy(bytes, sink, meta)
-          case "application/x-quattro-pro;version=7-8" =>
-            // QPW v7/8: the same legacy record stream, wrapped in a CFB
-            // PerfectOffice_MAIN stream (BOF version 0x1007)
-            val cfb = graft.ole2.Cfb.parse(bytes)
-            graft.ole2.OleProps.fromCfb(cfb, meta)
-            cfb.entries.find(e => e.objType == 2 &&
-                e.name == "PerfectOffice_MAIN").map(cfb.readStream)
-              .foreach(graft.textparse.QpwExtractor.extractLegacy(_, sink, meta))
-          case "model/vnd.dwf" =>
-            // DWF 6+: "(DWF Vxx.yy)" prologue, then a plain zip package —
-            // members (manifest/descriptors/w2d streams) recurse like any
-            // archive; the reference only detects the type
-            meta.set("dwf:version", new String(bytes, 5, math.min(6,
-              bytes.length - 5), java.nio.charset.StandardCharsets.US_ASCII))
-            val zipAt = {
-              var i = 0
-              var found = -1
-              while (found < 0 && i + 4 <= math.min(bytes.length, 64)) {
-                if (bytes(i) == 'P' && bytes(i + 1) == 'K' &&
-                    bytes(i + 2) == 3 && bytes(i + 3) == 4) found = i
-                i += 1
-              }
-              found
-            }
-            if (zipAt >= 0)
-              // recurseZip itself records the depth cap (sawUnsupported)
-              recurseZip(java.util.Arrays.copyOfRange(bytes, zipAt, bytes.length),
-                idPath, depth)
-            else sawUnsupported = true // pre-6 binary DWF
-          case m if m == graft.mime.MimeDb.Dbf =>
-            graft.textparse.DbfExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.DifXml =>
-            graft.xmlx.DifExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Dwg =>
-            graft.media.DwgExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Mif =>
-            graft.textparse.MifExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Idml =>
-            graft.zipx.IdmlExtractor.extract(bytes, sink, meta)
-          case m if m == "application/vnd.apple.keynote" ||
-              m == "application/vnd.apple.pages" ||
-              m == "application/vnd.apple.numbers" =>
-            graft.zipx.IworkExtractor.extract(bytes, m, sink, meta)
-          case m if m == graft.mime.MimeDb.BPlist || m == "application/x-plist" =>
-            graft.textparse.PlistExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(name, data))
-          case m if m == graft.mime.MimeDb.Ttf || m == graft.mime.MimeDb.Otf =>
-            graft.media.FontExtractor.extractTtf(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Afm =>
-            graft.media.FontExtractor.extractAfm(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Prt =>
-            graft.media.PrtExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Tmx =>
-            graft.xmlx.TranslationExtractor.extractTmx(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Xliff =>
-            graft.xmlx.TranslationExtractor.extractXliff(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Xlz =>
-            graft.xmlx.TranslationExtractor.extractXlz(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.FictionBook =>
-            graft.xmlx.FictionBookExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(name, data))
-          case m if m == graft.mime.MimeDb.Tnef =>
-            graft.mail.TnefExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(name, data))
-          case m if m == graft.mime.MimeDb.Pst =>
-            graft.pst.PstExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(name, data))
-          case m if m == graft.mime.MimeDb.MsOwner =>
-            graft.ole2.OwnerFileExtractor.extract(bytes, meta)
-          case m if m == graft.mime.MimeDb.Flac =>
-            // FlacParser analog: STREAMINFO + VorbisComment metadata,
-            // PICTURE blocks recurse as embedded children in file order
-            graft.media.FlacExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(name, data))
-          case m if m == graft.mime.MimeDb.JavaClass =>
-            // ClassParser analog: javap-style declaration text
-            graft.code.ClassExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Elf || m == graft.mime.MimeDb.ElfExe ||
-              m == graft.mime.MimeDb.ElfLib || m == graft.mime.MimeDb.ElfObj ||
-              m == graft.mime.MimeDb.ElfCore || m == graft.mime.MimeDb.MsExe ||
-              m == graft.mime.MimeDb.MachO || m == graft.mime.MimeDb.MachOFat =>
-            // ExecutableParser analog: machine:* metadata, header-only
-            graft.code.ExecutableExtractor.extract(bytes, sink, meta)
-          case m if m == graft.mime.MimeDb.Emf =>
-            graft.media.MetafileExtractor.emf(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data))
-          case m if m == graft.mime.MimeDb.Wmf =>
-            graft.media.MetafileExtractor.wmf(bytes, sink, meta)
-          case "image/vnd.dgn;version=8" =>
-            // DGN v8: CFB container, summary metadata only (DGN8Parser)
-            graft.ole2.OleProps.fromCfb(graft.ole2.Cfb.parse(bytes), meta)
-          case "application/x-mspublisher" =>
-            graft.ole2.PubExtractor.extract(bytes, sink, meta)
-          case "application/vnd.ms-works" =>
-            // Works 3/4 MN0 text zone + Works 2000 Quill CONTENTS —
-            // the reference's OfficeParser excludes WORKS entirely (r5)
-            graft.ole2.WpsExtractor.extract(bytes, sink, meta)
-          case m if m.startsWith("application/vnd.stardivision.") =>
-            // StarOffice 5.x binary: the SW5/SC5 body format is out of
-            // scope, but the standard SummaryInformation property set
-            // carries author/title metadata (OleProps) — the reference
-            // has no parser at all for these
-            graft.ole2.OleProps.fromCfb(graft.ole2.Cfb.parse(bytes), meta)
-            meta.set("staroffice:kind",
-              m.stripPrefix("application/vnd.stardivision."))
-          case "model/e57" =>
-            // ASTM E57 header: signature + major.minor version
-            if (bytes.length >= 16) {
-              val major = (bytes(8) & 0xff) | ((bytes(9) & 0xff) << 8)
-              val minor = (bytes(12) & 0xff) | ((bytes(13) & 0xff) << 8)
-              meta.set("e57:version", s"$major.$minor")
-            }
-          case "application/x-pkcs12" =>
-            // PKCS#12 PFX: structure identification via the DER walk
-            graft.crypto.DerKeyExtractor.extract(bytes, sink, meta)
-          case "application/vnd.visio" =>
-            graft.ole2.VsdExtractor.extract(bytes, sink, meta)
-          case MediaTypes.MsWord =>
-            graft.ole2.DocExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data),
-              cfg.password)
-          case MediaTypes.MsExcel | "application/x-tika-msworks-spreadsheet" =>
-            // Works 7.0 .xlr is a BIFF8 workbook under a different root
-            // entry (OfficeParser POIFSDocumentType.XLR → ExcelExtractor)
-            graft.ole2.XlsExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data),
-              cfg.password)
-          case "application/sldworks" =>
-            // SolidWorks parts/assemblies/drawings: summary metadata only
-            // (OfficeParser SOLIDWORKS_* cases emit no body text)
-            graft.ole2.OleProps.fromCfb(graft.ole2.Cfb.parse(bytes), meta)
-          case MediaTypes.MsPowerPoint =>
-            graft.ole2.PptExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data),
-              cfg.password)
-          case MediaTypes.MsOutlook =>
-            graft.ole2.MsgExtractor.extract(bytes, sink, meta,
-              (name, data) => inlineChild(idPath, depth)(Some(name), data))
-          case m if m == graft.ole2.Ole2Detector.OoxmlProtected =>
-            // password-protected OOXML (CFB-wrapped EncryptedPackage):
-            // try MS-OFFCRYPTO decryption with the supplied password, or
-            // the reference's default "VelvetSweatshop" without one
-            // (OfficeParser.java:258-292 — the provider password REPLACES
-            // the default; exactly one attempt, failure throws
-            // EncryptedDocumentException)
-            val pw = cfg.password.getOrElse(
-              graft.crypto.OfficeCrypto.DefaultPassword)
-            graft.crypto.OfficeCrypto.decryptOoxml(
-                graft.ole2.Cfb.parse(bytes), pw) match {
-              case Some(opc) =>
-                meta.set("ooxml:protected", "true")
-                // re-dispatch the decrypted OPC zip: the reported type
-                // becomes the real document type, like the reference's
-                // OOXMLExtractorFactory overwriting Content-Type
-                if (idPath.isEmpty) topMime = null
-                parseNode(opc, idPath, nameHint, depth)
-              case None =>
-                sawException = true
-                meta.add("parse:exception",
-                  s"$m password-protected at ${if (idPath.isEmpty) "/" else idPath}")
-            }
-          case m if m == graft.ole2.Ole2Detector.DrmEncrypted =>
-            // OLE2 DRM dataspaces (TIKA-3666): the reference throws
-            // EncryptedDocumentException — record a parse failure, not an
-            // unknown type
-            sawException = true
-            meta.add("parse:exception",
-              s"$m password-protected at ${if (idPath.isEmpty) "/" else idPath}")
-          case m if m == graft.ole2.Ole2Detector.MsProject =>
-            // OfficeParser POIFSDocumentType.PROJECT: summary properties
-            // only, no body text
-            graft.ole2.OleProps.fromCfb(graft.ole2.Cfb.parse(bytes), meta)
-          case m if m == MediaTypes.TikaMsOffice ||
-              m == graft.ole2.Ole2Detector.CompObjEmbedded ||
-              m == graft.ole2.Ole2Detector.Ole10Native =>
-            // embedded-object carriers first (AbstractPOIFSExtractor
-            // .handleEmbeddedOfficeDoc): a `Package` stream holds an OPC
-            // zip, an Ole10Native record wraps a named payload, and a
-            // `CONTENTS` stream starting %PDF is a raw PDF
-            val carrier =
-              try {
-                val cfb = graft.ole2.Cfb.parse(bytes)
-                graft.ole2.OleProps.fromCfb(cfb, meta)
-                graft.ole2.OleEmbedded.unwrap(cfb)
-              } catch { case _: Exception => None }
-            carrier match {
-              case Some((nm, data)) =>
-                inlineChild(idPath, depth)(
-                  Some(nm.getOrElse("package" + graft.ole2.OleEmbedded.extFor(data))),
-                  data)
-              case None =>
-                // CFB whose subtype markers matched nothing — recorded,
-                // like the reference's unknown-POIFS fallthrough
-                sawUnsupported = true
-            }
-          case other =>
-            // CompositeParser.getParser supertype-walk dispatch
-            // (tika-core parser/CompositeParser.java:245-268): a type
-            // without its own parser is handled by the nearest ancestor
-            // that has one — x-sh/x-python/calendar/… land on the text
-            // parser, +xml types on the XML parser, +zip containers on
-            // zip recursion. Only an octet-stream-rooted walk with no
-            // parser en route records unsupported_type.
-            var cur = MimeRegistry.superType(other)
-            var handled = false
-            while (!handled && cur.isDefined) {
-              cur.get match {
-                case MediaTypes.Eml =>
-                  // multipart/related (MHTML) sub-classes message/rfc822
-                  // (tika-mimetypes.xml:7511) and rides the mail parser
-                  graft.mail.EmlExtractor.extract(bytes, sink, meta,
-                    (name, data) => inlineChild(idPath, depth)(name, data))
-                  handled = true
-                case MediaTypes.TextPlain =>
-                  sink.chars(EncodingDetector.decode(bytes))
-                  sink.newline()
-                  handled = true
-                case MediaTypes.Xml =>
-                  XmlExtractor.extract(bytes, sink, meta)
-                  handled = true
-                case MediaTypes.Zip =>
-                  recurseZip(bytes, idPath, depth)
-                  handled = true
-                case _ =>
-                  cur = MimeRegistry.superType(cur.get)
-              }
-            }
-            if (!handled && cfg.stringsFallback && bytes.nonEmpty) {
-              // opt-in StringsParser analog: when configured, it IS the
-              // parser for otherwise-unsupported binaries (a successful
-              // parse, like the reference's strings route); the source
-              // mime is recorded so consumers can tell salvage from text
-              graft.textparse.StringsExtractor.extract(bytes, sink)
-              meta.add("strings:fallback", mime)
-              handled = true
-            }
-            if (!handled) sawUnsupported = true
-        }
-        // VBA macro pass (OfficeParser.extractMacros, opt-in like
-        // OfficeParserConfig.setExtractMacros): any CFB node with a VBA
-        // project, or an OOXML package's vbaProject.bin part, emits one
-        // text/x-vbasic child per module
-        if (cfg.extractMacros) {
-          try {
-            val vbaCfb: Option[Array[Byte]] =
-              if (graft.ole2.Cfb.isCfb(bytes)) Some(bytes)
-              else if (bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K')
-                ZipUtil.entryNames(bytes).find(_.endsWith("vbaProject.bin"))
-                  .flatMap(n => ZipUtil.entry(bytes, n))
-              else None
-            vbaCfb.foreach { cb =>
-              graft.ole2.VbaMacros.readMacros(graft.ole2.Cfb.parse(cb))
-                .foreach { m =>
-                  meta.add("embedded:macro", m.name)
-                  inlineChild(idPath, depth)(Some(m.name + ".vba"),
-                    m.source.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-                }
-            }
-          } catch { case _: Exception => () }
-        }
+        route(mime)(this, n)
+        if (cfg.extractMacros) macros(n)
       } catch {
         case _: WriteLimitReached => throw new WriteLimitReached
         case t: DocTimeout => throw t
@@ -1060,43 +337,665 @@ object Extractor {
           // on the explicit frame stack above); this guards PARSER-INTERNAL
           // recursion on hostile payloads (e.g. pathologically nested
           // markup), which must fail the DOCUMENT, not the executor task
-          sawException = true
-          meta.add("parse:exception", s"$mime stack overflow at " +
-            (if (idPath.isEmpty) "/" else idPath))
-        case _: Exception =>
-          sawException = true
-          meta.add("parse:exception", s"$mime at ${if (idPath.isEmpty) "/" else idPath}")
+          exception(n, s"$mime stack overflow")
+        case _: Exception => exception(n, mime)
       }
     }
 
-    def recurseZip(bytes: Array[Byte], idPath: String, depth: Int): Unit = {
-      if (depth >= cfg.maxDepth) { sawUnsupported = true; return }
+    /** VBA macro pass (OfficeParser.extractMacros, opt-in like
+      * OfficeParserConfig.setExtractMacros): any CFB node with a VBA
+      * project, or an OOXML package's vbaProject.bin part, emits one
+      * text/x-vbasic child per module.
+      */
+    private def macros(n: Node): Unit =
+      try {
+        val bytes = n.bytes
+        val vbaCfb: Option[Array[Byte]] =
+          if (Cfb.isCfb(bytes)) Some(bytes)
+          else if (bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K')
+            ZipUtil.entryNames(bytes).find(_.endsWith("vbaProject.bin"))
+              .flatMap(nm => ZipUtil.entry(bytes, nm))
+          else None
+        vbaCfb.foreach { cb =>
+          graft.ole2.VbaMacros.readMacros(Cfb.parse(cb)).foreach { m =>
+            meta.add("embedded:macro", m.name)
+            inlineChild(n)(Some(m.name + ".vba"),
+              m.source.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          }
+        }
+      } catch { case _: Exception => () }
+
+    /** Zip member recursion (ZipParser); `bytes` may be a slice of the
+      * node's payload (DWF). Past-budget entries are skipped silently,
+      * like ZipParser; the depth cap is recorded. */
+    def zip(n: Node, bytes: Array[Byte]): Unit = {
+      if (n.depth >= cfg.maxDepth) { sawUnsupported = true; return }
       val w =
         try ZipUtil.walk(bytes, cfg.password)
         catch {
           case _: ZipBombDetected => bomb = true; return
-          case _: Exception =>
-            sawException = true
-            meta.add("parse:exception",
-              s"zip read at ${if (idPath.isEmpty) "/" else idPath}")
-            return
+          case _: Exception => exception(n, "zip read"); return
         }
       // entries that stayed encrypted (no/wrong password) surface as
       // per-stream exceptions, like the reference's embedded
       // EncryptedDocumentException (ZipParserTest.testZipEncrypted) —
       // the rest of the archive still extracts below
-      w.encrypted.foreach { n =>
+      w.encrypted.foreach { nm =>
         sawException = true
-        meta.add("parse:exception",
-          s"EncryptedDocumentException: stream ($n) is encrypted")
+        n.meta.add("parse:exception",
+          s"EncryptedDocumentException: stream ($nm) is encrypted")
       }
-      w.entries.reverseIterator.foreach { e =>
-        stack.push(NodeFrame(e.data, idPath, Some(e.name), depth + 1,
-          onPop = p => meta.add("embedded:path", s"$p:${e.name}"),
-          onDrop = () => ())) // ZipParser skips past-budget entries silently
-      }
+      schedule(n, w.entries, () => ())(e => member(n, e.name, e.data))
+    }
+  }
+
+  // ---- routes ------------------------------------------------------------
+
+  private type Route = (Walk, Node) => Unit
+
+  private def on(keys: String*)(r: Route): Seq[(String, Route)] = keys.map(_ -> r)
+
+  /** A parser that needs no children. */
+  private def leaf(f: (Array[Byte], SpanSink, MetaSink) => Unit): Route =
+    (w, n) => f(n.bytes, w.sink, n.meta)
+
+  /** Summary properties of a CFB container, no body text. */
+  private val oleProps: Route = (_, n) => OleProps.fromCfb(Cfb.parse(n.bytes), n.meta)
+
+  /** Container route: members become embedded children in archive
+    * order. Archives check depth only; the embedded budget applies at
+    * pop time. A depth-capped archive, and every member dropped past the
+    * budget, is RECORDED — a capped archive must not read as a clean
+    * empty success.
+    */
+  private def archive[E](entries: (Walk, Node) => IndexedSeq[E])(
+      m: (Node, E) => Member): Route = (w, n) =>
+    if (n.depth >= w.cfg.maxDepth) w.sawUnsupported = true
+    else w.schedule(n, entries(w, n), w.flagUnsupported)(m(n, _))
+
+  private def namedArchive(entries: Entries): Route =
+    archive((w, n) => entries(n.bytes, w.cfg.password)) {
+      case (n, (name, data)) => member(n, name, data)
     }
 
+  /** Single-payload wrapper route (codecs, AppleSingle): unwrap and
+    * re-detect. Unlike archives it also checks the embedded budget up
+    * front; the frame pops immediately after this node returns (nothing
+    * else is scheduled in between), so the budget just checked still
+    * holds at pop time.
+    */
+  private def wrapper(inner: Node => Member): Route = (w, n) =>
+    if (n.depth >= w.cfg.maxDepth || w.embeddedCount >= w.cfg.maxEmbedded)
+      w.sawUnsupported = true
+    else w.push(n, inner(n), w.flagUnsupported)
+
+  private def codec(decode: Array[Byte] => Array[Byte]): Route =
+    wrapper(n => Member(decode(n.bytes), None, NoMeta))
+
+  /** Strips an HTTP response head, if any, from a web-archive record. */
+  private[engine] def httpPayload(body: Array[Byte],
+      head: Option[WarcExtractor.HttpHead]): Array[Byte] = head match {
+    case Some(h) => java.util.Arrays.copyOfRange(body, h.payloadOffset, body.length)
+    case None => body
+  }
+
+  /** Last path segment of a record URL as a name hint. */
+  private def urlName(url: String): Option[String] =
+    Some(url.substring(url.lastIndexOf('/') + 1)).filter(_.nonEmpty)
+
+  private val RouteList: Seq[(String, Route)] = Seq(
+    on(MediaTypes.Html) { (w, n) =>
+      HtmlExtractor.extract(EncodingDetector.decode(n.bytes), w.sink, n.meta,
+        w.child(n))
+    },
+    on(MediaTypes.AtomXml, MediaTypes.RssXml)(leaf(graft.xmlx.FeedExtractor.extract)),
+    on(MediaTypes.Xml, MediaTypes.SvgXml)(leaf(XmlExtractor.extract)),
+    on(MediaTypes.TextPlain) { (w, n) =>
+      val text = EncodingDetector.decode(n.bytes)
+      if (w.cfg.regexCaptures.nonEmpty || w.cfg.regexMatches.nonEmpty)
+        // configured RegexCaptureParser replaces the text parser
+        graft.textparse.RegexCapture.extract(text, w.cfg.regexCaptures,
+          w.cfg.regexMatches, w.cfg.regexWriteContent, w.sink, n.meta)
+      else
+        // TextAndCSVParser semantics: sniff a consistent delimiter →
+        // table markup; otherwise TXTParser.java:75-121 — charset
+        // decode, one <p> of raw chars
+        graft.textparse.CsvExtractor.sniff(text) match {
+          case Some(d) =>
+            if (n.idPath.isEmpty && w.topMime == MediaTypes.TextPlain)
+              w.topMime = MediaTypes.Csv
+            graft.textparse.CsvExtractor.extract(text, d, w.sink, n.meta)
+          case None =>
+            w.sink.chars(text)
+            w.sink.newline()
+        }
+    },
+    on(MediaTypes.Pdf) { (w, n) =>
+      PdfExtractor.extract(n.bytes, w.sink, n.meta, w.child(n),
+        w.cfg.password, w.cfg.extractMarkedContent)
+    },
+    on(MediaTypes.Docx)((w, n) => DocxExtractor.extract(n.bytes, w.sink, n.meta, w.named(n))),
+    on(MediaTypes.Xlsx) { (w, n) =>
+      graft.ooxml.XlsxExtractor.extract(n.bytes, w.sink, n.meta, w.named(n))
+    },
+    on(MediaTypes.Xlsb)(leaf(graft.ooxml.XlsbExtractor.extract)),
+    on(MediaTypes.Pptx) { (w, n) =>
+      graft.ooxml.PptxExtractor.extract(n.bytes, w.sink, n.meta, w.named(n))
+    },
+    on(MediaTypes.Xps) { (w, n) =>
+      graft.ooxml.XpsExtractor.extract(n.bytes, w.sink, n.meta, w.named(n))
+    },
+    on(graft.xmlx.MsXml2003Extractor.WordMl)(
+      leaf(graft.xmlx.MsXml2003Extractor.extractWordMl)),
+    on(graft.xmlx.MsXml2003Extractor.SpreadsheetMl)(
+      leaf(graft.xmlx.MsXml2003Extractor.extractSpreadsheetMl)),
+    // recognized OPC container without a known core document
+    on(MediaTypes.TikaOoxml)((w, _) => w.sawUnsupported = true),
+    on(MediaTypes.Rtf) { (w, n) =>
+      graft.textparse.RtfExtractor.extract(n.bytes, w.sink, n.meta, w.named(n))
+    },
+    // reached via the .md name-hint glob (no magic exists);
+    // reference analog: tika text-module MarkdownParser
+    on(MimeDb.Markdown)(leaf(graft.textparse.MarkdownExtractor.extract)),
+    // the reference's SourceCodeParser types (code-module) —
+    // verbatim code lines + LoC/@author metadata + from-scratch
+    // lexer token-class counts; other source types (.c/.py/...)
+    // keep landing on the text parser like the reference's
+    // supertype fallback
+    on("text/x-java-source", "text/x-groovy", "text/x-c++src") { (w, n) =>
+      graft.textparse.SourceCodeExtractor.extract(n.bytes, w.sink, n.meta, n.mime)
+    },
+    // IPTC 7901 / ANPA-1312 newswire (news-module IptcAnpaParser)
+    on(MimeDb.Anpa)(leaf(graft.textparse.IptcAnpaExtractor.extract)),
+    // round-5 detect-only formats gaining native readers — the
+    // reference detects each of these without a parser; text /
+    // metadata extraction is beyond-reference, like Cab/Hfs
+    on(MimeDb.Marc)(leaf(graft.textparse.MarcExtractor.extract)),
+    on(MimeDb.MsWrite)(leaf(graft.textparse.WriExtractor.extract)),
+    on(MimeDb.StataDta)(leaf(graft.sci.StataExtractor.extract)),
+    on(MimeDb.HprofBin)(leaf(MiscBinExtractor.extractHprof)),
+    on(MimeDb.Jks)(leaf(MiscBinExtractor.extractJks)),
+    on("model/x.stl-binary")(leaf(MiscBinExtractor.extractStl)),
+    on(MimeDb.PostScript)(leaf(MiscBinExtractor.extractPostScript)),
+    on("application/x-x509-ca-cert")(leaf(graft.crypto.DerKeyExtractor.extract)),
+    // each member message becomes an embedded rfc822 doc; members
+    // past the resource budget are counted in mbox:dropped and
+    // mark the status (ParseSuccessWithException)
+    on(MediaTypes.Mbox) { (w, n) =>
+      val msgs = graft.mail.EmlExtractor.splitMbox(n.bytes)
+      if (n.depth >= w.cfg.maxDepth) {
+        if (msgs.nonEmpty) {
+          n.meta.set("mbox:dropped", msgs.size.toString)
+          w.sawUnsupported = true
+        }
+      } else {
+        var dropped = 0
+        w.after { () =>
+          if (dropped > 0) {
+            n.meta.set("mbox:dropped", dropped.toString)
+            w.sawUnsupported = true
+          }
+        }
+        w.schedule(n, msgs.zipWithIndex, () => dropped += 1) { case (msg, idx) =>
+          Member(msg, Some("message.eml"),
+            p => n.meta.add("embedded:path", s"$p:message-${idx + 1}.eml"))
+        }
+      }
+    },
+    on(MediaTypes.Eml) { (w, n) =>
+      graft.mail.EmlExtractor.extract(n.bytes, w.sink, n.meta, w.child(n))
+    },
+    on(MediaTypes.Odt, MediaTypes.Ods, MediaTypes.Odp) { (w, n) =>
+      graft.odf.OdtExtractor.extract(n.bytes, w.sink, n.meta, w.named(n),
+        w.cfg.extractMacros)
+    },
+    on(MimeDb.Word2006Ml) { (w, n) =>
+      graft.xmlx.Word2006MlExtractor.extract(n.bytes, w.sink, n.meta, w.named(n))
+    },
+    on(MimeDb.FlatOd, MimeDb.FlatOdt, MimeDb.FlatOds, MimeDb.FlatOdp) { (w, n) =>
+      graft.odf.OdtExtractor.extractFlat(n.bytes, w.sink, n.meta, w.named(n),
+        w.cfg.extractMacros)
+    },
+    // OPF metadata + spine-ordered content into the parent,
+    // resources as children (EpubParser/OPFParser semantics);
+    // packages without an OPF fall back to zip recursion
+    on(MediaTypes.Epub) { (w, n) =>
+      val handled =
+        try graft.zipx.EpubExtractor.extract(n.bytes, w.sink, n.meta, w.named(n))
+        catch { case _: Exception => false }
+      if (!handled) w.zip(n, n.bytes)
+    },
+    on(MediaTypes.Zip)((w, n) => w.zip(n, n.bytes)),
+    on(MimeDb.Tar, MimeDb.Gtar)(namedArchive(ArchiveEntries(MimeDb.Tar))),
+    on(MimeDb.Ar, MimeDb.Deb)(namedArchive(ArchiveEntries(MimeDb.Ar))),
+    on(MimeDb.Cpio)(namedArchive(ArchiveEntries(MimeDb.Cpio))),
+    // PackageParser dump dispatch (commons-compress
+    // DumpArchiveInputStream): every regular-file inode is an
+    // embedded doc named by its dirent-resolved path
+    on(MimeDb.UnixDump)(archive { (_, n) =>
+      val s = graft.pkgx.DumpArchive.summary(n.bytes)
+      if (s.label.nonEmpty) n.meta.set("dump:label", s.label)
+      if (s.hostname.nonEmpty) n.meta.set("dump:hostname", s.hostname)
+      if (s.filesystem.nonEmpty) n.meta.set("dump:filesystem", s.filesystem)
+      graft.pkgx.DumpArchive.entries(n.bytes)
+    }((n, e) => member(n, e.name, e.data))),
+    on(MimeDb.SevenZ)(namedArchive(ArchiveEntries(MimeDb.SevenZ))),
+    on(MimeDb.Cab)(namedArchive(ArchiveEntries(MimeDb.Cab))),
+    // raw HFS+/HFSX Apple disk images — beyond reference parity
+    // (the reference only glob-detects .dmg); catalog files
+    // recurse with their full volume paths, UDIF-wrapped images
+    // throw inside Hfs.entries → recorded parse exception
+    on(MimeDb.Dmg)(archive { (w, n) =>
+      if (graft.pkgx.Hfs.isHfs(n.bytes)) graft.pkgx.Hfs.entries(n.bytes)
+      else { w.sawUnsupported = true; Vector.empty }
+    }((n, e) => member(n, e.name, e.data))),
+    // ARJ: stored entries recurse; compressed entries recorded
+    // unsupported — exact commons-compress ArjArchiveInputStream
+    // capability, which is what the reference dispatches to
+    on(MimeDb.Arj) { (w, n) =>
+      val es = graft.pkgx.Arj.entries(n.bytes)
+      es.foreach(e => n.meta.add("arj:entry", s"${e.name}:${e.originalSize}"))
+      if (es.exists(_.data.isEmpty)) w.sawUnsupported = true
+      val stored = es.filter(_.data.isDefined)
+      if (n.depth < w.cfg.maxDepth)
+        w.schedule(n, stored, w.flagUnsupported)(e => member(n, e.name, e.data.get))
+      else if (stored.nonEmpty)
+        w.sawUnsupported = true // depth cap drops children, like zip
+    },
+    // RAR container walk (RarUtil): entry names/sizes always
+    // surface as metadata; STORED entries recurse; compressed
+    // entries are recorded unsupported (the RAR compression
+    // algorithm is a declared license exclusion — the reference
+    // uses junrar here)
+    on(MimeDb.Rar) { (w, n) =>
+      val ar = graft.pkgx.RarUtil.parse(n.bytes, w.cfg.password)
+      // no (or wrong) password: the reference throws
+      // EncryptedDocumentException here; with a good password the
+      // decrypted entries recurse below (exceeds the reference)
+      if (ar.headersEncrypted && ar.entries.isEmpty)
+        w.exception(n, "rar encrypted headers")
+      ar.entries.foreach(e => n.meta.add("rar:entry", s"${e.name}:${e.unpSize}"))
+      if (ar.entries.exists(e => e.stored.isEmpty)) w.sawUnsupported = true
+      val stored = ar.entries.filter(_.stored.isDefined)
+      if (n.depth < w.cfg.maxDepth)
+        w.schedule(n, stored, w.flagUnsupported)(e => member(n, e.name, e.stored.get))
+      else if (stored.nonEmpty)
+        w.sawUnsupported = true // depth cap drops children, like zip
+    },
+    // CMS/PKCS#7: unwrap the signed / timestamped / compressed
+    // payload and recurse it (crypto-module Pkcs7Parser/TSDParser
+    // behavior); enveloped/digested/encrypted are labelled with
+    // their smime-type and yield an empty document (no throw),
+    // detached signatures yield metadata only
+    on(MimeDb.Pkcs7Mime, MimeDb.Pkcs7Sig, MimeDb.Tsd) { (w, n) =>
+      val un = graft.crypto.Pkcs7Extractor.unwrap(n.bytes)
+      if (un.contentType != null) n.meta.set("cms:content-type", un.contentType)
+      if (un.smimeType != null) n.meta.set("cms:smime-type", un.smimeType)
+      if (un.truncated) {
+        // bomb cap clipped the inflated payload: keep the prefix
+        // but mark the document (Pkcs7Parser truncation warning)
+        n.meta.set("cms:truncated", "true")
+        w.sawUnsupported = true
+      }
+      if (un.content.isEmpty) {
+        if (un.contentType != null &&
+            (un.smimeType == null || un.smimeType == "certs-only"))
+          n.meta.set("cms:detached", "true")
+      }
+      else if (n.depth < w.cfg.maxDepth)
+        w.push(n, Member(un.content, None, NoMeta), w.flagUnsupported)
+      else w.sawUnsupported = true
+    },
+    // a raw captured HTTP response: record the head as metadata,
+    // recurse the body through re-detection (the supertype walk
+    // would otherwise dump headers as document text)
+    on(MimeDb.HttpResponse) { (w, n) =>
+      WarcExtractor.parseHttpHead(n.bytes) match {
+        case Some(h) if n.depth < w.cfg.maxDepth =>
+          n.meta.add("http:status", h.status.toString)
+          h.headers.foreach { case (k, v) => n.meta.add(s"http:$k", v) }
+          val body = httpPayload(n.bytes, Some(h))
+          if (body.nonEmpty) w.push(n, Member(body, None, NoMeta), w.flagUnsupported)
+        case _ =>
+          w.sink.chars(EncodingDetector.decode(n.bytes))
+          w.sink.newline()
+      }
+    },
+    // pre-WARC web archives: each record is an embedded doc with
+    // arc: metadata; HTTP heads are stripped like the warc branch
+    on(MimeDb.ArcArchive)(archive((_, n) =>
+        graft.warc.ArcExtractor.records(n.bytes).filter(_.body.nonEmpty)) {
+      (n, rec) =>
+        val head = WarcExtractor.parseHttpHead(rec.body)
+        Member(httpPayload(rec.body, head), urlName(rec.url), { p =>
+          n.meta.add("embedded:path", s"$p:${rec.url}")
+          n.meta.add(s"arc:$p:date", rec.date)
+          n.meta.add(s"arc:$p:mime", rec.mime)
+          head.foreach(h => n.meta.add(s"arc:$p:status", h.status.toString))
+        })
+    }),
+    // WARCParser.java:57 semantics: each `response` record is an
+    // embedded document carrying its WARC headers (warc:) and
+    // HTTP response head (warc:http:, warc:http:status) as
+    // metadata, keyed by the ordinal id path; warcinfo and other
+    // record types are skipped. .warc.gz reaches here via the
+    // gzip codec's inner re-detect.
+    on(MimeDb.Warc)(archive((_, n) => WarcExtractor.records(n.bytes)
+        .filter(r => r.warcType == "response" && r.body.nonEmpty)) { (n, rec) =>
+      val uri = rec.targetUri.getOrElse("")
+      val head =
+        if (rec.header("Content-Type").exists(_.startsWith("application/http")))
+          WarcExtractor.parseHttpHead(rec.body)
+        else None
+      Member(httpPayload(rec.body, head), Some(uri).filter(_.nonEmpty).flatMap(urlName), { p =>
+        if (uri.nonEmpty) n.meta.add("embedded:path", s"$p:$uri")
+        rec.headers.foreach { case (k, v) => n.meta.add(s"warc:$p:$k", v) }
+        head.foreach { h =>
+          n.meta.add(s"warc:http:$p:status", h.status.toString)
+          if (h.reason.nonEmpty) n.meta.add(s"warc:http:$p:status:reason", h.reason)
+          h.headers.foreach { case (k, v) => n.meta.add(s"warc:http:$p:$k", v) }
+        }
+      })
+    }),
+    // AppleSingle wrapper: the data fork is the real document
+    // (apple/AppleSingleFileParser.java) — unwrap + re-detect
+    on(MimeDb.AppleSingle)(wrapper { n =>
+      val (name, fork) = graft.textparse.AppleSingle.unwrap(n.bytes)
+      Member(fork, name, p => name.foreach(nm => n.meta.add("embedded:path", s"$p:$nm")))
+    }),
+    Codecs.toSeq.flatMap { case (m, decode) => on(m)(codec(decode)) },
+    // image/audio/video payloads: metadata-only extraction, like
+    // the reference's JpegParser/Mp3Parser/MP4Parser (SURVEY
+    // §2.7) — dimensions/duration/sample-rate parsed from the
+    // container bytes into metadata, payload rides along as a
+    // media span with a synthetic name ("embedded-N.ext",
+    // EmbeddedDocumentUtil.java:225-262)
+    on(MediaTypes.Png, MediaTypes.Jpeg, MediaTypes.Gif, MediaTypes.Tiff,
+      MediaTypes.Bmp, MediaTypes.Webp, MediaTypes.Mp3, MediaTypes.Wav,
+      MediaTypes.Ogg, MediaTypes.Mp4, MediaTypes.Avi, MediaTypes.Matroska,
+      MimeDb.Midi, MimeDb.M4a, MimeDb.M4v, MimeDb.Flv, MimeDb.MpegVideo,
+      MimeDb.QuickTime, MimeDb.WebmVideo, MimeDb.Heic, MimeDb.Avif, MimeDb.Jp2,
+      MimeDb.Ico, MimeDb.Psd,
+      // round-3 second magic tranche — media containers pass through as
+      // media spans (metadata-only), like the rest of this family
+      MimeDb.OggVorbis, MimeDb.OggOpus, MimeDb.OggTheora, MimeDb.OggSpeex,
+      MimeDb.OggFlacA, MimeDb.Asf, MimeDb.Caf, MimeDb.AmrWb, MimeDb.Sid,
+      MimeDb.RealAudio, MimeDb.Mng, MimeDb.Jng, MimeDb.Ac3, MimeDb.CanonCr2,
+      MimeDb.Pcx, MimeDb.Pam, MimeDb.SgiRgb, MimeDb.Bpg, MimeDb.Icns, MimeDb.Dpx,
+      MimeDb.Nitf, MimeDb.Aiff, MimeDb.AuBasic, MimeDb.Jxl,
+      // round-5 detect-only formats gaining native dimension reads
+      MimeDb.Pbm, MimeDb.Pgm, MimeDb.Ppm, MimeDb.Djvu, MimeDb.Pict, MimeDb.Swf,
+      MimeDb.Amr, "audio/x-aac", "image/vnd.zbrush.dcx", "image/x-jbig2") { (w, n) =>
+      w.embeddedCount += 1
+      val ext = MediaExt.getOrElse(n.mime, n.mime.substring(n.mime.indexOf('/') + 1))
+      val ref = s"embedded:embedded-${w.embeddedCount}.$ext"
+      graft.media.MediaParser.parse(n.bytes).foreach { mm =>
+        if (mm.width > 0) {
+          n.meta.add(s"media:$ref:width", mm.width.toString)
+          n.meta.add(s"media:$ref:height", mm.height.toString)
+        }
+        if (mm.durationMs > 0) n.meta.add(s"media:$ref:duration_ms", mm.durationMs.toString)
+        if (mm.sampleRate > 0) n.meta.add(s"media:$ref:sample_rate", mm.sampleRate.toString)
+        if (mm.orientation > 0) n.meta.add(s"media:$ref:orientation", mm.orientation.toString)
+        // descriptive tags (ID3 title/artist/album, xmp:*) ride
+        // under the same media:<ref> namespace
+        mm.tags.foreach { case (k, v) => n.meta.add(s"media:$ref:$k", v) }
+        // attached pictures (ID3 APIC cover art) recurse as inline
+        // embedded documents, like the reference's Mp3Parser
+        mm.attachments.foreach { case (name, data) => w.inlineChild(n)(Some(name), data) }
+      }
+      w.sink.media(ref)
+    },
+    on(MimeDb.Netcdf)(leaf(graft.sci.NetcdfExtractor.extract)),
+    on(MimeDb.Hdf)((_, n) => graft.sci.HdfExtractor.extract(n.bytes, n.meta)),
+    on(MimeDb.Fits)(leaf(graft.sci.FitsExtractor.extract)),
+    on(MimeDb.Grib)(leaf(graft.sci.GribExtractor.extract)),
+    on(MimeDb.Matlab)(leaf(graft.sci.MatExtractor.extract)),
+    on(MimeDb.EnviHdr)(leaf(graft.sci.EnviExtractor.extract)),
+    on(graft.zipx.Iwork13Extractor.Keynote13, graft.zipx.Iwork13Extractor.Numbers13,
+        graft.zipx.Iwork13Extractor.Pages13, graft.zipx.Iwork13Extractor.Unknown13) {
+      (w, n) => graft.zipx.Iwork13Extractor.extract(n.bytes, n.meta, w.named(n))
+    },
+    on(MimeDb.ActiveMime) { (w, n) =>
+      graft.ole2.ActiveMimeExtractor.extract(n.bytes, n.meta, w.named(n))
+    },
+    on(MimeDb.SasData)(leaf(graft.sci.SasExtractor.extract)),
+    on(MimeDb.Sqlite) { (w, n) =>
+      graft.db.SqliteExtractor.extract(n.bytes, w.sink, n.meta, w.child(n))
+    },
+    on(MimeDb.MsAccess) { (w, n) =>
+      graft.db.AccessExtractor.extract(n.bytes, w.sink, n.meta, w.named(n))
+    },
+    on(MimeDb.OneNote)(leaf(graft.onenote.OneNoteExtractor.extract)),
+    on(MimeDb.Chm)(leaf(graft.chm.ChmExtractor.extract)),
+    on(MimeDb.HwpV5)(leaf(graft.ole2.HwpExtractor.extract)),
+    on(MimeDb.Wpd)(leaf(graft.textparse.WordPerfectExtractor.extract)),
+    on(MimeDb.Qpw)(leaf(graft.textparse.QpwExtractor.extract)),
+    // pre-v9 QuattroPro record streams — the reference throws
+    // UnsupportedFormatException here (beyond-reference, r5)
+    on(MimeDb.QpwDos14, MimeDb.QpwDos5, MimeDb.QpwWin15, MimeDb.QpwWin6)(
+      leaf(graft.textparse.QpwExtractor.extractLegacy)),
+    // QPW v7/8: the same legacy record stream, wrapped in a CFB
+    // PerfectOffice_MAIN stream (BOF version 0x1007)
+    on("application/x-quattro-pro;version=7-8") { (w, n) =>
+      val cfb = Cfb.parse(n.bytes)
+      OleProps.fromCfb(cfb, n.meta)
+      cfb.entries.find(e => e.objType == 2 && e.name == "PerfectOffice_MAIN")
+        .map(cfb.readStream)
+        .foreach(graft.textparse.QpwExtractor.extractLegacy(_, w.sink, n.meta))
+    },
+    // DWF 6+: "(DWF Vxx.yy)" prologue, then a plain zip package —
+    // members (manifest/descriptors/w2d streams) recurse like any
+    // archive; the reference only detects the type
+    on("model/vnd.dwf") { (w, n) =>
+      val bytes = n.bytes
+      n.meta.set("dwf:version", new String(bytes, 5, math.min(6, bytes.length - 5),
+        java.nio.charset.StandardCharsets.US_ASCII))
+      val zipAt = (0 to math.min(bytes.length, 64) - 4).find(i => bytes(i) == 'P' &&
+        bytes(i + 1) == 'K' && bytes(i + 2) == 3 && bytes(i + 3) == 4)
+      zipAt match {
+        // the zip walk itself records the depth cap (sawUnsupported)
+        case Some(at) => w.zip(n, java.util.Arrays.copyOfRange(bytes, at, bytes.length))
+        case None => w.sawUnsupported = true // pre-6 binary DWF
+      }
+    },
+    on(MimeDb.Dbf)(leaf(graft.textparse.DbfExtractor.extract)),
+    on(MimeDb.DifXml)(leaf(graft.xmlx.DifExtractor.extract)),
+    on(MimeDb.Dwg)(leaf(graft.media.DwgExtractor.extract)),
+    on(MimeDb.Mif)(leaf(graft.textparse.MifExtractor.extract)),
+    on(MimeDb.Idml)(leaf(graft.zipx.IdmlExtractor.extract)),
+    on("application/vnd.apple.keynote", "application/vnd.apple.pages",
+        "application/vnd.apple.numbers") { (w, n) =>
+      graft.zipx.IworkExtractor.extract(n.bytes, n.mime, w.sink, n.meta)
+    },
+    on(MimeDb.BPlist, "application/x-plist") { (w, n) =>
+      graft.textparse.PlistExtractor.extract(n.bytes, w.sink, n.meta, w.child(n))
+    },
+    on(MimeDb.Ttf, MimeDb.Otf)(leaf(graft.media.FontExtractor.extractTtf)),
+    on(MimeDb.Afm)(leaf(graft.media.FontExtractor.extractAfm)),
+    on(MimeDb.Prt)(leaf(graft.media.PrtExtractor.extract)),
+    on(MimeDb.Tmx)(leaf(graft.xmlx.TranslationExtractor.extractTmx)),
+    on(MimeDb.Xliff)(leaf(graft.xmlx.TranslationExtractor.extractXliff)),
+    on(MimeDb.Xlz)(leaf(graft.xmlx.TranslationExtractor.extractXlz)),
+    on(MimeDb.FictionBook) { (w, n) =>
+      graft.xmlx.FictionBookExtractor.extract(n.bytes, w.sink, n.meta, w.child(n))
+    },
+    on(MimeDb.Tnef) { (w, n) =>
+      graft.mail.TnefExtractor.extract(n.bytes, w.sink, n.meta, w.child(n))
+    },
+    on(MimeDb.Pst)((w, n) => graft.pst.PstExtractor.extract(n.bytes, w.sink, n.meta, w.child(n))),
+    on(MimeDb.MsOwner)((_, n) => graft.ole2.OwnerFileExtractor.extract(n.bytes, n.meta)),
+    // FlacParser analog: STREAMINFO + VorbisComment metadata,
+    // PICTURE blocks recurse as embedded children in file order
+    on(MimeDb.Flac) { (w, n) =>
+      graft.media.FlacExtractor.extract(n.bytes, w.sink, n.meta, w.child(n))
+    },
+    // ClassParser analog: javap-style declaration text
+    on(MimeDb.JavaClass)(leaf(graft.code.ClassExtractor.extract)),
+    // ExecutableParser analog: machine:* metadata, header-only
+    on(MimeDb.Elf, MimeDb.ElfExe, MimeDb.ElfLib, MimeDb.ElfObj, MimeDb.ElfCore,
+        MimeDb.MsExe, MimeDb.MachO, MimeDb.MachOFat)(
+      leaf(graft.code.ExecutableExtractor.extract)),
+    on(MimeDb.Emf) { (w, n) =>
+      graft.media.MetafileExtractor.emf(n.bytes, w.sink, n.meta, w.named(n))
+    },
+    on(MimeDb.Wmf)(leaf(graft.media.MetafileExtractor.wmf)),
+    // DGN v8: CFB container, summary metadata only (DGN8Parser)
+    on("image/vnd.dgn;version=8")(oleProps),
+    on("application/x-mspublisher")(leaf(graft.ole2.PubExtractor.extract)),
+    // Works 3/4 MN0 text zone + Works 2000 Quill CONTENTS —
+    // the reference's OfficeParser excludes WORKS entirely (r5)
+    on("application/vnd.ms-works")(leaf(graft.ole2.WpsExtractor.extract)),
+    // ASTM E57 header: signature + major.minor version
+    on("model/e57") { (_, n) =>
+      val b = n.bytes
+      if (b.length >= 16) {
+        val major = (b(8) & 0xff) | ((b(9) & 0xff) << 8)
+        val minor = (b(12) & 0xff) | ((b(13) & 0xff) << 8)
+        n.meta.set("e57:version", s"$major.$minor")
+      }
+    },
+    // PKCS#12 PFX: structure identification via the DER walk
+    on("application/x-pkcs12")(leaf(graft.crypto.DerKeyExtractor.extract)),
+    on("application/vnd.visio")(leaf(graft.ole2.VsdExtractor.extract)),
+    on(MediaTypes.MsWord) { (w, n) =>
+      graft.ole2.DocExtractor.extract(n.bytes, w.sink, n.meta, w.named(n), w.cfg.password)
+    },
+    // Works 7.0 .xlr is a BIFF8 workbook under a different root
+    // entry (OfficeParser POIFSDocumentType.XLR → ExcelExtractor)
+    on(MediaTypes.MsExcel, "application/x-tika-msworks-spreadsheet") { (w, n) =>
+      graft.ole2.XlsExtractor.extract(n.bytes, w.sink, n.meta, w.named(n), w.cfg.password)
+    },
+    // SolidWorks parts/assemblies/drawings: summary metadata only
+    // (OfficeParser SOLIDWORKS_* cases emit no body text)
+    on("application/sldworks")(oleProps),
+    on(MediaTypes.MsPowerPoint) { (w, n) =>
+      graft.ole2.PptExtractor.extract(n.bytes, w.sink, n.meta, w.named(n), w.cfg.password)
+    },
+    on(MediaTypes.MsOutlook) { (w, n) =>
+      graft.ole2.MsgExtractor.extract(n.bytes, w.sink, n.meta, w.named(n))
+    },
+    // password-protected OOXML (CFB-wrapped EncryptedPackage):
+    // try MS-OFFCRYPTO decryption with the supplied password, or
+    // the reference's default "VelvetSweatshop" without one
+    // (OfficeParser.java:258-292 — the provider password REPLACES
+    // the default; exactly one attempt, failure throws
+    // EncryptedDocumentException)
+    on(Ole2Detector.OoxmlProtected) { (w, n) =>
+      val pw = w.cfg.password.getOrElse(graft.crypto.OfficeCrypto.DefaultPassword)
+      graft.crypto.OfficeCrypto.decryptOoxml(Cfb.parse(n.bytes), pw) match {
+        case Some(opc) =>
+          n.meta.set("ooxml:protected", "true")
+          // re-dispatch the decrypted OPC zip: the reported type
+          // becomes the real document type, like the reference's
+          // OOXMLExtractorFactory overwriting Content-Type
+          if (n.idPath.isEmpty) w.topMime = null
+          w.parseNode(opc, n.idPath, n.nameHint, n.depth)
+        case None => w.exception(n, s"${n.mime} password-protected")
+      }
+    },
+    // OLE2 DRM dataspaces (TIKA-3666): the reference throws
+    // EncryptedDocumentException — record a parse failure, not an
+    // unknown type
+    on(Ole2Detector.DrmEncrypted)((w, n) => w.exception(n, s"${n.mime} password-protected")),
+    // OfficeParser POIFSDocumentType.PROJECT: summary properties
+    // only, no body text
+    on(Ole2Detector.MsProject)(oleProps),
+    // embedded-object carriers first (AbstractPOIFSExtractor
+    // .handleEmbeddedOfficeDoc): a `Package` stream holds an OPC
+    // zip, an Ole10Native record wraps a named payload, and a
+    // `CONTENTS` stream starting %PDF is a raw PDF
+    on(MediaTypes.TikaMsOffice, Ole2Detector.CompObjEmbedded,
+        Ole2Detector.Ole10Native) { (w, n) =>
+      val carrier =
+        try {
+          val cfb = Cfb.parse(n.bytes)
+          OleProps.fromCfb(cfb, n.meta)
+          graft.ole2.OleEmbedded.unwrap(cfb)
+        } catch { case _: Exception => None }
+      carrier match {
+        case Some((nm, data)) => w.inlineChild(n)(
+          Some(nm.getOrElse("package" + graft.ole2.OleEmbedded.extFor(data))), data)
+        // CFB whose subtype markers matched nothing — recorded,
+        // like the reference's unknown-POIFS fallthrough
+        case None => w.sawUnsupported = true
+      }
+    }
+  ).flatten
+  private val Routes: Map[String, Route] = RouteList.toMap
+  // exposed so a test can check that no key is duplicated or shadowed
+  // by a prefix family, which would change which parser wins
+  private[engine] def routeKeys: Seq[String] = RouteList.map(_._1)
+  private[engine] def prefixKeys: Seq[String] = PrefixRoutes.map(_._1)
+
+  /** Type families matched by prefix, tried in order after the exact
+    * lookup. No exact key in `Routes` starts with any of these. */
+  private val PrefixRoutes: Seq[(String, Route)] = Seq(
+    "application/vnd.ms-visio." -> leaf(graft.ooxml.VsdxExtractor.extract),
+    MimeDb.Lotus123 -> leaf(graft.textparse.LotusExtractor.extract),
+    MimeDb.BerkeleyDb -> leaf(graft.db.BdbExtractor.extract),
+    // StarOffice 5.x binary: the SW5/SC5 body format is out of
+    // scope, but the standard SummaryInformation property set
+    // carries author/title metadata (OleProps) — the reference
+    // has no parser at all for these
+    "application/vnd.stardivision." -> { (_, n) =>
+      OleProps.fromCfb(Cfb.parse(n.bytes), n.meta)
+      n.meta.set("staroffice:kind", n.mime.stripPrefix("application/vnd.stardivision."))
+    })
+
+  /** CompositeParser.getParser supertype-walk dispatch
+    * (tika-core parser/CompositeParser.java:245-268): a type without its
+    * own parser is handled by the nearest ancestor that has one —
+    * x-sh/x-python/calendar/… land on the text parser (no CSV sniff),
+    * +xml types on the XML parser, +zip containers on zip recursion.
+    * Only an octet-stream-rooted walk with no parser en route records
+    * unsupported_type.
+    */
+  private val SuperTypeWalk: Route = (w, n) => {
+    var cur = MimeRegistry.superType(n.mime)
+    var handled = false
+    while (!handled && cur.isDefined) {
+      handled = true
+      cur.get match {
+        case MediaTypes.Eml =>
+          // multipart/related (MHTML) sub-classes message/rfc822
+          // (tika-mimetypes.xml:7511) and rides the mail parser
+          graft.mail.EmlExtractor.extract(n.bytes, w.sink, n.meta, w.child(n))
+        case MediaTypes.TextPlain =>
+          w.sink.chars(EncodingDetector.decode(n.bytes))
+          w.sink.newline()
+        case MediaTypes.Xml => XmlExtractor.extract(n.bytes, w.sink, n.meta)
+        case MediaTypes.Zip => w.zip(n, n.bytes)
+        case other =>
+          handled = false
+          cur = MimeRegistry.superType(other)
+      }
+    }
+    if (!handled && w.cfg.stringsFallback) {
+      // opt-in StringsParser analog: when configured, it IS the
+      // parser for otherwise-unsupported binaries (a successful
+      // parse, like the reference's strings route); the source
+      // mime is recorded so consumers can tell salvage from text
+      graft.textparse.StringsExtractor.extract(n.bytes, w.sink)
+      n.meta.add("strings:fallback", n.mime)
+    } else if (!handled) w.sawUnsupported = true
+  }
+
+  private def route(mime: String): Route =
+    Routes.getOrElse(mime, PrefixRoutes.collectFirst {
+      case (prefix, r) if mime.startsWith(prefix) => r
+    }.getOrElse(SuperTypeWalk))
+
+  def extract(row: DocRow, cfg: Config = DefaultConfig): ExtractedDoc = {
+    val payloadTotal = row.spans.iterator.map { s =>
+      if (s.kind == Span.KindMedia) 0L else (if (s.text == null) 0L else s.text.length.toLong)
+    }.sum
+    val deadline =
+      if (cfg.softDeadlineMs <= 0) Long.MaxValue
+      else System.nanoTime() + cfg.softDeadlineMs * 1000000L
+    val sink = new SpanSink(cfg.writeLimit, payloadTotal, cfg.bombOutputThreshold,
+      cfg.bombMaxRatio, deadline)
+    val w = new Walk(cfg, sink)
     var limitHit = false
     var timedOut = false
     try {
@@ -1107,38 +1006,38 @@ object Extractor {
           // pre-parse digest (AutoDetectParser.java:151 / DigestHelper) —
           // the lineage/dedup key for the raw payload
           if (bytes.nonEmpty)
-            meta.add("tk:digest:sha256", graft.core.Hex.encode(
+            w.meta.add("tk:digest:sha256", graft.core.Hex.encode(
               java.security.MessageDigest.getInstance("SHA-256").digest(bytes)))
           // the row id doubles as the resource-name hint, exactly like
           // AutoDetectParser's RESOURCE_NAME_KEY — applyHint only ever
           // SPECIALIZES the content-detected type, never overrides it
-          parseNode(bytes, "", Option(row.doc_id), 0)
-          drain(0)
+          w.parseNode(bytes, "", Option(row.doc_id), 0)
+          w.drain(0)
         }
       }
     } catch {
       case _: WriteLimitReached => limitHit = true
       case _: DocTimeout => timedOut = true
-      case _: ZipBombDetected => bomb = true
+      case _: ZipBombDetected => w.bomb = true
     }
 
     val spans = sink.result()
     val status =
       if (timedOut) Status.Timeout
-      else if (bomb) Status.ZipBomb
+      else if (w.bomb) Status.ZipBomb
       else if (limitHit || sink.limitReached) Status.WriteLimitReached
       else if (row.spans.isEmpty) Status.EmptyDoc
-      else if (sawUnsupported && spans.isEmpty) Status.UnsupportedType
-      else if (sawException && spans.isEmpty) Status.ParseException
-      else if (sawException || sawUnsupported) Status.ParseSuccessWithException
+      else if (w.sawUnsupported && spans.isEmpty) Status.UnsupportedType
+      else if (w.sawException && spans.isEmpty) Status.ParseException
+      else if (w.sawException || w.sawUnsupported) Status.ParseSuccessWithException
       else Status.ParseSuccess
 
     ExtractedDoc(
       doc_id = row.doc_id,
-      mime = if (topMime == null) MediaTypes.OctetStream else topMime,
+      mime = if (w.topMime == null) MediaTypes.OctetStream else w.topMime,
       status = status,
       spans = spans,
-      meta = meta.result(),
+      meta = w.meta.result(),
       n_spans = spans.length,
       n_chars = sink.charCount
     )

@@ -28,8 +28,9 @@ import graft.core._
   *    distinct partitions.
   *
   * At 100 TB the input is a partitioned Parquet/Iceberg table: Catalyst
-  * prunes to the (doc_id, spans) columns, and the resume filter is a
-  * partition-prunable range predicate.
+  * prunes to the (doc_id, spans) columns. Resume is one exact anti-join
+  * on doc_id ([[resumeFilter]]), which stays correct when ids arrive
+  * late or are backfilled inside ranges already committed.
   */
 object Pipeline {
 
@@ -51,12 +52,10 @@ object Pipeline {
   def run(spark: SparkSession, input: Dataset[DocRow], outDir: String,
       metricsDir: String,
       cfg: Extractor.Config = Extractor.DefaultConfig): Unit =
-    writeWithLineage(spark,
-      input.repartition(width(spark), col("doc_id")), outDir, metricsDir, cfg)
-
-  /** One output file and one lineage row per partition of this width. */
-  private def width(spark: SparkSession): Int =
-    spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // one output file and one lineage row per partition of this width
+    writeWithLineage(spark, input.repartition(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id")),
+      outDir, metricsDir, cfg)
 
   /** The entries of `dir` a Spark reader would see (not `_`/`.`-named);
     * none when `dir` is missing or holds only the `_SUCCESS` of a job that
@@ -131,8 +130,9 @@ object Pipeline {
     if (rows.nonEmpty) rows.toDS().coalesce(1).write.mode("append").parquet(metricsDir)
   }
 
-  /** Spark's string order (UTF-8 bytes), the order `min`/`max` and
-    * [[resumeFilterByRange]]'s `between` compare doc ids in.
+  /** Spark's string order (UTF-8 bytes), the order SQL `min`/`max`
+    * compare doc ids in, so lineage bounds match a re-aggregation of the
+    * output.
     */
   private def sqlOrder(a: String, b: String): Int =
     UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
@@ -161,9 +161,8 @@ object Pipeline {
   }
 
   /** Resume: drop rows already present in the committed output
-    * (left-anti on doc_id — at Iceberg scale this becomes a partition-
-    * prunable doc_id-range predicate from the metrics table; the anti-join
-    * broadcast-builds on the *done* side only when it is small).
+    * (left-anti on doc_id; the anti-join broadcast-builds on the *done*
+    * side only when it is small).
     */
   def resumeFilter(input: Dataset[DocRow], outDir: String): Dataset[DocRow] = {
     val spark = input.sparkSession
@@ -174,56 +173,5 @@ object Pipeline {
     if (entries(spark, outDir).isEmpty) return input
     val done = spark.read.parquet(outDir).select("doc_id").distinct()
     input.join(done, Seq("doc_id"), "left_anti").as[DocRow]
-  }
-
-  /** Range-partitioned variant of [[run]]: partitions carry contiguous
-    * doc_id ranges, so the lineage rows' (doc_id_min, doc_id_max) are
-    * exact coverage intervals and [[resumeFilterByRange]] can resume with
-    * a pure predicate instead of an anti-join.
-    */
-  def runRanged(spark: SparkSession, input: Dataset[DocRow], outDir: String,
-      metricsDir: String,
-      cfg: Extractor.Config = Extractor.DefaultConfig): Unit =
-    writeWithLineage(spark,
-      input.repartitionByRange(width(spark), col("doc_id")), outDir, metricsDir, cfg)
-
-  /** Resume as a partition-prunable range predicate (the variant the
-    * round-1 comment promised): committed (doc_id_min, doc_id_max)
-    * intervals from the metrics table are merged on the driver (tiny —
-    * one per committed partition) and compiled into a NOT-in-any-range
-    * filter. No shuffle, no join; Parquet/Iceberg min-max stats prune
-    * whole input files; O(done) work in [[resumeFilter]] drops to
-    * O(committed partitions).
-    *
-    * NOT a drop-in equivalent of the anti-join: a committed interval is
-    * treated as FULLY covered, so any doc_id that sorts inside
-    * [min, max] of a committed partition is skipped even if that exact
-    * id was never extracted. Correct for the append-only ingest layout
-    * this targets (monotone doc_id batches written by [[runRanged]]);
-    * for inputs with late-arriving/backfilled ids inside committed
-    * ranges, use [[resumeFilter]].
-    */
-  def resumeFilterByRange(input: Dataset[DocRow], metricsDir: String): Dataset[DocRow] = {
-    val spark = input.sparkSession
-    import spark.implicits._
-    // as in resumeFilter: read failures surface
-    if (entries(spark, metricsDir).isEmpty) return input
-    val intervals = spark.read.parquet(metricsDir)
-      .select("doc_id_min", "doc_id_max")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)))
-      .sortBy(_._1)
-    if (intervals.isEmpty) return input
-    // merge overlapping/adjacent intervals (doc ids are fixed-width, so
-    // lexicographic order == numeric order)
-    val merged = intervals.foldLeft(List.empty[(String, String)]) {
-      case ((lo, hi) :: rest, (lo2, hi2)) if lo2 <= hi =>
-        (lo, if (hi2 > hi) hi2 else hi) :: rest
-      case (acc, iv) => iv :: acc
-    }.reverse
-    val covered = merged
-      .map { case (lo, hi) => col("doc_id").between(lo, hi) }
-      .reduce(_ || _)
-    input.filter(!covered).as[DocRow]
   }
 }

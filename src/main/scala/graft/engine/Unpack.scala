@@ -3,7 +3,8 @@ package graft.engine
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Dataset}
 import graft.core.{DocRow, Span}
-import graft.mime.{MediaTypes, MimeRegistry}
+import graft.mime.{MediaTypes, MimeDb, MimeRegistry}
+import graft.warc.WarcExtractor
 import graft.zipx.{OpcDetector, ZipUtil}
 
 /** The `/unpack` path: emit every embedded resource's raw bytes as its
@@ -11,12 +12,19 @@ import graft.zipx.{OpcDetector, ZipUtil}
   * tika-server UnpackerResource — SURVEY.md §2.10 "optional second
   * output table of extracted media blobs").
   *
-  * Walks the same container tree as the extraction engine (zip, tar,
-  * 7z, ar/deb/cpio, warc, all codec wrappers, OOXML-as-zip media parts,
-  * email attachments) but collects bytes instead of parsing them.
-  * Per-row caps mirror the extraction config.
+  * Walks part of the extraction engine's container tree (zip/EPUB,
+  * tar, 7z, ar/deb/cpio, warc, the gzip/bzip2/xz/lz4/zstd/Unix-compress
+  * codecs, OOXML-as-zip media parts, email attachments) but collects
+  * bytes instead of parsing them. Codecs and archive members come from
+  * the engine's own tables. Per-row caps mirror the extraction config.
   */
 object Unpack {
+
+  private val Codecs = Seq(MediaTypes.Gzip, MimeDb.Bzip2, MimeDb.Xz, MimeDb.Lz4,
+    MimeDb.Zstd, MimeDb.UnixCompress).map(m => m -> Extractor.Codecs(m)).toMap
+
+  private val Archives = Seq(MimeDb.Tar, MimeDb.Gtar, MimeDb.SevenZ, MimeDb.Ar,
+    MimeDb.Deb, MimeDb.Cpio).map(m => m -> Extractor.ArchiveEntries(m)).toMap
 
   final case class EmbeddedBlob(
       doc_id: String, id_path: String, name: String, mime: String,
@@ -54,94 +62,39 @@ object Unpack {
           try OpcDetector.specialize(bytes, nameHint)
           catch { case _: Exception => mime0 }
         else mime0
-      mime match {
+
+      def child(name: String, data: Array[Byte], hint: Option[String]): Unit =
+        if (count < cfg.maxEmbedded) {
+          count += 1
+          val childPath = s"$idPath/$count"
+          emit(childPath, name, data)
+          walk(data, childPath, hint, depth + 1)
+        }
+
+      try mime match {
         case MediaTypes.Zip | MediaTypes.Epub =>
-          try ZipUtil.entries(bytes).foreach { e =>
-            if (count < cfg.maxEmbedded) {
-              count += 1
-              val childPath = s"$idPath/$count"
-              emit(childPath, e.name, e.data)
-              walk(e.data, childPath, Some(e.name), depth + 1)
-            }
-          } catch { case _: Exception => () }
-        case m if m == MediaTypes.Gzip || m == graft.mime.MimeDb.Bzip2 ||
-            m == graft.mime.MimeDb.Xz || m == graft.mime.MimeDb.Lz4 ||
-            m == graft.mime.MimeDb.Zstd || m == graft.mime.MimeDb.UnixCompress =>
-          try {
-            val inner =
-              if (m == MediaTypes.Gzip) ZipUtil.gunzip(bytes)
-              else if (m == graft.mime.MimeDb.Xz) graft.pkgx.Xz.decompress(bytes)
-              else if (m == graft.mime.MimeDb.Lz4) graft.pkgx.Lz4.decompress(bytes)
-              else if (m == graft.mime.MimeDb.Zstd) graft.pkgx.Zstd.decompress(bytes)
-              else if (m == graft.mime.MimeDb.UnixCompress)
-                graft.pkgx.Lzw.decompress(bytes)
-              else graft.pkgx.Bzip2.decompress(bytes)
-            count += 1
-            val childPath = s"$idPath/$count"
-            emit(childPath, nameHint.map(_ + "~unc").getOrElse("unc"), inner)
-            walk(inner, childPath, None, depth + 1)
-          } catch { case _: Exception => () }
-        case m if m == graft.mime.MimeDb.Tar || m == graft.mime.MimeDb.Gtar =>
-          try graft.pkgx.TarUtil.entries(bytes).foreach { e =>
-            if (count < cfg.maxEmbedded) {
-              count += 1
-              val childPath = s"$idPath/$count"
-              emit(childPath, e.name, e.data)
-              walk(e.data, childPath, Some(e.name), depth + 1)
-            }
-          } catch { case _: Exception => () }
-        case m if m == graft.mime.MimeDb.SevenZ =>
-          try graft.pkgx.SevenZ.entries(bytes).foreach { e =>
-            if (count < cfg.maxEmbedded) {
-              count += 1
-              val childPath = s"$idPath/$count"
-              emit(childPath, e.name, e.data)
-              walk(e.data, childPath, Some(e.name), depth + 1)
-            }
-          } catch { case _: Exception => () }
-        case m if m == graft.mime.MimeDb.Ar || m == graft.mime.MimeDb.Deb ||
-            m == graft.mime.MimeDb.Cpio =>
-          try {
-            val entries =
-              if (m == graft.mime.MimeDb.Cpio) graft.pkgx.ArCpio.cpioEntries(bytes)
-              else graft.pkgx.ArCpio.arEntries(bytes)
-            entries.foreach { e =>
-              if (count < cfg.maxEmbedded) {
-                count += 1
-                val childPath = s"$idPath/$count"
-                emit(childPath, e.name, e.data)
-                walk(e.data, childPath, Some(e.name), depth + 1)
-              }
-            }
-          } catch { case _: Exception => () }
-        case m if m == graft.mime.MimeDb.Warc =>
-          try graft.warc.WarcExtractor.records(bytes)
+          ZipUtil.entries(bytes).foreach(e => child(e.name, e.data, Some(e.name)))
+        case m if Codecs.contains(m) =>
+          child(nameHint.map(_ + "~unc").getOrElse("unc"), Codecs(m)(bytes), None)
+        case m if Archives.contains(m) =>
+          Archives(m)(bytes, None).foreach { case (name, data) =>
+            child(name, data, Some(name))
+          }
+        case MimeDb.Warc =>
+          WarcExtractor.records(bytes)
             .filter(r => r.warcType == "response" && r.body.nonEmpty)
             .foreach { rec =>
-              if (count < cfg.maxEmbedded) {
-                count += 1
-                val childPath = s"$idPath/$count"
-                val payload = graft.warc.WarcExtractor.parseHttpHead(rec.body)
-                  .map(h => java.util.Arrays.copyOfRange(rec.body,
-                    h.payloadOffset, rec.body.length))
-                  .getOrElse(rec.body)
-                val name = rec.targetUri.getOrElse(s"record-$count")
-                emit(childPath, name, payload)
-                walk(payload, childPath, Some(name), depth + 1)
-              }
-            } catch { case _: Exception => () }
+              val payload =
+                Extractor.httpPayload(rec.body, WarcExtractor.parseHttpHead(rec.body))
+              val name = rec.targetUri.getOrElse(s"record-${count + 1}")
+              child(name, payload, Some(name))
+            }
         case MediaTypes.Eml =>
-          try graft.mail.EmlExtractor.extract(bytes, new SpanSink(), new MetaSink,
-            (name, data) => {
-              if (count < cfg.maxEmbedded) {
-                count += 1
-                val childPath = s"$idPath/$count"
-                emit(childPath, name.getOrElse(s"attachment-$count"), data)
-                walk(data, childPath, name, depth + 1)
-              }
-            }) catch { case _: Exception => () }
+          graft.mail.EmlExtractor.extract(bytes, new SpanSink(), new MetaSink,
+            (name, data) =>
+              child(name.getOrElse(s"attachment-${count + 1}"), data, name))
         case _ => () // leaf: nothing further to unpack
-      }
+      } catch { case _: Exception => () }
     }
 
     row.spans.sortBy(_.offset).foreach { s =>

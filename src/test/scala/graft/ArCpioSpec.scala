@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import graft.core.{DocRow, Span, Status}
 import graft.corpus.Corpus
 import graft.engine.Extractor
@@ -17,11 +17,7 @@ class ArCpioSpec extends AnyFunSuite {
     "tika-parsers-standard/tika-parsers-standard-modules/" +
     "tika-parser-pkg-module/src/test/resources/test-documents")
 
-  private def fixture(name: String): Array[Byte] = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
-    Files.readAllBytes(docs.resolve(name))
-  }
+  private def fixture(name: String): Array[Byte] = RefFixture.bytes(name, docs)
 
   test("reads the reference's real ar archive") {
     val es = ArCpio.arEntries(fixture("testARofText.ar"))

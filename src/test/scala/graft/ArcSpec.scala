@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import graft.core.{DocRow, Span}
 import graft.corpus.Corpus
 import graft.engine.Extractor
@@ -14,11 +14,7 @@ class ArcSpec extends AnyFunSuite {
     "tika-parsers-standard/tika-parsers-standard-modules/" +
     "tika-parser-webarchive-module/src/test/resources/test-documents")
 
-  private def fixture(name: String): Array[Byte] = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
-    Files.readAllBytes(docs.resolve(name))
-  }
+  private def fixture(name: String): Array[Byte] = RefFixture.bytes(name, docs)
 
   test("reads the real Heritrix ARC fixture's records") {
     val recs = ArcExtractor.records(fixture("testARC.arc"))

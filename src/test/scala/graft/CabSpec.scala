@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import graft.core.{DocRow, Span, Status}
 import graft.corpus.Corpus
 import graft.engine.Extractor
@@ -21,11 +21,7 @@ class CabSpec extends AnyFunSuite {
     "tika-parsers-standard/tika-parsers-standard-modules/" +
     "tika-parser-pkg-module/src/test/resources/test-documents")
 
-  private def fixture(name: String): Array[Byte] = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(pkgDocs.resolve(name)),
-      "reference fixtures not present")
-    Files.readAllBytes(pkgDocs.resolve(name))
-  }
+  private def fixture(name: String): Array[Byte] = RefFixture.bytes(name, pkgDocs)
 
   test("decodes the real Microsoft cabinet byte-exact vs the zip oracle") {
     val entries = Cab.entries(fixture("test-documents.cab"))

@@ -18,11 +18,7 @@ class ChmSpec extends AnyFunSuite {
     "tika-parsers-standard/tika-parsers-standard-modules/" +
     "tika-parser-microsoft-module/src/test/resources/test-documents")
 
-  private def fixture(name: String): Array[Byte] = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
-    Files.readAllBytes(docs.resolve(name))
-  }
+  private def fixture(name: String): Array[Byte] = RefFixture.bytes(name, docs)
 
   private def extract(name: String): graft.core.ExtractedDoc = {
     val b = fixture(name)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Path, Paths}
 import graft.mime.{MimeDb, MimeRegistry}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,11 +26,7 @@ class DetectParityR4Spec extends AnyFunSuite {
       "tika-parsers-standard-modules/tika-parser-pkg-module/src/test/resources/test-documents"
   ).map(Paths.get(_))
 
-  private def fixture(name: String): Array[Byte] = {
-    val p = roots.map(_.resolve(name)).find(Files.isRegularFile(_))
-    org.scalatest.Assertions.assume(p.isDefined, s"fixture $name not present")
-    Files.readAllBytes(p.get)
-  }
+  private def fixture(name: String): Array[Byte] = RefFixture.bytes(name, roots: _*)
 
   private def detectContent(name: String): String =
     MimeRegistry.detect(fixture(name))

@@ -15,18 +15,15 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class LegacyFormatsSpec extends AnyFunSuite {
 
-  private def find(name: String): Option[Path] = {
+  private def find(name: String): Path = RefFixture.present(name) {
     import scala.jdk.CollectionConverters._
     Files.walk(Path.of("/root/reference")).iterator().asScala
       .find(p => p.getFileName.toString == name && Files.isRegularFile(p))
   }
 
-  private def extract(name: String) = {
-    val p = find(name)
-    org.scalatest.Assertions.assume(p.isDefined, s"fixture $name not present")
+  private def extract(name: String) =
     Extractor.extract(DocRow(name, Seq(Span("bytes",
-      Corpus.b64(Files.readAllBytes(p.get)), null, 0))))
-  }
+      Corpus.b64(Files.readAllBytes(find(name))), null, 0))))
 
   private def text(d: graft.core.ExtractedDoc): String =
     d.spans.filter(_.kind == Span.KindText).map(_.text).mkString
@@ -218,9 +215,7 @@ class LegacyFormatsSpec extends AnyFunSuite {
         "KeyStore.jks", "testDJVU.djvu", "test3.swf", "testAMR.amr",
         "testAAC.aac", "testRSAKEY.der", "testBDB_btree_4.db",
         "testAI_PS.ai", "testQuattro.wq1", "testQuattro.wb1")) {
-      val p = find(name)
-      org.scalatest.Assertions.assume(p.isDefined)
-      val valid = Files.readAllBytes(p.get)
+      val valid = Files.readAllBytes(find(name))
       (0 until 24).foreach { i =>
         val mutated = valid.clone()
         i % 3 match {

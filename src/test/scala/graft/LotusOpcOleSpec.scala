@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import graft.mime.{MediaTypes, MimeDb, MimeRegistry}
 import graft.ole2.{Cfb, CfbWriter, Ole2Detector}
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,11 +16,7 @@ class LotusOpcOleSpec extends AnyFunSuite {
     "tika-parsers-standard/tika-parsers-standard-integration-tests/" +
     "src/test/resources/test-documents")
 
-  private def fixture(name: String): Array[Byte] = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(itDocs.resolve(name)),
-      "reference fixtures not present")
-    Files.readAllBytes(itDocs.resolve(name))
-  }
+  private def fixture(name: String): Array[Byte] = RefFixture.bytes(name, itDocs)
 
   test("Lotus 1-2-3 fixtures detect to the versioned types by magic") {
     assert(MimeRegistry.detect(fixture("testLotus123.wk1"), None) ==

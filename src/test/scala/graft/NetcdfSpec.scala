@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import graft.core.{DocRow, Span, Status}
 import graft.corpus.Corpus
 import graft.engine.Extractor
@@ -18,9 +18,7 @@ class NetcdfSpec extends AnyFunSuite {
     "src/test/resources/test-documents")
 
   private def extract(name: String): graft.core.ExtractedDoc = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
-    val b = Files.readAllBytes(docs.resolve(name))
+    val b = RefFixture.bytes(name, docs)
     Extractor.extract(DocRow(name, Seq(Span("bytes", Corpus.b64(b), null, 0))))
   }
 
@@ -53,8 +51,7 @@ class NetcdfSpec extends AnyFunSuite {
   }
 
   test("malformed: truncated header and header bombs recorded, not crashed") {
-    val good = Files.readAllBytes(
-      docs.resolve("sresa1b_ncar_ccsm3_0_run1_200001.nc"))
+    val good = RefFixture.bytes("sresa1b_ncar_ccsm3_0_run1_200001.nc", docs)
     org.scalatest.Assertions.assume(good.nonEmpty)
     // truncate mid-header
     val d1 = extract0(good.take(40))

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import graft.core.{DocRow, Span, Status}
 import graft.corpus.Corpus
 import graft.engine.Extractor
@@ -19,9 +19,7 @@ class OneNoteSpec extends AnyFunSuite {
     "tika-parser-microsoft-module/src/test/resources/test-documents")
 
   private def extract(name: String): graft.core.ExtractedDoc = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
-    val b = Files.readAllBytes(docs.resolve(name))
+    val b = RefFixture.bytes(name, docs)
     Extractor.extract(DocRow(name, Seq(Span("bytes", Corpus.b64(b), null, 0))))
   }
 
@@ -66,7 +64,7 @@ class OneNoteSpec extends AnyFunSuite {
   }
 
   test("hostile input: truncated and corrupt onestore fail the doc only") {
-    val good = Files.readAllBytes(docs.resolve("testOneNote2.one"))
+    val good = RefFixture.bytes("testOneNote2.one", docs)
     val bad = good.clone()
     // corrupt the root file-node-list magic
     bad(0x400) = 0x00

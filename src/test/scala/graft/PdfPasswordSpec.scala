@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import graft.core.{DocRow, Span, Status}
 import graft.corpus.Corpus
 import graft.engine.Extractor
@@ -20,9 +20,7 @@ class PdfPasswordSpec extends AnyFunSuite {
     "tika-parser-pdf-module/src/test/resources/test-documents")
 
   private def extract(name: String, password: Option[String]) = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
-    val b = Files.readAllBytes(docs.resolve(name))
+    val b = RefFixture.bytes(name, docs)
     Extractor.extract(
       DocRow(name, Seq(Span("pdf", Corpus.b64(b), null, 0))),
       Extractor.DefaultConfig.copy(password = password))
@@ -73,10 +71,7 @@ class PdfPasswordSpec extends AnyFunSuite {
     "tika-server/tika-server-standard/src/test/resources/test-documents")
 
   private def extractServer(name: String, password: String) = {
-    org.scalatest.Assertions.assume(
-      java.nio.file.Files.isRegularFile(serverDocs.resolve(name)),
-      "reference fixtures not present")
-    val b = java.nio.file.Files.readAllBytes(serverDocs.resolve(name))
+    val b = RefFixture.bytes(name, serverDocs)
     Extractor.extract(DocRow(name, Seq(Span("pdf", Corpus.b64(b), null, 0))),
       Extractor.DefaultConfig.copy(password = Some(password)))
   }
@@ -95,10 +90,9 @@ class PdfPasswordSpec extends AnyFunSuite {
   }
 
   test("TIKA-2858 fixtures fail cleanly on wrong/absent password") {
+    val b = RefFixture.bytes("testPassword4Spaces.pdf", serverDocs)
     for (pw <- Seq(None, Some("   "), Some("wrong"))) {
-      val d = Extractor.extract(DocRow("p.pdf", Seq(Span("pdf", Corpus.b64(
-        java.nio.file.Files.readAllBytes(
-          serverDocs.resolve("testPassword4Spaces.pdf"))), null, 0))),
+      val d = Extractor.extract(DocRow("p.pdf", Seq(Span("pdf", Corpus.b64(b), null, 0))),
         Extractor.DefaultConfig.copy(password = pw))
       assert(d.status == Status.ParseException, s"$pw -> ${d.status}")
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.Corpus
-import graft.engine.{BucketedRun, Pipeline}
+import graft.engine.Pipeline
 import graft.ops.{ExtractCompare, Projections, TopK}
 
 class ProjectionsSpec extends AnyFunSuite {
@@ -57,87 +57,6 @@ class ProjectionsSpec extends AnyFunSuite {
       .orderBy(col("cnt").desc, col("token").asc).limit(10)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(viaHeap == viaSort)
-  }
-}
-
-class BucketedRunSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = TestSpark.spark
-  import spark.implicits._
-
-  test("bucketed run commits manifest; rerun is a no-op; crash-resume " +
-       "processes only missing buckets") {
-    val root = java.nio.file.Files.createTempDirectory("graftbuck").toString
-    val input = Corpus.docRows(spark, 300, 4)
-    BucketedRun.run(spark, input, root)
-    val snap1 = BucketedRun.latestSnapshotId(root)
-    assert(snap1 == 1)
-    val out = spark.read.parquet(s"$root/data")
-    assert(out.count() == 300)
-    val manifest = BucketedRun.latestManifest(root).get
-    assert(manifest.map(_.n_docs).sum == 300)
-    // rerun: all buckets committed → no new snapshot
-    BucketedRun.run(spark, input, root)
-    assert(BucketedRun.latestSnapshotId(root) == snap1)
-
-    // simulate crash: drop three buckets from the manifest (as if the job
-    // died before committing them) and delete their data dirs
-    val survivors = manifest.filter(_.bucket % 20 != 0)
-    val killed = manifest.filterNot(_.bucket % 20 != 0).map(_.bucket).toSet
-    assert(killed.nonEmpty)
-    killed.foreach { b =>
-      val dir = new java.io.File(s"$root/data/part_bucket=$b")
-      dir.listFiles().foreach(_.delete()); dir.delete()
-    }
-    BucketedRun.commitManifest(root, survivors)
-    // resume: processes exactly the killed buckets
-    BucketedRun.run(spark, input, root)
-    val resumed = spark.read.parquet(s"$root/data")
-    assert(resumed.count() == 300)
-    assert(BucketedRun.latestManifest(root).get.map(_.n_docs).sum == 300)
-  }
-
-  test("resume aggregates only the new buckets — committed data is not re-read") {
-    val root = java.nio.file.Files.createTempDirectory("graftbuck2").toString
-    val input = Corpus.docRows(spark, 300, 4)
-    BucketedRun.run(spark, input, root)
-    val manifest = BucketedRun.latestManifest(root).get
-    // drop one bucket from the manifest (uncommitted) and CORRUPT a
-    // different, still-committed bucket's data files: if the resume run
-    // recomputed stats by re-reading $root/data (the round-1 behavior),
-    // the corrupted bucket's manifest row would change — with the
-    // incremental merge it must be carried forward verbatim.
-    val uncommitted = manifest.head.bucket
-    val corrupted = manifest.last.bucket
-    assert(uncommitted != corrupted)
-    BucketedRun.commitManifest(root, manifest.filterNot(_.bucket == uncommitted))
-    val dir = new java.io.File(s"$root/data/part_bucket=$corrupted")
-    dir.listFiles().foreach(_.delete()); dir.delete()
-
-    BucketedRun.run(spark, input, root)
-    val after = BucketedRun.latestManifest(root).get
-    assert(after.map(_.n_docs).sum == 300) // carried rows intact
-    assert(after.find(_.bucket == corrupted).get ==
-      manifest.find(_.bucket == corrupted).get)
-    // and the data on disk is genuinely missing the corrupted bucket —
-    // proof the stats did NOT come from a re-scan
-    val onDisk = spark.read.parquet(s"$root/data").count()
-    assert(onDisk == 300 - manifest.find(_.bucket == corrupted).get.n_docs)
-  }
-
-  test("runRanged + resumeFilterByRange: pure-predicate resume, no join") {
-    val base = java.nio.file.Files.createTempDirectory("graftrange").toString
-    val outDir = s"$base/out"; val metricsDir = s"$base/metrics"
-    Pipeline.runRanged(spark, Corpus.docRows(spark, 200, 4), outDir, metricsDir)
-    // full coverage → nothing left
-    assert(Pipeline.resumeFilterByRange(Corpus.docRows(spark, 200, 4),
-      metricsDir).count() == 0)
-    // larger input → exactly the delta survives the range predicate
-    val remaining = Pipeline.resumeFilterByRange(Corpus.docRows(spark, 260, 4),
-      metricsDir)
-    assert(remaining.count() == 60)
-    // plan is a Filter over the scan — no join/shuffle in the resume path
-    val plan = remaining.queryExecution.executedPlan.toString
-    assert(!plan.toLowerCase.contains("join"), plan)
   }
 }
 

@@ -18,11 +18,7 @@ class SevenZSpec extends AnyFunSuite {
     "tika-parsers-standard/tika-parsers-standard-modules/" +
     "tika-parser-pkg-module/src/test/resources/test-documents")
 
-  private def fixture(name: String): Array[Byte] = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(pkgDocs.resolve(name)),
-      "reference fixtures not present")
-    Files.readAllBytes(pkgDocs.resolve(name))
-  }
+  private def fixture(name: String): Array[Byte] = RefFixture.bytes(name, pkgDocs)
 
   test("reads the reference's real LZMA 7z archive (encoded header)") {
     val entries = SevenZ.entries(fixture("test-documents.7z"))

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import graft.core.{DocRow, Span, Status}
 import graft.corpus.Corpus
 import graft.engine.Extractor
@@ -18,11 +18,7 @@ class SqliteSpec extends AnyFunSuite {
     "tika-parsers-extended/tika-parser-sqlite3-module/src/test/" +
     "resources/test-documents")
 
-  private def fixture(name: String): Array[Byte] = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
-    Files.readAllBytes(docs.resolve(name))
-  }
+  private def fixture(name: String): Array[Byte] = RefFixture.bytes(name, docs)
 
   test("reads the reference database's cells (pk alias, floats, text)") {
     val out = Extractor.extract(DocRow("db",

@@ -41,11 +41,7 @@ class ZipCryptoSpec extends AnyFunSuite {
     try in.readAllBytes() finally in.close()
   }
 
-  private def refFixture(name: String): Array[Byte] = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(pkgDocs.resolve(name)),
-      "reference fixtures not present")
-    Files.readAllBytes(pkgDocs.resolve(name))
-  }
+  private def refFixture(name: String): Array[Byte] = RefFixture.bytes(name, pkgDocs)
 
   test("ZipCrypto: Info-ZIP -P archive decrypts byte-exact (deflate+stored)") {
     val w = ZipUtil.walk(res("enc_deflate.zip"), Some("tika-zc"))

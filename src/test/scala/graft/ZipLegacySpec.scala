@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import graft.zipx.ZipUtil
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,11 +16,7 @@ class ZipLegacySpec extends AnyFunSuite {
     "tika-parsers-standard/tika-parsers-standard-modules/" +
     "tika-parser-pkg-module/src/test/resources/test-documents")
 
-  private def fixture(name: String): Array[Byte] = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
-    Files.readAllBytes(docs.resolve(name))
-  }
+  private def fixture(name: String): Array[Byte] = RefFixture.bytes(name, docs)
 
   test("decodes every imploded and shrunk entry of moby.zip (CRC-gated)") {
     val b = fixture("moby.zip")
