@@ -10,6 +10,7 @@ import graft.pdf.PdfExtractor
 import graft.textparse.MiscBinExtractor
 import graft.warc.WarcExtractor
 import graft.zipx.{OpcDetector, ZipUtil}
+import graft.xmlx.NsSax
 
 /** Per-document detect→dispatch→parse→spans function — the reference's
   * `AutoDetectParser.parse` (tika-core parser/AutoDetectParser.java:147-232)
@@ -33,8 +34,6 @@ object Extractor {
       maxDepth: Int = 10,              // ParsingEmbeddedDocumentExtractor depth cap
       maxEmbedded: Int = 100,          // maxEmbeddedResources
       writeLimit: Int = 100000,        // BodyContentHandler default :83-92
-      bombOutputThreshold: Long = 1000000L, // SecureContentHandler.java:62
-      bombMaxRatio: Long = 100L,
       softDeadlineMs: Long = 60000L,   // PipesServer per-task timeout analog
       // opt-in like the reference's StringsParser (requires explicit
       // config there): printable-run extraction for types nothing parses
@@ -993,8 +992,7 @@ object Extractor {
     val deadline =
       if (cfg.softDeadlineMs <= 0) Long.MaxValue
       else System.nanoTime() + cfg.softDeadlineMs * 1000000L
-    val sink = new SpanSink(cfg.writeLimit, payloadTotal, cfg.bombOutputThreshold,
-      cfg.bombMaxRatio, deadline)
+    val sink = new SpanSink(cfg.writeLimit, payloadTotal, deadline)
     val w = new Walk(cfg, sink)
     var limitHit = false
     var timedOut = false
@@ -1059,7 +1057,7 @@ object XmlExtractor {
   def extract(bytes: Array[Byte], sink: SpanSink, meta: MetaSink): Unit = {
     var dcField: String = null
     val dcBuf = new StringBuilder
-    DocxExtractor.saxParse(bytes, new DefaultHandler {
+    NsSax.parsePlain(bytes, new DefaultHandler {
       override def startElement(u: String, l: String, q: String, a: Attributes): Unit = {
         val idx = q.indexOf(':')
         if (idx > 0 && q.substring(0, idx) == "dc" && DcFields.contains(q.substring(idx + 1))) {

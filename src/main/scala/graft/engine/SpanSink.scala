@@ -41,8 +41,6 @@ final class DocTimeout extends Exception("document soft deadline exceeded")
 final class SpanSink(
     val writeLimit: Int = 100000,
     val inputBytes: Long = 0L,
-    val bombOutputThreshold: Long = 1000000L,
-    val bombMaxRatio: Long = 100L,
     val deadlineNanos: Long = Long.MaxValue
 ) {
   private val out = new ArrayBuffer[Span]()
@@ -51,9 +49,15 @@ final class SpanSink(
   private var spanStart = 0
   var limitReached = false
 
+  // output-to-input ratio guard (SecureContentHandler.java:62): past
+  // BombOutputThreshold chars, output over BombMaxRatio x the input bytes
+  // is a detected bomb
+  private final val BombOutputThreshold = 1000000L
+  private final val BombMaxRatio = 100L
+
   private def checkBomb(): Unit = {
     val total = offset.toLong + buf.length
-    if (total > bombOutputThreshold && inputBytes > 0 && total > bombMaxRatio * inputBytes)
+    if (total > BombOutputThreshold && inputBytes > 0 && total > BombMaxRatio * inputBytes)
       throw new ZipBombDetected
   }
 

@@ -3,8 +3,8 @@ package graft.odf
 import org.xml.sax.Attributes
 import org.xml.sax.helpers.DefaultHandler
 import graft.engine.{MetaSink, SpanSink}
-import graft.ooxml.DocxExtractor
 import graft.zipx.ZipUtil
+import graft.xmlx.NsSax
 
 /** OpenDocument (ODT/ODS/ODP) text extraction over `content.xml`.
   *
@@ -21,16 +21,16 @@ object OdtExtractor {
       extractMacros: Boolean = false): Unit = {
     val parts = ZipUtil.entriesMap(zipBytes, ZipUtil.XmlParts) // single pass, xml only
     parts.get("meta.xml").foreach { m =>
-      DocxExtractor.saxParse(m, new MetaHandler(meta))
+      NsSax.parsePlain(m, new MetaHandler(meta))
     }
     val content = parts.getOrElse("content.xml",
       throw new IllegalArgumentException("no content.xml"))
-    DocxExtractor.saxParse(content, new ContentHandlerImpl(sink))
+    NsSax.parsePlain(content, new ContentHandlerImpl(sink))
     // styles.xml rides the same content handler (OpenDocumentParser.java
     // :299-305): master-page text — ODP master footers, ODT headers and
     // footers — is body text (ODFParserTest.testODPMasterFooter)
     parts.get("styles.xml").foreach { st =>
-      try DocxExtractor.saxParse(st, new ContentHandlerImpl(sink))
+      try NsSax.parsePlain(st, new ContentHandlerImpl(sink))
       catch { case _: Exception => () }
     }
     // StarBasic macro modules under Basic/ (OpenDocumentParser.java:
@@ -40,7 +40,7 @@ object OdtExtractor {
       parts.iterator
         .filter { case (n, _) => n.contains("Basic/") && !n.endsWith("script-lb.xml") }
         .foreach { case (_, data) =>
-          try DocxExtractor.saxParse(data, new MacroHandler(child))
+          try NsSax.parsePlain(data, new MacroHandler(child))
           catch { case _: Exception => () }
         }
     }
@@ -54,7 +54,7 @@ object OdtExtractor {
   def extractFlat(bytes: Array[Byte], sink: SpanSink, meta: MetaSink,
       child: (String, Array[Byte]) => Unit = (_, _) => (),
       extractMacros: Boolean = false): Unit = {
-    DocxExtractor.saxParse(bytes, new MetaHandler(meta) {
+    NsSax.parsePlain(bytes, new MetaHandler(meta) {
       override def startElement(u: String, l: String, q: String,
           a: Attributes): Unit = {
         if (q == "office:document") {
@@ -64,9 +64,9 @@ object OdtExtractor {
         super.startElement(u, l, q, a)
       }
     })
-    DocxExtractor.saxParse(bytes, new ContentHandlerImpl(sink))
+    NsSax.parsePlain(bytes, new ContentHandlerImpl(sink))
     if (extractMacros)
-      try DocxExtractor.saxParse(bytes, new MacroHandler(child))
+      try NsSax.parsePlain(bytes, new MacroHandler(child))
       catch { case _: Exception => () }
   }
 

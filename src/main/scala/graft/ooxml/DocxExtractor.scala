@@ -4,6 +4,7 @@ import org.xml.sax.Attributes
 import org.xml.sax.helpers.DefaultHandler
 import graft.engine.{MetaSink, SpanSink}
 import graft.zipx.ZipUtil
+import graft.xmlx.NsSax
 
 /** Streaming DOCX text extraction over `word/document.xml`.
   *
@@ -60,7 +61,7 @@ object DocxExtractor {
         }
       }
     }
-    saxParse(bytes, handler)
+    NsSax.parsePlain(bytes, handler)
     rels.toMap
   }
 
@@ -85,7 +86,7 @@ object DocxExtractor {
           }
         }
       }
-      try saxParse(bytes, handler) catch { case _: Exception => () }
+      try NsSax.parsePlain(bytes, handler) catch { case _: Exception => () }
     }
     targets.toSeq
   }
@@ -119,9 +120,9 @@ object DocxExtractor {
     val numbering = DocxNumbering.from(parts)
     def parsePart(name: String): Unit =
       parts.get(name).foreach(b =>
-        saxParse(b, new DocumentHandler(sink, meta, relsFor(parts, name), numbering)))
+        NsSax.parsePlain(b, new DocumentHandler(sink, meta, relsFor(parts, name), numbering)))
     named("header").foreach(parsePart)
-    saxParse(doc, new DocumentHandler(sink, meta,
+    NsSax.parsePlain(doc, new DocumentHandler(sink, meta,
       relsFor(parts, "word/document.xml"), numbering))
     Seq("footnotes.xml", "endnotes.xml", "comments.xml")
       .map("word/" + _).foreach(parsePart)
@@ -162,7 +163,7 @@ object DocxExtractor {
     parts.get("docProps/core.xml").foreach { bytes =>
       val buf = new StringBuilder
       var field: String = null
-      saxParse(bytes, new DefaultHandler {
+      NsSax.parsePlain(bytes, new DefaultHandler {
         override def startElement(u: String, l: String, q: String, a: Attributes): Unit = {
           val name = localName(l, q)
           if (name == "title" || name == "creator" || name == "subject") {
@@ -271,10 +272,4 @@ object DocxExtractor {
       }
     }
   }
-
-  /** Hardened prefix-based JDK SAX parse — shared hardening + engine
-    * control-flow tunnel live in [[graft.xmlx.NsSax]].
-    */
-  def saxParse(bytes: Array[Byte], handler: DefaultHandler): Unit =
-    graft.xmlx.NsSax.parsePlain(bytes, handler)
 }

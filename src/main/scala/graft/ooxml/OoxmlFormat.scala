@@ -3,6 +3,7 @@ package graft.ooxml
 import org.xml.sax.Attributes
 import org.xml.sax.helpers.DefaultHandler
 import scala.collection.mutable
+import graft.xmlx.NsSax
 
 /** DOCX list numbering (reference: AbstractListManager.java /
   * XWPFListManager.java via OOXMLTikaBodyPartHandler.java:515-526):
@@ -155,7 +156,7 @@ object DocxNumbering {
         }
         ""
       }
-      DocxExtractor.saxParse(bytes, new DefaultHandler {
+      NsSax.parsePlain(bytes, new DefaultHandler {
         override def startElement(u: String, l: String, q: String,
             a: Attributes): Unit = {
           val name = q.substring(q.indexOf(':') + 1)
@@ -268,7 +269,7 @@ object XlsxNumFormat {
       val xfs = Vector.newBuilder[Int]
       val custom = mutable.Map[Int, String]()
       var inCellXfs = false
-      DocxExtractor.saxParse(bytes, new DefaultHandler {
+      NsSax.parsePlain(bytes, new DefaultHandler {
         override def startElement(u: String, l: String, q: String,
             a: Attributes): Unit = q.substring(q.indexOf(':') + 1) match {
           case "cellXfs" => inCellXfs = true

@@ -4,6 +4,7 @@ import org.xml.sax.Attributes
 import org.xml.sax.helpers.DefaultHandler
 import graft.engine.{MetaSink, SpanSink}
 import graft.zipx.ZipUtil
+import graft.xmlx.NsSax
 
 /** Visio OOXML (.vsdx/.vsdm/.vstx) text extraction.
   *
@@ -43,7 +44,7 @@ object VsdxExtractor {
       relType: String, baseDir: String): Seq[String] = {
     val out = Seq.newBuilder[String]
     for (b <- parts.get(relsPart))
-      DocxExtractor.saxParse(b, new DefaultHandler {
+      NsSax.parsePlain(b, new DefaultHandler {
         override def startElement(u: String, l: String, q: String,
             a: Attributes): Unit =
           if (local(l, q) == "Relationship" &&

@@ -3,6 +3,7 @@ package graft.ooxml
 import org.xml.sax.Attributes
 import org.xml.sax.helpers.DefaultHandler
 import graft.engine.SpanSink
+import graft.xmlx.NsSax
 
 /** Cell comments for XLSX (xl/comments*.xml) and XLSB (comments*.bin),
   * rendered after the sheet table as "author: text" paragraphs — the
@@ -67,7 +68,7 @@ object XlsxComments {
     var authorId = -1
     val text = new StringBuilder
     def local(q: String): String = q.substring(q.indexOf(':') + 1)
-    DocxExtractor.saxParse(data, new DefaultHandler {
+    NsSax.parsePlain(data, new DefaultHandler {
       override def startElement(u: String, l: String, q: String,
           a: Attributes): Unit = local(q) match {
         case "author" => inAuthor = true; buf.setLength(0)

@@ -3,6 +3,7 @@ package graft.ooxml
 import org.xml.sax.Attributes
 import org.xml.sax.helpers.DefaultHandler
 import graft.engine.{MetaSink, SpanSink}
+import graft.xmlx.NsSax
 
 /** Shape/chart/diagram text reachable from a worksheet's drawing parts —
   * shared by XLSX and XLSB (the drawing/diagram/chart parts stay XML even
@@ -23,7 +24,7 @@ object XlsxDrawings {
       relsPath: String): Vector[Rel] = {
     parts.get(relsPath).map { bytes =>
       val out = Vector.newBuilder[Rel]
-      DocxExtractor.saxParse(bytes, new DefaultHandler {
+      NsSax.parsePlain(bytes, new DefaultHandler {
         override def startElement(u: String, l: String, q: String,
             a: Attributes): Unit =
           if (q.endsWith("Relationship")) {
@@ -70,7 +71,7 @@ object XlsxDrawings {
   private[ooxml] def scrapeRunText(parts: Map[String, Array[Byte]],
       partPath: String, sink: SpanSink): Unit =
     parts.get(partPath).foreach { xml =>
-      try DocxExtractor.saxParse(xml, new RunTextHandler(sink))
+      try NsSax.parsePlain(xml, new RunTextHandler(sink))
       catch { case _: Exception => () } // aux-part text is best-effort
     }
 
@@ -86,13 +87,13 @@ object XlsxDrawings {
         val dRels = relsOf(parts, relsPathFor(dPath))
         val links = dRels.filter(_.tpe.endsWith("/hyperlink"))
           .map(r => r.id -> r.target).toMap
-        try DocxExtractor.saxParse(xml, new ShapeHandler(sink, meta, links))
+        try NsSax.parsePlain(xml, new ShapeHandler(sink, meta, links))
         catch { case _: Exception => () } // drawing text is best-effort
         for (child <- dRels
             if child.tpe.endsWith("/diagramData") || child.tpe.endsWith("/chart")) {
           val cPath = resolve(dPath, child.target)
           parts.get(cPath).foreach { cxml =>
-            try DocxExtractor.saxParse(cxml, new RunTextHandler(sink))
+            try NsSax.parsePlain(cxml, new RunTextHandler(sink))
             catch { case _: Exception => () }
           }
         }

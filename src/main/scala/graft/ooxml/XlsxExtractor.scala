@@ -5,6 +5,7 @@ import org.xml.sax.helpers.DefaultHandler
 import scala.collection.mutable.ArrayBuffer
 import graft.engine.{MetaSink, SpanSink}
 import graft.zipx.ZipUtil
+import graft.xmlx.NsSax
 
 /** Streaming XLSX text extraction.
   *
@@ -34,7 +35,7 @@ object XlsxExtractor {
           "xl/" + target.stripPrefix("/xl/").stripPrefix("xl/")
         else target.stripPrefix("/")
       parts.get(path).foreach { bytes =>
-        DocxExtractor.saxParse(bytes, new SheetHandler(shared, xfs, customFmts, sink))
+        NsSax.parsePlain(bytes, new SheetHandler(shared, xfs, customFmts, sink))
         // cell comments render after the table ("author: text" lines)
         val slash = path.lastIndexOf('/')
         val relsPath = path.substring(0, slash + 1) + "_rels/" +
@@ -60,7 +61,7 @@ object XlsxExtractor {
       val buf = new StringBuilder
       var inSi = false
       var inT = false
-      DocxExtractor.saxParse(bytes, new DefaultHandler {
+      NsSax.parsePlain(bytes, new DefaultHandler {
         override def startElement(u: String, l: String, q: String, a: Attributes): Unit =
           localName(q) match {
             case "si" => inSi = true; buf.setLength(0)
@@ -86,7 +87,7 @@ object XlsxExtractor {
       .map(DocxExtractor.parseRels).getOrElse(Map.empty)
     parts.get("xl/workbook.xml").map { bytes =>
       val out = new ArrayBuffer[(String, String)]()
-      DocxExtractor.saxParse(bytes, new DefaultHandler {
+      NsSax.parsePlain(bytes, new DefaultHandler {
         override def startElement(u: String, l: String, q: String, a: Attributes): Unit =
           if (localName(q) == "sheet") {
             val name = Option(a.getValue("name")).getOrElse("")
@@ -183,7 +184,7 @@ object PptxExtractor {
       val path = XlsxDrawings.resolve("ppt/presentation.xml", target)
       parts.get(path).foreach { bytes =>
         val rels = XlsxDrawings.relsOf(parts, XlsxDrawings.relsPathFor(path))
-        DocxExtractor.saxParse(bytes, new SlideHandler(sink,
+        NsSax.parsePlain(bytes, new SlideHandler(sink,
           rels.map(r => r.id -> r.target).toMap))
         def each(suffix: String)(f: String => Unit): Unit =
           for (rel <- rels if rel.tpe.endsWith(suffix))
@@ -191,17 +192,17 @@ object PptxExtractor {
         // layout text right after the slide's own (placeholder shapes
         // suppressed — "Click to edit…" boilerplate lives in <p:ph> shapes)
         each("/slideLayout")(p => parts.get(p).foreach(b =>
-          DocxExtractor.saxParse(b,
+          NsSax.parsePlain(b,
             new PlaceholderSkipHandler(new SlideHandler(sink)))))
         // speaker notes follow (includeSlideNotes defaults true), then
         // the notes master when the slide links one directly
         each("/notesSlide")(p => parts.get(p).foreach(b =>
-          DocxExtractor.saxParse(b, new SlideHandler(sink))))
+          NsSax.parsePlain(b, new SlideHandler(sink))))
         each("/notesMaster")(p => parts.get(p).foreach(b =>
-          DocxExtractor.saxParse(b,
+          NsSax.parsePlain(b,
             new PlaceholderSkipHandler(new SlideHandler(sink)))))
         each("/comments")(p => parts.get(p).foreach(b =>
-          DocxExtractor.saxParse(b, new CommentsHandler(sink, authors))))
+          NsSax.parsePlain(b, new CommentsHandler(sink, authors))))
         each("/diagramData")(p => XlsxDrawings.scrapeRunText(parts, p, sink))
         each("/chart")(p => XlsxDrawings.scrapeRunText(parts, p, sink))
         sink.newline() // slide end
@@ -211,11 +212,11 @@ object PptxExtractor {
     // handout master is NOT placeholder-skipped there
     for (rel <- presRels if rel.tpe.endsWith("/slideMaster"))
       parts.get(XlsxDrawings.resolve("ppt/presentation.xml", rel.target))
-        .foreach(b => DocxExtractor.saxParse(b,
+        .foreach(b => NsSax.parsePlain(b,
           new PlaceholderSkipHandler(new SlideHandler(sink))))
     for (rel <- presRels if rel.tpe.endsWith("/handoutMaster"))
       parts.get(XlsxDrawings.resolve("ppt/presentation.xml", rel.target))
-        .foreach(b => DocxExtractor.saxParse(b, new SlideHandler(sink)))
+        .foreach(b => NsSax.parsePlain(b, new SlideHandler(sink)))
   }
 
   /** authorId → (name, initials) from ppt/commentAuthors.xml. */
@@ -225,7 +226,7 @@ object PptxExtractor {
     for (rel <- presRels if rel.tpe.endsWith("/commentAuthors");
          bytes <- parts.get(
            XlsxDrawings.resolve("ppt/presentation.xml", rel.target)))
-      DocxExtractor.saxParse(bytes, new DefaultHandler {
+      NsSax.parsePlain(bytes, new DefaultHandler {
         override def startElement(u: String, l: String, q: String,
             a: Attributes): Unit =
           if (q.endsWith(":cmAuthor")) {
@@ -295,7 +296,7 @@ object PptxExtractor {
       .map(DocxExtractor.parseRels).getOrElse(Map.empty)
     parts.get("ppt/presentation.xml").map { bytes =>
       val out = new ArrayBuffer[String]()
-      DocxExtractor.saxParse(bytes, new org.xml.sax.helpers.DefaultHandler {
+      NsSax.parsePlain(bytes, new org.xml.sax.helpers.DefaultHandler {
         override def startElement(u: String, l: String, q: String,
             a: Attributes): Unit =
           if (q.endsWith("sldId")) {

@@ -4,6 +4,7 @@ import org.xml.sax.Attributes
 import org.xml.sax.helpers.DefaultHandler
 import graft.engine.{MetaSink, SpanSink}
 import graft.zipx.ZipUtil
+import graft.xmlx.NsSax
 
 /** XPS / OpenXPS fixed-document text extraction.
   *
@@ -103,7 +104,7 @@ object XpsExtractor {
       typeSuffix: String): Vector[String] = {
     val out = Vector.newBuilder[String]
     for ((name, b) <- parts if name.endsWith(".rels"))
-      DocxExtractor.saxParse(b, new DefaultHandler {
+      NsSax.parsePlain(b, new DefaultHandler {
         override def startElement(u: String, l: String, q: String,
             a: Attributes): Unit =
           if (local(l, q) == "Relationship" &&
@@ -122,7 +123,7 @@ object XpsExtractor {
     parts.get("docProps/core.xml").foreach { b =>
       val buf = new StringBuilder
       var field: String = null
-      DocxExtractor.saxParse(b, new DefaultHandler {
+      NsSax.parsePlain(b, new DefaultHandler {
         override def startElement(u: String, l: String, q: String,
             a: Attributes): Unit = {
           val n = local(l, q)
@@ -147,7 +148,7 @@ object XpsExtractor {
       parts: Map[String, Array[Byte]]): Option[String] = {
     var target: Option[String] = None
     parts.get("_rels/.rels").foreach { b =>
-      DocxExtractor.saxParse(b, new DefaultHandler {
+      NsSax.parsePlain(b, new DefaultHandler {
         override def startElement(u: String, l: String, q: String,
             a: Attributes): Unit =
           if (local(l, q) == "Relationship") {
@@ -164,7 +165,7 @@ object XpsExtractor {
   private def sourcesOf(bytes: Array[Byte], element: String): Vector[String] = {
     if (bytes.isEmpty) return Vector.empty
     val out = Vector.newBuilder[String]
-    DocxExtractor.saxParse(bytes, new DefaultHandler {
+    NsSax.parsePlain(bytes, new DefaultHandler {
       override def startElement(u: String, l: String, q: String,
           a: Attributes): Unit =
         if (local(l, q) == element)
@@ -187,7 +188,7 @@ object XpsExtractor {
     val urls = scala.collection.mutable.LinkedHashSet[String]()
     val canvasStack = scala.collection.mutable.Stack[String]()
 
-    DocxExtractor.saxParse(fpage, new DefaultHandler {
+    NsSax.parsePlain(fpage, new DefaultHandler {
       override def startElement(u: String, l: String, q: String,
           a: Attributes): Unit = local(l, q) match {
         case "Canvas" =>

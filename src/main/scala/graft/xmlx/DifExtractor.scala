@@ -54,6 +54,6 @@ object DifExtractor {
         isLeaf = false
       }
     }
-    SecureSax.parseNs(bytes, handler)
+    NsSax.parse(bytes, handler)
   }
 }

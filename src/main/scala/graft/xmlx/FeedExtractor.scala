@@ -3,7 +3,6 @@ package graft.xmlx
 import org.xml.sax.Attributes
 import org.xml.sax.helpers.DefaultHandler
 import graft.engine.{MetaSink, SpanSink}
-import graft.ooxml.DocxExtractor
 
 /** RSS/Atom feed extraction.
   *
@@ -14,7 +13,7 @@ import graft.ooxml.DocxExtractor
 object FeedExtractor {
 
   def extract(bytes: Array[Byte], sink: SpanSink, meta: MetaSink): Unit =
-    DocxExtractor.saxParse(bytes, new FeedHandler(sink, meta))
+    NsSax.parsePlain(bytes, new FeedHandler(sink, meta))
 
   private final class FeedHandler(sink: SpanSink, meta: MetaSink)
       extends DefaultHandler {

@@ -56,6 +56,6 @@ object FictionBookExtractor {
       }
       override def endDocument(): Unit = flush()
     }
-    SecureSax.parseNs(bytes, handler)
+    NsSax.parse(bytes, handler)
   }
 }

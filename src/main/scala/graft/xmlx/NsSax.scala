@@ -3,15 +3,16 @@ package graft.xmlx
 import javax.xml.parsers.{SAXParser, SAXParserFactory}
 import org.xml.sax.helpers.DefaultHandler
 
-/** XXE-safe SAX parsing with thread-local parser reuse — the single
-  * home for the factory hardening block and the engine control-flow
-  * tunnel (previously duplicated between `DocxExtractor.saxParse` and
-  * this object; one copy means one place to extend either list).
+/** XXE-safe SAX parsing with thread-local parser reuse — the one SAX
+  * entry point of every XML-based extractor, and the single home for the
+  * factory hardening block and the engine control-flow tunnel.
   *
   * Two parser pools: the engine's main path ([[parsePlain]]) is
   * prefix-based (namespace-unaware) for speed; formats whose semantics
-  * hang on namespace URIs (XFA, WordML/SpreadsheetML 2003, Visio OOXML)
-  * parse namespace-aware through [[parse]].
+  * hang on namespace URIs (XFA, WordML/SpreadsheetML 2003, Visio OOXML,
+  * TMX/XLIFF, DIF, FictionBook, IDML) parse namespace-aware through
+  * [[parse]]. A parse started from inside another one's callback (an
+  * embedded document) gets a fresh parser, so the outer parse survives.
   *
   * The factory lookup (`SAXParserFactory.newInstance`) is a synchronized
   * classloader service scan — doing it per document serializes every

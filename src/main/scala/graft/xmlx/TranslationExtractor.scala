@@ -52,7 +52,7 @@ object TranslationExtractor {
           if (text.nonEmpty) { sink.chars(text.toString); sink.newline() }
         }
     }
-    SecureSax.parseNs(bytes, handler)
+    NsSax.parse(bytes, handler)
     meta.set("tu-count", tus.toString)
     meta.set("tuv-count", tuvs.toString)
     targetLangs.foreach(meta.add("target-language", _))
@@ -91,7 +91,7 @@ object TranslationExtractor {
           case _ => ()
         }
     }
-    SecureSax.parseNs(bytes, handler)
+    NsSax.parse(bytes, handler)
     meta.set("file-count", files.toString)
     meta.set("tu-count", tus.toString)
   }

@@ -25,7 +25,7 @@ object Word2006MlExtractor {
     // children recurse AFTER the SAX pass: recursing mid-parse would
     // re-enter the thread-local SAX parser (NsSax reuse contract)
     val pending = Vector.newBuilder[(String, Array[Byte])]
-    graft.ooxml.DocxExtractor.saxParse(bytes,
+    NsSax.parsePlain(bytes,
       new Handler(sink, meta, (n, d) => { pending += ((n, d)); () }))
     pending.result().foreach { case (n, d) =>
       try child(n, d) catch { case _: Exception => () }

@@ -3,6 +3,7 @@ package graft.zipx
 import org.xml.sax.Attributes
 import org.xml.sax.helpers.DefaultHandler
 import graft.engine.{MetaSink, SpanSink}
+import graft.xmlx.NsSax
 
 /** EPUB extraction with reference semantics — OPF metadata at the
   * document level and spine-ordered content merged into the parent
@@ -34,7 +35,7 @@ object EpubExtractor {
     }
 
     val opf = new OpfHandler(meta)
-    graft.ooxml.DocxExtractor.saxParse(parts(opfPath.get), opf)
+    NsSax.parsePlain(parts(opfPath.get), opf)
 
     def resolve(href: String): String = {
       val clean = href.takeWhile(c => c != '#' && c != '?')
@@ -80,7 +81,7 @@ object EpubExtractor {
   /** container.xml → first rootfile full-path. */
   private def rootfileOf(bytes: Array[Byte]): Option[String] = {
     var found: Option[String] = None
-    try graft.ooxml.DocxExtractor.saxParse(bytes, new DefaultHandler {
+    try NsSax.parsePlain(bytes, new DefaultHandler {
       override def startElement(u: String, l: String, q: String,
           a: Attributes): Unit =
         if (found.isEmpty && (q.endsWith("rootfile") || l == "rootfile"))

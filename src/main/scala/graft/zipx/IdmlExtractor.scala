@@ -1,6 +1,7 @@
 package graft.zipx
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.xmlx.NsSax
 
 /** Adobe InDesign IDML packages (zip of XML).
   *
@@ -53,7 +54,7 @@ object IdmlExtractor {
           }
         }
       }
-      try graft.xmlx.SecureSax.parseNs(xml, handler)
+      try NsSax.parse(xml, handler)
       catch { case _: org.xml.sax.SAXException => () } // bad member XML: skip
       pageCount
     }

@@ -1,6 +1,7 @@
 package graft.zipx
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.xmlx.NsSax
 import org.xml.sax.Attributes
 
 /** iWork '09 packages (Keynote .key / Pages .pages / Numbers .numbers —
@@ -37,7 +38,7 @@ object IworkExtractor {
       case _ => new PagesHandler(sink, meta)
     }
     // qName-driven (non-NS parse), like the reference's handlers
-    graft.xmlx.SecureSax.parse(xml, handler)
+    NsSax.parsePlain(xml, handler)
   }
 
   private def mapKey(parentQName: String, localFallback: String): String =

@@ -1,7 +1,7 @@
 package graft.zipx
 
 import java.io.ByteArrayInputStream
-import java.util.zip.{GZIPInputStream, ZipEntry, ZipInputStream}
+import java.util.zip.{GZIPInputStream, ZipInputStream}
 import scala.collection.mutable.ArrayBuffer
 
 /** In-row ZIP / gzip access over byte-array payloads.
@@ -11,6 +11,14 @@ import scala.collection.mutable.ArrayBuffer
   * payloads are row-sized byte arrays, so streaming order == written
   * order == central-directory order for the archives we synthesize
   * (SURVEY.md §2.6 "order = central-directory order").
+  *
+  * Two readers serve every call. [[streamed]] is the one streaming
+  * member loop (`entries`, `entriesMap`, `entry`, and `entryNames` when
+  * the central directory is unusable); [[centralDirectory]] is the one
+  * central-directory record walk (`entryNames`, `walk`'s encryption
+  * probe, and the member reads the stream cannot do). Member reads stream
+  * first and fall back to the central directory; names read the central
+  * directory first and fall back to the stream.
   */
 object ZipUtil {
 
@@ -24,13 +32,14 @@ object ZipUtil {
     */
   final case class Walk(entries: Vector[Entry], encrypted: Vector[String])
 
+  /** Decompressed-bytes ceiling of one member. */
   val MaxEntryBytes: Int = 64 * 1024 * 1024
 
-  /** Aggregate decompressed-bytes budget across ALL entries of one
-    * archive. CEN records may all point at the same (or overlapping)
+  /** Aggregate decompressed-bytes budget across all the members one call
+    * buffers. CEN records may all point at the same (or overlapping)
     * local data, so per-entry caps alone let a ~70 KB crafted archive
     * with 65535 CEN entries × 64 MB claims inflate terabytes; past this
-    * budget the walk aborts as a detected bomb (same 256 MB ceiling as
+    * budget the read aborts as a detected bomb (same 256 MB ceiling as
     * SevenZ.MaxOutputBytes).
     */
   val MaxTotalBytes: Long = 256L * 1024 * 1024
@@ -40,16 +49,12 @@ object ZipUtil {
     * Streaming read first (the common, well-formed case); central-
     * directory fallback for the archives JDK's ZipInputStream rejects —
     * STORED entries with data descriptors (streaming writers), non-UTF-8
-    * entry names (cp437 per APPNOTE when GP bit 11 is clear), which is
-    * the reference's own ZipFile-preferred strategy
+    * entry names (cp437 per APPNOTE when GP bit 11 is clear), prepended
+    * prefixes — which is the reference's own ZipFile-preferred strategy
     * (pkg/ZipParser.java:96-710).
     */
   def entries(zipBytes: Array[Byte]): Vector[Entry] =
-    try streamingEntries(zipBytes)
-    catch {
-      case b: graft.engine.ZipBombDetected => throw b
-      case _: Exception => cenEntries(zipBytes, None).entries
-    }
+    members(zipBytes, !_.endsWith("/"), first = false)
 
   /** Crypto-aware walk: decrypts traditional-PKWARE (ZipCrypto) and
     * WinZip-AES (method 99, AE-1/AE-2) entries when `password` is
@@ -60,21 +65,161 @@ object ZipUtil {
     */
   def walk(zipBytes: Array[Byte], password: Option[String]): Walk = {
     val hasEncrypted =
-      try cenHasEncrypted(zipBytes)
+      try centralDirectory(zipBytes).records.exists(r => (r.flags & 0x1) != 0)
       catch { case _: Exception => false }
     if (!hasEncrypted) Walk(entries(zipBytes), Vector.empty)
     else cenEntries(zipBytes, password)
   }
 
-  /** Resolved central-directory location: record-walk start offset,
-    * declared record count, and the prepended-prefix shift. ONE
-    * resolver (classic EOCD + zip64 locator/EOCD64 override + the
-    * SFX-prefix shift heuristic) shared by every CEN walk so the
-    * resolution logic cannot diverge between them.
+  /** Entries decompressed into a name-indexed map in ONE pass —
+    * multi-part formats (OOXML/ODF) read 5-7 parts, and per-part
+    * `entry()` lookups would rescan the archive each time. `keep`
+    * filters by name so embedded media blobs (which OOXML text
+    * extraction never reads) are not buffered — a .pptx full of 50 MB
+    * images must not pin gigabytes per task. The first member of a name
+    * wins.
     */
-  private final case class CdLoc(start: Int, total: Int, shift: Long)
+  def entriesMap(zipBytes: Array[Byte],
+      keep: String => Boolean = _ => true): Map[String, Array[Byte]] = {
+    val out = scala.collection.mutable.LinkedHashMap[String, Array[Byte]]()
+    for (e <- members(zipBytes, n => !n.endsWith("/") && keep(n), first = false)
+        if !out.contains(e.name)) out(e.name) = e.data
+    out.toMap
+  }
 
-  private def locateCentralDirectory(b: Array[Byte]): CdLoc = {
+  /** The parts OOXML/ODF text extraction can actually read. */
+  val XmlParts: String => Boolean =
+    n => n.endsWith(".xml") || n.endsWith(".rels") || n == "mimetype"
+
+  /** Read one named entry (first match) without decompressing the rest. */
+  def entry(zipBytes: Array[Byte], name: String): Option[Array[Byte]] =
+    members(zipBytes, _ == name, first = true).headOption.map(_.data)
+
+  /** Every member name, directories and encrypted members included, in
+    * central-directory order.
+    *
+    * Central-directory first: the streaming reader must INFLATE every
+    * member just to skip past it, so each zip-family document paid a
+    * full decompression during DETECTION before parsing even began
+    * (measured ~7% of mixed-corpus extraction CPU). Streaming is the
+    * fallback for archives whose central directory is missing or does
+    * not hold every declared record (truncated downloads keep the partial
+    * streaming list); when the stream breaks too, the members the lenient
+    * central-directory read recovers replace that list.
+    */
+  def entryNames(zipBytes: Array[Byte]): Vector[String] = {
+    val cd = try centralDirectory(zipBytes) catch { case _: Exception => null }
+    if (cd != null && cd.complete) cd.records.map(_.name)
+    else {
+      val out = new ArrayBuffer[String]()
+      if (streamed(zipBytes, n => { out += n; false }, first = false).isEmpty)
+        try {
+          val cen = cenEntries(zipBytes, None).entries.map(_.name)
+          if (cen.nonEmpty) { out.clear(); out ++= cen }
+        } catch { case _: Exception => () }
+      out.toVector
+    }
+  }
+
+  /** The members `keep` picks: streamed, or from the central directory
+    * when the stream cannot be trusted. */
+  private def members(b: Array[Byte], keep: String => Boolean,
+      first: Boolean): Vector[Entry] =
+    streamed(b, keep, first).getOrElse {
+      val cen = cenEntries(b, None).entries.filter(e => keep(e.name))
+      if (first) cen.take(1) else cen
+    }
+
+  /** The one streaming member loop. `keep` sees every member name in
+    * stream order, directories included, and picks the members to
+    * buffer; `first` stops at the first one picked. Each buffered member
+    * may inflate to [[MaxEntryBytes]], all of them together to
+    * [[MaxTotalBytes]]; past either the read aborts as a detected bomb.
+    * None when the stream broke, or ended without a file member although
+    * the bytes end in an end-of-central-directory record (an archive
+    * behind a prefix, whose members only the central directory finds).
+    */
+  private def streamed(b: Array[Byte], keep: String => Boolean,
+      first: Boolean): Option[Vector[Entry]] = {
+    val out = new ArrayBuffer[Entry]()
+    var sawFile = false
+    var total = 0L
+    val zin = new ZipInputStream(new ByteArrayInputStream(b))
+    val broke =
+      try {
+        var e = zin.getNextEntry
+        while (e != null) {
+          sawFile ||= !e.isDirectory
+          if (keep(e.getName)) {
+            val data = readBounded(zin, MaxEntryBytes, math.max(0L, e.getSize))
+            total += data.length
+            if (total > MaxTotalBytes) throw new graft.engine.ZipBombDetected
+            out += Entry(e.getName, data, e.getCompressedSize)
+          }
+          e = if (first && out.nonEmpty) null else zin.getNextEntry
+        }
+        false
+      } catch {
+        case x: graft.engine.ZipBombDetected => throw x
+        case _: Exception => true
+      } finally zin.close()
+    if (broke || (out.isEmpty && !sawFile && b.length > 22 && findEocd(b) >= 0)) None
+    else Some(out.toVector)
+  }
+
+  /** One central-directory record at offset `at`. The name and the zip64
+    * sizes are decoded on first use, so the probes that need neither do
+    * not pay for them. */
+  private final class Record(b: Array[Byte], val at: Int) {
+    val flags: Int = le16(b, at + 8)
+    val nameLen: Int = le16(b, at + 28)
+    val extraLen: Int = le16(b, at + 30)
+    def next: Int = at + 46 + nameLen + extraLen + le16(b, at + 32)
+    lazy val nameBytes: Array[Byte] =
+      java.util.Arrays.copyOfRange(b, at + 46, at + 46 + nameLen)
+    lazy val name: String = decodeName(flags, nameBytes)
+
+    /** (uncompressed size, compressed size, local header offset); the
+      * zip64 extended-info extra field (id 0x0001) overrides each field
+      * stored as 0xFFFFFFFF. */
+    lazy val sizes: (Long, Long, Long) = {
+      var compSize = le32(b, at + 20)
+      var uncompSize = le32(b, at + 24)
+      var localOff = le32(b, at + 42)
+      var xp = at + 46 + nameLen
+      val xEnd = xp + extraLen
+      while (xp + 4 <= xEnd) {
+        val id = le16(b, xp); val sz = le16(b, xp + 2)
+        if (id == 0x0001) {
+          var fp = xp + 4
+          if (uncompSize == 0xffffffffL && fp + 8 <= xEnd) {
+            uncompSize = le32(b, fp); fp += 8
+          }
+          if (compSize == 0xffffffffL && fp + 8 <= xEnd) {
+            compSize = le32(b, fp); fp += 8
+          }
+          if (localOff == 0xffffffffL && fp + 8 <= xEnd) {
+            localOff = le32(b, fp); fp += 8
+          }
+        }
+        xp += 4 + sz
+      }
+      (uncompSize, compSize, localOff)
+    }
+  }
+
+  /** The records read, whether they are every declared record with each
+    * name inside the bytes, and the prepended-prefix shift. */
+  private final case class CentralDirectory(records: Vector[Record],
+      complete: Boolean, shift: Long)
+
+  /** The one central-directory record walk. Resolves the start (classic
+    * EOCD, the zip64 locator/EOCD64 override and the SFX-prefix shift
+    * heuristic), then reads records while their signatures hold, up to
+    * the declared count. Throws when there is no end-of-central-directory
+    * record.
+    */
+  private def centralDirectory(b: Array[Byte]): CentralDirectory = {
     val eocd = findEocd(b)
     if (eocd < 0) throw new IllegalStateException("no end-of-central-directory")
     var cdOff = le32(b, eocd + 16)
@@ -100,7 +245,17 @@ object ZipUtil {
     // archives with prepended bytes (SFX stubs, crafted offsets) shift
     // every stored offset by the prefix length: anchor - (cdOff+cdSize)
     val shift = math.max(0L, cdEndAnchor - (cdOff + cdSize))
-    CdLoc((cdOff + shift).toInt, total, shift)
+    val out = new ArrayBuffer[Record]()
+    var namesFit = true
+    var p = (cdOff + shift).toInt
+    while (out.length < total && p + 46 <= b.length &&
+        b(p) == 'P' && b(p + 1) == 'K' && b(p + 2) == 1 && b(p + 3) == 2) {
+      val r = new Record(b, p)
+      namesFit &&= p + 46 + r.nameLen <= b.length
+      out += r
+      p = r.next
+    }
+    CentralDirectory(out.toVector, out.length == total && namesFit, shift)
   }
 
   private lazy val cp437Charset: java.nio.charset.Charset =
@@ -110,7 +265,7 @@ object ZipUtil {
   /** CEN entry-name decode: UTF-8 when GP bit 11 says so; otherwise
     * sniffed multi-byte charsets (GBK/Big5/SJIS names are common in
     * real archives and carry no flag), cp437 per APPNOTE as the
-    * fallback. Shared by the full and names-only walks.
+    * fallback.
     */
   private def decodeName(flags: Int, nameBytes: Array[Byte]): String =
     if ((flags & 0x800) != 0)
@@ -119,47 +274,6 @@ object ZipUtil {
       case Some(cs) => new String(nameBytes, cs)
       case None => new String(nameBytes, cp437Charset)
     }
-
-  /** Any central-directory entry with GP bit 0 set? Resolves the zip64
-    * EOCD indirection like cenEntries so encrypted zip64 archives do
-    * not bypass the crypto-aware walk.
-    */
-  private def cenHasEncrypted(b: Array[Byte]): Boolean = {
-    val loc =
-      try locateCentralDirectory(b)
-      catch { case _: IllegalStateException => return false }
-    var p = loc.start
-    var n = 0
-    while (n < loc.total && p >= 0 && p + 46 <= b.length &&
-        b(p) == 'P' && b(p + 1) == 'K' && b(p + 2) == 1 && b(p + 3) == 2) {
-      if ((le16(b, p + 8) & 0x1) != 0) return true
-      p += 46 + le16(b, p + 28) + le16(b, p + 30) + le16(b, p + 32)
-      n += 1
-    }
-    false
-  }
-
-  private def streamingEntries(zipBytes: Array[Byte]): Vector[Entry] = {
-    val out = new ArrayBuffer[Entry]()
-    var totalOut = 0L
-    val zin = new ZipInputStream(new ByteArrayInputStream(zipBytes))
-    try {
-      var e: ZipEntry = zin.getNextEntry
-      while (e != null) {
-        if (!e.isDirectory) {
-          val data = readBounded(zin, MaxEntryBytes, math.max(0L, e.getSize))
-          totalOut += data.length
-          if (totalOut > MaxTotalBytes) throw new graft.engine.ZipBombDetected
-          out += Entry(e.getName, data, e.getCompressedSize)
-        }
-        zin.closeEntry()
-        e = zin.getNextEntry
-      }
-    } finally zin.close()
-    if (out.isEmpty && zipBytes.length > 22 && findEocd(zipBytes) >= 0)
-      throw new IllegalStateException("streaming read saw no entries")
-    out.toVector
-  }
 
   private def le16(b: Array[Byte], o: Int): Int =
     (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
@@ -376,54 +490,27 @@ object ZipUtil {
     (out, actualMethod)
   }
 
-  /** Central-directory walk: entry metadata from CEN records (sizes are
-    * authoritative there even with data descriptors), payload at the
-    * local header's data offset, inflated directly. Encrypted entries
-    * decrypt when `password` matches (ZipCrypto / WinZip AES); the rest
-    * are reported in `Walk.encrypted`.
+  /** Central-directory member read: entry metadata from CEN records
+    * (sizes are authoritative there even with data descriptors), payload
+    * at the local header's data offset, inflated directly. Encrypted
+    * entries decrypt when `password` matches (ZipCrypto / WinZip AES);
+    * the rest are reported in `Walk.encrypted`.
     */
-  private def cenEntries(zipBytes: Array[Byte],
-      password: Option[String]): Walk = {
-    val b = zipBytes
-    val loc = locateCentralDirectory(b)
-    val total = loc.total
-    val shift = loc.shift
+  private def cenEntries(b: Array[Byte], password: Option[String]): Walk = {
+    val cd = centralDirectory(b)
+    val shift = cd.shift
     val out = new ArrayBuffer[Entry]()
     val encNames = new ArrayBuffer[String]()
     var totalOut = 0L
-    var p = loc.start
-    var n = 0
-    while (n < total && p + 46 <= b.length &&
-        b(p) == 'P' && b(p + 1) == 'K' && b(p + 2) == 1 && b(p + 3) == 2) {
-      val flags = le16(b, p + 8)
+    for (r <- cd.records) {
+      val p = r.at
+      val flags = r.flags
       val method = le16(b, p + 10)
-      var compSize = le32(b, p + 20)
-      var uncompSize = le32(b, p + 24)
-      val nameLen = le16(b, p + 28)
-      val extraLen = le16(b, p + 30)
-      val commentLen = le16(b, p + 32)
-      var localOff = le32(b, p + 42)
-      val nameBytes = java.util.Arrays.copyOfRange(b, p + 46, p + 46 + nameLen)
-      val name = decodeName(flags, nameBytes)
-      // zip64 extended-info extra field (id 0x0001) overrides 0xFFFFFFFF
-      var xp = p + 46 + nameLen
-      val xEnd = xp + extraLen
-      while (xp + 4 <= xEnd) {
-        val id = le16(b, xp); val sz = le16(b, xp + 2)
-        if (id == 0x0001) {
-          var fp = xp + 4
-          if (uncompSize == 0xffffffffL && fp + 8 <= xEnd) {
-            uncompSize = le32(b, fp); fp += 8
-          }
-          if (compSize == 0xffffffffL && fp + 8 <= xEnd) {
-            compSize = le32(b, fp); fp += 8
-          }
-          if (localOff == 0xffffffffL && fp + 8 <= xEnd) {
-            localOff = le32(b, fp); fp += 8
-          }
-        }
-        xp += 4 + sz
-      }
+      val (uncompSize, compSize, localOff) = r.sizes
+      val nameLen = r.nameLen
+      val extraLen = r.extraLen
+      val nameBytes = r.nameBytes
+      val name = r.name
       val encrypted = (flags & 0x1) != 0
       var entryAdded = false
       if ((!encrypted || password.isDefined) && !name.endsWith("/") &&
@@ -525,127 +612,8 @@ object ZipUtil {
       // reported, so no password value can silently lose members
       if (encrypted && !entryAdded && !name.endsWith("/") &&
           !encNames.contains(name)) encNames += name
-      p += 46 + nameLen + extraLen + commentLen
-      n += 1
     }
     Walk(out.toVector, encNames.toVector)
-  }
-
-  /** Entries decompressed into a name-indexed map in ONE pass —
-    * multi-part formats (OOXML/ODF) read 5-7 parts, and per-part
-    * `entry()` lookups would rescan the archive each time. `keep`
-    * filters by name so embedded media blobs (which OOXML text
-    * extraction never reads) are not buffered — a .pptx full of 50 MB
-    * images must not pin gigabytes per task.
-    */
-  def entriesMap(zipBytes: Array[Byte],
-      keep: String => Boolean = _ => true): Map[String, Array[Byte]] = {
-    val out = scala.collection.mutable.LinkedHashMap[String, Array[Byte]]()
-    try {
-      val zin = new ZipInputStream(new ByteArrayInputStream(zipBytes))
-      try {
-        var e: ZipEntry = zin.getNextEntry
-        while (e != null) {
-          if (!e.isDirectory && keep(e.getName) && !out.contains(e.getName))
-            out(e.getName) = readBounded(zin, MaxEntryBytes)
-          zin.closeEntry()
-          e = zin.getNextEntry
-        }
-      } finally zin.close()
-    } catch {
-      case b: graft.engine.ZipBombDetected => throw b
-      case _: Exception =>
-        // same central-directory fallback as entries() — XPS and other
-        // streaming-writer packages defeat ZipInputStream
-        out.clear()
-        for (e <- entries(zipBytes) if keep(e.name) && !out.contains(e.name))
-          out(e.name) = e.data
-    }
-    out.toMap
-  }
-
-  /** The parts OOXML/ODF text extraction can actually read. */
-  val XmlParts: String => Boolean =
-    n => n.endsWith(".xml") || n.endsWith(".rels") || n == "mimetype"
-
-  /** Read one named entry (first match) without decompressing the rest. */
-  def entry(zipBytes: Array[Byte], name: String): Option[Array[Byte]] = {
-    val zin = new ZipInputStream(new ByteArrayInputStream(zipBytes))
-    try {
-      var e: ZipEntry = zin.getNextEntry
-      while (e != null) {
-        if (e.getName == name) return Some(readBounded(zin, MaxEntryBytes))
-        zin.closeEntry()
-        e = zin.getNextEntry
-      }
-      None
-    } catch {
-      case b: graft.engine.ZipBombDetected => throw b
-      case _: Exception => entries(zipBytes).find(_.name == name).map(_.data)
-    } finally zin.close()
-  }
-
-  /** Names-only central-directory walk: every CEN record's name
-    * (directory and encrypted members included), NO payload decode.
-    * Strict -- any truncation or record-count mismatch throws so the
-    * caller can fall back to the streaming reader.
-    */
-  private def cenNames(b: Array[Byte]): Vector[String] = {
-    val loc = locateCentralDirectory(b)
-    val out = new ArrayBuffer[String]()
-    var p = loc.start
-    var n = 0
-    while (n < loc.total) {
-      if (!(p >= 0 && p + 46 <= b.length &&
-          b(p) == 'P' && b(p + 1) == 'K' && b(p + 2) == 1 && b(p + 3) == 2))
-        throw new IllegalStateException("central directory walk broke")
-      val flags = le16(b, p + 8)
-      val nameLen = le16(b, p + 28)
-      val extraLen = le16(b, p + 30)
-      val commentLen = le16(b, p + 32)
-      if (p + 46 + nameLen > b.length)
-        throw new IllegalStateException("cen name overrun")
-      out += decodeName(flags,
-        java.util.Arrays.copyOfRange(b, p + 46, p + 46 + nameLen))
-      p += 46 + nameLen + extraLen + commentLen
-      n += 1
-    }
-    out.toVector
-  }
-
-  def entryNames(zipBytes: Array[Byte]): Vector[String] = {
-    // Central-directory first: the streaming reader must INFLATE every
-    // member just to skip past it, so each zip-family document paid a
-    // full decompression during DETECTION before parsing even began
-    // (measured ~7% of mixed-corpus extraction CPU). The CEN walk reads
-    // names only; streaming remains the fallback for archives without a
-    // usable central directory (truncated downloads keep the partial
-    // streaming list).
-    try cenNames(zipBytes)
-    catch { case _: Exception =>
-      val out = new ArrayBuffer[String]()
-      val zin = new ZipInputStream(new ByteArrayInputStream(zipBytes))
-      try {
-        var e: ZipEntry = zin.getNextEntry
-        while (e != null) {
-          out += e.getName
-          zin.closeEntry()
-          e = zin.getNextEntry
-        }
-      } catch {
-        case _: Exception =>
-          // streaming broke mid-walk (stored entries with data
-          // descriptors, encrypted members): the LENIENT full CEN walk
-          // (which stops gracefully at a bad record) may still recover
-          // the complete list -- the pre-round-6 recovery order
-          try {
-            val cen = entries(zipBytes).map(_.name)
-            if (cen.nonEmpty) { out.clear(); out ++= cen }
-          } catch { case _: Exception => () }
-      }
-      finally zin.close()
-      out.toVector
-    }
   }
 
   def gunzip(bytes: Array[Byte]): Array[Byte] = {

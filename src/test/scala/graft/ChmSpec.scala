@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import graft.core.{DocRow, Span, Status}
-import graft.corpus.Corpus
-import graft.engine.Extractor
+import graft.core.{Span, Status}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** CHM (ITSS + LZX) extraction vs the reference's real fixtures. The
@@ -20,10 +18,8 @@ class ChmSpec extends AnyFunSuite {
 
   private def fixture(name: String): Array[Byte] = RefFixture.bytes(name, docs)
 
-  private def extract(name: String): graft.core.ExtractedDoc = {
-    val b = fixture(name)
-    Extractor.extract(DocRow(name, Seq(Span("bytes", Corpus.b64(b), null, 0))))
-  }
+  private def extract(name: String): graft.core.ExtractedDoc =
+    RefFixture.extract(docs, name)
 
   private def text(d: graft.core.ExtractedDoc): String =
     d.spans.filter(_.kind == Span.KindText).map(_.text).mkString("\n")

@@ -1,9 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import graft.core.{DocRow, Span}
-import graft.corpus.Corpus
-import graft.engine.Extractor
+import java.nio.file.Path
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Password/DRM-protected legacy Office documents must fail the
@@ -18,13 +15,8 @@ class EncryptedOfficeSpec extends AnyFunSuite {
     "tika-parsers-standard/tika-parsers-standard-modules/" +
     "tika-parser-microsoft-module/src/test/resources/test-documents")
 
-  private def extract(name: String) = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
-    val b = Files.readAllBytes(docs.resolve(name))
-    Extractor.extract(DocRow(name, Seq(Span("bytes", Corpus.b64(b), null, 0))),
-      Extractor.DefaultConfig)
-  }
+  private def extract(name: String): graft.core.ExtractedDoc =
+    RefFixture.extract(docs, name)
 
   test("encrypted .ppt: CurrentUserAtom headerToken 0xF3D1C4DF fails the doc") {
     val out = extract("testPPT_protected_passtika.ppt")

@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import graft.core.{DocRow, Span, Status}
-import graft.corpus.Corpus
-import graft.engine.Extractor
+import java.nio.file.Path
+import graft.core.{Span, Status}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** FLAC native metadata blocks and HEIF/AVIF ispe dimensions vs real
@@ -23,12 +21,8 @@ class FlacHeifSpec extends AnyFunSuite {
     "tika-parsers-standard/tika-parsers-standard-integration-tests/" +
     "src/test/resources/test-documents")
 
-  private def extract(dir: Path, name: String): graft.core.ExtractedDoc = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(dir.resolve(name)),
-      "reference fixtures not present")
-    val b = Files.readAllBytes(dir.resolve(name))
-    Extractor.extract(DocRow(name, Seq(Span("bytes", Corpus.b64(b), null, 0))))
-  }
+  private def extract(dir: Path, name: String): graft.core.ExtractedDoc =
+    RefFixture.extract(dir, name)
 
   private def one(d: graft.core.ExtractedDoc, key: String): String =
     d.meta.getOrElse(key, Nil).headOption.getOrElse("")

@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import graft.core.{DocRow, Span, Status}
-import graft.corpus.Corpus
-import graft.engine.Extractor
+import java.nio.file.Path
+import graft.core.Status
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Embedded OLE objects in legacy Office containers — expectations
@@ -18,12 +16,8 @@ class OleEmbeddedSpec extends AnyFunSuite {
     "tika-parsers-standard/tika-parsers-standard-modules/" +
     "tika-parser-microsoft-module/src/test/resources/test-documents")
 
-  private def extract(name: String): graft.core.ExtractedDoc = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
-    val b = Files.readAllBytes(docs.resolve(name))
-    Extractor.extract(DocRow(name, Seq(Span("bytes", Corpus.b64(b), null, 0))))
-  }
+  private def extract(name: String): graft.core.ExtractedDoc =
+    RefFixture.extract(docs, name)
 
   test("testWORD_embeded.doc: ObjectPool children recurse with text") {
     val d = extract("testWORD_embeded.doc")

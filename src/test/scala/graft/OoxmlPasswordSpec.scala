@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import graft.core.{DocRow, Span, Status}
-import graft.corpus.Corpus
+import java.nio.file.Path
+import graft.core.{Span, Status}
 import graft.engine.Extractor
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,14 +18,8 @@ class OoxmlPasswordSpec extends AnyFunSuite {
     "tika-parsers-standard/tika-parsers-standard-modules/" +
     "tika-parser-microsoft-module/src/test/resources/test-documents")
 
-  private def extract(name: String, password: Option[String]) = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
-    val b = Files.readAllBytes(docs.resolve(name))
-    Extractor.extract(
-      DocRow(name, Seq(Span("bytes", Corpus.b64(b), null, 0))),
-      Extractor.DefaultConfig.copy(password = password))
-  }
+  private def extract(name: String, password: Option[String]): graft.core.ExtractedDoc =
+    RefFixture.extract(docs, name, Extractor.DefaultConfig.copy(password = password))
 
   private def text(d: graft.core.ExtractedDoc): String =
     d.spans.filter(_.kind == Span.KindText).map(_.text).mkString("\n")

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import graft.core.{DocRow, Span, Status}
-import graft.corpus.Corpus
-import graft.engine.Extractor
+import graft.core.{Span, Status}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Gaps surfaced by sweeping the reference's real Office/text fixtures. */
@@ -19,12 +17,8 @@ class RobustnessSweepSpec extends AnyFunSuite {
     "tika-parsers-standard/tika-parsers-standard-modules/" +
     "tika-parser-text-module/src/test/resources/test-documents")
 
-  private def extract(dir: Path, name: String): graft.core.ExtractedDoc = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(dir.resolve(name)),
-      "reference fixtures not present")
-    val b = Files.readAllBytes(dir.resolve(name))
-    Extractor.extract(DocRow(name, Seq(Span("bytes", Corpus.b64(b), null, 0))))
-  }
+  private def extract(dir: Path, name: String): graft.core.ExtractedDoc =
+    RefFixture.extract(dir, name)
 
   test("password-protected OOXML records a parse failure, not unknown") {
     val d = extract(ms, "testWORD_protected_passtika.docx")

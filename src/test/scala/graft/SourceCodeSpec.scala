@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import graft.core.{DocRow, Span, Status}
-import graft.corpus.Corpus
-import graft.engine.Extractor
+import graft.core.{Span, Status}
 import graft.textparse.SourceCodeExtractor
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,12 +17,8 @@ class SourceCodeSpec extends AnyFunSuite {
     "tika-parsers-standard/tika-parsers-standard-modules/" +
     "tika-parser-code-module/src/test/resources/test-documents")
 
-  private def extract(name: String): graft.core.ExtractedDoc = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
-    val b = Files.readAllBytes(docs.resolve(name))
-    Extractor.extract(DocRow(name, Seq(Span("bytes", Corpus.b64(b), null, 0))))
-  }
+  private def extract(name: String): graft.core.ExtractedDoc =
+    RefFixture.extract(docs, name)
 
   private def text(d: graft.core.ExtractedDoc): String =
     d.spans.filter(_.kind == Span.KindText).map(_.text).mkString("\n")
