@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import org.scalatest.funsuite.AnyFunSuite
 
 /** EXIF/TIFF tag extraction vs the reference's real image fixtures —
@@ -15,9 +15,7 @@ class ExifSpec extends AnyFunSuite {
     "tika-parser-image-module/src/test/resources/test-documents")
 
   private def parse(name: String): graft.media.MediaParser.Meta = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
-    graft.media.MediaParser.parse(Files.readAllBytes(docs.resolve(name))).get
+    graft.media.MediaParser.parse(RefFixture.bytes(name, docs)).get
   }
 
   test("testJPEG_EXIF.jpg: core EXIF/TIFF tags") {

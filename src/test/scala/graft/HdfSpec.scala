@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,10 +20,8 @@ class HdfSpec extends AnyFunSuite {
     "src/test/resources/test-documents")
 
   private def metaOf(name: String): Map[String, Seq[String]] = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
     val meta = new MetaSink
-    HdfExtractor.extract(Files.readAllBytes(docs.resolve(name)), meta)
+    HdfExtractor.extract(RefFixture.bytes(name, docs), meta)
     meta.result()
   }
 
@@ -83,11 +81,7 @@ class HdfSpec extends AnyFunSuite {
 
   test("engine end-to-end: .he5 and .hdf route on magic, clean status") {
     for (name <- Seq("test.he5", "test.hdf")) {
-      org.scalatest.Assertions.assume(
-        Files.isRegularFile(docs.resolve(name)), "fixtures absent")
-      val b = Files.readAllBytes(docs.resolve(name))
-      val out = Extractor.extract(
-        DocRow(name, Seq(Span("bytes", Corpus.b64(b), null, 0))))
+      val out = RefFixture.extract(docs, name)
       assert(out.status == Status.ParseSuccess, s"$name -> ${out.status}")
       assert(out.mime == "application/x-hdf", out.mime)
     }
@@ -96,9 +90,7 @@ class HdfSpec extends AnyFunSuite {
   test("truncated / bit-damaged HDF payloads never escape the envelope") {
     val rnd = new scala.util.Random(7)
     for (name <- Seq("test.he5", "test.hdf")) {
-      org.scalatest.Assertions.assume(
-        Files.isRegularFile(docs.resolve(name)), "fixtures absent")
-      val valid = Files.readAllBytes(docs.resolve(name))
+      val valid = RefFixture.bytes(name, docs)
       (0 until 24).foreach { i =>
         val mutated =
           if (i % 2 == 0) java.util.Arrays.copyOf(valid, 8 + rnd.nextInt(4096))

@@ -1,7 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.{DocRow, ExtractedDoc, Span}
+import graft.corpus.Corpus
+import graft.engine.Extractor
 import graft.media.MediaParser
 
 /** ID3 tag + XMP packet metadata vs the reference's real fixtures
@@ -17,18 +20,11 @@ class Id3XmpSpec extends AnyFunSuite {
       "tika-parsers-standard/tika-parsers-standard-integration-tests/" +
       "src/test/resources/test-documents"))
 
-  private val av = new {
-    def resolve(name: String): Path =
-      avDirs.map(_.resolve(name)).find(Files.isRegularFile(_))
-        .getOrElse(avDirs.head.resolve(name))
-  }
+  private def tagsOf(name: String): Map[String, String] =
+    MediaParser.parse(RefFixture.bytes(name, avDirs: _*)).map(_.tags).getOrElse(Map.empty)
 
-  private def tagsOf(name: String): Map[String, String] = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(av.resolve(name)),
-      "reference fixtures not present")
-    MediaParser.parse(Files.readAllBytes(av.resolve(name)))
-      .map(_.tags).getOrElse(Map.empty)
-  }
+  private def extract(name: String): ExtractedDoc = Extractor.extract(
+    DocRow(name, Seq(Span("bytes", Corpus.b64(RefFixture.bytes(name, avDirs: _*)), null, 0))))
 
   test("ID3v1 trailer: title/artist (Mp3ParserTest.testMp3ParsingID3v1)") {
     val t = tagsOf("testMP3id3v1.mp3")
@@ -66,23 +62,16 @@ class Id3XmpSpec extends AnyFunSuite {
   }
 
   test("real PDF XMP packet surfaces xmp:* metadata") {
-    val pdf = Path.of("/root/reference/tika-parsers/" +
+    val d = RefFixture.extract(Path.of("/root/reference/tika-parsers/" +
       "tika-parsers-standard/tika-parsers-standard-modules/" +
-      "tika-parser-pdf-module/src/test/resources/test-documents/" +
-      "testPDF_Version.4.x.pdf")
-    org.scalatest.Assertions.assume(Files.isRegularFile(pdf))
-    val d = graft.engine.Extractor.extract(graft.core.DocRow("t.pdf",
-      Seq(graft.core.Span("bytes", graft.corpus.Corpus.b64(Files.readAllBytes(pdf)), null, 0))))
+      "tika-parser-pdf-module/src/test/resources/test-documents"), "testPDF_Version.4.x.pdf")
     assert(d.meta.keys.exists(_.startsWith("xmp:")), d.meta.keys.toSeq.sorted.take(20))
   }
 
   test("APIC cover art recurses as named embedded children " +
       "(Mp3ParserTest.assertTwoCovers)") {
     for (name <- Seq("testMP3_twoCovers.mp3", "testMP3v23_twoCovers.mp3")) {
-      org.scalatest.Assertions.assume(Files.isRegularFile(av.resolve(name)))
-      val d = graft.engine.Extractor.extract(graft.core.DocRow(name,
-        Seq(graft.core.Span("bytes",
-          graft.corpus.Corpus.b64(Files.readAllBytes(av.resolve(name))), null, 0))))
+      val d = extract(name)
       val path = d.meta.getOrElse("embedded:path", Nil).mkString("|")
       assert(path.contains("Front Cover") && path.contains("Back Cover"), path)
       // 64x40 front, 30x30 back — the reference test's pixel dims
@@ -107,9 +96,7 @@ class Id3XmpSpec extends AnyFunSuite {
     // quality-mode encoding: nominal 80000, open bracket -> variable
     assert(t.get("bitrate").contains("80000"), t)
     assert(t.get("variable_bitrate").contains("true"), t)
-    val d = graft.engine.Extractor.extract(graft.core.DocRow("c.ogg",
-      Seq(graft.core.Span("bytes", graft.corpus.Corpus.b64(
-        Files.readAllBytes(av.resolve("testVORBIS_twoCovers.ogg"))), null, 0))))
+    val d = extract("testVORBIS_twoCovers.ogg")
     val path = d.meta.getOrElse("embedded:path", Nil).mkString("|")
     assert(path.contains("Front Cover") && path.contains("Back Cover"), path)
   }
@@ -132,9 +119,7 @@ class Id3XmpSpec extends AnyFunSuite {
     assert(t.get("artist").contains("Test Artist"), t)
     assert(t.get("album").contains("Test Album"), t)
     assert(t.get("created").contains("2012-01-28T18:39:18Z"), t)
-    val d = graft.engine.Extractor.extract(graft.core.DocRow("c.m4a",
-      Seq(graft.core.Span("bytes", graft.corpus.Corpus.b64(
-        Files.readAllBytes(av.resolve("testMP4_coverArt.m4a"))), null, 0))))
+    val d = extract("testMP4_coverArt.m4a")
     assert(d.meta.getOrElse("embedded:path", Nil).mkString.contains("Cover art"),
       d.meta)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import org.scalatest.funsuite.AnyFunSuite
 import graft.media.MediaParser
 
@@ -17,9 +17,7 @@ class MediaExtraSpec extends AnyFunSuite {
     "tika-parser-audiovideo-module/src/test/resources/test-documents")
 
   private def parse(dir: Path, name: String): MediaParser.Meta = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(dir.resolve(name)),
-      "reference fixtures not present")
-    MediaParser.parse(Files.readAllBytes(dir.resolve(name))).get
+    MediaParser.parse(RefFixture.bytes(name, dir)).get
   }
 
   test("testPSD.psd: 537x51, 8 bits per sample") {

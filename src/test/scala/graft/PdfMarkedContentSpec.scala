@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import graft.core.{DocRow, Span, Status}
 import graft.corpus.Corpus
 import graft.engine.Extractor
@@ -20,9 +20,7 @@ class PdfMarkedContentSpec extends AnyFunSuite {
     "tika-parser-pdf-module/src/test/resources/test-documents")
 
   private def extract(name: String, marked: Boolean = true) = {
-    org.scalatest.Assertions.assume(Files.isRegularFile(docs.resolve(name)),
-      "reference fixtures not present")
-    val b = Files.readAllBytes(docs.resolve(name))
+    val b = RefFixture.bytes(name, docs)
     // unlimited-ish write budget: the reference tests run with
     // BasicContentHandlerFactory -1 (childAttachments alone tops 100k)
     Extractor.extract(
