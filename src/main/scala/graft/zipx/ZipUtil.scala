@@ -6,19 +6,17 @@ import scala.collection.mutable.ArrayBuffer
 
 /** In-row ZIP / gzip access over byte-array payloads.
   *
-  * Reference: tika-parsers .../pkg/ZipParser.java:96-710 prefers
-  * central-directory (ZipFile) order with a streaming fallback; our
-  * payloads are row-sized byte arrays, so streaming order == written
-  * order == central-directory order for the archives we synthesize
-  * (SURVEY.md §2.6 "order = central-directory order").
+  * Reference: tika-parsers .../pkg/ZipParser.java:221-250 opens an
+  * archive through its central directory (ZipFile) and streams only when
+  * that fails (SURVEY.md §2.6 "order = central-directory order").
   *
-  * Two readers serve every call. [[streamed]] is the one streaming
-  * member loop (`entries`, `entriesMap`, `entry`, and `entryNames` when
-  * the central directory is unusable); [[centralDirectory]] is the one
-  * central-directory record walk (`entryNames`, `walk`'s encryption
-  * probe, and the member reads the stream cannot do). Member reads stream
-  * first and fall back to the central directory; names read the central
-  * directory first and fall back to the stream.
+  * Every public call goes through one [[read]] with one policy: a
+  * complete central directory is read directly ([[cenEntries]]), so
+  * members the call does not pick are never inflated; an archive whose
+  * central directory is missing or incomplete is streamed ([[streamed]]);
+  * when the stream breaks too, the records the central directory does
+  * hold are read. Names and members come from the same view, so
+  * detection (`entryNames`) and extraction see one member list.
   */
 object ZipUtil {
 
@@ -44,45 +42,30 @@ object ZipUtil {
     */
   val MaxTotalBytes: Long = 256L * 1024 * 1024
 
-  /** List all entries with their decompressed bytes.
-    *
-    * Streaming read first (the common, well-formed case); central-
-    * directory fallback for the archives JDK's ZipInputStream rejects —
-    * STORED entries with data descriptors (streaming writers), non-UTF-8
-    * entry names (cp437 per APPNOTE when GP bit 11 is clear), prepended
-    * prefixes — which is the reference's own ZipFile-preferred strategy
-    * (pkg/ZipParser.java:96-710).
-    */
+  /** Every file member with its decompressed bytes. */
   def entries(zipBytes: Array[Byte]): Vector[Entry] =
-    members(zipBytes, !_.endsWith("/"), first = false)
+    walk(zipBytes, None).entries
 
   /** Crypto-aware walk: decrypts traditional-PKWARE (ZipCrypto) and
     * WinZip-AES (method 99, AE-1/AE-2) entries when `password` is
     * supplied; entries that stay encrypted are reported by name instead
-    * of silently dropped. Streaming is only safe when nothing is
-    * encrypted (ZipInputStream throws mid-walk otherwise), so any
-    * encryption flag in the central directory routes to the CEN walk.
+    * of silently dropped.
     */
-  def walk(zipBytes: Array[Byte], password: Option[String]): Walk = {
-    val hasEncrypted =
-      try centralDirectory(zipBytes).records.exists(r => (r.flags & 0x1) != 0)
-      catch { case _: Exception => false }
-    if (!hasEncrypted) Walk(entries(zipBytes), Vector.empty)
-    else cenEntries(zipBytes, password)
-  }
+  def walk(zipBytes: Array[Byte], password: Option[String]): Walk =
+    read(zipBytes, !_.endsWith("/"), first = false, password)
 
   /** Entries decompressed into a name-indexed map in ONE pass —
     * multi-part formats (OOXML/ODF) read 5-7 parts, and per-part
     * `entry()` lookups would rescan the archive each time. `keep`
     * filters by name so embedded media blobs (which OOXML text
-    * extraction never reads) are not buffered — a .pptx full of 50 MB
-    * images must not pin gigabytes per task. The first member of a name
-    * wins.
+    * extraction never reads) are neither inflated nor buffered — a .pptx
+    * full of 50 MB images must not pin gigabytes per task. The first
+    * member of a name wins.
     */
   def entriesMap(zipBytes: Array[Byte],
       keep: String => Boolean = _ => true): Map[String, Array[Byte]] = {
     val out = scala.collection.mutable.LinkedHashMap[String, Array[Byte]]()
-    for (e <- members(zipBytes, n => !n.endsWith("/") && keep(n), first = false)
+    for (e <- read(zipBytes, n => !n.endsWith("/") && keep(n), first = false, None).entries
         if !out.contains(e.name)) out(e.name) = e.data
     out.toMap
   }
@@ -93,83 +76,68 @@ object ZipUtil {
 
   /** Read one named entry (first match) without decompressing the rest. */
   def entry(zipBytes: Array[Byte], name: String): Option[Array[Byte]] =
-    members(zipBytes, _ == name, first = true).headOption.map(_.data)
+    read(zipBytes, _ == name, first = true, None).entries.headOption.map(_.data)
 
-  /** Every member name, directories and encrypted members included, in
-    * central-directory order.
-    *
-    * Central-directory first: the streaming reader must INFLATE every
-    * member just to skip past it, so each zip-family document paid a
-    * full decompression during DETECTION before parsing even began
-    * (measured ~7% of mixed-corpus extraction CPU). Streaming is the
-    * fallback for archives whose central directory is missing or does
-    * not hold every declared record (truncated downloads keep the partial
-    * streaming list); when the stream breaks too, the members the lenient
-    * central-directory read recovers replace that list.
+  /** Every member name of the view the member calls read, directories and
+    * encrypted members included, in order. An archive with neither a
+    * usable central directory nor an unbroken stream lists the names
+    * streamed before the break. Nothing is inflated.
     */
   def entryNames(zipBytes: Array[Byte]): Vector[String] = {
-    val cd = try centralDirectory(zipBytes) catch { case _: Exception => null }
-    if (cd != null && cd.complete) cd.records.map(_.name)
-    else {
-      val out = new ArrayBuffer[String]()
-      if (streamed(zipBytes, n => { out += n; false }, first = false).isEmpty)
-        try {
-          val cen = cenEntries(zipBytes, None).entries.map(_.name)
-          if (cen.nonEmpty) { out.clear(); out ++= cen }
-        } catch { case _: Exception => () }
-      out.toVector
+    val seen = new ArrayBuffer[String]()
+    try read(zipBytes, _ => false, first = false, None, seen)
+    catch { case _: Exception => () }
+    seen.toVector
+  }
+
+  /** The one read. `keep` sees every member name of the view read and
+    * picks the members to decode; `first` stops at the first one decoded;
+    * `seen` collects the names of the view. Each decoded member may
+    * inflate to [[MaxEntryBytes]], all of them together to
+    * [[MaxTotalBytes]]; past either the read aborts as a detected bomb.
+    * Throws when the stream breaks and there is no end-of-central-
+    * directory record.
+    */
+  private def read(b: Array[Byte], keep: String => Boolean, first: Boolean,
+      password: Option[String],
+      seen: ArrayBuffer[String] = new ArrayBuffer[String]()): Walk = {
+    val cd = try centralDirectory(b) catch { case _: Exception => null }
+    if (cd != null && cd.complete) cenEntries(b, cd, keep, first, password, seen)
+    else streamed(b, keep, first, seen).map(Walk(_, Vector.empty)).getOrElse {
+      val lenient = if (cd != null) cd else centralDirectory(b)
+      seen.clear()
+      cenEntries(b, lenient, keep, first, password, seen)
     }
   }
 
-  /** The members `keep` picks: streamed, or from the central directory
-    * when the stream cannot be trusted. */
-  private def members(b: Array[Byte], keep: String => Boolean,
-      first: Boolean): Vector[Entry] =
-    streamed(b, keep, first).getOrElse {
-      val cen = cenEntries(b, None).entries.filter(e => keep(e.name))
-      if (first) cen.take(1) else cen
-    }
-
-  /** The one streaming member loop. `keep` sees every member name in
-    * stream order, directories included, and picks the members to
-    * buffer; `first` stops at the first one picked. Each buffered member
-    * may inflate to [[MaxEntryBytes]], all of them together to
-    * [[MaxTotalBytes]]; past either the read aborts as a detected bomb.
-    * None when the stream broke, or ended without a file member although
-    * the bytes end in an end-of-central-directory record (an archive
-    * behind a prefix, whose members only the central directory finds).
-    */
+  /** The streaming member loop; None when the stream broke. */
   private def streamed(b: Array[Byte], keep: String => Boolean,
-      first: Boolean): Option[Vector[Entry]] = {
+      first: Boolean, seen: ArrayBuffer[String]): Option[Vector[Entry]] = {
     val out = new ArrayBuffer[Entry]()
-    var sawFile = false
     var total = 0L
     val zin = new ZipInputStream(new ByteArrayInputStream(b))
-    val broke =
-      try {
-        var e = zin.getNextEntry
-        while (e != null) {
-          sawFile ||= !e.isDirectory
-          if (keep(e.getName)) {
-            val data = readBounded(zin, MaxEntryBytes, math.max(0L, e.getSize))
-            total += data.length
-            if (total > MaxTotalBytes) throw new graft.engine.ZipBombDetected
-            out += Entry(e.getName, data, e.getCompressedSize)
-          }
-          e = if (first && out.nonEmpty) null else zin.getNextEntry
+    try {
+      var e = zin.getNextEntry
+      while (e != null) {
+        seen += e.getName
+        if (keep(e.getName)) {
+          val data = readBounded(zin, MaxEntryBytes, math.max(0L, e.getSize))
+          total += data.length
+          if (total > MaxTotalBytes) throw new graft.engine.ZipBombDetected
+          out += Entry(e.getName, data, e.getCompressedSize)
         }
-        false
-      } catch {
-        case x: graft.engine.ZipBombDetected => throw x
-        case _: Exception => true
-      } finally zin.close()
-    if (broke || (out.isEmpty && !sawFile && b.length > 22 && findEocd(b) >= 0)) None
-    else Some(out.toVector)
+        e = if (first && out.nonEmpty) null else zin.getNextEntry
+      }
+      Some(out.toVector)
+    } catch {
+      case x: graft.engine.ZipBombDetected => throw x
+      case _: Exception => None
+    } finally zin.close()
   }
 
   /** One central-directory record at offset `at`. The name and the zip64
-    * sizes are decoded on first use, so the probes that need neither do
-    * not pay for them. */
+    * sizes are decoded on first use, so records a read does not pick do
+    * not pay for their sizes. */
   private final class Record(b: Array[Byte], val at: Int) {
     val flags: Int = le16(b, at + 8)
     val nameLen: Int = le16(b, at + 28)
@@ -310,14 +278,17 @@ object ZipUtil {
       val inf = new java.util.zip.Inflater(true)
       try {
         inf.setInput(src, off, len)
+        // the declared size bounds the output; a member that inflates to
+        // less (over-declared, or truncated) returns only what inflated
         val outB = new Array[Byte](uncompSize)
         var o = 0
-        while (o < outB.length && !inf.finished()) {
+        var stalled = false
+        while (o < outB.length && !inf.finished() && !stalled) {
           val r = inf.inflate(outB, o, outB.length - o)
-          if (r == 0 && inf.needsInput()) o = outB.length // truncated
-          else o += r
+          stalled = r == 0 && inf.needsInput()
+          o += r
         }
-        outB
+        if (o == outB.length) outB else java.util.Arrays.copyOf(outB, o)
       } finally inf.end()
     // legacy PKZIP methods (reference: commons-compress
     // Unshrinking/ExplodingInputStream; ZipParserTest moby.zip)
@@ -492,17 +463,22 @@ object ZipUtil {
 
   /** Central-directory member read: entry metadata from CEN records
     * (sizes are authoritative there even with data descriptors), payload
-    * at the local header's data offset, inflated directly. Encrypted
-    * entries decrypt when `password` matches (ZipCrypto / WinZip AES);
-    * the rest are reported in `Walk.encrypted`.
+    * at the local header's data offset, inflated directly. Only the
+    * members `keep` picks are charged and decoded; a picked plain member
+    * that declares more than [[MaxEntryBytes]] is a detected bomb.
+    * Encrypted entries decrypt when `password` matches (ZipCrypto /
+    * WinZip AES); the rest are reported in `Walk.encrypted`.
     */
-  private def cenEntries(b: Array[Byte], password: Option[String]): Walk = {
-    val cd = centralDirectory(b)
+  private def cenEntries(b: Array[Byte], cd: CentralDirectory,
+      keep: String => Boolean, first: Boolean, password: Option[String],
+      seen: ArrayBuffer[String]): Walk = {
     val shift = cd.shift
     val out = new ArrayBuffer[Entry]()
     val encNames = new ArrayBuffer[String]()
     var totalOut = 0L
-    for (r <- cd.records) {
+    val picked = cd.records.iterator.takeWhile(_ => !(first && out.nonEmpty))
+      .filter { r => seen += r.name; keep(r.name) }
+    for (r <- picked) {
       val p = r.at
       val flags = r.flags
       val method = le16(b, p + 10)
@@ -513,7 +489,8 @@ object ZipUtil {
       val name = r.name
       val encrypted = (flags & 0x1) != 0
       var entryAdded = false
-      if ((!encrypted || password.isDefined) && !name.endsWith("/") &&
+      if (!encrypted && uncompSize > MaxEntryBytes) throw new graft.engine.ZipBombDetected
+      if ((!encrypted || password.isDefined) &&
           uncompSize <= MaxEntryBytes && compSize <= b.length) {
         // aggregate budget BEFORE allocating: overlapping CEN entries can
         // each claim MaxEntryBytes, so the per-entry cap alone is not
@@ -610,8 +587,7 @@ object ZipUtil {
       // an encrypted member that produced nothing — wrong password, bad
       // offsets, oversized claims, unresolvable local header — is always
       // reported, so no password value can silently lose members
-      if (encrypted && !entryAdded && !name.endsWith("/") &&
-          !encNames.contains(name)) encNames += name
+      if (encrypted && !entryAdded && !encNames.contains(name)) encNames += name
     }
     Walk(out.toVector, encNames.toVector)
   }

@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 import java.util.Base64
-import java.util.zip.{CRC32, ZipEntry, ZipInputStream, ZipOutputStream}
+import java.util.zip.{CRC32, ZipEntry, ZipOutputStream}
 import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.Corpus
@@ -14,14 +14,8 @@ import graft.zipx.ZipUtil
 /** One hash per public `ZipUtil` call over every ZIP payload of the first
   * 2000 corpus rows, the encrypted-ZIP fixtures, hand-built malformed
   * archives and seeded bit-flips and truncations of a corpus `.docx`
-  * (FIXTURES.md §4).
-  *
-  * Each row also carries a flag, computed when the file was frozen: 1 when
-  * a plain streaming read saw no member although the bytes hold an
-  * end-of-central-directory record. Such rows must read their members from
-  * the central directory, so `entriesMap` and `entry` are checked against
-  * what `entries` returns; every other hash must match byte for byte.
-  * A missing pin file fails: regenerate it only on purpose, with
+  * (FIXTURES.md §4). Every hash must match byte for byte. A missing pin
+  * file fails: regenerate it only on purpose, with
   * `sbt 'Test/runMain FreezeZipPins'`.
   */
 object ZipPins {
@@ -156,24 +150,6 @@ object ZipPins {
     }
   }
 
-  /** The parent's streaming read finished without a non-directory member
-    * although the bytes end in an end-of-central-directory record. */
-  def streamSawNothing(b: Array[Byte]): Boolean = {
-    var seen = false
-    try {
-      val zin = new ZipInputStream(new java.io.ByteArrayInputStream(b))
-      try {
-        var e = zin.getNextEntry
-        while (e != null) {
-          seen ||= !e.isDirectory
-          zin.closeEntry()
-          e = zin.getNextEntry
-        }
-      } finally zin.close()
-      !seen && b.length > 22 && eocd(b) >= 0
-    } catch { case _: Exception => false }
-  }
-
   /** First 16 hex digits of the SHA-256 of `v`'s length-prefixed
     * encoding, or `!` and the class name of the exception it threw. */
   def hash(v: => Any): String = {
@@ -211,20 +187,10 @@ object ZipPins {
       Names.map(n => hash(ZipUtil.entry(b, n))) :+ hash(ZipUtil.entryNames(b))
   }
 
-  /** `entriesMap(XmlParts)` and `entry(name)` as read from the members
-    * `entries` returns, for the rows whose stream saw nothing. */
-  def fromEntries(b: Array[Byte]): Seq[String] = {
-    def es = ZipUtil.entries(b)
-    hash(es.filter(e => ZipUtil.XmlParts(e.name)).reverse.map(e => e.name -> e.data).toMap) +:
-      Names.map(n => hash(es.find(_.name == n).map(_.data)))
-  }
-
-  /** Header line, then per input: label, flag, one hash per call. */
+  /** Header line, then per input: label, one hash per call. */
   def render(): String = {
-    val header = ("# label" +: "flag" +: Calls).mkString("\t")
-    val lines = inputs.map { in =>
-      (in.label +: (if (streamSawNothing(in.bytes)) "1" else "0") +: hashes(in)).mkString("\t")
-    }
+    val header = ("# label" +: Calls).mkString("\t")
+    val lines = inputs.map(in => (in.label +: hashes(in)).mkString("\t"))
     (header +: lines.toSeq).mkString("", "\n", "\n")
   }
 }
@@ -236,18 +202,14 @@ class ZipPinsSpec extends AnyFunSuite {
       s"${ZipPins.path} is missing; regenerate it on purpose with " +
         "sbt 'Test/runMain FreezeZipPins' and review the change")
     val want = Files.readString(ZipPins.path).split("\n")
-    assert(want.head == ("# label" +: "flag" +: ZipPins.Calls).mkString("\t"),
+    assert(want.head == ("# label" +: ZipPins.Calls).mkString("\t"),
       "call list differs from the pin file")
     val rows = want.tail.map(_.split("\t"))
     val ins = ZipPins.inputs.toVector
     assert(ins.map(_.label) == rows.map(_(0)).toVector, "input list differs from the pin file")
-    val mapAt = ZipPins.Calls.indexOf("entriesMap")
     val diffs = ins.zip(rows).flatMap { case (in, row) =>
       val got = ZipPins.hashes(in)
-      val expect = row.drop(2).toVector
-      val want =
-        if (row(1) == "1") expect.patch(mapAt, ZipPins.fromEntries(in.bytes), ZipPins.Names.size + 1)
-        else expect
+      val want = row.drop(1)
       ZipPins.Calls.indices.filter(c => got(c) != want(c)).map(c =>
         s"${in.label} ${ZipPins.Calls(c)}: ${want(c)} -> ${got(c)}")
     }
