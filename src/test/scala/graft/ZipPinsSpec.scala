@@ -97,7 +97,8 @@ object ZipPins {
   private def same(name: String, data: String) =
     (name.getBytes(UTF_8), name.getBytes(UTF_8), data.getBytes(UTF_8))
 
-  private def deflated(members: Seq[(String, Array[Byte])]): Array[Byte] = {
+  /** A deflated archive of `members`, written by `ZipOutputStream`. */
+  def deflated(members: Seq[(String, Array[Byte])]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
     val z = new ZipOutputStream(out)
     for ((n, d) <- members) {

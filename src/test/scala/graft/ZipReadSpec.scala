@@ -14,14 +14,6 @@ import graft.zipx.ZipUtil
   * members agree and members a call drops are never inflated. */
 class ZipReadSpec extends AnyFunSuite {
 
-  private def deflated(members: (String, Array[Byte])*): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    val z = new ZipOutputStream(out)
-    for ((n, d) <- members) { z.putNextEntry(new ZipEntry(n)); z.write(d); z.closeEntry() }
-    z.close()
-    out.toByteArray
-  }
-
   /** Offset of the first record with signature `PK<sig><sig+1>` naming `name`. */
   private def header(b: Array[Byte], sig: Int, name: String): Int = {
     val n = name.getBytes(UTF_8)
@@ -101,8 +93,8 @@ class ZipReadSpec extends AnyFunSuite {
 
   test("a corrupt part a .docx never reads does not fail the document") {
     val png = "word/media/image1.png"
-    val b = deflated(ZipUtil.entries(ZipPins.docx).map(e => e.name -> e.data) :+
-      (png -> Array.tabulate[Byte](4096)(i => (i * 31).toByte)): _*)
+    val b = ZipPins.deflated(ZipUtil.entries(ZipPins.docx).map(e => e.name -> e.data) :+
+      (png -> Array.tabulate[Byte](4096)(i => (i * 31).toByte)))
     // its first compressed byte declares the reserved deflate block type
     val lo = header(b, 3, png)
     b(lo + 30 + png.length + (b(lo + 28) & 0xff) + ((b(lo + 29) & 0xff) << 8)) = 0xff.toByte
@@ -123,7 +115,7 @@ class ZipReadSpec extends AnyFunSuite {
 
   test("a member whose central directory over-declares its size is not zero-padded") {
     val body = "hello, central directory".getBytes(UTF_8)
-    val b = new Array[Byte](512) ++ deflated("a.txt" -> body)
+    val b = new Array[Byte](512) ++ ZipPins.deflated(Seq("a.txt" -> body))
     val cen = header(b, 1, "a.txt")
     b(cen + 24) = (b(cen + 24) + 16).toByte // uncompressed size, low byte
     assert(ZipUtil.entries(b).map(_.data.toSeq) == Vector(body.toSeq))
