@@ -1,7 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** spark-submit entry point — the tika-app CLI analog
   * (tika-app/.../cli/TikaCLI.java:560-575; SURVEY.md §2.1).
@@ -13,10 +18,11 @@ import org.apache.spark.sql.functions._
   *            | xhtml (safe-whitelist markup) | xhtml-identity
   * }}}
   *
-  * Input: a (doc_id, spans) parquet table. Output: parquet in the chosen
-  * projection. With a metricsDir, per-partition lineage rows are written
-  * for resume (Pipeline.run); rerunning with the same dirs skips
-  * already-committed doc_ids.
+  * Input: a (doc_id, spans) parquet table, read with the `DocRow` schema.
+  * Output: parquet in the chosen projection. With
+  * a metricsDir, spans mode writes each run into `outputDir/run_id=<uuid>/`
+  * and one lineage file per run into metricsDir (Pipeline.run); rerunning
+  * with the same dirs skips already-committed doc_ids.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -49,7 +55,22 @@ object Main {
     val metricsDir = if (args.length > 3) Some(args(3)) else None
     import spark.implicits._
 
-    val rows0 = spark.read.parquet(input).as[graft.core.DocRow]
+    // Read with the DocRow schema, so Spark runs no schema-inference job.
+    // The driver checks the first input file's footer instead: a path with
+    // no files, or a file whose doc_id/spans (or a Span field) is missing
+    // or has another type, fails here, before any task runs, because the
+    // analyser resolves `.as[DocRow]` against the file's schema as it did
+    // against the inferred one (over no rows, so no job runs).
+    val in = spark.read.schema(Encoders.product[graft.core.DocRow].schema).parquet(input)
+    val first = in.inputFiles.minOption.getOrElse(
+      throw new IllegalArgumentException(s"no parquet files under $input"))
+    val footer = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(first),
+      spark.sparkContext.hadoopConfiguration))
+    val found = try new ParquetToSparkSchemaConverter(SQLConf.get)
+      .convert(footer.getFooter.getFileMetaData.getSchema) finally footer.close()
+    spark.createDataFrame(java.util.List.of[Row](), found)
+      .as[graft.core.DocRow].map(identity)
+    val rows0 = in.as[graft.core.DocRow]
     val rows = metricsDir match {
       case Some(_) => graft.engine.Pipeline.resumeFilter(rows0, outDir)
       case None => rows0
@@ -97,4 +118,5 @@ object Main {
         projected.write.mode("append").parquet(outDir)
     }
   }
+
 }

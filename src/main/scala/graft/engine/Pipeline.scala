@@ -3,8 +3,12 @@ package graft.engine
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.core._
@@ -20,8 +24,9 @@ import graft.core._
   *  - per-partition lineage rows (doc_id ranges, parser version, span
   *    counts, the task's own wall time) are the resume checkpoint
   *    (PipesReporter / the north rule's Iceberg metrics table). The
-  *    extracting task folds them from the rows it yields, so the job
-  *    never reads its own output back;
+  *    extracting task folds them from the rows it yields, and the driver
+  *    writes them as one file per run, so a run is one Spark job (plus
+  *    its shuffle's map stage) that never reads its own output back;
   *  - skew: [[run]] hash-partitions on doc_id into the session's
   *    `spark.sql.shuffle.partitions` before the parse stage, so oversized
   *    docs generated in runs (or packed into one input file) land on
@@ -71,9 +76,9 @@ object Pipeline {
     }
   }
 
-  /** Extract, write output into its own `run_id=<uuid>/` directory
-    * (readers get `run_id` back via partition discovery), then append this
-    * run's lineage.
+  /** Extract, write output straight into its own `run_id=<uuid>/`
+    * directory (readers get `run_id` back via partition discovery; the
+    * job's `_SUCCESS` sits inside it), then add this run's lineage file.
     *
     * Each extracting task folds the rows it yields into its partition's
     * [[PartitionMetrics]] and adds that row to a per-run accumulator. The
@@ -82,7 +87,8 @@ object Pipeline {
     * successful (committed) attempt only, so the driver holds one row per
     * non-empty committed partition once the write returns. A failed write
     * throws before any lineage is written; an empty input (a fully-resumed
-    * rerun) writes neither a run directory nor a lineage row.
+    * rerun) writes neither a run directory nor a lineage row: Spark leaves
+    * a schema-only part file for it, so its run directory is deleted.
     */
   private def writeWithLineage(spark: SparkSession, input: Dataset[DocRow],
       outDir: String, metricsDir: String, cfg: Extractor.Config): Unit = {
@@ -99,6 +105,7 @@ object Pipeline {
           "write this run into a fresh directory — mixing layouts breaks " +
           "partition discovery for every reader")
     val runId = java.util.UUID.randomUUID().toString
+    val runDir = new Path(outDir, s"run_id=$runId")
     val lineage = spark.sparkContext.collectionAccumulator[PartitionMetrics]("lineage")
     input.mapPartitions { it =>
       val t0 = System.nanoTime()
@@ -124,10 +131,38 @@ object Pipeline {
       }
     }.toDF("partition_id", "doc_id", "mime", "status", "spans", "meta",
       "n_spans", "n_chars")
-      .withColumn("run_id", lit(runId))
-      .write.mode("append").partitionBy("run_id").parquet(outDir)
+      .write.parquet(runDir.toString)
     val rows = lineage.value.asScala.toSeq.sortBy(_.partition_id)
-    if (rows.nonEmpty) rows.toDS().coalesce(1).write.mode("append").parquet(metricsDir)
+    if (rows.nonEmpty) writeLineage(spark, rows, new Path(metricsDir), runId)
+    else runDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(runDir, true)
+  }
+
+  /** One run's lineage rows as one parquet file, written on the driver:
+    * `_part-<runId>.parquet` (hidden from readers) renamed to
+    * `part-<runId>.parquet`. The columns are those of a Spark write of
+    * `Dataset[PartitionMetrics]`, so lineage files that older runs wrote
+    * through Spark read as one table with these.
+    */
+  private def writeLineage(spark: SparkSession, rows: Seq[PartitionMetrics],
+      metricsDir: Path, runId: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val schema = new SparkToParquetSchemaConverter()
+      .convert(Encoders.product[PartitionMetrics].schema)
+    val tmp = new Path(metricsDir, s"_part-$runId.parquet")
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf).withType(schema).build()
+    try rows.foreach { r =>
+      val g = new SimpleGroup(schema)
+      r.productElementNames.zip(r.productIterator).foreach {
+        case (k, v: Int) => g.add(k, v)
+        case (k, v: Long) => g.add(k, v)
+        case (k, v: String) => g.add(k, v)
+        case _ => // null: the optional field stays unset
+      }
+      writer.write(g)
+    } finally writer.close()
+    if (!tmp.getFileSystem(conf).rename(tmp, new Path(metricsDir, s"part-$runId.parquet")))
+      throw new java.io.IOException(s"could not commit lineage file $tmp")
   }
 
   /** Spark's string order (UTF-8 bytes), the order SQL `min`/`max`

@@ -128,7 +128,6 @@ final class SpanSink(
 
   def result(): Vector[Span] = { flushText(); out.toVector }
   def charCount: Long = offset.toLong + buf.length
-  def spanCount: Int = out.length
 }
 
 /** Multi-valued metadata accumulator (reference: tika-core

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.XxHash64
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -48,18 +49,27 @@ object Dedup {
     * without ever shuffling document text.
     */
   def snapshotDedup(incoming: DataFrame, prior: DataFrame): DataFrame = {
-    // xxhash64 content signatures: the sig never reaches the output
-    // (only the is_dup flag does), so the join key can be an 8-byte
-    // long instead of a 32-char md5 hex string — cheaper to compute
-    // over the full text and narrower to shuffle. Flags are identical
-    // to the md5 path modulo 64-bit collisions (verified against the
-    // md5-keyed DuckDB oracle at every correctness SF).
-    val priorSigs = prior.select(xxhash64(col("text")).as("sig")).distinct()
+    // Content signature = two independently seeded xxhash64 longs (128
+    // bits): the sig never reaches the output (only the is_dup flag
+    // does), so the key stays two fixed-width longs instead of a 32-char
+    // md5 hex string. A false flag drops a new document, so one 64-bit
+    // hash is not enough: 10^11 distinct texts would hold a few hundred
+    // colliding pairs.
+    val priorSigs = prior.select(sigs(col("text")): _*).distinct()
       .withColumn("seen", lit(1))
-    incoming.select(col("doc_id"), xxhash64(col("text")).as("sig"))
-      .join(priorSigs, Seq("sig"), "left")
+    incoming.select(col("doc_id") +: sigs(col("text")): _*)
+      .join(priorSigs, Seq("sig1", "sig2"), "left")
       .select(col("doc_id"), coalesce(col("seen"), lit(0)).as("is_dup"))
   }
+
+  /** Seed of the second [[snapshotDedup]] hash; the first is Spark's
+    * `xxhash64` default (42).
+    */
+  private val Sig2Seed = 0x5DEECE66DL
+
+  private def sigs(text: Column): Seq[Column] = Seq(
+    xxhash64(text).as("sig1"),
+    GraftBridge.column(XxHash64(Seq(GraftBridge.expression(text)), Sig2Seed)).as("sig2"))
 
   /** Word n-gram shingles, distinct per doc. */
   def shingles(docs: DataFrame, n: Int = 3): DataFrame = {

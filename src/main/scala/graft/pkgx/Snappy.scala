@@ -19,10 +19,6 @@ object Snappy {
 
   private val MaxOut = 256 << 20
 
-  def isFramed(b: Array[Byte]): Boolean =
-    b.length >= 10 && (b(0) & 0xff) == 0xff && b(4) == 's' && b(5) == 'N' &&
-      b(6) == 'a' && b(7) == 'P' && b(8) == 'p' && b(9) == 'Y'
-
   /** Decompress a framed stream. */
   def decompressFramed(b: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()

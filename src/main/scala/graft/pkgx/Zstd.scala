@@ -20,9 +20,6 @@ object Zstd {
 
   private val Magic = 0xFD2FB528
 
-  def isZstd(b: Array[Byte]): Boolean =
-    b.length > 8 && readLE32(b, 0) == Magic
-
   private def readLE32(b: Array[Byte], off: Int): Int =
     (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
       ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)

@@ -318,15 +318,6 @@ object HdfExtractor {
       } catch { case _: HdfMalformed => () }
     }
 
-    // DFNT numeric codes → element width (char codes handled as strings)
-    def dfntWidth(t: Int): Int = t match {
-      case 20 | 21 | 3 | 4 => 1
-      case 22 | 23 => 2
-      case 5 | 24 | 25 => 4
-      case 6 => 8
-      case _ => 0
-    }
-
     var n = 0
     for (((tag, ref), (o, _)) <- dds if tag == 1962 && n < MaxAttrs) {
       try {

@@ -16,10 +16,6 @@ import graft.engine.{MetaSink, SpanSink}
 object IptcAnpaExtractor {
 
   private val SOH = 0x01; private val STX = 0x02; private val ETX = 0x03
-  private val SYN = 0x16
-
-  def looksAnpa(bytes: Array[Byte]): Boolean =
-    bytes.length >= 3 && bytes(0) == SYN && bytes(1) == SYN && bytes(2) == SOH
 
   def extract(bytes: Array[Byte], sink: SpanSink, meta: MetaSink): Unit = {
     val n = bytes.length

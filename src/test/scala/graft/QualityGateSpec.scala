@@ -50,6 +50,20 @@ class QualityGateSpec extends AnyFunSuite {
       Seq(10L -> 1, 11L -> 0, 12L -> 1))
   }
 
+  test("snapshot dedup keys on two independently seeded xxhash64 values") {
+    import org.apache.spark.sql.catalyst.expressions.XxHash64
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    // analyzed: the optimizer folds the hashes of local rows to constants
+    val plan = Dedup.snapshotDedup(docs((10L, "a")), docs((0L, "a")))
+      .queryExecution.analyzed
+    // a real 64-bit collision cannot be built, so check the key itself
+    val seeds = plan.flatMap(_.expressions.flatMap(_.collect {
+      case h: XxHash64 => h.seed })).distinct
+    assert(seeds.size == 2, plan)
+    val keys = plan.collect { case j: Join => j.condition.get.references.map(_.name).toSet }
+    assert(keys == Seq(Set("sig1", "sig2")), plan)
+  }
+
   test("snapshot dedup plan: only hashes join, text never shuffles") {
     val prior = docs((0L, "a"), (3L, "b"))
     val incoming = docs((10L, "a"))

@@ -96,6 +96,104 @@ class PipelineSpec extends AnyFunSuite {
     Pipeline.run(spark, delta, s"$dir/out", s"$dir/metrics")
     assert(spark.read.parquet(s"$dir/metrics").count() == nLineage)
     assert(spark.read.parquet(s"$dir/out").count() == 300)
+    // ... and leaves no run directory and no lineage file behind
+    assert(visible(s"$dir/out") == Seq(s"run_id=$runId"))
+    assert(visible(s"$dir/metrics") == Seq(s"part-$runId.parquet"))
+  }
+
+  /** Entry names a Spark reader would see in `dir`, sorted. */
+  private def visible(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).toSeq.flatten
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
+
+  /** Spark jobs that `body` submits from this thread (job group `tag`),
+    * counted by a listener; `body`'s failure is returned, not thrown.
+    */
+  private def jobsOf(tag: String)(body: => Unit): (Int, Option[Throwable]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(tag, tag)
+      val failure = scala.util.Try(body).failed.toOption
+      // listener events arrive in order: once this marker job is seen,
+      // every job `body` submitted has been counted
+      sc.setJobGroup(s"$tag-marker", tag)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(s"$tag-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(s"$tag-marker"), "listener never saw the marker job")
+      (groups.toArray.count(_ == tag), failure)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a fresh resumable CLI pass submits at most two Spark jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("graftjobs").toString
+    Corpus.docRows(spark, 200, 4).write.parquet(s"$dir/in")
+    val (jobs, failure) = jobsOf(s"cli-pass-$dir") {
+      Main.run(Array(s"$dir/in", s"$dir/out", "spans", s"$dir/metrics"), spark)
+    }
+    assert(failure.isEmpty, failure)
+    // the doc_id shuffle's map stage and the data write; no
+    // schema-inference job, no lineage write job
+    assert(jobs <= 2, s"$jobs jobs")
+    assert(spark.read.parquet(s"$dir/out").count() == 200)
+    assert(visible(s"$dir/out").size == 1)
+    // _SUCCESS is the run directory's own
+    val run = visible(s"$dir/out").head
+    assert(new java.io.File(s"$dir/out/$run/_SUCCESS").isFile)
+    assert(!new java.io.File(s"$dir/out/_SUCCESS").exists)
+  }
+
+  test("driver-written lineage reads as one table with Spark-written lineage") {
+    import spark.implicits._
+    import graft.core.PartitionMetrics
+    val dir = java.nio.file.Files.createTempDirectory("graftlinfile").toString
+    Pipeline.run(spark, Corpus.docRows(spark, 100, 4), s"$dir/out", s"$dir/metrics")
+    val Seq(file) = visible(s"$dir/metrics")
+    assert(file.startsWith("part-") && file.endsWith(".parquet"))
+    val driver = spark.read.parquet(s"$dir/metrics").as[PartitionMetrics].collect().toSeq
+    assert(driver.map(_.n_docs).sum == 100)
+    // the schema an old run's `Dataset[PartitionMetrics]` write gave
+    val old = PartitionMetrics(9, "a", null, 1, 2, 3, 1, 0, "old-run", "v0", 5)
+    Seq(old).toDS().coalesce(1).write.parquet(s"$dir/spark")
+    def shape(path: String) = spark.read.parquet(path).schema.map(f => f.name -> f.dataType)
+    assert(shape(s"$dir/metrics") == shape(s"$dir/spark"))
+    // an old metricsDir keeps working: one file of each kind, one table
+    val Seq(sparkFile) = visible(s"$dir/spark")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/spark/$sparkFile"),
+      java.nio.file.Paths.get(s"$dir/metrics/$sparkFile"))
+    assert(shape(s"$dir/metrics") == shape(s"$dir/spark"))
+    val both = spark.read.parquet(s"$dir/metrics").as[PartitionMetrics].collect().toSeq
+    assert(both.sortBy(_.partition_id) == (driver :+ old).sortBy(_.partition_id))
+  }
+
+  test("an input without DocRow columns fails before any job runs") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graftbadin").toString
+    Seq("d1").toDF("doc_id").write.parquet(s"$dir/nospans")
+    Seq(("d1", "x")).toDF("doc_id", "spans").write.parquet(s"$dir/stringspans")
+    Seq(("d1", Seq(("text", "x")))).toDF("doc_id", "spans").write.parquet(s"$dir/nooffset")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/empty"))
+    for (in <- Seq("nospans", "stringspans", "nooffset", "empty")) {
+      val (jobs, failure) = jobsOf(s"bad-input-$dir-$in") {
+        Main.run(Array(s"$dir/$in", s"$dir/out-$in", "spans", s"$dir/m-$in"), spark)
+      }
+      assert(failure.isDefined, in)
+      assert(jobs == 0, in)
+      assert(!new java.io.File(s"$dir/out-$in").exists, in)
+      assert(!new java.io.File(s"$dir/m-$in").exists, in)
+    }
   }
 
   test("resume surfaces an unreadable outDir instead of re-extracting") {
