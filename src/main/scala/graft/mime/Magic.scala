@@ -119,12 +119,6 @@ final case class OrClause(clauses: Seq[Clause]) extends Clause {
   def matches(data: Array[Byte]): Boolean = clauses.exists(_.matches(data))
 }
 
-/** N-of-M (mime/MinShouldMatchClause.java; reader :417-419). */
-final case class MinShouldMatchClause(min: Int, clauses: Seq[Clause]) extends Clause {
-  override val maxLength: Int = if (clauses.isEmpty) 0 else clauses.map(_.maxLength).max
-  def matches(data: Array[Byte]): Boolean = clauses.count(_.matches(data)) >= min
-}
-
 /** One magic alternative: if `clause` matches, the document is `mediaType`
   * at confidence `priority` (default 50, MimeTypesReader.java:313-319).
   * Ordered priority-desc then size-desc (mime/Magic.compareTo :60-72).

@@ -20,11 +20,6 @@ import graft.media.MediaParser
   */
 object Multimodal {
 
-  final case class MediaMeta(
-      media_ref: String,
-      media_type: String,  // image | audio | video
-      width: Int, height: Int, n_frames: Int, duration_ms: Long)
-
   final case class MediaFeature(
       media_ref: String, media_type: String, mime: String,
       width: Int, height: Int, n_frames: Int,

@@ -17,7 +17,6 @@ object Helvetica {
   )
   def width(code: Int): Int =
     if (code >= 32 && code <= 126) w(code - 32) else 556
-  val SpaceWidth: Int = 278
 }
 
 /** PDF text extraction: content-stream interpretation + the reference's

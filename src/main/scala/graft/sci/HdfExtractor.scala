@@ -122,7 +122,6 @@ object HdfExtractor {
       p += align(nameSz)
       val dtOff = p
       p += align(dtSz)
-      val dsOff = p
       p += align(dsSz)
       if (p > o + len) return
       // datatype: class+version byte, 24 bit-field bits, u32 size

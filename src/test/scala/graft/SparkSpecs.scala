@@ -183,9 +183,9 @@ class PipelineSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graftbadin").toString
     Seq("d1").toDF("doc_id").write.parquet(s"$dir/nospans")
     Seq(("d1", "x")).toDF("doc_id", "spans").write.parquet(s"$dir/stringspans")
-    Seq(("d1", Seq(("text", "x")))).toDF("doc_id", "spans").write.parquet(s"$dir/nooffset")
+    Seq(("d1", Seq(("text", "x")))).toDF("doc_id", "spans").write.parquet(s"$dir/tuplespans")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/empty"))
-    for (in <- Seq("nospans", "stringspans", "nooffset", "empty")) {
+    for (in <- Seq("nospans", "stringspans", "tuplespans", "empty")) {
       val (jobs, failure) = jobsOf(s"bad-input-$dir-$in") {
         Main.run(Array(s"$dir/$in", s"$dir/out-$in", "spans", s"$dir/m-$in"), spark)
       }
