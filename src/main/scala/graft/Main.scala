@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -19,10 +19,10 @@ import org.apache.spark.sql.internal.SQLConf
   * }}}
   *
   * Input: a (doc_id, spans) parquet table, read with the `DocRow` schema.
-  * Output: parquet in the chosen projection. With
-  * a metricsDir, spans mode writes each run into `outputDir/run_id=<uuid>/`
-  * and one lineage file per run into metricsDir (Pipeline.run); rerunning
-  * with the same dirs skips already-committed doc_ids.
+  * Output: parquet in the chosen projection. With a metricsDir, spans mode
+  * writes each run into `outputDir/run_id=<uuid>/` and one lineage file
+  * per run into metricsDir (Pipeline.run); rerunning with the same dirs
+  * skips already-committed doc_ids.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -56,11 +56,9 @@ object Main {
     import spark.implicits._
 
     // Read with the DocRow schema, so Spark runs no schema-inference job.
-    // The driver checks the first input file's footer instead: a path with
-    // no files, or a file whose doc_id/spans (or a Span field) is missing
-    // or has another type, fails here, before any task runs, because the
-    // analyser resolves `.as[DocRow]` against the file's schema as it did
-    // against the inferred one (over no rows, so no job runs).
+    // Resolving `.as[DocRow]` over no rows against the first file's footer
+    // schema fails here, before any task runs, on a path with no files or
+    // a missing or mistyped doc_id/spans (or Span field).
     val in = spark.read.schema(Encoders.product[graft.core.DocRow].schema).parquet(input)
     val first = in.inputFiles.minOption.getOrElse(
       throw new IllegalArgumentException(s"no parquet files under $input"))
@@ -68,13 +66,9 @@ object Main {
       spark.sparkContext.hadoopConfiguration))
     val found = try new ParquetToSparkSchemaConverter(SQLConf.get)
       .convert(footer.getFooter.getFileMetaData.getSchema) finally footer.close()
-    spark.createDataFrame(java.util.List.of[Row](), found)
-      .as[graft.core.DocRow].map(identity)
-    val rows0 = in.as[graft.core.DocRow]
-    val rows = metricsDir match {
-      case Some(_) => graft.engine.Pipeline.resumeFilter(rows0, outDir)
-      case None => rows0
-    }
+    spark.createDataFrame(java.util.List.of[Row](), found).as[graft.core.DocRow].map(identity)
+    val docs = in.as[graft.core.DocRow]
+    val rows = if (metricsDir.isEmpty) docs else graft.engine.Pipeline.resumeFilter(docs, outDir)
 
     mode match {
       case "unpack" =>
@@ -118,5 +112,4 @@ object Main {
         projected.write.mode("append").parquet(outDir)
     }
   }
-
 }

@@ -63,8 +63,7 @@ object Pipeline {
       outDir, metricsDir, cfg)
 
   /** The entries of `dir` a Spark reader would see (not `_`/`.`-named);
-    * none when `dir` is missing or holds only the `_SUCCESS` of a job that
-    * wrote no rows — exactly "nothing committed".
+    * none when `dir` is missing.
     */
   private def entries(spark: SparkSession, dir: String): Seq[FileStatus] = {
     val p = new Path(dir)
@@ -137,11 +136,10 @@ object Pipeline {
     else runDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(runDir, true)
   }
 
-  /** One run's lineage rows as one parquet file, written on the driver:
-    * `_part-<runId>.parquet` (hidden from readers) renamed to
-    * `part-<runId>.parquet`. The columns are those of a Spark write of
-    * `Dataset[PartitionMetrics]`, so lineage files that older runs wrote
-    * through Spark read as one table with these.
+  /** One run's lineage rows as one driver-written file, renamed from a
+    * hidden `_part-<runId>.parquet` to `part-<runId>.parquet`, with the
+    * columns of a Spark write of `Dataset[PartitionMetrics]`, so lineage
+    * files that older runs wrote through Spark read as one table with it.
     */
   private def writeLineage(spark: SparkSession, rows: Seq[PartitionMetrics],
       metricsDir: Path, runId: String): Unit = {
@@ -157,7 +155,8 @@ object Pipeline {
         case (k, v: Int) => g.add(k, v)
         case (k, v: Long) => g.add(k, v)
         case (k, v: String) => g.add(k, v)
-        case _ => // null: the optional field stays unset
+        case (_, null) => // the optional field stays unset
+        // any other type fails with a MatchError naming the field
       }
       writer.write(g)
     } finally writer.close()
@@ -202,10 +201,12 @@ object Pipeline {
   def resumeFilter(input: Dataset[DocRow], outDir: String): Dataset[DocRow] = {
     val spark = input.sparkSession
     import spark.implicits._
-    // only an outDir with nothing in it means "nothing committed"; any
-    // read failure must surface, or the job would re-extract and
-    // duplicate every committed row
-    if (entries(spark, outDir).isEmpty) return input
+    // committed = some visible file, at the top level or in a run
+    // directory (a failed or killed run leaves at most its committer's
+    // _temporary); past this any read failure must surface, or the job
+    // would re-extract and duplicate every committed row
+    if (!entries(spark, outDir).exists(st =>
+          st.isFile || entries(spark, st.getPath.toString).nonEmpty)) return input
     val done = spark.read.parquet(outDir).select("doc_id").distinct()
     input.join(done, Seq("doc_id"), "left_anti").as[DocRow]
   }

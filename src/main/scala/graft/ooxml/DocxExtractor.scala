@@ -198,7 +198,6 @@ object DocxExtractor {
     private var inDelText = false     // inside w:delText (tracked delete)
     private var inInstrText = false   // field code text
     private var tableDepth = 0
-    private var paraHasContent = false
     private var skipNote = false      // separator/continuation footnotes
     private var inNumPr = false       // inside w:pPr/w:numPr
     private var numIlvl = -1
@@ -246,7 +245,6 @@ object DocxExtractor {
     override def characters(ch: Array[Char], start: Int, length: Int): Unit = {
       if (inText && !inDelText && !inInstrText && !skipNote) {
         sink.chars(new String(ch, start, length))
-        paraHasContent = true
       }
     }
 

@@ -49,12 +49,10 @@ object Dedup {
     * without ever shuffling document text.
     */
   def snapshotDedup(incoming: DataFrame, prior: DataFrame): DataFrame = {
-    // Content signature = two independently seeded xxhash64 longs (128
-    // bits): the sig never reaches the output (only the is_dup flag
-    // does), so the key stays two fixed-width longs instead of a 32-char
-    // md5 hex string. A false flag drops a new document, so one 64-bit
-    // hash is not enough: 10^11 distinct texts would hold a few hundred
-    // colliding pairs.
+    // The key is two 64-bit hashes, not a 32-char md5 hex string: it never
+    // reaches the output (only is_dup does). One 64-bit hash is not enough,
+    // as a false flag drops a new document and 10^11 distinct texts would
+    // hold a few hundred colliding pairs.
     val priorSigs = prior.select(sigs(col("text")): _*).distinct()
       .withColumn("seen", lit(1))
     incoming.select(col("doc_id") +: sigs(col("text")): _*)
@@ -62,14 +60,12 @@ object Dedup {
       .select(col("doc_id"), coalesce(col("seen"), lit(0)).as("is_dup"))
   }
 
-  /** Seed of the second [[snapshotDedup]] hash; the first is Spark's
-    * `xxhash64` default (42).
+  /** [[snapshotDedup]]'s key: `xxhash64` under its default seed (42) and
+    * under a second, independent one.
     */
-  private val Sig2Seed = 0x5DEECE66DL
-
   private def sigs(text: Column): Seq[Column] = Seq(
     xxhash64(text).as("sig1"),
-    GraftBridge.column(XxHash64(Seq(GraftBridge.expression(text)), Sig2Seed)).as("sig2"))
+    GraftBridge.column(XxHash64(Seq(GraftBridge.expression(text)), 0x5DEECE66DL)).as("sig2"))
 
   /** Word n-gram shingles, distinct per doc. */
   def shingles(docs: DataFrame, n: Int = 3): DataFrame = {

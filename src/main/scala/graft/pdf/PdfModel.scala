@@ -240,7 +240,6 @@ final class PdfLexer(data: Array[Byte]) {
   }
 
   def parseNumberOrRef(): PdfObj = {
-    val start = pos
     val n1 = readNumber()
     if (n1.isWhole && n1 >= 0) {
       val save = pos

@@ -30,10 +30,6 @@ object Hfs {
   def isHfs(b: Array[Byte]): Boolean =
     b.length >= 1536 && b(1024) == 'H' && (b(1025) == '+' || b(1025) == 'X')
 
-  private def be16(b: Array[Byte], o: Int): Int = {
-    if (o < 0 || o + 2 > b.length) throw new HfsMalformed("short read")
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-  }
   private def be32(b: Array[Byte], o: Int): Long = {
     if (o < 0 || o + 4 > b.length) throw new HfsMalformed("short read")
     var v = 0L; var i = 0

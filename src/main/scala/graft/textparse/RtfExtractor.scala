@@ -251,8 +251,6 @@ private object RtfObjData {
   private def parse(b: Array[Byte], meta: MetaSink,
       child: (String, Array[Byte]) => Unit, nextName: () => String): Unit = {
     var p = 0
-    def u16(): Int = { val v = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8); p += 2; v }
-    def u16be(): Int = { val v = ((b(p) & 0xff) << 8) | (b(p + 1) & 0xff); p += 2; v }
     def u32(): Long = {
       val v = (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
         ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
@@ -263,12 +261,6 @@ private object RtfObjData {
       if (len < 0 || len > b.length - p) throw new IllegalArgumentException("len")
       val s = new String(b, p, len.toInt, Cp1252).takeWhile(_ != 0.toChar).trim
       p += len.toInt; s
-    }
-    def asciiz(): String = {
-      val start = p
-      while (p < b.length && b(p) != 0) p += 1
-      val s = new String(b, start, p - start, Cp1252)
-      p += 1; s
     }
     def bytesOf(len: Long): Array[Byte] = {
       if (len < 0 || len > b.length - p) throw new IllegalArgumentException("sz")

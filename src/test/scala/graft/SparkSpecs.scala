@@ -210,6 +210,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(Pipeline.resumeFilter(input, s"$dir/empty").count() == 20)
   }
 
+  test("a failed run's leftover run directory reads as nothing committed") {
+    val dir = java.nio.file.Files.createTempDirectory("graftaborted").toString
+    Corpus.docRows(spark, 40, 2).write.parquet(s"$dir/in")
+    // what an aborted write leaves (an empty run directory) and what a
+    // killed driver leaves (task output still under the committer's
+    // _temporary)
+    val out = java.nio.file.Paths.get(dir, "out")
+    java.nio.file.Files.createDirectories(out.resolve("run_id=aborted"))
+    val staged = out.resolve("run_id=killed/_temporary/0/task/part-0.parquet")
+    java.nio.file.Files.createDirectories(staged.getParent)
+    java.nio.file.Files.write(staged, "not parquet".getBytes("UTF-8"))
+    val cli = Array(s"$dir/in", s"$dir/out", "spans", s"$dir/metrics")
+    Main.run(cli, spark)
+    assert(spark.read.parquet(s"$dir/out").count() == 40)
+    // a later rerun resumes past the completed run, leftovers and all
+    Main.run(cli, spark)
+    assert(spark.read.parquet(s"$dir/out").count() == 40)
+    assert(visible(s"$dir/out").size == 3)
+    assert(visible(s"$dir/metrics").size == 1)
+  }
+
   test("entry smoke: rows > 0") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
