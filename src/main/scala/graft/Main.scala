@@ -1,12 +1,9 @@
 package graft
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Encoders, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
+import graft.engine.Pipeline
 
 /** spark-submit entry point — the tika-app CLI analog
   * (tika-app/.../cli/TikaCLI.java:560-575; SURVEY.md §2.1).
@@ -56,32 +53,30 @@ object Main {
     import spark.implicits._
 
     // Read with the DocRow schema, so Spark runs no schema-inference job.
-    // Resolving `.as[DocRow]` over no rows against the first file's footer
-    // schema fails here, before any task runs, on a path with no files or
-    // a missing or mistyped doc_id/spans (or Span field).
-    val in = spark.read.schema(Encoders.product[graft.core.DocRow].schema).parquet(input)
+    // Resolving the DocRow encoder against the first file's footer schema,
+    // as `Dataset.as` does, fails here, before any job runs, on a path
+    // with no files or a missing or mistyped doc_id/spans (or Span field).
+    val enc = Pipeline.DocRowEncoder
+    val in = spark.read.schema(enc.schema).parquet(input)
     val first = in.inputFiles.minOption.getOrElse(
       throw new IllegalArgumentException(s"no parquet files under $input"))
-    val footer = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(first),
-      spark.sparkContext.hadoopConfiguration))
-    val found = try new ParquetToSparkSchemaConverter(SQLConf.get)
-      .convert(footer.getFooter.getFileMetaData.getSchema) finally footer.close()
-    spark.createDataFrame(java.util.List.of[Row](), found).as[graft.core.DocRow].map(identity)
-    val docs = in.as[graft.core.DocRow]
-    val rows = if (metricsDir.isEmpty) docs else graft.engine.Pipeline.resumeFilter(docs, outDir)
+    enc.resolveAndBind(DataTypeUtils.toAttributes(Pipeline.footerSchema(spark, first)),
+      spark.sessionState.analyzer)
+    val docs = in.as(enc)
+    val rows = if (metricsDir.isEmpty) docs else Pipeline.resumeFilter(docs, outDir)
 
     mode match {
       case "unpack" =>
         graft.engine.Unpack.unpack(rows).write.mode("append").parquet(outDir)
       case "spans" =>
         metricsDir match {
-          case Some(md) => graft.engine.Pipeline.run(spark, rows, outDir, md)
+          case Some(md) => Pipeline.run(spark, rows, outDir, md)
           case None =>
-            graft.engine.Pipeline.extract(rows).toDF()
+            Pipeline.extract(rows).toDF()
               .write.mode("append").parquet(outDir)
         }
       case m =>
-        val extracted = graft.engine.Pipeline.extract(rows)
+        val extracted = Pipeline.extract(rows)
         val projected = m match {
           case "text" =>
             extracted.toDF().select(col("doc_id"), col("mime"), col("status"),

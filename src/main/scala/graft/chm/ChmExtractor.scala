@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import graft.engine.{MetaSink, SpanSink}
 import graft.html.HtmlExtractor
 import graft.mime.EncodingDetector
+import graft.core.Endian
 
 /** Microsoft Compiled HTML Help (.chm) extractor.
   *
@@ -33,18 +34,10 @@ object ChmExtractor {
 
   final case class DirEntry(name: String, section: Int, offset: Long, length: Long)
 
-  private def le32(b: Array[Byte], o: Int): Long = {
-    if (o < 0 || o + 4 > b.length) throw new ChmMalformed("short read")
-    var v = 0L; var i = 0
-    while (i < 4) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
-  }
-  private def le64(b: Array[Byte], o: Int): Long = {
-    if (o < 0 || o + 8 > b.length) throw new ChmMalformed("short read")
-    var v = 0L; var i = 0
-    while (i < 8) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
-  }
+  private def need(b: Array[Byte], o: Int, n: Int): Unit =
+    if (o < 0 || o + n > b.length) throw new ChmMalformed("short read")
+  private def le32(b: Array[Byte], o: Int): Long = { need(b, o, 4); Endian.le32(b, o) }
+  private def le64(b: Array[Byte], o: Int): Long = { need(b, o, 8); Endian.le64(b, o) }
   private def magic4(b: Array[Byte], o: Int, m: String): Boolean =
     o >= 0 && o + 4 <= b.length &&
       b(o) == m(0).toByte && b(o + 1) == m(1).toByte &&

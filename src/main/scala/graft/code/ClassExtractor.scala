@@ -3,6 +3,7 @@ package graft.code
 import java.nio.charset.StandardCharsets
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian
 
 /** Java .class structure rendered as javap-style declaration text.
   *
@@ -228,8 +229,8 @@ object ClassExtractor {
   private final class Reader(b: Array[Byte]) {
     var at = 0
     def u1(): Int = { check(1); val v = b(at) & 0xff; at += 1; v }
-    def u2(): Int = { check(2); val v = ((b(at) & 0xff) << 8) | (b(at + 1) & 0xff); at += 2; v }
-    def u4(): Long = { (u2().toLong << 16) | u2() }
+    def u2(): Int = { check(2); at += 2; Endian.be16(b, at - 2) }
+    def u4(): Long = { check(4); at += 4; Endian.be32(b, at - 4) }
     def skip(n: Int): Unit = { if (n < 0) throw new ClassMalformed("neg len"); check(n); at += n }
     private def check(n: Int): Unit =
       if (at + n > b.length) throw new ClassMalformed("truncated")

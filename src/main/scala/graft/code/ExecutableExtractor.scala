@@ -1,6 +1,7 @@
 package graft.code
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian.{be16, be32, le16, le32}
 
 /** PE / ELF / Mach-O executable metadata.
   *
@@ -16,15 +17,6 @@ import graft.engine.{MetaSink, SpanSink}
   * stub at 100 TB scale.
   */
 object ExecutableExtractor {
-
-  private def u16le(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def u32le(b: Array[Byte], o: Int): Long =
-    (u16le(b, o) | (u16le(b, o + 2).toLong << 16)) & 0xffffffffL
-  private def u16be(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-  private def u32be(b: Array[Byte], o: Int): Long =
-    ((u16be(b, o).toLong << 16) | u16be(b, o + 2)) & 0xffffffffL
 
   def extract(bytes: Array[Byte], sink: SpanSink, meta: MetaSink): Unit = {
     if (bytes.length < 8) return
@@ -42,15 +34,15 @@ object ExecutableExtractor {
     */
   private def parsePe(b: Array[Byte], meta: MetaSink): Unit = {
     if (b.length < 0x40) return
-    val peOffset = u32le(b, 0x3c)
+    val peOffset = le32(b, 0x3c)
     // reasonability window, same as the reference (normally first few KB)
     if (peOffset > 4096 || peOffset < 0x3f || peOffset + 24 > b.length) return
     val o = peOffset.toInt
     if (!(b(o) == 'P' && b(o + 1) == 'E' && b(o + 2) == 0 && b(o + 3) == 0))
       return // old-style MS-DOS: no COFF header, metadata stays empty
     meta.set("machine:platform", "Windows")
-    val machine = u16le(b, o + 4)
-    val createdAt = u32le(b, o + 8)
+    val machine = le16(b, o + 4)
+    val createdAt = le32(b, o + 8)
     if (createdAt > 0)
       meta.set("meta:creation-date",
         java.time.Instant.ofEpochSecond(createdAt).toString)
@@ -105,7 +97,7 @@ object ExecutableExtractor {
       }
       if (platform != null) meta.set("machine:platform", platform)
     }
-    def u16(o: Int): Int = if (endian == 2) u16be(b, o) else u16le(b, o)
+    def u16(o: Int): Int = if (endian == 2) be16(b, o) else le16(b, o)
     val eType = u16(16)
     val kind = eType match {
       case 1 => "object"
@@ -148,7 +140,7 @@ object ExecutableExtractor {
     val isLE = m3 == 0xfe // reversed byte order: header fields are LE
     val isBE = m0 == 0xfe // natural order: fields are BE
     if (!isLE && !isBE) return
-    def u32(o: Int): Long = if (isLE) u32le(b, o) else u32be(b, o)
+    def u32(o: Int): Long = if (isLE) le32(b, o) else be32(b, o)
     meta.set(prefix + "machine:endian", if (isLE) "Little" else "Big")
     val cpuType = u32(off + 4)
     if (((cpuType >> 24) & 0xff) == 1)
@@ -190,14 +182,14 @@ object ExecutableExtractor {
     */
   private def parseFat(b: Array[Byte], meta: MetaSink): Unit = {
     if (b.length < 8) return
-    val n = u32be(b, 4)
+    val n = be32(b, 4)
     if (n <= 0 || n > 32) return // java .class files land here via magic
     meta.set("machine:fatArchCount", n.toString)
     var i = 0
     while (i < n) {
       val fo = 8 + i * 20
       if (fo + 20 <= b.length) {
-        val sliceOff = u32be(b, fo + 8)
+        val sliceOff = be32(b, fo + 8)
         if (sliceOff + 16 <= b.length)
           parseMachO(b, sliceOff.toInt, meta, s"arch$i:") // arch0:machine:*
       }

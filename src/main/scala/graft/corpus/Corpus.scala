@@ -8,6 +8,7 @@ import scala.util.Random
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core.{DocRow, Span}
+import graft.core.Endian.{le16Bytes, le32Bytes}
 
 /** Deterministic synthetic corpus — FIXTURES.md §2.
   *
@@ -571,16 +572,13 @@ Unicode: \\u8212? dash and \\'e9 accent\\par
 
   /** OLE 1.0 embedded Package record (the `\objdata` payload shape). */
   private def ole1Package(name: String, data: Array[Byte]): Array[Byte] = {
-    def u16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-    def u32(v: Int) =
-      Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
     def asciiz(s: String) = s.getBytes(StandardCharsets.US_ASCII) :+ 0.toByte
-    def lenAnsi(s: String) = u32(s.length + 1) ++ asciiz(s)
-    val pkg = u16(2) ++ asciiz(name) ++ asciiz("") ++ Array[Byte](0, 0) ++
-      u16(3) ++ u32(name.length + 1) ++ asciiz(s"C:\\data\\$name") ++
-      u32(data.length) ++ data ++ u32(0)
-    u32(1) ++ u32(2) ++ lenAnsi("Package") ++ lenAnsi("") ++ lenAnsi("") ++
-      u32(pkg.length) ++ pkg
+    def lenAnsi(s: String) = le32Bytes(s.length + 1) ++ asciiz(s)
+    val pkg = le16Bytes(2) ++ asciiz(name) ++ asciiz("") ++ Array[Byte](0, 0) ++
+      le16Bytes(3) ++ le32Bytes(name.length + 1) ++ asciiz(s"C:\\data\\$name") ++
+      le32Bytes(data.length) ++ data ++ le32Bytes(0)
+    le32Bytes(1) ++ le32Bytes(2) ++ lenAnsi("Package") ++ lenAnsi("") ++ lenAnsi("") ++
+      le32Bytes(pkg.length) ++ pkg
   }
 
   /** Flat single-XML OpenDocument text (fodt). */

@@ -2,6 +2,7 @@ package graft.corpus
 
 import java.nio.charset.StandardCharsets
 import scala.util.Random
+import graft.core.Endian.{le16Bytes, le32Bytes}
 
 /** Synthetic fixed-layout / graphics documents for the corpus "fixed"
   * kind (v18): XPS packages, EMF and WMF metafiles carrying text
@@ -52,30 +53,23 @@ $glyphs
          s"""</coreProperties>""").getBytes(StandardCharsets.UTF_8)))
   }
 
-  private def le16(o: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    o.write(v & 0xff); o.write((v >>> 8) & 0xff)
-  }
-  private def le32(o: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    le16(o, v & 0xffff); le16(o, v >>> 16)
-  }
-
   /** Minimal EMF: 88-byte EMR_HEADER (" EMF" signature at 40), one
     * EMR_EXTTEXTOUTW per sentence at distinct y rows, EMR_EOF.
     */
   def emf(r: Random): Array[Byte] = {
     val o = new java.io.ByteArrayOutputStream()
     // EMR_HEADER
-    le32(o, 1); le32(o, 88)
-    (0 until 8).foreach(_ => le32(o, 0)) // bounds + frame rects
-    le32(o, 0x464D4520)                  // " EMF" signature
-    le32(o, 0x00010000)                  // version
-    le32(o, 0)                           // nBytes (unused by readers here)
-    le32(o, 0)                           // nRecords
-    le16(o, 0); le16(o, 0)               // nHandles, reserved
-    le32(o, 0); le32(o, 0)               // description length/offset
-    le32(o, 0)                           // nPalEntries
-    le32(o, 816); le32(o, 1056)          // device
-    le32(o, 210); le32(o, 297)           // millimeters
+    o.write(le32Bytes(1)); o.write(le32Bytes(88))
+    (0 until 8).foreach(_ => o.write(le32Bytes(0)))   // bounds + frame rects
+    o.write(le32Bytes(0x464D4520))                    // " EMF" signature
+    o.write(le32Bytes(0x00010000))                    // version
+    o.write(le32Bytes(0))                             // nBytes (unused by readers here)
+    o.write(le32Bytes(0))                             // nRecords
+    o.write(le16Bytes(0)); o.write(le16Bytes(0))      // nHandles, reserved
+    o.write(le32Bytes(0)); o.write(le32Bytes(0))      // description length/offset
+    o.write(le32Bytes(0))                             // nPalEntries
+    o.write(le32Bytes(816)); o.write(le32Bytes(1056)) // device
+    o.write(le32Bytes(210)); o.write(le32Bytes(297))  // millimeters
     val lines = (1 to 2 + r.nextInt(3)).map(_ => Corpus.sentence(r, 4 + r.nextInt(8)))
     lines.zipWithIndex.foreach { case (s, i) =>
       val chars = s.toCharArray
@@ -83,21 +77,21 @@ $glyphs
       val pad = (4 - (strBytes & 3)) & 3
       val size = 76 + strBytes + pad
       val y = 100 + i * 20
-      le32(o, 84); le32(o, size)                 // EMR_EXTTEXTOUTW
-      le32(o, 48); le32(o, y)                    // bounds l,t
-      le32(o, 48 + 7 * chars.length); le32(o, y + 14) // bounds r,b
-      le32(o, 1)                                 // GM_COMPATIBLE
-      le32(o, 0); le32(o, 0)                     // ex/ey scale
-      le32(o, 48); le32(o, y)                    // reference point
-      le32(o, chars.length)                      // nChars
-      le32(o, 76)                                // offString
-      le32(o, 0)                                 // options
-      (0 until 4).foreach(_ => le32(o, 0))       // rect
-      le32(o, 0)                                 // offDx (no dx array)
-      chars.foreach(c => le16(o, c.toInt))
+      o.write(le32Bytes(84)); o.write(le32Bytes(size))                      // EMR_EXTTEXTOUTW
+      o.write(le32Bytes(48)); o.write(le32Bytes(y))                         // bounds l,t
+      o.write(le32Bytes(48 + 7 * chars.length)); o.write(le32Bytes(y + 14)) // bounds r,b
+      o.write(le32Bytes(1))                                                 // GM_COMPATIBLE
+      o.write(le32Bytes(0)); o.write(le32Bytes(0))                          // ex/ey scale
+      o.write(le32Bytes(48)); o.write(le32Bytes(y))                         // reference point
+      o.write(le32Bytes(chars.length))                                      // nChars
+      o.write(le32Bytes(76))                                                // offString
+      o.write(le32Bytes(0))                                                 // options
+      (0 until 4).foreach(_ => o.write(le32Bytes(0)))                       // rect
+      o.write(le32Bytes(0))                                                 // offDx (no dx array)
+      chars.foreach(c => o.write(le16Bytes(c.toInt)))
       (0 until pad).foreach(_ => o.write(0))
     }
-    le32(o, 14); le32(o, 20); le32(o, 0); le32(o, 0); le32(o, 20) // EMR_EOF
+    Seq(14, 20, 0, 0, 20).foreach(v => o.write(le32Bytes(v))) // EMR_EOF
     o.toByteArray
   }
 
@@ -106,19 +100,20 @@ $glyphs
     */
   def wmf(r: Random): Array[Byte] = {
     val o = new java.io.ByteArrayOutputStream()
-    le16(o, 1); le16(o, 9); le16(o, 0x0300)  // disk metafile, 9 words, v3
-    le32(o, 0)                               // file size in words (lax)
-    le16(o, 0)                               // numObjects
-    le32(o, 0)                               // maxRecord
-    le16(o, 0)                               // noParameters
+    // disk metafile, 9 words, v3
+    o.write(le16Bytes(1)); o.write(le16Bytes(9)); o.write(le16Bytes(0x0300))
+    o.write(le32Bytes(0)) // file size in words (lax)
+    o.write(le16Bytes(0)) // numObjects
+    o.write(le32Bytes(0)) // maxRecord
+    o.write(le16Bytes(0)) // noParameters
     // createFontIndirect: LOGFONT with ANSI charset + 32-byte facename
     val logfont = 18 + 32
-    le32(o, (6 + logfont) / 2); le16(o, 0x02fb)
-    le16(o, 12); le16(o, 0)                  // height, width
-    le16(o, 0); le16(o, 0)                   // escapement, orientation
-    le16(o, 400)                             // weight
-    o.write(0); o.write(0); o.write(0)       // italic, underline, strikeout
-    o.write(0)                               // charSet = ANSI
+    o.write(le32Bytes((6 + logfont) / 2)); o.write(le16Bytes(0x02fb))
+    o.write(le16Bytes(12)); o.write(le16Bytes(0)) // height, width
+    o.write(le16Bytes(0)); o.write(le16Bytes(0))  // escapement, orientation
+    o.write(le16Bytes(400))                       // weight
+    o.write(0); o.write(0); o.write(0)            // italic, underline, strikeout
+    o.write(0)                                    // charSet = ANSI
     o.write(0); o.write(0); o.write(0); o.write(0) // precisions, quality, pitch
     "Corpus".getBytes(StandardCharsets.US_ASCII).foreach(b => o.write(b.toInt))
     (0 until 32 - 6).foreach(_ => o.write(0))
@@ -126,13 +121,13 @@ $glyphs
     lines.zipWithIndex.foreach { case (s, i) =>
       val bytes = s.getBytes(StandardCharsets.ISO_8859_1)
       val pad = bytes.length & 1
-      le32(o, (6 + 8 + bytes.length + pad) / 2); le16(o, 0x0a32)
-      le16(o, 100 + i * 20); le16(o, 48)     // y, x
-      le16(o, bytes.length); le16(o, 0)      // count, options
+      o.write(le32Bytes((6 + 8 + bytes.length + pad) / 2)); o.write(le16Bytes(0x0a32))
+      o.write(le16Bytes(100 + i * 20)); o.write(le16Bytes(48)) // y, x
+      o.write(le16Bytes(bytes.length)); o.write(le16Bytes(0))  // count, options
       bytes.foreach(b => o.write(b.toInt))
       if (pad == 1) o.write(0)
     }
-    le32(o, 3); le16(o, 0x0000)              // META_EOF
+    o.write(le32Bytes(3)); o.write(le16Bytes(0x0000)) // META_EOF
     o.toByteArray
   }
 }

@@ -2,6 +2,7 @@ package graft.corpus
 
 import java.nio.charset.StandardCharsets
 import scala.util.Random
+import graft.core.Endian.{le16Bytes, le32Bytes}
 
 /** Synthetic legacy-format fixtures for the corpus `legacy` kind:
   * WordPerfect 6 (.wpd), QuattroPro 9 (.qpw), dBASE (.dbf) and NASA DIF
@@ -179,14 +180,14 @@ $tus
     */
   def tnef(r: Random): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = { var i = 0; while (i < 4) { out.write(((v >> (8 * i)) & 0xff).toInt); i += 1 } }
     def attr(level: Int, id: Int, typ: Int, data: Array[Byte]): Unit = {
-      out.write(level); le16(id); le16(typ); le32(data.length)
+      out.write(level); out.write(le16Bytes(id)); out.write(le16Bytes(typ))
+      out.write(le32Bytes(data.length))
       out.write(data)
-      le16(data.map(_ & 0xff).sum & 0xffff) // checksum (reader tolerant)
+      out.write(le16Bytes(data.map(_ & 0xff).sum & 0xffff)) // checksum (reader tolerant)
     }
-    le32(graft.mail.TnefExtractor.Signature); le16(r.nextInt(0xffff))
+    out.write(le32Bytes(graft.mail.TnefExtractor.Signature))
+    out.write(le16Bytes(r.nextInt(0xffff)))
     val subject = Corpus.sentence(r, 4 + r.nextInt(4))
     attr(1, 0x8004, 0x0001, (subject + "\u0000").getBytes(StandardCharsets.ISO_8859_1))
     attr(2, 0x9002, 0x0006, new Array[Byte](14)) // attach rend data

@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 import java.util.zip.CRC32
 import scala.util.Random
+import graft.core.Endian.{be16Bytes, be32Bytes, le16Bytes, le32Bytes}
 
 /** Deterministic real-container media fixtures (valid PNG/JPEG/GIF/BMP/
   * WAV/MP3/MP4 headers with synthetic payloads) so media-metadata
@@ -12,17 +13,6 @@ import scala.util.Random
   * graft.media.MediaParser.
   */
 object MediaCorpus {
-
-  private def be32(v: Long): Array[Byte] =
-    Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-  private def be16(v: Int): Array[Byte] =
-    Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-  private def le32(v: Long): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-  private def le16(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
 
   /** Valid PNG: signature, IHDR (8-bit RGB), one IDAT of deflated noise
     * scanlines, IEND — all CRC-correct.
@@ -34,9 +24,9 @@ object MediaCorpus {
       val crc = new CRC32()
       val tb = typ.getBytes(StandardCharsets.US_ASCII)
       crc.update(tb); crc.update(data)
-      be32(data.length) ++ tb ++ data ++ be32(crc.getValue)
+      be32Bytes(data.length) ++ tb ++ data ++ be32Bytes(crc.getValue)
     }
-    val ihdr = be32(w) ++ be32(h) ++ Array[Byte](8, 2, 0, 0, 0)
+    val ihdr = be32Bytes(w) ++ be32Bytes(h) ++ Array[Byte](8, 2, 0, 0, 0)
     val raw = new Array[Byte]((w * 3 + 1) * h)
     r.nextBytes(raw)
     for (y <- 0 until h) raw(y * (w * 3 + 1)) = 0 // filter byte None
@@ -55,19 +45,19 @@ object MediaCorpus {
     val out = new ByteArrayOutputStream()
     def seg(marker: Int, data: Array[Byte]): Unit = {
       out.write(0xff); out.write(marker)
-      out.write(be16(data.length + 2)); out.write(data)
+      out.write(be16Bytes(data.length + 2)); out.write(data)
     }
     out.write(0xff); out.write(0xd8) // SOI
     seg(0xe0, "JFIF".getBytes(StandardCharsets.US_ASCII) ++
       Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
     // EXIF APP1: "Exif\0\0" + little-endian TIFF, IFD0 with tag 0x0112
-    val tiff = "II".getBytes(StandardCharsets.US_ASCII) ++ le16(42) ++ le32(8) ++
-      le16(1) ++ // one entry
-      le16(0x0112) ++ le16(3) ++ le32(1) ++ le16(orient) ++ le16(0) ++
-      le32(0) // next IFD
+    val tiff = "II".getBytes(StandardCharsets.US_ASCII) ++ le16Bytes(42) ++ le32Bytes(8) ++
+      le16Bytes(1) ++ // one entry
+      le16Bytes(0x0112) ++ le16Bytes(3) ++ le32Bytes(1) ++ le16Bytes(orient) ++ le16Bytes(0) ++
+      le32Bytes(0) // next IFD
     seg(0xe1, "Exif".getBytes(StandardCharsets.US_ASCII) ++
       Array[Byte](0, 0) ++ tiff)
-    seg(0xc0, Array[Byte](8) ++ be16(h) ++ be16(w) ++
+    seg(0xc0, Array[Byte](8) ++ be16Bytes(h) ++ be16Bytes(w) ++
       Array[Byte](3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1))
     val scan = new Array[Byte](64 + r.nextInt(256))
     r.nextBytes(scan)
@@ -81,7 +71,7 @@ object MediaCorpus {
   def gif(r: Random): Array[Byte] = {
     val w = 32 + r.nextInt(600)
     val h = 32 + r.nextInt(400)
-    "GIF89a".getBytes(StandardCharsets.US_ASCII) ++ le16(w) ++ le16(h) ++
+    "GIF89a".getBytes(StandardCharsets.US_ASCII) ++ le16Bytes(w) ++ le16Bytes(h) ++
       Array[Byte](0, 0, 0, 0x3b)
   }
 
@@ -89,10 +79,10 @@ object MediaCorpus {
     val w = 16 + r.nextInt(200)
     val h = 16 + r.nextInt(200)
     val pix = new Array[Byte](16)
-    "BM".getBytes(StandardCharsets.US_ASCII) ++ le32(54 + pix.length) ++
-      le32(0) ++ le32(54) ++ le32(40) ++ le32(w) ++ le32(h) ++
-      le16(1) ++ le16(24) ++ le32(0) ++ le32(pix.length) ++
-      le32(2835) ++ le32(2835) ++ le32(0) ++ le32(0) ++ pix
+    "BM".getBytes(StandardCharsets.US_ASCII) ++ le32Bytes(54 + pix.length) ++
+      le32Bytes(0) ++ le32Bytes(54) ++ le32Bytes(40) ++ le32Bytes(w) ++ le32Bytes(h) ++
+      le16Bytes(1) ++ le16Bytes(24) ++ le32Bytes(0) ++ le32Bytes(pix.length) ++
+      le32Bytes(2835) ++ le32Bytes(2835) ++ le32Bytes(0) ++ le32Bytes(0) ++ pix
   }
 
   /** WAV: 16-bit mono PCM at 8 kHz; duration derives from sample count. */
@@ -102,12 +92,12 @@ object MediaCorpus {
     val data = new Array[Byte](nSamples * 2)
     r.nextBytes(data)
     val byteRate = rate * 2
-    "RIFF".getBytes(StandardCharsets.US_ASCII) ++ le32(36 + data.length) ++
+    "RIFF".getBytes(StandardCharsets.US_ASCII) ++ le32Bytes(36 + data.length) ++
       "WAVE".getBytes(StandardCharsets.US_ASCII) ++
-      "fmt ".getBytes(StandardCharsets.US_ASCII) ++ le32(16) ++
-      le16(1) ++ le16(1) ++ le32(rate) ++ le32(byteRate) ++
-      le16(2) ++ le16(16) ++
-      "data".getBytes(StandardCharsets.US_ASCII) ++ le32(data.length) ++ data
+      "fmt ".getBytes(StandardCharsets.US_ASCII) ++ le32Bytes(16) ++
+      le16Bytes(1) ++ le16Bytes(1) ++ le32Bytes(rate) ++ le32Bytes(byteRate) ++
+      le16Bytes(2) ++ le16Bytes(16) ++
+      "data".getBytes(StandardCharsets.US_ASCII) ++ le32Bytes(data.length) ++ data
   }
 
   /** MP3: ID3v2.3 header + CBR 128 kbps 44.1 kHz frame headers. */
@@ -125,7 +115,7 @@ object MediaCorpus {
     val artist = Artists(r.nextInt(Artists.length))
     val year = (1998 + r.nextInt(25)).toString
     def id3Frame(id: String, body: Array[Byte]): Array[Byte] =
-      id.getBytes(StandardCharsets.US_ASCII) ++ be32(body.length) ++
+      id.getBytes(StandardCharsets.US_ASCII) ++ be32Bytes(body.length) ++
         Array[Byte](0, 0) ++ body
     def text(id: String, v: String): Array[Byte] =
       id3Frame(id, Array[Byte](0) ++ v.getBytes(StandardCharsets.ISO_8859_1))
@@ -167,20 +157,20 @@ object MediaCorpus {
     val title = Titles(r.nextInt(Titles.length))
     val artist = Artists(r.nextInt(Artists.length))
     def box(typ: String, payload: Array[Byte]): Array[Byte] =
-      be32(payload.length + 8) ++
+      be32Bytes(payload.length + 8) ++
         typ.getBytes(StandardCharsets.ISO_8859_1) ++ payload
     val ftyp = box("ftyp", "isom".getBytes(StandardCharsets.US_ASCII) ++
-      be32(512) ++ "isomiso2".getBytes(StandardCharsets.US_ASCII))
-    val mvhd = box("mvhd", Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++
-      be32(timescale) ++ be32(duration) ++ new Array[Byte](80))
-    val tkhd = box("tkhd", Array[Byte](0, 0, 0, 7) ++ be32(0) ++ be32(0) ++
-      be32(1) ++ be32(0) ++ be32(duration) ++ new Array[Byte](8) ++
-      be16(0) ++ be16(0) ++ be16(0) ++ be16(0) ++
+      be32Bytes(512) ++ "isomiso2".getBytes(StandardCharsets.US_ASCII))
+    val mvhd = box("mvhd", Array[Byte](0, 0, 0, 0) ++ be32Bytes(0) ++ be32Bytes(0) ++
+      be32Bytes(timescale) ++ be32Bytes(duration) ++ new Array[Byte](80))
+    val tkhd = box("tkhd", Array[Byte](0, 0, 0, 7) ++ be32Bytes(0) ++ be32Bytes(0) ++
+      be32Bytes(1) ++ be32Bytes(0) ++ be32Bytes(duration) ++ new Array[Byte](8) ++
+      be16Bytes(0) ++ be16Bytes(0) ++ be16Bytes(0) ++ be16Bytes(0) ++
       new Array[Byte](36) ++
-      be16(w) ++ be16(0) ++ be16(h) ++ be16(0))
+      be16Bytes(w) ++ be16Bytes(0) ++ be16Bytes(h) ++ be16Bytes(0))
     val trak = box("trak", tkhd)
     def item(name: String, v: String): Array[Byte] =
-      box(name, box("data", be32(1) ++ be32(0) ++
+      box(name, box("data", be32Bytes(1) ++ be32Bytes(0) ++
         v.getBytes(StandardCharsets.UTF_8)))
     val ilst = box("ilst", item("©nam", title) ++ item("©ART", artist))
     val hdlr = box("hdlr", new Array[Byte](8) ++

@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 import scala.util.Random
 import graft.ole2.CfbWriter
+import graft.core.Endian.{le32Bytes, putLe16, putLe32}
 
 /** Synthetic binary-Office rows for the corpus `msbin` kind (v19):
   * XLSB binary workbooks, Publisher Quill containers, and uncompressed
@@ -39,20 +40,17 @@ object MsBinCorpus {
     out
   }
 
-  private def u32(v: Long): Array[Byte] =
-    Array(v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-
   def xlsbFile(r: Random): Array[Byte] = {
     val shared = (0 until 3 + r.nextInt(3))
       .map(_ => Corpus.Words(r.nextInt(Corpus.Words.length)))
 
     val wb = new ByteArrayOutputStream()
     rec(wb, 131, Array.emptyByteArray) // BrtBeginBook
-    rec(wb, 156, u32(0) ++ u32(1) ++ wide("rId1") ++ wide("Sheet1"))
+    rec(wb, 156, le32Bytes(0) ++ le32Bytes(1) ++ wide("rId1") ++ wide("Sheet1"))
     rec(wb, 132, Array.emptyByteArray) // BrtEndBook
 
     val sst = new ByteArrayOutputStream()
-    rec(sst, 159, u32(shared.length) ++ u32(shared.length))
+    rec(sst, 159, le32Bytes(shared.length) ++ le32Bytes(shared.length))
     shared.foreach(s => rec(sst, 19, Array(0.toByte) ++ wide(s)))
     rec(sst, 160, Array.emptyByteArray)
 
@@ -61,11 +59,11 @@ object MsBinCorpus {
     rec(sh, 145, Array.emptyByteArray) // BrtBeginSheetData
     val nRows = 2 + r.nextInt(3)
     (0 until nRows).foreach { ri =>
-      rec(sh, 0, u32(ri)) // BrtRowHdr
+      rec(sh, 0, le32Bytes(ri)) // BrtRowHdr
       // A: shared string, B: RK int, C: inline string
-      rec(sh, 7, u32(0) ++ u32(0) ++ u32(r.nextInt(shared.length)))
-      rec(sh, 2, u32(1) ++ u32(0) ++ u32((r.nextInt(100000).toLong << 2) | 2L))
-      rec(sh, 6, u32(2) ++ u32(0) ++
+      rec(sh, 7, le32Bytes(0) ++ le32Bytes(0) ++ le32Bytes(r.nextInt(shared.length)))
+      rec(sh, 2, le32Bytes(1) ++ le32Bytes(0) ++ le32Bytes((r.nextInt(100000).toLong << 2) | 2L))
+      rec(sh, 6, le32Bytes(2) ++ le32Bytes(0) ++
         wide(Corpus.Words(r.nextInt(Corpus.Words.length))))
     }
     rec(sh, 146, Array.emptyByteArray) // BrtEndSheetData
@@ -96,17 +94,7 @@ object MsBinCorpus {
       "xl/worksheets/sheet1.bin" -> sh.toByteArray))
   }
 
-
   // ---- Access (minimal Jet4) -------------------------------------------
-
-  /** Little-endian u16 into a buffer. */
-  private def putU16(b: Array[Byte], o: Int, v: Int): Unit = {
-    b(o) = v.toByte; b(o + 1) = (v >> 8).toByte
-  }
-  private def putU32(b: Array[Byte], o: Int, v: Long): Unit = {
-    b(o) = v.toByte; b(o + 1) = (v >> 8).toByte
-    b(o + 2) = (v >> 16).toByte; b(o + 3) = (v >> 24).toByte
-  }
 
   private val JetPage = 4096
 
@@ -121,7 +109,7 @@ object MsBinCorpus {
     val varLen = vars.map(_.length).sum
     val total = 2 + fixedLen + varLen + 2 * (vars.length + 1) + 2 + bmsz
     val row = new Array[Byte](total)
-    putU16(row, 0, nCols)
+    putLe16(row, 0, nCols)
     fixed.foreach { case (offF, d) =>
       System.arraycopy(d, 0, row, 2 + offF, d.length)
     }
@@ -136,10 +124,10 @@ object MsBinCorpus {
     // trailing tables: offs(i) at total-bmsz-4-2i, count at total-bmsz-2
     var i = 0
     while (i <= vars.length) {
-      putU16(row, total - bmsz - 4 - 2 * i, offs(i))
+      putLe16(row, total - bmsz - 4 - 2 * i, offs(i))
       i += 1
     }
-    putU16(row, total - bmsz - 2, vars.length)
+    putLe16(row, total - bmsz - 2, vars.length)
     notNull.foreach { cn => row(total - bmsz + cn / 8) =
       (row(total - bmsz + cn / 8) | (1 << (cn % 8))).toByte }
     row
@@ -152,22 +140,22 @@ object MsBinCorpus {
     val pg = new Array[Byte](JetPage)
     pg(0) = 2; pg(1) = 1
     val nvar = cols.count(!_._6)
-    putU16(pg, 0x2b, nvar)
-    putU16(pg, 0x2d, cols.length)
-    putU32(pg, 0x33, 0) // no real indexes
+    putLe16(pg, 0x2b, nvar)
+    putLe16(pg, 0x2d, cols.length)
+    putLe32(pg, 0x33, 0) // no real indexes
     var off = 0x3f
     cols.foreach { case (_, tpe, colnum, offV, offF, fixed) =>
       pg(off) = tpe.toByte
-      putU16(pg, off + 5, colnum)
-      putU16(pg, off + 7, offV)
+      putLe16(pg, off + 5, colnum)
+      putLe16(pg, off + 7, offV)
       pg(off + 15) = (if (fixed) 0x13 else 0x12).toByte
-      putU16(pg, off + 21, offF)
-      putU16(pg, off + 23, if (fixed) fixedWidth(tpe) else 0)
+      putLe16(pg, off + 21, offF)
+      putLe16(pg, off + 23, if (fixed) fixedWidth(tpe) else 0)
       off += 25
     }
     cols.foreach { case (name, _, _, _, _, _) =>
       val nb = name.getBytes(StandardCharsets.UTF_16LE)
-      putU16(pg, off, nb.length) // byte length of the UTF-16 name
+      putLe16(pg, off, nb.length) // byte length of the UTF-16 name
       System.arraycopy(nb, 0, pg, off + 2, nb.length)
       off += 2 + nb.length
     }
@@ -185,16 +173,16 @@ object MsBinCorpus {
   private def jetDataPage(tdefPg: Int, rows: Seq[Array[Byte]]): Array[Byte] = {
     val pg = new Array[Byte](JetPage)
     pg(0) = 1; pg(1) = 1
-    putU32(pg, 4, tdefPg)
-    putU16(pg, 0x0c, rows.length)
+    putLe32(pg, 4, tdefPg)
+    putLe16(pg, 0x0c, rows.length)
     var end = JetPage
     rows.zipWithIndex.foreach { case (r, i) =>
       val start = end - r.length
       System.arraycopy(r, 0, pg, start, r.length)
-      putU16(pg, 0x0e + 2 * i, start)
+      putLe16(pg, 0x0e + 2 * i, start)
       end = start
     }
-    putU16(pg, 2, end - (0x0e + 2 * rows.length)) // free space
+    putLe16(pg, 2, end - (0x0e + 2 * rows.length)) // free space
     pg
   }
 
@@ -213,9 +201,9 @@ object MsBinCorpus {
       ("Name", 10, 3, 0, 0, false))
     val catFixedLen = 10
     def catRow(id: Int, tpe: Int, flags: Int, name: String): Array[Byte] = {
-      val idB = new Array[Byte](4); putU32(idB, 0, id)
-      val tB = new Array[Byte](2); putU16(tB, 0, tpe)
-      val fB = new Array[Byte](4); putU32(fB, 0, flags)
+      val idB = new Array[Byte](4); putLe32(idB, 0, id)
+      val tB = new Array[Byte](2); putLe16(tB, 0, tpe)
+      val fB = new Array[Byte](4); putLe32(fB, 0, flags)
       jetRow(4, catFixedLen,
         Seq((0, idB), (4, tB), (6, fB)),
         Seq(name.getBytes(StandardCharsets.UTF_16LE)),
@@ -230,8 +218,8 @@ object MsBinCorpus {
       ("Body", 10, 3, 1, 0, false))
     val nRows = 2 + r.nextInt(3)
     val rows = (1 to nRows).map { i =>
-      val idB = new Array[Byte](4); putU32(idB, 0, i)
-      val scB = new Array[Byte](4); putU32(scB, 0, r.nextInt(100000))
+      val idB = new Array[Byte](4); putLe32(idB, 0, i)
+      val scB = new Array[Byte](4); putLe32(scB, 0, r.nextInt(100000))
       jetRow(4, 8,
         Seq((0, idB), (4, scB)),
         Seq(Corpus.Words(r.nextInt(Corpus.Words.length))
@@ -271,8 +259,8 @@ object MsBinCorpus {
     contents(0x20) = 0x18; contents(0x21) = 0x00
     "TEXT".getBytes(StandardCharsets.US_ASCII).copyToArray(contents, 0x22)
     "TEXT".getBytes(StandardCharsets.US_ASCII).copyToArray(contents, 0x2c)
-    u32(from).copyToArray(contents, 0x30)
-    u32(text.length).copyToArray(contents, 0x34)
+    le32Bytes(from).copyToArray(contents, 0x30)
+    le32Bytes(text.length).copyToArray(contents, 0x34)
     text.copyToArray(contents, from)
     CfbWriter.write(Seq(
       "Quill" -> Array[Byte](0),
@@ -286,10 +274,10 @@ object MsBinCorpus {
     val chunks = new ByteArrayOutputStream()
     texts.zipWithIndex.foreach { case (t, i) =>
       val payload = (t + "\n").getBytes(StandardCharsets.UTF_16LE)
-      chunks.write(u32(0x0e)) // Text chunk
-      chunks.write(u32(i + 1))
-      chunks.write(u32(0))
-      chunks.write(u32(8 + payload.length))
+      chunks.write(le32Bytes(0x0e)) // Text chunk
+      chunks.write(le32Bytes(i + 1))
+      chunks.write(le32Bytes(0))
+      chunks.write(le32Bytes(8 + payload.length))
       chunks.write(Array(2.toByte, 0.toByte, 0x50.toByte)) // level, flag
       chunks.write(new Array[Byte](8))
       chunks.write(payload)
@@ -305,17 +293,17 @@ object MsBinCorpus {
       .copyToArray(head, 0)
     head(0x1a) = 11 // version
     // trailer pointer @0x24: type, address, offset, length, format
-    u32(20).copyToArray(head, 0x24)
-    u32(0).copyToArray(head, 0x28)
-    u32(header).copyToArray(head, 0x2c)
-    u32(trailerLen).copyToArray(head, 0x30)
+    le32Bytes(20).copyToArray(head, 0x24)
+    le32Bytes(0).copyToArray(head, 0x28)
+    le32Bytes(header).copyToArray(head, 0x2c)
+    le32Bytes(trailerLen).copyToArray(head, 0x30)
     head(0x34) = 0x50; head(0x35) = 0 // uncompressed pointer stream
     vd.write(head)
     // trailer stream: u32 ptrOff=8, pad, count=1, unknown, one pointer
-    vd.write(u32(8)); vd.write(u32(0))
-    vd.write(u32(1)); vd.write(u32(0))
-    vd.write(u32(0x15)); vd.write(u32(0)) // pointer: type, address
-    vd.write(u32(chunkOff)); vd.write(u32(chunkBytes.length))
+    vd.write(le32Bytes(8)); vd.write(le32Bytes(0))
+    vd.write(le32Bytes(1)); vd.write(le32Bytes(0))
+    vd.write(le32Bytes(0x15)); vd.write(le32Bytes(0)) // pointer: type, address
+    vd.write(le32Bytes(chunkOff)); vd.write(le32Bytes(chunkBytes.length))
     vd.write(Array(0xd0.toByte, 0.toByte)) // chunk stream, uncompressed
     vd.write(chunkBytes)
     CfbWriter.write(Seq("VisioDocument" -> vd.toByteArray))

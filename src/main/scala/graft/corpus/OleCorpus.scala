@@ -193,13 +193,13 @@ object OleCorpus {
     val to = "Recipient " + Corpus.Words(r.nextInt(Corpus.Words.length))
     val body = (1 to 2 + r.nextInt(2)).map(_ => Corpus.paragraph(r, 2))
       .mkString("\r\n")
-    def u16(s: String) = s.getBytes(StandardCharsets.UTF_16LE)
+    def utf16(s: String) = s.getBytes(StandardCharsets.UTF_16LE)
     CfbWriter.write(Seq(
       "__properties_version1.0" -> new Array[Byte](32),
-      "__substg1.0_0037001F" -> u16(subject),
-      "__substg1.0_0C1A001F" -> u16(from),
-      "__substg1.0_0E04001F" -> u16(to),
-      "__substg1.0_1000001F" -> u16(body)
+      "__substg1.0_0037001F" -> utf16(subject),
+      "__substg1.0_0C1A001F" -> utf16(from),
+      "__substg1.0_0E04001F" -> utf16(to),
+      "__substg1.0_1000001F" -> utf16(body)
     ))
   }
 }

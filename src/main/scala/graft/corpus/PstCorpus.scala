@@ -2,6 +2,7 @@ package graft.corpus
 
 import java.nio.charset.StandardCharsets
 import scala.util.Random
+import graft.core.Endian.{le16Bytes, le32Bytes, le64Bytes}
 
 /** Synthetic Unicode PST writer for the corpus `pst` kind.
   *
@@ -38,11 +39,6 @@ object PstCorpus {
     c
   }
 
-  private def le16(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte)
-  private def le32(v: Long) = Array[Byte](v.toByte, (v >> 8).toByte,
-    (v >> 16).toByte, (v >> 24).toByte)
-  private def le64(v: Long) = le32(v & 0xffffffffL) ++ le32(v >>> 32)
-
   /** One property for the PC builder. */
   sealed trait Prop { def pid: Int }
   final case class PStr(pid: Int, s: String) extends Prop // PtypString 0x1F
@@ -65,29 +61,29 @@ object PstCorpus {
           nextAllocIdx += 1
           (0x1f, hid)
         case PTime(_, ft) =>
-          values += le64(ft)
+          values += le64Bytes(ft)
           val hid = nextAllocIdx.toLong << 5
           nextAllocIdx += 1
           (0x40, hid)
       }
-      records.write(le16(p.pid)); records.write(le16(ptype))
-      records.write(le32(dw))
+      records.write(le16Bytes(p.pid)); records.write(le16Bytes(ptype))
+      records.write(le32Bytes(dw))
     }
     val recArr = records.toByteArray
-    val bthHeader = Array[Byte](0xb5.toByte, 2, 6, 0) ++ le32(2L << 5)
+    val bthHeader = Array[Byte](0xb5.toByte, 2, 6, 0) ++ le32Bytes(2L << 5)
     val allocs = Vector(bthHeader, recArr) ++ values
     // layout: HNHDR(12) | allocs | HNPAGEMAP
     val offsets = allocs.scanLeft(12)((o, a) => o + a.length)
     val ibHnpm = offsets.last
     val out = new java.io.ByteArrayOutputStream
-    out.write(le16(ibHnpm))
+    out.write(le16Bytes(ibHnpm))
     out.write(0xec); out.write(0xbc) // bSig, bClientSig = PC
-    out.write(le32(1L << 5)) // hidUserRoot = alloc 1 (the BTH header)
-    out.write(le32(0)) // rgbFillLevel
+    out.write(le32Bytes(1L << 5)) // hidUserRoot = alloc 1 (the BTH header)
+    out.write(le32Bytes(0)) // rgbFillLevel
     allocs.foreach(out.write)
-    out.write(le16(allocs.length)) // cAlloc
-    out.write(le16(0)) // cFree
-    offsets.foreach(o => out.write(le16(o)))
+    out.write(le16Bytes(allocs.length)) // cAlloc
+    out.write(le16Bytes(0)) // cFree
+    offsets.foreach(o => out.write(le16Bytes(o)))
     out.toByteArray
   }
 
@@ -158,16 +154,16 @@ object PstCorpus {
       pg.write(cbEnt)
       pg.write(0) // cLevel = leaf
       pg.write(ptype); pg.write(ptype) // PAGETRAILER (ANSI, 12 bytes)
-      pg.write(le16(0)) // wSig
-      pg.write(le32(if (ptype == 0x80) 0x3c0L else 0x3c2L)) // page bid
-      pg.write(le32(0)) // dwCRC
+      pg.write(le16Bytes(0)) // wSig
+      pg.write(le32Bytes(if (ptype == 0x80) 0x3c0L else 0x3c2L)) // page bid
+      pg.write(le32Bytes(0)) // dwCRC
       pg.toByteArray
     }
 
-    val bbtEntries = blks.map(b => le32(b.bid) ++ le32(b.ib) ++
-      le16(b.cb) ++ le16(2))
+    val bbtEntries = blks.map(b => le32Bytes(b.bid) ++ le32Bytes(b.ib) ++
+      le16Bytes(b.cb) ++ le16Bytes(2))
     val nbtEntries = nodes.map { case (nid, _) =>
-      le32(nid) ++ le32(nodeBid(nid)) ++ le32(0L) ++ le32(parentOf(nid))
+      le32Bytes(nid) ++ le32Bytes(nodeBid(nid)) ++ le32Bytes(0L) ++ le32Bytes(parentOf(nid))
     }
 
     val fileLen = nextIb
@@ -177,12 +173,12 @@ object PstCorpus {
 
     put(0, "!BDN".getBytes(StandardCharsets.US_ASCII))
     put(8, "SM".getBytes(StandardCharsets.US_ASCII))
-    put(10, le16(15)) // wVer: ANSI
-    put(12, le16(19)) // wVerClient
+    put(10, le16Bytes(15)) // wVer: ANSI
+    put(12, le16Bytes(19)) // wVerClient
     val root = 164
-    put(root + 4, le32(fileLen)) // ibFileEof
-    put(root + 20, le32(0x3c2L)); put(root + 24, le32(nbtIb)) // NBT BREF
-    put(root + 28, le32(0x3c0L)); put(root + 32, le32(bbtIb)) // BBT BREF
+    put(root + 4, le32Bytes(fileLen)) // ibFileEof
+    put(root + 20, le32Bytes(0x3c2L)); put(root + 24, le32Bytes(nbtIb)) // NBT BREF
+    put(root + 28, le32Bytes(0x3c0L)); put(root + 32, le32Bytes(bbtIb)) // BBT BREF
     out(0x1cc) = 0x80.toByte // bSentinel
     out(0x1cd) = 1 // bCryptMethod = permute
     put(bbtIb, btPage(bbtEntries, 12, 0x80))
@@ -191,8 +187,8 @@ object PstCorpus {
       put(b.ib, b.data)
       val total = ((b.cb + 12 + 63) / 64) * 64
       val t = b.ib + total - 12
-      put(t, le16(b.cb) ++ le16(0) ++ le32(b.bid) ++
-        le32(crc(b.data).toLong & 0xffffffffL))
+      put(t, le16Bytes(b.cb) ++ le16Bytes(0) ++ le32Bytes(b.bid) ++
+        le32Bytes(crc(b.data).toLong & 0xffffffffL))
     }
     out
   }
@@ -250,19 +246,19 @@ object PstCorpus {
       pg.write(488 / cbEnt) // cEntMax
       pg.write(cbEnt)
       pg.write(0) // cLevel = leaf
-      pg.write(le32(0)) // padding
+      pg.write(le32Bytes(0)) // padding
       pg.write(ptype); pg.write(ptype) // ptype, ptypeRepeat
-      pg.write(le16(0)) // wSig
-      pg.write(le32(0)) // dwCRC (pages carry block CRCs; readers key on ptype)
-      pg.write(le64(if (ptype == 0x80) 0x3c0L else 0x3c2L)) // page bid
+      pg.write(le16Bytes(0)) // wSig
+      pg.write(le32Bytes(0)) // dwCRC (pages carry block CRCs; readers key on ptype)
+      pg.write(le64Bytes(if (ptype == 0x80) 0x3c0L else 0x3c2L)) // page bid
       pg.toByteArray
     }
 
-    val bbtEntries = blks.map(b => le64(b.bid) ++ le64(b.ib) ++
-      le16(b.cb) ++ le16(2) ++ le32(0))
+    val bbtEntries = blks.map(b => le64Bytes(b.bid) ++ le64Bytes(b.ib) ++
+      le16Bytes(b.cb) ++ le16Bytes(2) ++ le32Bytes(0))
     val nbtEntries = nodes.map { case (nid, _) =>
-      le64(nid) ++ le64(nodeBid(nid)) ++ le64(0L) ++
-        le32(parentOf(nid)) ++ le32(0)
+      le64Bytes(nid) ++ le64Bytes(nodeBid(nid)) ++ le64Bytes(0L) ++
+        le32Bytes(parentOf(nid)) ++ le32Bytes(0)
     }
 
     val fileLen = nextIb
@@ -273,12 +269,12 @@ object PstCorpus {
     // header
     put(0, "!BDN".getBytes(StandardCharsets.US_ASCII))
     put(8, "SM".getBytes(StandardCharsets.US_ASCII))
-    put(10, le16(23)) // wVer: Unicode
-    put(12, le16(19)) // wVerClient
+    put(10, le16Bytes(23)) // wVer: Unicode
+    put(12, le16Bytes(19)) // wVerClient
     val root = 180
-    put(root + 4, le64(fileLen)) // ibFileEof
-    put(root + 36, le64(0x3c2L)); put(root + 44, le64(nbtIb)) // NBT BREF
-    put(root + 52, le64(0x3c0L)); put(root + 60, le64(bbtIb)) // BBT BREF
+    put(root + 4, le64Bytes(fileLen)) // ibFileEof
+    put(root + 36, le64Bytes(0x3c2L)); put(root + 44, le64Bytes(nbtIb)) // NBT BREF
+    put(root + 52, le64Bytes(0x3c0L)); put(root + 60, le64Bytes(bbtIb)) // BBT BREF
     out(0x200) = 0x80.toByte // bSentinel
     out(0x201) = 1 // bCryptMethod = permute
     put(bbtIb, btPage(bbtEntries, 24, 0x80))
@@ -287,8 +283,8 @@ object PstCorpus {
       put(b.ib, b.data)
       val total = ((b.cb + 16 + 63) / 64) * 64
       val t = b.ib + total - 16
-      put(t, le16(b.cb) ++ le16(0) ++ le32(crc(b.data).toLong & 0xffffffffL) ++
-        le64(b.bid))
+      put(t, le16Bytes(b.cb) ++ le16Bytes(0) ++ le32Bytes(crc(b.data).toLong & 0xffffffffL) ++
+        le64Bytes(b.bid))
     }
     out
   }

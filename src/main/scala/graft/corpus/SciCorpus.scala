@@ -2,6 +2,7 @@ package graft.corpus
 
 import java.nio.charset.StandardCharsets
 import scala.util.Random
+import graft.core.Endian.{be16Bytes, be32Bytes, le32Bytes}
 
 /** Synthetic scientific-format payloads (corpus kind "sci", v17):
   * MAT5, NetCDF classic, GRIB2 — deterministic from the row rng, small,
@@ -11,18 +12,15 @@ object SciCorpus {
 
   // --- MAT-file level 5 (little-endian) ---------------------------------
 
-  private def le32(v: Int): Array[Byte] =
-    Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-
   private def pad8(a: Array[Byte]): Array[Byte] =
     a ++ new Array[Byte]((8 - (a.length & 7)) & 7)
 
   private def element(t: Int, data: Array[Byte]): Array[Byte] =
-    le32(t) ++ le32(data.length) ++ pad8(data)
+    le32Bytes(t) ++ le32Bytes(data.length) ++ pad8(data)
 
   private def matVar(name: String, rows: Int, cols: Int): Array[Byte] = {
-    val flags = element(6, le32(6) ++ le32(0)) // mxDOUBLE_CLASS
-    val dims = element(5, le32(rows) ++ le32(cols))
+    val flags = element(6, le32Bytes(6) ++ le32Bytes(0)) // mxDOUBLE_CLASS
+    val dims = element(5, le32Bytes(rows) ++ le32Bytes(cols))
     val nm = element(1, name.getBytes(StandardCharsets.US_ASCII))
     val pr = element(9, new Array[Byte](rows * cols * 8)) // miDOUBLE zeros
     element(14, flags ++ dims ++ nm ++ pr)
@@ -46,17 +44,14 @@ object SciCorpus {
 
   // --- NetCDF classic CDF-1 (big-endian) --------------------------------
 
-  private def be32(v: Int): Array[Byte] =
-    Array[Byte]((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
-
   private def ncName(s: String): Array[Byte] = {
     val b = s.getBytes(StandardCharsets.UTF_8)
-    be32(b.length) ++ b ++ new Array[Byte]((4 - (b.length & 3)) & 3)
+    be32Bytes(b.length) ++ b ++ new Array[Byte]((4 - (b.length & 3)) & 3)
   }
 
   private def ncCharAttr(name: String, value: String): Array[Byte] = {
     val v = value.getBytes(StandardCharsets.UTF_8)
-    ncName(name) ++ be32(2) ++ be32(v.length) ++ v ++
+    ncName(name) ++ be32Bytes(2) ++ be32Bytes(v.length) ++ v ++
       new Array[Byte]((4 - (v.length & 3)) & 3)
   }
 
@@ -71,44 +66,42 @@ object SciCorpus {
     val vars = Seq("temperature", "pressure").take(1 + r.nextInt(2))
     val out = new java.io.ByteArrayOutputStream()
     out.write(Array[Byte]('C', 'D', 'F', 1))
-    out.write(be32(0)) // numrecs
-    out.write(be32(0x0a)); out.write(be32(dims.length))
-    dims.foreach { case (n, len) => out.write(ncName(n)); out.write(be32(len)) }
-    out.write(be32(0x0c)); out.write(be32(gatts.length))
+    out.write(be32Bytes(0)) // numrecs
+    out.write(be32Bytes(0x0a)); out.write(be32Bytes(dims.length))
+    dims.foreach { case (n, len) => out.write(ncName(n)); out.write(be32Bytes(len)) }
+    out.write(be32Bytes(0x0c)); out.write(be32Bytes(gatts.length))
     gatts.foreach { case (k, v) => out.write(ncCharAttr(k, v)) }
-    out.write(be32(0x0b)); out.write(be32(vars.length))
+    out.write(be32Bytes(0x0b)); out.write(be32Bytes(vars.length))
     vars.foreach { name =>
       out.write(ncName(name))
-      out.write(be32(dims.length))
-      dims.indices.foreach(i => out.write(be32(i)))
-      out.write(be32(0x0c)); out.write(be32(1))
+      out.write(be32Bytes(dims.length))
+      dims.indices.foreach(i => out.write(be32Bytes(i)))
+      out.write(be32Bytes(0x0c)); out.write(be32Bytes(1))
       out.write(ncCharAttr("units", if (name == "temperature") "K" else "Pa"))
-      out.write(be32(5)) // NC_FLOAT
-      out.write(be32(dims.map(_._2).product * 4)) // vsize
-      out.write(be32(0)) // begin (data never read)
+      out.write(be32Bytes(5)) // NC_FLOAT
+      out.write(be32Bytes(dims.map(_._2).product * 4)) // vsize
+      out.write(be32Bytes(0)) // begin (data never read)
     }
     out.toByteArray
   }
 
   // --- GRIB2: one message, sections 1/3/4 + end marker ------------------
 
-  private def be16(v: Int): Array[Byte] = Array[Byte]((v >> 8).toByte, v.toByte)
-
   def grib(r: Random): Array[Byte] = {
     val centre = Seq(7, 74, 78, 98)(r.nextInt(4))
     val ni = 36 + r.nextInt(324)
     val nj = 18 + r.nextInt(163)
-    val s1 = be32(21) ++ Array[Byte](1) ++ be16(centre) ++ be16(0) ++
-      Array[Byte](2, 1, 1) ++ be16(2000 + r.nextInt(24)) ++
+    val s1 = be32Bytes(21) ++ Array[Byte](1) ++ be16Bytes(centre) ++ be16Bytes(0) ++
+      Array[Byte](2, 1, 1) ++ be16Bytes(2000 + r.nextInt(24)) ++
       Array[Byte]((1 + r.nextInt(12)).toByte, (1 + r.nextInt(28)).toByte,
         r.nextInt(24).toByte, 0, 0, 0, 0)
     val tmpl = new Array[Byte](58) // template 0 body after octet 14
-    val s3head = be32(72) ++ Array[Byte](3, 0) ++ be32(ni * nj) ++
-      Array[Byte](0, 0) ++ be16(0)
-    System.arraycopy(be32(ni), 0, tmpl, 16, 4) // octets 31-34
-    System.arraycopy(be32(nj), 0, tmpl, 20, 4) // octets 35-38
+    val s3head = be32Bytes(72) ++ Array[Byte](3, 0) ++ be32Bytes(ni * nj) ++
+      Array[Byte](0, 0) ++ be16Bytes(0)
+    System.arraycopy(be32Bytes(ni), 0, tmpl, 16, 4) // octets 31-34
+    System.arraycopy(be32Bytes(nj), 0, tmpl, 20, 4) // octets 35-38
     val s3 = s3head ++ tmpl
-    val s4 = be32(11) ++ Array[Byte](4) ++ be16(0) ++ be16(0) ++
+    val s4 = be32Bytes(11) ++ Array[Byte](4) ++ be16Bytes(0) ++ be16Bytes(0) ++
       Array[Byte](r.nextInt(4).toByte, r.nextInt(20).toByte)
     val body = s1 ++ s3 ++ s4 ++ "7777".getBytes(StandardCharsets.US_ASCII)
     val total = 16L + body.length

@@ -5,6 +5,7 @@ import javax.crypto.Cipher
 import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
 
 import graft.ole2.Cfb
+import graft.core.Endian.{le16, le64, leInt}
 
 /** MS-OFFCRYPTO decryption of password-protected OOXML packages: the
   * `EncryptionInfo` + `EncryptedPackage` CFB pair produced by Office's
@@ -59,15 +60,15 @@ object OfficeCrypto {
 
   private def standard(info: Array[Byte], pkg: Array[Byte],
       password: String): Option[Array[Byte]] = {
-    val headerSize = le32(info, 8)
+    val headerSize = leInt(info, 8)
     val hdr = 12
     // EncryptionHeader: flags sizeExtra algId algIdHash keySize provider…
-    val algId = le32(info, hdr + 8)
-    val keyBits = le32(info, hdr + 16)
+    val algId = leInt(info, hdr + 8)
+    val keyBits = leInt(info, hdr + 16)
     // AES only (0x660E/0x660F/0x6610); RC4 CryptoAPI (0x6801) unsupported
     if (algId != 0x660e && algId != 0x660f && algId != 0x6610) return None
     val ver = hdr + headerSize
-    val saltSize = le32(info, ver)
+    val saltSize = leInt(info, ver)
     if (saltSize != 16) return None
     val salt = info.slice(ver + 4, ver + 20)
     val encVerifier = info.slice(ver + 20, ver + 36)
@@ -346,18 +347,17 @@ object OfficeCrypto {
     // exempt records: BOF, FilePass, UsrExcl, FileLock, InterfaceHdr,
     // RRDInfo, RRDHead
     val plain = Set(0x0809, 0x002f, 0x0194, 0x0195, 0x00e1, 0x0196, 0x0138)
-    def le16(o: Int) = (wb(o) & 0xff) | ((wb(o + 1) & 0xff) << 8)
     // locate FILEPASS
     var off = 0
     var salt: Array[Byte] = null
     var ev: Array[Byte] = null
     var evh: Array[Byte] = null
     while (off + 4 <= wb.length && salt == null) {
-      val id = le16(off); val len = le16(off + 2)
+      val id = le16(wb, off); val len = le16(wb, off + 2)
       if (id == 0x002f) {
         val d = off + 4
-        if (le16(d) != 1) return None // XOR obfuscation unsupported
-        if (le16(d + 2) != 1) return None // CryptoAPI handled elsewhere
+        if (le16(wb, d) != 1) return None // XOR obfuscation unsupported
+        if (le16(wb, d + 2) != 1) return None // CryptoAPI handled elsewhere
         salt = java.util.Arrays.copyOfRange(wb, d + 6, d + 22)
         ev = java.util.Arrays.copyOfRange(wb, d + 22, d + 38)
         evh = java.util.Arrays.copyOfRange(wb, d + 38, d + 54)
@@ -370,7 +370,7 @@ object OfficeCrypto {
     val ks = new BlockKeystream(password, salt, 1024)
     var p = 0
     while (p + 4 <= out.length) {
-      val id = le16(p); val len = le16(p + 2)
+      val id = le16(wb, p); val len = le16(wb, p + 2)
       val d = p + 4
       val dataEnd = math.min(d + len, out.length)
       if (!plain.contains(id) && dataEnd > d) {
@@ -458,7 +458,7 @@ object OfficeCrypto {
     */
   def decryptPpt(doc: Array[Byte], currentEditOffset: Int,
       password: String): Option[Array[Byte]] = {
-    def le32i(o: Int) = le32(doc, o)
+    def le32i(o: Int) = leInt(doc, o)
     def header(off: Int): (Int, Int) =
       if (off < 0 || off > doc.length - 8) (-1, -1)
       else (le16(doc, off + 2), le32i(off + 4))
@@ -520,7 +520,7 @@ object OfficeCrypto {
          if pid != encRef && off >= 0 && off + 8 <= out.length) {
       val rc4 = new Rc4(cryptoApiBlockKey(password, salt, pid, keyBits))
       rc4.crypt(out, off, 8) // the record header is encrypted too
-      val len = le32(out, off + 4)
+      val len = leInt(out, off + 4)
       if (len >= 0 && off + 8L + len <= out.length)
         rc4.crypt(out, off + 8, len)
     }
@@ -545,17 +545,5 @@ object OfficeCrypto {
     c.init(Cipher.DECRYPT_MODE, new SecretKeySpec(key, "AES"),
       new IvParameterSpec(iv))
     c.doFinal(data)
-  }
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-  private def le64(b: Array[Byte], o: Int): Long = {
-    var v = 0L
-    var i = 7
-    while (i >= 0) { v = (v << 8) | (b(o + i) & 0xffL); i -= 1 }
-    v
   }
 }

@@ -1,6 +1,7 @@
 package graft.db
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian.{le16, le32, le64, leInt}
 
 /** Microsoft Access (Jet 3/4 and ACE) table extraction.
   *
@@ -36,19 +37,16 @@ object AccessExtractor {
     * returns (className, nativeData) for embedded objects.
     */
   private def ole1Native(blob: Array[Byte]): Option[(String, Array[Byte])] = {
-    def u16(o: Int): Int = (blob(o) & 0xff) | ((blob(o + 1) & 0xff) << 8)
-    def u32(o: Int): Long = (blob(o) & 0xffL) | ((blob(o + 1) & 0xffL) << 8) |
-      ((blob(o + 2) & 0xffL) << 16) | ((blob(o + 3) & 0xffL) << 24)
     try {
-      if (blob.length < 24 || u16(0) != 0x1c15) return None
-      val o = u16(2)
-      if (u32(o) != 0x501L || u32(o + 4) != 2L) return None
-      val cl = u32(o + 8).toInt
+      if (blob.length < 24 || le16(blob, 0) != 0x1c15) return None
+      val o = le16(blob, 2)
+      if (le32(blob, o) != 0x501L || le32(blob, o + 4) != 2L) return None
+      val cl = le32(blob, o + 8).toInt
       val cls = new String(blob, o + 12, math.max(cl - 1, 0), "windows-1252")
       var p = o + 12 + cl
-      p += 4 + u32(p).toInt // topic
-      p += 4 + u32(p).toInt // item
-      val n = u32(p).toInt
+      p += 4 + le32(blob, p).toInt // topic
+      p += 4 + le32(blob, p).toInt // item
+      val n = le32(blob, p).toInt
       if (n <= 0 || p + 4 + n > blob.length) None
       else Some((cls,
         java.util.Arrays.copyOfRange(blob, p + 4, p + 4 + n)))
@@ -64,10 +62,6 @@ object AccessExtractor {
     meta.set("access:version",
       if (jet3) "jet3" else if (version == 1) "jet4" else s"ace$version")
     val nPages = bytes.length / ps
-
-    def u16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-    def u32(o: Int): Long = (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-      ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
 
     def text(data: Array[Byte], from: Int, until: Int): String = {
       val n = math.max(until - from, 0)
@@ -106,10 +100,10 @@ object AccessExtractor {
       try {
         val (nvar, nc, nri, colBase, colSz) =
           if (jet3)
-            (u16(base + 0x17), u16(base + 0x19), u32(base + 0x1f).toInt,
+            (le16(bytes, base + 0x17), le16(bytes, base + 0x19), le32(bytes, base + 0x1f).toInt,
               0x2b, 18)
           else
-            (u16(base + 0x2b), u16(base + 0x2d), u32(base + 0x33).toInt,
+            (le16(bytes, base + 0x2b), le16(bytes, base + 0x2d), le32(bytes, base + 0x33).toInt,
               0x3f, 25)
         if (nc <= 0 || nc > 512 || nri < 0 || nri > 256) return None
         var off = base + colBase + nri * (if (jet3) 8 else 12)
@@ -117,11 +111,11 @@ object AccessExtractor {
         var i = 0
         while (i < nc) {
           if (jet3)
-            raw += ((bytes(off) & 0xff, u16(off + 1), u16(off + 3),
-              u16(off + 14), u16(off + 16), (bytes(off + 13) & 1) != 0))
+            raw += ((bytes(off) & 0xff, le16(bytes, off + 1), le16(bytes, off + 3),
+              le16(bytes, off + 14), le16(bytes, off + 16), (bytes(off + 13) & 1) != 0))
           else
-            raw += ((bytes(off) & 0xff, u16(off + 5), u16(off + 7),
-              u16(off + 21), u16(off + 23), (bytes(off + 15) & 1) != 0))
+            raw += ((bytes(off) & 0xff, le16(bytes, off + 5), le16(bytes, off + 7),
+              le16(bytes, off + 21), le16(bytes, off + 23), (bytes(off + 15) & 1) != 0))
           off += colSz
           i += 1
         }
@@ -133,7 +127,7 @@ object AccessExtractor {
               off += 1 + n
               s
             } else {
-              val n = u16(off)
+              val n = le16(bytes, off)
               val s = new String(bytes, off + 2, n,
                 java.nio.charset.StandardCharsets.UTF_16LE)
               off += 2 + n
@@ -149,13 +143,13 @@ object AccessExtractor {
     def rowExtent(pg: Int, slot: Int): Option[(Int, Int, Boolean)] = {
       val base = pg * ps
       val offBase = if (jet3) 0x0a else 0x0e
-      val nrows = u16(base + (if (jet3) 8 else 0x0c))
+      val nrows = le16(bytes, base + (if (jet3) 8 else 0x0c))
       if (slot >= nrows) return None
-      val o = u16(base + offBase + 2 * slot)
+      val o = le16(bytes, base + offBase + 2 * slot)
       val start = o & 0x1fff
       val end =
         if (slot == 0) ps
-        else u16(base + offBase + 2 * (slot - 1)) & 0x1fff
+        else le16(bytes, base + offBase + 2 * (slot - 1)) & 0x1fff
       if (start >= end || end > ps) None
       else Some((base + start, base + end, (o & 0x4000) != 0))
     }
@@ -169,16 +163,14 @@ object AccessExtractor {
 
     def memoBytes(d: Array[Byte], from: Int, until: Int): Array[Byte] = {
       if (until - from < 12) return Array.emptyByteArray
-      def du32(o: Int): Long = (d(o) & 0xffL) | ((d(o + 1) & 0xffL) << 8) |
-        ((d(o + 2) & 0xffL) << 16) | ((d(o + 3) & 0xffL) << 24)
-      val head = du32(from)
+      val head = le32(d, from)
       val len = (head & 0x3fffffffL).toInt
       if ((head & 0x80000000L) != 0) // inline
         java.util.Arrays.copyOfRange(d, from + 12,
           math.min(from + 12 + len, until))
       else {
         val out = new java.io.ByteArrayOutputStream()
-        var ptr = du32(from + 4)
+        var ptr = le32(d, from + 4)
         val single = (head & 0x40000000L) != 0
         var hops = 0
         while (ptr != 0 && out.size < len && hops < 4096) {
@@ -187,7 +179,7 @@ object AccessExtractor {
             case Some((s, e)) =>
               if (single) { out.write(bytes, s, math.min(len, e - s)); ptr = 0 }
               else {
-                ptr = u32(s) // chain: next pointer leads the record
+                ptr = le32(bytes, s) // chain: next pointer leads the record
                 out.write(bytes, s + 4, e - s - 4)
               }
             case None => ptr = 0
@@ -213,19 +205,16 @@ object AccessExtractor {
       if (d.length < 8) return Map.empty
       val names = scala.collection.mutable.ArrayBuffer[String]()
       val out = Map.newBuilder[String, String]
-      def du16(o: Int): Int = (d(o) & 0xff) | ((d(o + 1) & 0xff) << 8)
-      def du32(o: Int): Long = (d(o) & 0xffL) | ((d(o + 1) & 0xffL) << 8) |
-        ((d(o + 2) & 0xffL) << 16) | ((d(o + 3) & 0xffL) << 24)
       var p = 4
       while (p + 6 <= d.length) {
-        val blockLen = du32(p).toInt
-        val blockType = du16(p + 4)
+        val blockLen = le32(d, p).toInt
+        val blockType = le16(d, p + 4)
         val end = math.min(p + blockLen, d.length)
         if (blockLen < 6) return out.result()
         var q = p + 6
         if (blockType == 0x0080) {
           while (q + 2 <= end) {
-            val n = du16(q)
+            val n = le16(d, q)
             if (q + 2 + (if (jet3) n else n) > end) { q = end }
             else {
               names += (if (jet3)
@@ -239,13 +228,13 @@ object AccessExtractor {
           }
         } else {
           while (q + 8 <= end) {
-            val entryLen = du16(q)
+            val entryLen = le16(d, q)
             if (entryLen < 6 || q + entryLen > end) { q = end }
             else if (entryLen < 8) q += entryLen // block preamble entry
             else {
               val valType = d(q + 3) & 0xff
-              val nameIdx = du16(q + 4)
-              val valLen = du16(q + 6)
+              val nameIdx = le16(d, q + 4)
+              val valLen = le16(d, q + 6)
               if (valType == 0x0a && q + 8 + valLen <= end &&
                   nameIdx < names.length) {
                 val v = text(d, q + 8, q + 8 + valLen)
@@ -278,7 +267,7 @@ object AccessExtractor {
 
     /** Variable-column offset table (relative to row start). */
     def varOffsets(start: Int, end: Int, td: TDef): Array[Int] = {
-      val nc = if (jet3) bytes(start) & 0xff else u16(start)
+      val nc = if (jet3) bytes(start) & 0xff else le16(bytes, start)
       val bmsz = (nc + 7) / 8
       if (td.nvar == 0) Array.empty
       else if (jet3) {
@@ -301,12 +290,12 @@ object AccessExtractor {
         }
         offs
       } else {
-        val nvarRow = u16(end - bmsz - 2)
+        val nvarRow = le16(bytes, end - bmsz - 2)
         if (nvarRow < 0 || nvarRow > 512) return Array.empty
         val offs = new Array[Int](nvarRow + 1)
         var i = 0
         while (i <= nvarRow) {
-          offs(i) = u16(end - bmsz - 4 - i * 2)
+          offs(i) = le16(bytes, end - bmsz - 4 - i * 2)
           i += 1
         }
         offs
@@ -315,7 +304,7 @@ object AccessExtractor {
 
     /** Byte extent of one column's value in a row (for raw LV reads). */
     def colExtent(start: Int, end: Int, td: TDef, c: Col): Option[(Int, Int)] = {
-      val nc = if (jet3) bytes(start) & 0xff else u16(start)
+      val nc = if (jet3) bytes(start) & 0xff else le16(bytes, start)
       val dataStart = start + (if (jet3) 1 else 2)
       val bmsz = (nc + 7) / 8
       val nn = c.colnum / 8 < bmsz &&
@@ -332,7 +321,7 @@ object AccessExtractor {
 
     /** Decode one row against its table definition. */
     def decodeRow(start: Int, end: Int, td: TDef): Vector[String] = {
-      val nc = if (jet3) bytes(start) & 0xff else u16(start)
+      val nc = if (jet3) bytes(start) & 0xff else le16(bytes, start)
       val dataStart = start + (if (jet3) 1 else 2)
       val bmsz = (nc + 7) / 8
       def notNull(cn: Int): Boolean =
@@ -353,30 +342,27 @@ object AccessExtractor {
             else (0, 0)
           if (u <= f || u > end) ""
           else {
-            def fu16 = u16(f)
-            def f32 = u32(f)
-            def f64bits = u32(f) | (u32(f + 4) << 32)
             c.tpe match {
               case 2 => (bytes(f) & 0xff).toString
-              case 3 => fu16.toShort.toString
-              case 4 => f32.toInt.toString
+              case 3 => le16(bytes, f).toShort.toString
+              case 4 => leInt(bytes, f).toString
               case 5 => // currency: scaled 1e4 long
-                val v = java.math.BigDecimal.valueOf(f64bits, 4)
+                val v = java.math.BigDecimal.valueOf(le64(bytes, f), 4)
                   .stripTrailingZeros()
                 v.toPlainString
               case 6 =>
-                val v = java.lang.Float.intBitsToFloat(f32.toInt)
+                val v = java.lang.Float.intBitsToFloat(leInt(bytes, f))
                 if (v == math.rint(v)) v.toLong.toString else v.toString
               case 7 =>
-                val v = java.lang.Double.longBitsToDouble(f64bits)
+                val v = java.lang.Double.longBitsToDouble(le64(bytes, f))
                 if (v == math.rint(v)) v.toLong.toString else v.toString
-              case 8 => renderDate(java.lang.Double.longBitsToDouble(f64bits))
+              case 8 => renderDate(java.lang.Double.longBitsToDouble(le64(bytes, f)))
               case 10 => text(bytes, f, u)
               case 12 => stripMarkup(memoText(bytes, f, u))
               case 15 => // GUID
                 if (u - f >= 16)
-                  String.format("{%08x-%04x-%04x-%s-%s}", f32,
-                    u16(f + 4), u16(f + 6),
+                  String.format("{%08x-%04x-%04x-%s-%s}", le32(bytes, f),
+                    le16(bytes, f + 4), le16(bytes, f + 6),
                     (8 until 10).map(i => f"${bytes(f + i) & 0xff}%02x").mkString,
                     (10 until 16).map(i => f"${bytes(f + i) & 0xff}%02x").mkString)
                 else ""
@@ -403,17 +389,17 @@ object AccessExtractor {
       var pg = 1
       while (pg < nPages) {
         val base = pg * ps
-        if (bytes(base) == 1 && u32(base + 4) == tdefPg) {
-          val nrows = u16(base + (if (jet3) 8 else 0x0c))
+        if (bytes(base) == 1 && le32(bytes, base + 4) == tdefPg) {
+          val nrows = le16(bytes, base + (if (jet3) 8 else 0x0c))
           var slot = 0
           while (slot < nrows && slot < 1024) {
-            val o = u16(base + (if (jet3) 0x0a else 0x0e) + 2 * slot)
+            val o = le16(bytes, base + (if (jet3) 0x0a else 0x0e) + 2 * slot)
             if ((o & 0x8000) == 0) {
               rowExtent(pg, slot).foreach { case (s, e, ovf) =>
                 if (ovf) {
                   // 4-byte pointer to the real row on an overflow page
                   if (e - s >= 4) {
-                    val ptr = u32(s)
+                    val ptr = le32(bytes, s)
                     val tpg = (ptr >> 8).toInt
                     val tslot = (ptr & 0xff).toInt
                     if (tpg > 0 && tpg < nPages && bytes(tpg * ps) == 1)

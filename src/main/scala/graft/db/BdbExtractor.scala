@@ -1,6 +1,7 @@
 package graft.db
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian.{be32, le32}
 
 /** Berkeley DB header metadata — from scratch per the public libdb
   * on-disk layout (the generic 72-byte DBMETA header shared by btree
@@ -16,23 +17,13 @@ object BdbExtractor {
 
   def extract(bytes: Array[Byte], sink: SpanSink, meta: MetaSink): Unit = {
     if (bytes.length < 72) return
-    def le32(o: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < 4) { v |= (bytes(o + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
-    def be32(o: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < 4) { v = (v << 8) | (bytes(o + i) & 0xffL); i += 1 }
-      v
-    }
-    var magic = le32(12)
+    var magic = le32(bytes, 12)
     var le = true
     if (magic != BtreeMagic && magic != HashMagic) {
-      magic = be32(12); le = false
+      magic = be32(bytes, 12); le = false
       if (magic != BtreeMagic && magic != HashMagic) return
     }
-    def word(o: Int): Long = if (le) le32(o) else be32(o)
+    def word(o: Int): Long = if (le) le32(bytes, o) else be32(bytes, o)
     meta.set("bdb:access-method",
       if (magic == BtreeMagic) "btree" else "hash")
     meta.set("bdb:byteorder", if (le) "little-endian" else "big-endian")

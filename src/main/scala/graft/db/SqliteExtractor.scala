@@ -1,6 +1,7 @@
 package graft.db
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian.{be16, be32}
 
 /** SQLite 3 text extraction — a from-scratch read-only reader of the
   * public database file format (sqlite.org/fileformat2: 100-byte header,
@@ -23,15 +24,6 @@ object SqliteExtractor {
 
   def isSqlite(b: Array[Byte]): Boolean =
     b.length > 100 && Magic.indices.forall(i => b(i) == Magic(i))
-
-  private def be16(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-  private def be32(b: Array[Byte], o: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 4) { v = (v << 8) | (b(o + i) & 0xff); i += 1 }
-    v
-  }
 
   /** SQLite varint: 1-9 bytes, big-endian 7-bit groups. Returns (value,
     * bytes consumed). */

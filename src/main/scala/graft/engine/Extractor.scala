@@ -849,8 +849,8 @@ object Extractor {
     on("model/e57") { (_, n) =>
       val b = n.bytes
       if (b.length >= 16) {
-        val major = (b(8) & 0xff) | ((b(9) & 0xff) << 8)
-        val minor = (b(12) & 0xff) | ((b(13) & 0xff) << 8)
+        val major = Endian.le16(b, 8)
+        val minor = Endian.le16(b, 12)
         n.meta.set("e57:version", s"$major.$minor")
       }
     },

@@ -4,12 +4,17 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetToSparkSchemaConverter,
+  SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.core._
 
@@ -38,6 +43,21 @@ import graft.core._
   * late or are backfilled inside ranges already committed.
   */
 object Pipeline {
+
+  /** The one `DocRow` encoder: the CLI's read schema, its input check
+    * and every `.as[DocRow]` here.
+    */
+  val DocRowEncoder: ExpressionEncoder[DocRow] = ExpressionEncoder[DocRow]()
+
+  /** The Spark schema of parquet `file`'s footer, read on the driver, so
+    * checking a file's columns submits no job.
+    */
+  def footerSchema(spark: SparkSession, file: String): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file),
+      spark.sparkContext.hadoopConfiguration))
+    try new ParquetToSparkSchemaConverter(SQLConf.get)
+      .convert(reader.getFooter.getFileMetaData.getSchema) finally reader.close()
+  }
 
   /** Core transform: detect→parse→spans, no shuffle. */
   def extract(ds: Dataset[DocRow],
@@ -200,14 +220,22 @@ object Pipeline {
     */
   def resumeFilter(input: Dataset[DocRow], outDir: String): Dataset[DocRow] = {
     val spark = input.sparkSession
-    import spark.implicits._
     // committed = some visible file, at the top level or in a run
     // directory (a failed or killed run leaves at most its committer's
     // _temporary); past this any read failure must surface, or the job
     // would re-extract and duplicate every committed row
-    if (!entries(spark, outDir).exists(st =>
-          st.isFile || entries(spark, st.getPath.toString).nonEmpty)) return input
-    val done = spark.read.parquet(outDir).select("doc_id").distinct()
-    input.join(done, Seq("doc_id"), "left_anti").as[DocRow]
+    val committed = entries(spark, outDir).iterator.flatMap { st =>
+      if (st.isFile) Iterator(st) else entries(spark, st.getPath.toString).filter(_.isFile)
+    }.nextOption() match {
+      case Some(st) => st.getPath.toString
+      case None => return input
+    }
+    // outDir is read with a given schema (no schema-inference job), so
+    // one committed file's footer vouches for doc_id's type
+    if (!footerSchema(spark, committed).exists(f =>
+          f.name == "doc_id" && f.dataType == StringType))
+      throw new IllegalStateException(s"committed output $committed has no string doc_id")
+    val done = spark.read.schema("doc_id STRING").parquet(outDir)
+    input.join(done, Seq("doc_id"), "left_anti").as(DocRowEncoder)
   }
 }

@@ -66,7 +66,9 @@ final class SpanSink(
     * so the common case is one scan + one array copy instead of a
     * per-char append with a per-char budget check); the write-limit
     * semantics are unchanged — the buffer fills to exactly the budget
-    * and the first overflowing character trips the limit.
+    * and the first overflowing character trips the limit. A run's scan
+    * stops one char past the remaining budget, so a huge string (a
+    * bomb-shaped member) costs the budget, not its length.
     */
   def chars(s: String): Unit = {
     if (limitReached) return
@@ -74,12 +76,15 @@ final class SpanSink(
     var i = 0
     val n = s.length
     while (i < n) {
+      val room = writeLimit - offset - buf.length
+      // scan at most room + 1 chars; i + budget + 1 <= n cannot overflow
+      val budget = math.max(room, 0)
+      val end = if (n - i <= budget) n else i + budget + 1
       var j = i
-      while (j < n && {
+      while (j < end && {
         val c = s.charAt(j); c >= ' ' || c == '\t' || c == '\n' || c == '\r'
       }) j += 1
       if (j > i) {
-        val room = writeLimit - offset - buf.length
         if (j - i <= room) buf.underlying.append(s, i, j)
         else {
           if (room > 0) buf.underlying.append(s, i, i + room)

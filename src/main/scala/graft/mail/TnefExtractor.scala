@@ -3,6 +3,7 @@ package graft.mail
 import java.nio.charset.StandardCharsets
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian.{be16, le16, le32}
 
 /** TNEF / winmail.dat (MS-OXTNEF) extraction.
   *
@@ -36,10 +37,7 @@ object TnefExtractor {
       attachments: Vector[Attachment])
 
   def parse(b: Array[Byte]): Message = {
-    def le16(o: Int) = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-    def le32(o: Int): Long = (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-    if (b.length < 6 || le32(0) != Signature)
+    if (b.length < 6 || le32(b, 0) != Signature)
       throw new TnefMalformed("bad TNEF signature")
     var p = 6 // signature + legacy key
     var subject: Option[String] = None
@@ -56,8 +54,8 @@ object TnefExtractor {
     }
     while (p + 11 <= b.length) {
       // level(1) idAndType(4) length(4) data checksum(2)
-      val id = le16(p + 1)
-      val len = le32(p + 5)
+      val id = le16(b, p + 1)
+      val len = le32(b, p + 5)
       val data = p + 9
       if (len < 0 || data + len + 2 > b.length)
         throw new TnefMalformed("attribute overruns stream")
@@ -108,28 +106,25 @@ object TnefExtractor {
     * types are inline, 4-padded (8 bytes for i8/double/filetime).
     */
   private def parseMapiProps(b: Array[Byte]): Map[Int, Array[Byte]] = {
-    def le16(o: Int) = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-    def le32(o: Int): Long = (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
     val out = Map.newBuilder[Int, Array[Byte]]
     if (b.length < 4) return Map.empty
-    val count = le32(0)
+    val count = le32(b, 0)
     var p = 4
     var i = 0L
     try {
       while (i < count && p + 4 <= b.length) {
-        val typ = le16(p)
-        val id = le16(p + 2)
+        val typ = le16(b, p)
+        val id = le16(b, p + 2)
         p += 4
         val baseType = typ & 0x0fff
         val multi = (typ & 0x1000) != 0
         // named property (id >= 0x8000): GUID + kind + (LID | name)
         if (id >= 0x8000 && p + 20 <= b.length) {
           p += 16
-          val kind = le32(p).toInt
+          val kind = le32(b, p).toInt
           p += 4
           if (kind == 1) {
-            val nameLen = le32(p).toInt
+            val nameLen = le32(b, p).toInt
             p += 4 + nameLen + ((4 - (nameLen & 3)) & 3)
           } else p += 4
         }
@@ -145,11 +140,11 @@ object TnefExtractor {
         if (variable) {
           // u32 value count, then per value u32 length + 4-padded data
           // (MS-OXTNEF 2.1.3.4 — the count is present even single-valued)
-          val nVals = le32(p).toInt
+          val nVals = le32(b, p).toInt
           p += 4
           var k = 0
           while (k < nVals) {
-            val len = le32(p).toInt
+            val len = le32(b, p).toInt
             p += 4
             if (len < 0 || p + len > b.length)
               throw new TnefMalformed("mapi value overrun")
@@ -160,7 +155,7 @@ object TnefExtractor {
         } else if (multi) {
           // multi-valued fixed-width: u32 count, then count inline values
           // with NO per-value length prefix (widths are 4-multiples)
-          val nVals = le32(p).toInt
+          val nVals = le32(b, p).toInt
           p += 4
           if (nVals < 0 || nVals.toLong * fixedWidth > b.length - p)
             throw new TnefMalformed("mapi mv overrun")
@@ -187,11 +182,9 @@ object TnefExtractor {
 
   /** Decompress PidTagRtfCompressed (LZFu; MELA passthrough). */
   def decompressRtf(v: Array[Byte]): Array[Byte] = {
-    def le32(o: Int): Long = (v(o) & 0xffL) | ((v(o + 1) & 0xffL) << 8) |
-      ((v(o + 2) & 0xffL) << 16) | ((v(o + 3) & 0xffL) << 24)
     if (v.length < 16) throw new TnefMalformed("short rtf header")
-    val rawSize = le32(4)
-    val compType = le32(8)
+    val rawSize = le32(v, 4)
+    val compType = le32(v, 8)
     if (compType == 0x414c454dL) // 'MELA' — uncompressed
       return java.util.Arrays.copyOfRange(v, 16, math.min(v.length, 16 + rawSize.toInt))
     if (compType != 0x75465a4cL) // 'LZFu'
@@ -213,7 +206,7 @@ object TnefExtractor {
           if (p + 2 > v.length) { done = true }
           else {
             // dictionary reference, big-endian: 12-bit offset, 4-bit len
-            val ref = ((v(p) & 0xff) << 8) | (v(p + 1) & 0xff)
+            val ref = be16(v, p)
             p += 2
             val off = ref >>> 4
             val len = (ref & 0xf) + 2

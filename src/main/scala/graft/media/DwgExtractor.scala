@@ -3,6 +3,7 @@ package graft.media
 import java.nio.charset.StandardCharsets
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian
 
 /** AutoCAD DWG header-property extraction.
   *
@@ -33,12 +34,7 @@ object DwgExtractor {
     val version = new String(bytes, 0, 6, StandardCharsets.US_ASCII)
     def le16(o: Int): Int =
       if (o + 2 > bytes.length) throw new DwgMalformed("truncated")
-      else (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-    def le64(o: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < 8) { v |= (bytes(o + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
+      else Endian.le16(bytes, o)
     def emit(idx: Int, value: String): Unit = {
       if (value != null && value.nonEmpty) {
         if (idx >= 0 && idx < HeaderKeys.length && HeaderKeys(idx) != null)
@@ -91,9 +87,9 @@ object DwgExtractor {
           }
         }
       case "AC1018" => // 2004: CP1252 strings at the property section
-        propSection(bytes, wide = false, le64, le16, emit, meta)
+        propSection(bytes, wide = false, le16, emit, meta)
       case "AC1021" | "AC1024" | "AC1027" | "AC1032" => // 2007+: UTF-16LE
-        propSection(bytes, wide = true, le64, le16, emit, meta)
+        propSection(bytes, wide = true, le16, emit, meta)
       case v if v.startsWith("AC1") =>
         // recognized family, unsupported layout (pre-2000 R13/R14 etc.)
         throw new DwgMalformed(s"unsupported AutoCAD drawing version: $v")
@@ -104,9 +100,9 @@ object DwgExtractor {
   private val charset1252 = java.nio.charset.Charset.forName("windows-1252")
 
   private def propSection(bytes: Array[Byte], wide: Boolean,
-      le64: Int => Long, le16: Int => Int,
+      le16: Int => Int,
       emit: (Int, String) => Unit, meta: MetaSink): Unit = {
-    val offset = le64(0x20)
+    val offset = Endian.le64(bytes, 0x20)
     if (offset <= 0 || offset > 0xa00000L || offset >= bytes.length) return
     var p = offset.toInt
     def readString(): String = {

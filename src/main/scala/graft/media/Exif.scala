@@ -1,5 +1,7 @@
 package graft.media
 
+import graft.core.Endian
+
 /** EXIF / TIFF IFD metadata walk.
   *
   * Reference surface: tika-parser-image-module's JpegParser/TiffParser
@@ -30,15 +32,9 @@ object Exif {
     if (tiff + 8 > limit) return Empty
     val le = b(tiff) == 'I'
     def u16(o: Int): Int =
-      if (o + 2 > limit) 0
-      else if (le) (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-      else ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
+      if (o + 2 > limit) 0 else if (le) Endian.le16(b, o) else Endian.be16(b, o)
     def u32(o: Int): Long =
-      if (o + 4 > limit) 0L
-      else if (le) (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-      else ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
+      if (o + 4 > limit) 0L else if (le) Endian.le32(b, o) else Endian.be32(b, o)
 
     final case class Entry(tag: Int, tpe: Int, count: Long, at: Int)
 

@@ -3,6 +3,8 @@ package graft.media
 import java.nio.charset.StandardCharsets
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian
+import graft.core.Endian.{be32, le32}
 
 /** Native FLAC: STREAMINFO audio properties, VORBIS_COMMENT tags, and
   * PICTURE blocks as embedded child documents.
@@ -29,13 +31,6 @@ object FlacExtractor {
     "During performance", "Movie/video screen capture",
     "A bright coloured fish", "Illustration", "Band/artist logotype",
     "Publisher/Studio logotype")
-
-  private def be32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
 
   def extract(bytes: Array[Byte], sink: SpanSink, meta: MetaSink,
       child: (Option[String], Array[Byte]) => Unit): Unit = {
@@ -110,21 +105,20 @@ object FlacExtractor {
             }
           }
         case 6 => // PICTURE
-          var q = p
-          def u32(): Long = { val v = be32(bytes, q); q += 4; v }
-          if (q + 8 <= p + len) {
-            val picType = u32().toInt
-            val mimeLen = u32().toInt
-            if (mimeLen >= 0 && q + mimeLen + 4 <= p + len) {
-              val mime = new String(bytes, q, mimeLen, StandardCharsets.US_ASCII)
-              q += mimeLen
-              val descLen = u32().toInt
-              if (descLen >= 0 && q + descLen + 20 <= p + len) {
-                val desc = new String(bytes, q, descLen, StandardCharsets.UTF_8)
-                q += descLen
-                q += 16 // width/height/depth/colors
-                val dataLen = u32().toInt
-                if (dataLen >= 0 && q + dataLen <= p + len) {
+          val c = new Endian.Cursor(bytes, p)
+          if (c.pos + 8 <= p + len) {
+            val picType = c.beInt()
+            val mimeLen = c.beInt()
+            if (mimeLen >= 0 && c.pos + mimeLen + 4 <= p + len) {
+              val mime = new String(bytes, c.pos, mimeLen, StandardCharsets.US_ASCII)
+              c.pos += mimeLen
+              val descLen = c.beInt()
+              if (descLen >= 0 && c.pos + descLen + 20 <= p + len) {
+                val desc = new String(bytes, c.pos, descLen, StandardCharsets.UTF_8)
+                c.pos += descLen
+                c.pos += 16 // width/height/depth/colors
+                val dataLen = c.beInt()
+                if (dataLen >= 0 && c.pos + dataLen <= p + len) {
                   val typeName =
                     if (picType >= 0 && picType < PictureTypes.length)
                       PictureTypes(picType)
@@ -137,7 +131,7 @@ object FlacExtractor {
                     case e => e
                   }
                   child(Some(s"picture-$picN.$ext"),
-                    java.util.Arrays.copyOfRange(bytes, q, q + dataLen))
+                    java.util.Arrays.copyOfRange(bytes, c.pos, c.pos + dataLen))
                 }
               }
             }

@@ -3,6 +3,7 @@ package graft.media
 import java.nio.charset.StandardCharsets
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian.{be16, be32, be64}
 
 /** Font metadata: TrueType/OpenType `name`+`head` tables and Adobe Font
   * Metrics (.afm) headers.
@@ -21,11 +22,7 @@ object FontExtractor {
 
   def extractTtf(b: Array[Byte], sink: SpanSink, meta: MetaSink): Unit = {
     if (b.length < 12) throw new FontMalformed("too short")
-    def u16(o: Int) = ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-    def u32(o: Int) = ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    def u64(o: Int) = (u32(o) << 32) | u32(o + 4)
-    val numTables = u16(4)
+    val numTables = be16(b, 4)
     if (numTables <= 0 || numTables > 512) throw new FontMalformed("bad table count")
     var name = -1L; var nameLen = 0L
     var head = -1L
@@ -34,14 +31,14 @@ object FontExtractor {
       val e = 12 + i * 16
       if (e + 16 > b.length) throw new FontMalformed("truncated directory")
       val tag = new String(b, e, 4, StandardCharsets.US_ASCII)
-      if (tag == "name") { name = u32(e + 8); nameLen = u32(e + 12) }
-      else if (tag == "head") head = u32(e + 8)
+      if (tag == "name") { name = be32(b, e + 8); nameLen = be32(b, e + 12) }
+      else if (tag == "head") head = be32(b, e + 8)
       i += 1
     }
     if (head >= 0 && head + 36 <= b.length) {
       // LONGDATETIME: seconds since 1904-01-01T00:00:00Z, BE64
       def longDate(o: Int): Option[String] = {
-        val secs = u64(o)
+        val secs = be64(b, o)
         if (secs <= 0) None
         else Some(java.time.Instant.ofEpochSecond(secs - 2082844800L).toString)
       }
@@ -50,18 +47,18 @@ object FontExtractor {
     }
     if (name < 0 || name + 6 > b.length) return
     val n = name.toInt
-    val count = u16(n + 2)
-    val strOff = n + u16(n + 4)
+    val count = be16(b, n + 2)
+    val strOff = n + be16(b, n + 4)
     // prefer Windows/Unicode (platform 3, UTF-16BE); fall back to Mac
     val picked = scala.collection.mutable.HashMap[Int, (Int, String)]()
     var r = 0
     while (r < count) {
       val rec = n + 6 + r * 12
       if (rec + 12 <= b.length) {
-        val platform = u16(rec)
-        val nameId = u16(rec + 6)
-        val len = u16(rec + 8)
-        val off = strOff + u16(rec + 10)
+        val platform = be16(b, rec)
+        val nameId = be16(b, rec + 6)
+        val len = be16(b, rec + 8)
+        val off = strOff + be16(b, rec + 10)
         if (off + len <= b.length && len > 0 && (platform == 3 || platform == 1)) {
           val s =
             if (platform == 3) new String(b, off, len, StandardCharsets.UTF_16BE)

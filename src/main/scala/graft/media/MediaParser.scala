@@ -1,6 +1,7 @@
 package graft.media
 
-import java.nio.{ByteBuffer, ByteOrder}
+import graft.core.Endian
+import graft.core.Endian.{be16, be32, be64, beInt, le16, le32}
 
 /** Image/audio/video metadata extraction from payload bytes — the
   * columns a multimodal training pipeline needs (width/height/duration/
@@ -198,23 +199,17 @@ object MediaParser {
     * first page's PCX window (xmin/ymin/xmax/ymax) gives the dims.
     */
   private def parseDcx(b: Array[Byte]): Option[Meta] = {
-    def le32(o: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < 4) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
     var pages = 0
     var i = 4
-    while (i + 4 <= math.min(b.length, 4 + 1024 * 4) && le32(i) != 0) {
+    while (i + 4 <= math.min(b.length, 4 + 1024 * 4) && le32(b, i) != 0) {
       pages += 1; i += 4
     }
     if (pages == 0) return None
-    val first = le32(4)
+    val first = le32(b, 4)
     if (first + 12 > b.length || b(first.toInt) != 0x0a) return None
-    def le16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
     val fo = first.toInt
-    val w = le16(fo + 8) - le16(fo + 4) + 1
-    val h = le16(fo + 10) - le16(fo + 6) + 1
+    val w = le16(b, fo + 8) - le16(b, fo + 4) + 1
+    val h = le16(b, fo + 10) - le16(b, fo + 6) + 1
     if (w <= 0 || h <= 0) None
     else Some(Meta("image/vnd.zbrush.dcx", "image", width = w, height = h,
       tags = Map("dcx:pages" -> pages.toString)))
@@ -225,15 +220,10 @@ object MediaParser {
     * segment (type 48) carries width/height u32 BE.
     */
   private def parseJbig2(b: Array[Byte]): Option[Meta] = {
-    def be32(o: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < 4) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-      v
-    }
     if (b.length < 13) return None
     val flags = b(8) & 0xff
     var p = if ((flags & 0x02) == 0) 13 else 9 // bit1 set = page count absent
-    val pages = if ((flags & 0x02) == 0) be32(9) else 0
+    val pages = if ((flags & 0x02) == 0) be32(b, 9) else 0
     var guard = 0
     while (p + 11 <= b.length && guard < 1000) {
       val segFlags = b(p + 4) & 0xff
@@ -242,20 +232,20 @@ object MediaParser {
       var q = p + 5
       val rts = (b(q) & 0xff) >>> 5
       val count =
-        if (rts == 7) { val c = (be32(q) & 0x1fffffff).toInt; q += 4 + (c + 8) / 8; c }
+        if (rts == 7) { val c = (be32(b, q) & 0x1fffffff).toInt; q += 4 + (c + 8) / 8; c }
         else { q += 1; rts }
       // referred-to numbers: 1/2/4 bytes each by this segment's number
-      val segNum = be32(p)
+      val segNum = be32(b, p)
       val refSize = if (segNum <= 256) 1 else if (segNum <= 65536) 2 else 4
       q += count * refSize
       // page association: 1 or 4 bytes (segFlags bit 6)
       val pa = if ((segFlags & 0x40) != 0) 4 else 1
       q += pa
       if (q + 4 > b.length) return None
-      val dataLen = be32(q)
+      val dataLen = be32(b, q)
       q += 4
       if (segType == 48 && q + 8 <= b.length) {
-        val w = be32(q); val h = be32(q + 4)
+        val w = be32(b, q); val h = be32(b, q + 4)
         if (w > 0 && h > 0)
           return Some(Meta("image/x-jbig2", "image", width = w.toInt,
             height = h.toInt,
@@ -298,14 +288,12 @@ object MediaParser {
     * without the BZZ name decoder).
     */
   private def parseDjvu(b: Array[Byte]): Option[Meta] = {
-    def be32(o: Int): Int = ((b(o) & 0xff) << 24) | ((b(o + 1) & 0xff) << 16) |
-      ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
     var w = 0; var h = 0
     var tags = Map.empty[String, String]
     def walk(start: Int, end: Int, depth: Int): Unit = {
       var o = start
       while (o + 8 <= end && depth < 8) {
-        val len = be32(o + 4)
+        val len = beInt(b, o + 4)
         if (len < 0 || o + 8 + len > b.length) return
         if (b(o) == 'F' && b(o + 1) == 'O' && b(o + 2) == 'R' && b(o + 3) == 'M')
           walk(o + 12, math.min(o + 8 + len, end), depth + 1)
@@ -343,9 +331,8 @@ object MediaParser {
       (b(525) & 0xff) == 0xff) || (b(522) == 0x11 && b(523) == 0x01)
   }
   private def parsePict(b: Array[Byte]): Option[Meta] = {
-    def be16(o: Int): Int = ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-    val top = be16(514); val left = be16(516)
-    val bottom = be16(518); val right = be16(520)
+    val top = be16(b, 514); val left = be16(b, 516)
+    val bottom = be16(b, 518); val right = be16(b, 520)
     val w = right - left; val h = bottom - top
     if (w > 0 && h > 0)
       Some(Meta("image/x-pict", "image", width = w, height = h))
@@ -482,21 +469,20 @@ object MediaParser {
     */
   private def flacPicture(d: Array[Byte]): Option[(String, Array[Byte])] = {
     if (d.length < 32) return None
-    var q = 0
-    def u32(): Int = { val v = be32(d, q).toInt; q += 4; v }
-    val picType = u32()
-    val mimeLen = u32()
-    if (mimeLen < 0 || q + mimeLen + 4 > d.length) return None
-    q += mimeLen
-    val descLen = u32()
-    if (descLen < 0 || q + descLen + 20 > d.length) return None
-    val desc = new String(d, q, descLen, java.nio.charset.StandardCharsets.UTF_8).trim
-    q += descLen + 16 // width/height/depth/colors
-    val dataLen = u32()
-    if (dataLen <= 0 || q + dataLen > d.length) return None
+    val c = new Endian.Cursor(d)
+    val picType = c.beInt()
+    val mimeLen = c.beInt()
+    if (mimeLen < 0 || c.pos + mimeLen + 4 > d.length) return None
+    c.pos += mimeLen
+    val descLen = c.beInt()
+    if (descLen < 0 || c.pos + descLen + 20 > d.length) return None
+    val desc = new String(d, c.pos, descLen, java.nio.charset.StandardCharsets.UTF_8).trim
+    c.pos += descLen + 16 // width/height/depth/colors
+    val dataLen = c.beInt()
+    if (dataLen <= 0 || c.pos + dataLen > d.length) return None
     val name = if (desc.nonEmpty) desc
       else ApicTypes.getOrElse(picType, "Attached picture")
-    Some(name -> java.util.Arrays.copyOfRange(d, q, q + dataLen))
+    Some(name -> java.util.Arrays.copyOfRange(d, c.pos, c.pos + dataLen))
   }
 
   private def parseOgg(b: Array[Byte]): Option[Meta] = {
@@ -742,17 +728,6 @@ object MediaParser {
   private def matches(b: Array[Byte], off: Int, vals: Int*): Boolean =
     off + vals.length <= b.length &&
       vals.zipWithIndex.forall { case (v, i) => (b(off + i) & 0xff) == (v & 0xff) }
-
-  private def be32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-  private def be16(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
 
   /** PNG IHDR: always the first chunk — width/height big-endian at 16/20.
     * tEXt chunks (keyword NUL value, latin-1) surface as `png:*` tags.
@@ -1177,8 +1152,7 @@ object MediaParser {
         if (v22) ((b(p + 3) & 0xff) << 16) | ((b(p + 4) & 0xff) << 8) | (b(p + 5) & 0xff)
         else if (ver >= 4) ((b(p + 4) & 0x7f) << 21) | ((b(p + 5) & 0x7f) << 14) |
           ((b(p + 6) & 0x7f) << 7) | (b(p + 7) & 0x7f)
-        else ((b(p + 4) & 0xff) << 24) | ((b(p + 5) & 0xff) << 16) |
-          ((b(p + 6) & 0xff) << 8) | (b(p + 7) & 0xff)
+        else beInt(b, p + 4)
       if (size <= 0 || p + hdrLen + size > end) return out.result()
       if (id == want) {
         var q = p + hdrLen
@@ -1244,8 +1218,7 @@ object MediaParser {
         if (v22) ((b(p + 3) & 0xff) << 16) | ((b(p + 4) & 0xff) << 8) | (b(p + 5) & 0xff)
         else if (ver >= 4) ((b(p + 4) & 0x7f) << 21) | ((b(p + 5) & 0x7f) << 14) |
           ((b(p + 6) & 0x7f) << 7) | (b(p + 7) & 0x7f)
-        else ((b(p + 4) & 0xff) << 24) | ((b(p + 5) & 0xff) << 16) |
-          ((b(p + 6) & 0xff) << 8) | (b(p + 7) & 0xff)
+        else beInt(b, p + 4)
       if (size <= 0 || p + hdrLen + size > end) return out.toMap
       names.get(id).foreach { key =>
         if (!out.contains(key)) {
@@ -1313,14 +1286,14 @@ object MediaParser {
     if (off + 4 > b.length) return None
     val r = new BitReaderLsb(b, off)
     // U32(): 2-bit selector, then the chosen distribution Bits(d)+1
-    def u32(d0: Int, d1: Int, d2: Int, d3: Int): Int = r.u(2) match {
+    def u32Dist(d0: Int, d1: Int, d2: Int, d3: Int): Int = r.u(2) match {
       case 0 => r.u(d0) + 1
       case 1 => r.u(d1) + 1
       case 2 => r.u(d2) + 1
       case _ => r.u(d3) + 1
     }
     val small = r.u(1)
-    val ysize = if (small == 1) 8 * (r.u(5) + 1) else u32(9, 13, 18, 30)
+    val ysize = if (small == 1) 8 * (r.u(5) + 1) else u32Dist(9, 13, 18, 30)
     val ratio = r.u(3)
     val xsize =
       if (ratio != 0) {
@@ -1335,7 +1308,7 @@ object MediaParser {
         }
         (ysize.toLong * num / den).toInt
       } else if (small == 1) 8 * (r.u(5) + 1)
-      else u32(9, 13, 18, 30)
+      else u32Dist(9, 13, 18, 30)
     if (xsize <= 0 || ysize <= 0) None
     else Some(Meta("image/jxl", "image", width = xsize, height = ysize))
   }
@@ -1386,9 +1359,6 @@ object MediaParser {
   /** MP4/ISOBMFF: box walk — mvhd gives timescale+duration, the first
     * video tkhd gives width/height (16.16 fixed point).
     */
-  private def be64(b: Array[Byte], o: Int): Long =
-    (be32(b, o) << 32) | be32(b, o + 4)
-
   private def parseMp4(b: Array[Byte]): Option[Meta] = {
     var durMs = 0L
     var w, h = 0

@@ -1,6 +1,7 @@
 package graft.media
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian.{le16, le32, leInt}
 
 /** Windows metafile (EMF / WMF) text extraction.
   *
@@ -32,7 +33,7 @@ object MetafileExtractor {
   def emf(bytes: Array[Byte], sink: SpanSink, meta: MetaSink,
       child: (String, Array[Byte]) => Unit): Unit = {
     // header record must lead: type 1 (EMR_HEADER), " EMF" sig at 40
-    if (bytes.length < 48 || le32(bytes, 0) != 1) return
+    if (bytes.length < 48 || leInt(bytes, 0) != 1) return
     var p = 0
     val buffer = new StringBuilder
     // lastRect = (minX, minY, maxX); y < 0 marks unset
@@ -49,8 +50,8 @@ object MetafileExtractor {
 
     while (p + 8 <= bytes.length && records < 500000) {
       records += 1
-      val recType = le32(bytes, p)
-      val size = le32(bytes, p + 4)
+      val recType = leInt(bytes, p)
+      val size = leInt(bytes, p + 4)
       if (size < 8 || size % 4 != 0 || p + size > bytes.length ||
           recType < 1 || recType > 125) {
         p = bytes.length // malformed tail: keep what we have
@@ -60,19 +61,19 @@ object MetafileExtractor {
           case EmrExtTextOutW | EmrExtTextOutA if size >= 76 =>
             val wide = recType == EmrExtTextOutW
             // Bounds, else the EmrText rectangle when Bounds is 0,0,0,0
-            var l = s32(bytes, p + 8); var t = s32(bytes, p + 12)
-            var r = s32(bytes, p + 16); var b = s32(bytes, p + 20)
+            var l = leInt(bytes, p + 8); var t = leInt(bytes, p + 12)
+            var r = leInt(bytes, p + 16); var b = leInt(bytes, p + 20)
             if (l == 0 && t == 0 && r == 0 && b == 0) {
-              l = s32(bytes, p + 56); t = s32(bytes, p + 60)
-              r = s32(bytes, p + 64); b = s32(bytes, p + 68)
+              l = leInt(bytes, p + 56); t = leInt(bytes, p + 60)
+              r = leInt(bytes, p + 64); b = leInt(bytes, p + 68)
             }
             val minX = math.min(l, r).toDouble
             val minY = math.min(t, b).toDouble
             val maxX = math.max(l, r).toDouble
             // Long math: nChars/offString are attacker-controlled u32s
             // and must not wrap the bounds checks
-            val nChars = le32u(bytes, p + 44)
-            val offString = le32u(bytes, p + 48)
+            val nChars = le32(bytes, p + 44)
+            val offString = le32(bytes, p + 48)
             val byteLen = if (wide) nChars * 2 else nChars
             if (nChars > 0 && byteLen <= 4L * 1024 * 1024 &&
                 p + offString + byteLen <= bytes.length) {
@@ -86,12 +87,12 @@ object MetafileExtractor {
               lastMinX = minX; lastMinY = minY; lastMaxX = maxX
             }
           case EmrComment if size >= 16 =>
-            val dataSize = le32(bytes, p + 8)
+            val dataSize = leInt(bytes, p + 8)
             val dataOff = p + 12
             val avail = math.min(dataSize, bytes.length - dataOff)
             if (avail >= 4 && bytes(dataOff) == 'G' && bytes(dataOff + 1) == 'D' &&
                 bytes(dataOff + 2) == 'I' && bytes(dataOff + 3) == 'C') {
-              val pubId = le32u(bytes, dataOff + 4)
+              val pubId = le32(bytes, dataOff + 4)
               if (pubId == 0x80000001L) {
                 // EMR_COMMENT_WINDOWS_METAFILE: locate the WMF payload by
                 // its own magic inside the comment data
@@ -109,12 +110,12 @@ object MetafileExtractor {
               } else if (pubId == 0x40000004L && avail >= 28) {
                 // EMR_COMMENT_MULTIFORMATS: CountFormats EmrFormat entries
                 // {Signature, Version, SizeData, offData(from GDIC)}
-                val count = le32(bytes, dataOff + 24)
+                val count = leInt(bytes, dataOff + 24)
                 var i = 0
                 var fp = dataOff + 28
                 while (i < math.min(count, 64) && fp + 16 <= dataOff + avail) {
-                  val sizeData = le32u(bytes, fp + 8)
-                  val offData = le32u(bytes, fp + 12)
+                  val sizeData = le32(bytes, fp + 8)
+                  val offData = le32(bytes, fp + 12)
                   if (sizeData > 0 && offData + sizeData <= avail.toLong) {
                     children += 1
                     child(s"comment-$children",
@@ -155,7 +156,7 @@ object MetafileExtractor {
     val sb = new StringBuilder
     var i = 0
     while (i < maxChars) {
-      val c = ((b(off + 2 * i) & 0xff) | ((b(off + 2 * i + 1) & 0xff) << 8)).toChar
+      val c = le16(b, off + 2 * i).toChar
       if (c == '\u0000') return sb.toString
       sb.append(c)
       i += 1
@@ -181,7 +182,7 @@ object MetafileExtractor {
     var records = 0
     while (p + 6 <= bytes.length && records < 500000) {
       records += 1
-      val sizeWords = le32u(bytes, p)
+      val sizeWords = le32(bytes, p)
       val fn = le16(bytes, p + 4)
       val sizeBytes = sizeWords * 2
       if (fn == 0 || sizeWords < 3 || p + sizeBytes > bytes.length) {
@@ -235,14 +236,4 @@ object MetafileExtractor {
     catch { case _: Exception =>
       java.nio.charset.Charset.forName("windows-1252") }
   }
-
-  // ------------------------------------------------------------- shared
-
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-    ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-  private def le32u(b: Array[Byte], i: Int): Long = le32(b, i) & 0xffffffffL
-  private def s32(b: Array[Byte], i: Int): Int = le32(b, i)
 }

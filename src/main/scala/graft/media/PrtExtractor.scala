@@ -1,6 +1,7 @@
 package graft.media
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian
 
 /** CADKEY PRT drawing text extraction.
   *
@@ -53,50 +54,48 @@ object PrtExtractor {
     def record(v: Int): Unit = { last5(pos) = v.toByte; pos = (pos + 1) % 5 }
     def allAre(v: Byte): Boolean = last5.forall(_ == v)
 
-    var p = 542
-    def u8(): Int = { val v = b(p) & 0xff; p += 1; v }
-    def u16le(): Int = { val v = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8); p += 2; v }
+    val c = new Endian.Cursor(b, 542)
 
     def emitText(len: Int): Unit = {
-      if (p + len <= b.length && len > 0 && b(p + len - 1) == 0) {
-        sink.chars(text(p, len, trim = false))
+      if (c.pos + len <= b.length && len > 0 && b(c.pos + len - 1) == 0) {
+        sink.chars(text(c.pos, len, trim = false))
         sink.newline()
       }
-      p += len
+      c.pos += len
     }
 
-    while (p < b.length) {
-      val read = u8()
+    while (c.pos < b.length) {
+      val read = c.u8()
       if (read == 0xe0 || read == 0xe3 || read == 0xf0) {
-        if (p >= b.length) return
-        val nread = u8()
+        if (c.pos >= b.length) return
+        val nread = c.u8()
         if (nread == 0x3f || nread == 0xbf) {
           if (read == 0xe3 && nread == 0x3f) {
             if (allAre(0x33)) { // note text: 10 low nibbles, 0x1f, u16 len
               var ok = true
               var i = 0
-              while (ok && i < 10 && p < b.length) {
-                val v = u8(); if (v > 0x0f) ok = false
+              while (ok && i < 10 && c.pos < b.length) {
+                val v = c.u8(); if (v > 0x0f) ok = false
                 i += 1
               }
-              if (ok && p < b.length && u8() == 0x1f && p + 2 <= b.length) {
-                val len = u16le()
+              if (ok && c.pos < b.length && c.u8() == 0x1f && c.pos + 2 <= b.length) {
+                val len = c.le16()
                 if (len <= MaxTextLength) emitText(len)
               }
             }
           } else if (allAre(0x00)) { // view name
-            if (p + 2 > b.length) return
-            val maybeLen = u16le()
+            if (c.pos + 2 > b.length) return
+            val maybeLen = c.le16()
             if (maybeLen == 0) {
               var ok = true
               var i = 0
-              while (ok && i < 6 && p < b.length) {
-                val v = u8(); if (v > 0x0f) ok = false
+              while (ok && i < 6 && c.pos < b.length) {
+                val v = c.u8(); if (v > 0x0f) ok = false
                 i += 1
               }
-              if (ok && p + 2 <= b.length) {
-                val b0 = b(p); val b1 = b(p + 1)
-                val len = u16le()
+              if (ok && c.pos + 2 <= b.length) {
+                val b0 = b(c.pos); val b1 = b(c.pos + 1)
+                val len = c.le16()
                 if (len > 1 && len <= MaxTextLength) emitText(len)
                 else { record(b0); record(b1) }
               }

@@ -255,7 +255,7 @@ object MbCharsets {
         if (ch > 0x7f) {
           val b = String.valueOf(ch).getBytes(cs)
           if (b.length == 2)
-            set.add(((b(0) & 0xff) << 8) | (b(1) & 0xff))
+            set.add(graft.core.Endian.be16(b, 0))
           else if (b.length == 1 && (b(0) & 0xff) > 0x7f)
             set.add(b(0) & 0xff)
         }

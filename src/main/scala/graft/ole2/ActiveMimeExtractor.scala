@@ -18,9 +18,7 @@ object ActiveMimeExtractor {
   def extract(bytes: Array[Byte], meta: graft.engine.MetaSink,
       child: (String, Array[Byte]) => Unit): Unit = {
     require(bytes.length > 46, "activemime too short")
-    def u32(o: Int): Long = (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-      ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
-    val zlibOffset = u32(30)
+    val zlibOffset = graft.core.Endian.le32(bytes, 30)
     val start = 46L + zlibOffset
     require(start < bytes.length, "zlib offset past end")
 

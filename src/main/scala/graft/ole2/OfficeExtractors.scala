@@ -3,6 +3,7 @@ package graft.ole2
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.{Charset, StandardCharsets}
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian
 
 /** Legacy binary Office text extraction over [[Cfb]] containers.
   *
@@ -361,8 +362,8 @@ object XlsExtractor {
     var p = 0
     var bofs = 0
     while (p + 4 <= wb.length && bofs < 2) {
-      val id = (wb(p) & 0xff) | ((wb(p + 1) & 0xff) << 8)
-      val len = (wb(p + 2) & 0xff) | ((wb(p + 3) & 0xff) << 8)
+      val id = Endian.le16(wb, p)
+      val len = Endian.le16(wb, p + 2)
       if (id == 0x002f) return true
       if (id == 0x0809) bofs += 1
       p += 4 + len

@@ -1,5 +1,7 @@
 package graft.ole2
 
+import graft.core.Endian.{le16, le32}
+
 /** Embedded-object carrier unwrapping shared by the RTF `\objdata`
   * path and the bare-CFB recursion path.
   *
@@ -36,12 +38,9 @@ object OleEmbedded {
     */
   def parseOle10Native(b: Array[Byte]): Option[(Option[String], Array[Byte])] = {
     if (b.length < 8) return None
-    def u16(o: Int) = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-    def u32(o: Int) = (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-    val total = u32(0)
+    val total = le32(b, 0)
     if (total < 4 || total > b.length.toLong) return None
-    val flags1 = u16(4)
+    val flags1 = le16(b, 4)
     if (flags1 == 2) {
       var p = 6
       def asciiz(): Option[String] = {
@@ -60,11 +59,11 @@ object OleEmbedded {
       if (fileName.isEmpty) return None
       p += 4 // flags2 + pad
       if (p + 4 > b.length) return None
-      val cmdLen = u32(p); p += 4
+      val cmdLen = le32(b, p); p += 4
       if (cmdLen < 0 || p + cmdLen > b.length) return None
       p += cmdLen.toInt
       if (p + 4 > b.length) return None
-      val dataSize = u32(p); p += 4
+      val dataSize = le32(b, p); p += 4
       if (dataSize <= 0 || p + dataSize > b.length) return None
       val data = java.util.Arrays.copyOfRange(b, p, p + dataSize.toInt)
       Some((fileName.orElse(label).map(baseName), data))

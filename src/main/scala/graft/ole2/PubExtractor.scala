@@ -1,6 +1,7 @@
 package graft.ole2
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian.le32
 
 /** Microsoft Publisher (.pub) text extraction.
   *
@@ -41,8 +42,8 @@ object PubExtractor {
           contents(off) == 0x18 && contents(off + 1) == 0x00) {
         val bitType = new String(contents, off + 12, 4,
           java.nio.charset.StandardCharsets.ISO_8859_1)
-        val from = u32(contents, off + 16)
-        val len = u32(contents, off + 20)
+        val from = le32(contents, off + 16)
+        val len = le32(contents, off + 20)
         if (bitType == "TEXT" && from >= 0 && len >= 0 &&
             from + len <= contents.length) {
           val text = new String(contents, from.toInt, len.toInt - (len.toInt & 1),
@@ -58,8 +59,4 @@ object PubExtractor {
     }
     if (!emitted) sink.newline()
   }
-
-  private def u32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
 }

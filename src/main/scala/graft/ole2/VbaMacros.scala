@@ -1,5 +1,7 @@
 package graft.ole2
 
+import graft.core.Endian
+
 /** VBA macro source extraction from Office CFB containers.
   *
   * Reference behavior: OfficeParser.extractMacros
@@ -52,38 +54,28 @@ object VbaMacros {
         .getOrElse(java.nio.charset.Charset.forName("windows-1252"))
     }
 
-    var p = 0
-    def u16(): Int = {
-      val v = (dir(p) & 0xff) | ((dir(p + 1) & 0xff) << 8); p += 2; v
-    }
-    def u32(): Long = {
-      val v = (dir(p) & 0xffL) | ((dir(p + 1) & 0xffL) << 8) |
-        ((dir(p + 2) & 0xffL) << 16) | ((dir(p + 3) & 0xffL) << 24)
-      p += 4; v
-    }
-
-    while (p + 6 <= dir.length) {
-      val id = u16()
+    val c = new Endian.Cursor(dir)
+    while (c.pos + 6 <= dir.length) {
+      val id = c.le16()
       if (id == 0x0009) {
         // PROJECTVERSION: fixed-size record whose Size field (4) does
         // not cover VersionMajor(4) + VersionMinor(2) — MS-OVBA §2.3.4.2.1.6
-        p += 4 + 4 + 2
+        c.pos += 4 + 4 + 2
       } else {
-        val size = u32()
-        if (size < 0 || p + size > dir.length) p = dir.length
+        val size = c.le32()
+        if (size < 0 || c.pos + size > dir.length) c.pos = dir.length
         else {
-          val data = java.util.Arrays.copyOfRange(dir, p, p + size.toInt)
-          p += size.toInt
+          val data = java.util.Arrays.copyOfRange(dir, c.pos, c.pos + size.toInt)
+          c.pos += size.toInt
           id match {
             case 0x0003 if data.length >= 2 => // PROJECTCODEPAGE
-              codepage = (data(0) & 0xff) | ((data(1) & 0xff) << 8)
+              codepage = Endian.le16(data, 0)
             case 0x0019 => // MODULENAME (MBCS)
               moduleName = new String(data, charset)
             case 0x001A => // MODULESTREAMNAME (MBCS; 0x0032 unicode follows)
               streamName = new String(data, charset)
             case 0x0031 if data.length >= 4 => // MODULEOFFSET
-              moduleOffset = (data(0) & 0xffL) | ((data(1) & 0xffL) << 8) |
-                ((data(2) & 0xffL) << 16) | ((data(3) & 0xffL) << 24)
+              moduleOffset = Endian.le32(data, 0)
             case 0x002B => // MODULETERMINATOR: materialize the module
               val sn = if (streamName != null) streamName else moduleName
               if (sn != null) {
@@ -128,7 +120,7 @@ object VbaMacros {
     var pos = offset + 1
     while (pos + 2 <= data.length) {
       if (out.size > MaxOutput) throw new IllegalStateException("vba output cap")
-      val header = (data(pos) & 0xff) | ((data(pos + 1) & 0xff) << 8)
+      val header = Endian.le16(data, pos)
       pos += 2
       val chunkDataLen = (header & 0x0fff) + 3 - 2 // size field covers the header
       val compressed = (header & 0x8000) != 0
@@ -143,7 +135,7 @@ object VbaMacros {
           while (bit < 8 && pos < chunkEnd && cLen < 4096) {
             if ((flags & (1 << bit)) == 0) { chunk(cLen) = data(pos); cLen += 1; pos += 1 }
             else if (pos + 2 <= chunkEnd) {
-              val token = (data(pos) & 0xff) | ((data(pos + 1) & 0xff) << 8)
+              val token = Endian.le16(data, pos)
               pos += 2
               var bitCount = 4
               while ((1 << bitCount) < cLen) bitCount += 1

@@ -1,6 +1,7 @@
 package graft.ole2
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian.{le16, le32}
 
 /** Legacy binary Visio (.vsd) text extraction.
   *
@@ -42,12 +43,6 @@ object VsdExtractor {
     val visited = scala.collection.mutable.Set[(Long, Long)]()
     var budget = MaxOut
 
-    def u32(b: Array[Byte], off: Int): Long =
-      (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-        ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-    def u16(b: Array[Byte], off: Int): Int =
-      (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-
     /** Follow one pointer: decompress, recurse into pointer tables,
       * scan chunk-format streams for text.
       */
@@ -69,18 +64,18 @@ object VsdExtractor {
         java.util.Arrays.copyOfRange(data, 4, data.length) else data
       var isPointerStream = false
       if (body.length >= 8) {
-        val po = u32(body, 0)
+        val po = le32(body, 0)
         if (po >= 4 && po + 8 <= body.length) {
-          val n = u32(body, po.toInt)
+          val n = le32(body, po.toInt)
           if (n > 0 && n < 10000 && po + 8 + n * 18 <= body.length + 18) {
             isPointerStream = true
             var i = 0
             while (i < n) {
               val base = (po + 8 + i * 18).toInt
               if (base + 18 <= body.length) {
-                val cOff = u32(body, base + 8)
-                val cLen = u32(body, base + 12)
-                val cFmt = u16(body, base + 16)
+                val cOff = le32(body, base + 8)
+                val cLen = le32(body, base + 12)
+                val cFmt = le16(body, base + 16)
                 follow(cOff, cLen, cFmt, depth + 1)
               }
               i += 1
@@ -92,9 +87,9 @@ object VsdExtractor {
         scanTextChunks(data, version, sink) // full data incl. block header
     }
 
-    val tOff = u32(vd, 0x2c)
-    val tLen = u32(vd, 0x30)
-    val tFmt = u16(vd, 0x34)
+    val tOff = le32(vd, 0x2c)
+    val tLen = le32(vd, 0x30)
+    val tFmt = le16(vd, 0x34)
     follow(tOff, tLen, tFmt, 0)
   }
 
@@ -105,15 +100,12 @@ object VsdExtractor {
     */
   private def scanTextChunks(data: Array[Byte], version: Int,
       sink: SpanSink): Unit = {
-    def u32(off: Int): Long =
-      (data(off) & 0xffL) | ((data(off + 1) & 0xffL) << 8) |
-        ((data(off + 2) & 0xffL) << 16) | ((data(off + 3) & 0xffL) << 24)
     var p = 0
     while (p + 19 + 8 <= data.length) {
       if (data(p) == 0x0e && data(p + 1) == 0 && data(p + 2) == 0 &&
           data(p + 3) == 0) {
-        val len = u32(p + 12)
-        val lvl = (data(p + 16) & 0xff) | ((data(p + 17) & 0xff) << 8)
+        val len = le32(data, p + 12)
+        val lvl = le16(data, p + 16)
         val ok = len >= 8 && len <= data.length - p - 19 && lvl < 32 &&
           (version < 11 || (len - 8) % 2 == 0)
         if (ok) {

@@ -1,6 +1,7 @@
 package graft.ole2
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian
 
 /** Microsoft Works word-processor (.wps) text — beyond reference
   * parity (the reference's OfficeParser lists WORKS as an excluded
@@ -35,13 +36,8 @@ object WpsExtractor {
   }
 
   private def extractMn0(d: Array[Byte], sink: SpanSink): Unit = {
-    def u32(o: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < 4) { v |= (d(o + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
-    var from = u32(0x22)
-    var to = u32(0x26)
+    var from = Endian.le32(d, 0x22)
+    var to = Endian.le32(d, 0x26)
     if (from < 0x100 || from >= d.length || to <= from) { from = 0x100; to = d.length }
     if (to > d.length) to = d.length
     val cp1252 =

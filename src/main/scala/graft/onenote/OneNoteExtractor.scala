@@ -2,6 +2,7 @@ package graft.onenote
 
 import scala.collection.mutable
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian.{le16, le32, le64}
 
 /** OneNote (.one / .onetoc2) text extraction — a from-scratch MS-ONESTORE
   * revision-store reader (public specs MS-ONESTORE / MS-ONE: 1024-byte
@@ -74,21 +75,6 @@ object OneNoteExtractor {
     }
     meta.set("onenote:format", "onestore")
     new Walker(bytes, sink, meta).run()
-  }
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], o: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 4) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
-  }
-  private def le64(b: Array[Byte], o: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 8) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
   }
 
   private final class Walker(bytes: Array[Byte], sink: SpanSink, meta: MetaSink) {

@@ -2,6 +2,7 @@ package graft.ooxml
 
 import graft.engine.{MetaSink, SpanSink}
 import graft.zipx.ZipUtil
+import graft.core.Endian
 
 /** XLSB (Excel binary workbook) text extraction.
   *
@@ -112,29 +113,13 @@ object XlsbExtractor {
   }
 
   /** Little-endian cursor over one record body. */
-  private final class Reader(data: Array[Byte]) {
-    var pos = 0
+  private final class Reader(data: Array[Byte]) extends Endian.Cursor(data) {
     def remaining: Int = data.length - pos
     def skip(n: Int): Unit = pos += n
-    def u8(): Int = { val v = data(pos) & 0xff; pos += 1; v }
-    def u16(): Int = {
-      val v = (data(pos) & 0xff) | ((data(pos + 1) & 0xff) << 8); pos += 2; v
-    }
-    def u32(): Long = {
-      val v = (data(pos) & 0xffL) | ((data(pos + 1) & 0xffL) << 8) |
-        ((data(pos + 2) & 0xffL) << 16) | ((data(pos + 3) & 0xffL) << 24)
-      pos += 4; v
-    }
-    def f64(): Double = {
-      var bits = 0L
-      var i = 7
-      while (i >= 0) { bits = (bits << 8) | (data(pos + i) & 0xffL); i -= 1 }
-      pos += 8
-      java.lang.Double.longBitsToDouble(bits)
-    }
+    def f64(): Double = java.lang.Double.longBitsToDouble(le64())
     /** XLWideString: cch (u32) + cch UTF-16LE code units. */
     def wideString(): String = {
-      val cch = u32()
+      val cch = le32()
       if (cch < 0 || cch > remaining / 2) return ""
       val s = new String(data, pos, cch.toInt * 2,
         java.nio.charset.StandardCharsets.UTF_16LE)
@@ -143,7 +128,7 @@ object XlsbExtractor {
     }
     /** XLNullableWideString: cch == 0xFFFFFFFF means absent. */
     def nullableWideString(): Option[String] = {
-      val cch = u32()
+      val cch = le32()
       if (cch == 0xffffffffL) None
       else {
         if (cch < 0 || cch > remaining / 2) return Some("")
@@ -187,14 +172,14 @@ object XlsbExtractor {
       if (data.length >= hdr + 8) {
         val r = new Reader(data)
         r.skip(hdr)
-        val cch = r.u32()
+        val cch = r.le32()
         val okRel = cch != 0xffffffffL && cch >= 0 && cch <= 255 &&
           cch * 2 <= r.remaining - 4
         if (okRel) {
           val relId = new String(data, r.pos, cch.toInt * 2,
             java.nio.charset.StandardCharsets.UTF_16LE)
           r.skip(cch.toInt * 2)
-          val nch = r.u32()
+          val nch = r.le32()
           if (nch >= 0 && nch <= 255 && nch * 2 <= r.remaining &&
               relId.forall(c => c >= 0x20 && c < 0x7f)) {
             val name = new String(data, r.pos, nch.toInt * 2,
@@ -241,14 +226,14 @@ object XlsbExtractor {
         id match {
           case BrtFmt if data.length >= 6 =>
             val r = new Reader(data)
-            val ifmt = r.u16()
+            val ifmt = r.le16()
             custom += ifmt -> r.wideString()
           case BrtBeginCellXFs => inCellXfs = true
           case BrtEndCellXFs => inCellXfs = false
           case BrtXF if inCellXfs && data.length >= 4 =>
             val r = new Reader(data)
             r.skip(2) // ixfeParent
-            xfs += r.u16() // iFmt
+            xfs += r.le16() // iFmt
           case _ => ()
         }
         true
@@ -311,11 +296,11 @@ object XlsbExtractor {
             BrtFmlaBool | BrtFmlaError if data.length >= 8 =>
           val r = new Reader(data)
           r.skip(4) // column
-          val styleRef = (r.u32() & 0xffffffL).toInt // 24-bit iStyleRef + grbit
+          val styleRef = (r.le32() & 0xffffffL).toInt // 24-bit iStyleRef + grbit
           id match {
             case BrtCellRk =>
               cell(XlsxNumFormat.format(
-                XlsxNumFormat.general(rkValue(r.u32())), fmtCode(styleRef)))
+                XlsxNumFormat.general(rkValue(r.le32())), fmtCode(styleRef)))
             case BrtCellReal | BrtFmlaNum =>
               cell(XlsxNumFormat.format(r.f64().toString, fmtCode(styleRef)))
             case BrtCellBool | BrtFmlaBool =>
@@ -325,7 +310,7 @@ object XlsbExtractor {
             case BrtCellSt | BrtFmlaString =>
               cell(r.wideString())
             case BrtCellIsst =>
-              val isst = r.u32().toInt
+              val isst = r.le32().toInt
               cell(shared.lift(isst).getOrElse(""))
             case _ => ()
           }

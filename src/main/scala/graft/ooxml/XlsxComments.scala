@@ -4,6 +4,7 @@ import org.xml.sax.Attributes
 import org.xml.sax.helpers.DefaultHandler
 import graft.engine.SpanSink
 import graft.xmlx.NsSax
+import graft.core.Endian.leInt
 
 /** Cell comments for XLSX (xl/comments*.xml) and XLSB (comments*.bin),
   * rendered after the sheet table as "author: text" paragraphs — the
@@ -29,12 +30,9 @@ object XlsxComments {
     var row = -1
     var col = -1
     val out = Vector.newBuilder[(Int, Int, String, String)]
-    def u32(b: Array[Byte], off: Int): Int =
-      (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-        ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
     def wide(b: Array[Byte], off: Int): String = {
       if (off + 4 > b.length) return ""
-      val cch = u32(b, off)
+      val cch = leInt(b, off)
       if (cch < 0 || off + 4 + cch * 2 > b.length) return ""
       new String(b, off + 4, cch * 2, java.nio.charset.StandardCharsets.UTF_16LE)
     }
@@ -42,7 +40,7 @@ object XlsxComments {
       id match {
         case 632 => authors += wide(d, 0)
         case 635 if d.length >= 16 =>
-          authorId = u32(d, 0); row = u32(d, 4); col = u32(d, 12)
+          authorId = leInt(d, 0); row = leInt(d, 4); col = leInt(d, 12)
         case 637 if d.length >= 5 =>
           val text = wide(d, 1) // RichStr: flags byte then XLWideString
           val author =

@@ -1,6 +1,7 @@
 package graft.pdf
 
 import java.security.MessageDigest
+import graft.core.Endian
 
 /** PDF standard security handler — the empty-user-password decrypt
   * path the reference applies by default (tika-parsers
@@ -54,14 +55,10 @@ object PdfCrypto {
     if (pwd.length >= 32) java.util.Arrays.copyOf(pwd, 32)
     else pwd ++ java.util.Arrays.copyOf(Pad, 32 - pwd.length)
 
-  private def le32(v: Long): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-
   /** Algorithm 2: file encryption key from the (empty) user password. */
   def fileKey(o: Array[Byte], p: Long, id0: Array[Byte], r: Int,
       keyLen: Int, pwd: Array[Byte] = Array.emptyByteArray): Array[Byte] = {
-    var h = md5(padded(pwd), o, le32(p), id0)
+    var h = md5(padded(pwd), o, Endian.le32Bytes(p), id0)
     if (r >= 3) {
       var i = 0
       while (i < 50) { h = md5(java.util.Arrays.copyOf(h, keyLen)); i += 1 }

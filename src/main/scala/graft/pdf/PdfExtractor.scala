@@ -1,6 +1,7 @@
 package graft.pdf
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian
 
 /** Standard-14 Helvetica advance widths (1/1000 em), codes 32..126.
   * Public Adobe Core14 AFM data — needed for the word-separator heuristic.
@@ -378,7 +379,7 @@ object PdfExtractor {
         val b = new StringBuilder(s.length / 2 + 1)
         var i = 0
         while (i + 1 < s.length) {
-          b.append(decode(((s(i) & 0xff) << 8) | (s(i + 1) & 0xff)))
+          b.append(decode(Endian.be16(s, i)))
           i += 2
         }
         b.toString
@@ -394,7 +395,7 @@ object PdfExtractor {
       if (twoByte) {
         val out = new Array[Int](s.length / 2)
         var i = 0
-        while (i + 1 < s.length) { out(i / 2) = ((s(i) & 0xff) << 8) | (s(i + 1) & 0xff); i += 2 }
+        while (i + 1 < s.length) { out(i / 2) = Endian.be16(s, i); i += 2 }
         out
       } else {
         val out = new Array[Int](s.length)

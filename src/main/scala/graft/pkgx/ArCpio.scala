@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.Endian.le16
+
 /** Unix `ar` and `cpio` archive readers — pure JDK, from the public
   * formats (classic common `ar` with GNU `//` long-name table and BSD
   * `#1/N` inline names; cpio in old-binary 070707, portable-ASCII odc and
@@ -163,12 +165,11 @@ object ArCpio {
     } else {
       // old binary: 26-byte header of little-endian shorts, 2-byte align
       need(26)
-      def le16(o: Int): Int = (b(off + o) & 0xff) | ((b(off + o + 1) & 0xff) << 8)
-      if (le16(0) != 0x71c7) throw new ArchiveMalformed("bad binary cpio magic")
-      val mode = le16(6)
-      val nameSize = le16(20)
+      if (le16(b, off) != 0x71c7) throw new ArchiveMalformed("bad binary cpio magic")
+      val mode = le16(b, off + 6)
+      val nameSize = le16(b, off + 20)
       // 32-bit values are stored high-half first as two 16-bit words
-      val size = (le16(22).toLong << 16) | le16(24).toLong
+      val size = (le16(b, off + 22).toLong << 16) | le16(b, off + 24).toLong
       if (nameSize <= 0 || nameSize > 65536)
         throw new ArchiveMalformed("bad cpio name size")
       need(26 + nameSize)

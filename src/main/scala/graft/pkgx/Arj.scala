@@ -1,6 +1,7 @@
 package graft.pkgx
 
 import java.nio.charset.StandardCharsets
+import graft.core.Endian.{le16, le32}
 
 /** ARJ archive walk (stored-method entries only).
   *
@@ -20,11 +21,6 @@ object Arj {
 
   final case class Entry(name: String, data: Option[Array[Byte]],
       method: Int, originalSize: Long)
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], o: Int): Long =
-    (le16(b, o) & 0xffffL) | ((le16(b, o + 2) & 0xffffL) << 16)
 
   def isArj(b: Array[Byte]): Boolean =
     b.length > 4 && (b(0) & 0xff) == 0x60 && (b(1) & 0xff) == 0xea

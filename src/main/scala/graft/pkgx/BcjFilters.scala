@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.Endian.{le32, putLe32}
+
 /** Branch-conversion (BCJ) and delta filter decoders shared by the XZ and
   * 7z containers — public algorithms (the x86 call/jump absolute→relative
   * converter and byte-delta filter defined by the xz file format and
@@ -16,17 +18,6 @@ object BcjFilters {
   private val MaskToBitNum = Array(0, 1, 2, 2, 3, 3, 3, 3)
 
   private def testMsByte(b: Int): Boolean = b == 0x00 || b == 0xff
-
-  private def le32(buf: Array[Byte], o: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 4) { v |= (buf(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
-  }
-  private def putLE32(buf: Array[Byte], o: Int, v: Long): Unit = {
-    var i = 0
-    while (i < 4) { buf(o + i) = (v >> (8 * i)).toByte; i += 1 }
-  }
 
   /** In-place x86 BCJ decode of buf[from, from+len); `startIp` is the
     * virtual address of the first byte (0 unless filter props say else).
@@ -72,7 +63,7 @@ object BcjFilters {
             }
             var v = dest & 0x01ffffffL
             if ((v & 0x01000000L) != 0) v |= 0xfe000000L
-            putLE32(buf, from + i + 1, v)
+            putLe32(buf, from + i + 1, v)
             i += 5
           } else {
             prevMask = (prevMask << 1) | 1

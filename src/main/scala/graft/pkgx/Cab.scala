@@ -2,6 +2,7 @@ package graft.pkgx
 
 import java.util.zip.Inflater
 import scala.collection.mutable.ArrayBuffer
+import graft.core.Endian
 
 /** Microsoft Cabinet (.cab) reader — from scratch per the public
   * [MS-CAB] / cabinet SDK format documentation.
@@ -32,16 +33,10 @@ object Cab {
   def isCab(b: Array[Byte]): Boolean =
     b.length >= 36 && b(0) == 'M' && b(1) == 'S' && b(2) == 'C' && b(3) == 'F'
 
-  private def le16(b: Array[Byte], o: Int): Int = {
-    if (o < 0 || o + 2 > b.length) throw new CabMalformed("short read")
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  }
-  private def le32(b: Array[Byte], o: Int): Long = {
-    if (o < 0 || o + 4 > b.length) throw new CabMalformed("short read")
-    var v = 0L; var i = 0
-    while (i < 4) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
-  }
+  private def need(b: Array[Byte], o: Int, n: Int): Unit =
+    if (o < 0 || o + n > b.length) throw new CabMalformed("short read")
+  private def le16(b: Array[Byte], o: Int): Int = { need(b, o, 2); Endian.le16(b, o) }
+  private def le32(b: Array[Byte], o: Int): Long = { need(b, o, 4); Endian.le32(b, o) }
 
   /** CSUMCompute ([MS-CAB] checksum): XOR of little-endian 32-bit words,
     * with a 1-3 byte big-endian-style remainder, seeded. Validated
@@ -60,7 +55,7 @@ object Cab {
     val ro = off + 4 * words
     var ul = 0
     if (rem == 3) ul = ((b(ro) & 0xff) << 16) | ((b(ro + 1) & 0xff) << 8) | (b(ro + 2) & 0xff)
-    else if (rem == 2) ul = ((b(ro) & 0xff) << 8) | (b(ro + 1) & 0xff)
+    else if (rem == 2) ul = Endian.be16(b, ro)
     else if (rem == 1) ul = b(ro) & 0xff
     c ^ ul
   }

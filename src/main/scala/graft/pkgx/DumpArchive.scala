@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.Endian.{le16, le64, leInt, putLe16, putLe32}
+
 /** BSD `dump(8)` backup archives — pure JDK, from the public on-tape
   * format (4.4BSD `protocols/dumprestore.h`: 1024-byte tape records,
   * `struct s_spcl` segment headers, new-inode dirent streams).
@@ -43,19 +45,11 @@ object DumpArchive {
   private val IfDir = 4
   private val IfReg = 8
 
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-  private def le64(b: Array[Byte], o: Int): Long =
-    (le32(b, o).toLong & 0xffffffffL) | (le32(b, o + 4).toLong << 32)
-
   /** `c_magic` at header offset 24 — the detection probe. */
   def isDump(b: Array[Byte]): Boolean =
     b.length >= TpSize && {
-      val m = le32(b, 24)
-      (m == NfsMagic || m == OfsMagic) && le32(b, 0) == TsTape &&
+      val m = leInt(b, 24)
+      (m == NfsMagic || m == OfsMagic) && leInt(b, 0) == TsTape &&
         checksumOk(b, 0)
     }
 
@@ -63,7 +57,7 @@ object DumpArchive {
   private def checksumOk(b: Array[Byte], off: Int): Boolean = {
     var sum = 0
     var i = 0
-    while (i < TpSize) { sum += le32(b, off + i); i += 4 }
+    while (i < TpSize) { sum += leInt(b, off + i); i += 4 }
     sum == CheckSum
   }
 
@@ -88,12 +82,12 @@ object DumpArchive {
   def entries(bytes: Array[Byte], maxEntries: Int = 10000,
       maxTotalBytes: Long = 256L * 1024 * 1024): Vector[Entry] = {
     if (bytes.length < TpSize) throw new DumpMalformed("shorter than one record")
-    val magic = le32(bytes, 24)
+    val magic = leInt(bytes, 24)
     if (magic == OfsMagic) throw new DumpMalformed("old-filesystem dump layout")
     if (magic != NfsMagic) throw new DumpMalformed("bad dump magic")
-    if (le32(bytes, 0) != TsTape) throw new DumpMalformed("first record not TS_TAPE")
+    if (leInt(bytes, 0) != TsTape) throw new DumpMalformed("first record not TS_TAPE")
     if (!checksumOk(bytes, 0)) throw new DumpMalformed("bad TS_TAPE checksum")
-    if ((le32(bytes, 888) & DrCompressed) != 0)
+    if ((leInt(bytes, 888) & DrCompressed) != 0)
       throw new DumpMalformed("compressed dump archive unsupported")
 
     // ino -> children (childIno, name); ino -> file content
@@ -143,10 +137,10 @@ object DumpArchive {
 
     while (!done && off + TpSize <= bytes.length) {
       if (!checksumOk(bytes, off)) throw new DumpMalformed("bad segment checksum")
-      if (le32(bytes, off + 24) != NfsMagic)
+      if (leInt(bytes, off + 24) != NfsMagic)
         throw new DumpMalformed("bad segment magic")
-      val segType = le32(bytes, off)
-      val count = le32(bytes, off + 160)
+      val segType = leInt(bytes, off)
+      val count = leInt(bytes, off + 160)
       if (count < 0 || count > TpSize - 164)
         throw new DumpMalformed("bad segment record count")
       segType match {
@@ -156,7 +150,7 @@ object DumpArchive {
           off += TpSize * (1 + count)
         case TsInode =>
           val mode = le16(bytes, off + 32)
-          curIno = le32(bytes, off + 20)
+          curIno = leInt(bytes, off + 20)
           curType = (mode >> 12) & 0xf
           curSize = le64(bytes, off + 40)
           if (curSize < 0 || curSize > maxTotalBytes)
@@ -229,7 +223,7 @@ object DumpArchive {
     var off = 0
     var guard = 0
     while (off + 8 <= data.length && guard < 100000) {
-      val ino = le32(data, off)
+      val ino = leInt(data, off)
       val reclen = le16(data, off + 4)
       val namlen = data(off + 7) & 0xff
       if (reclen < 8 || off + reclen > data.length) {
@@ -260,29 +254,22 @@ object DumpArchive {
         count: Int, addr: Array[Byte], extra: Map[Int, Array[Byte]] = Map.empty)
         : Array[Byte] = {
       val h = new Array[Byte](TpSize)
-      def put32(o: Int, v: Int): Unit = {
-        h(o) = v.toByte; h(o + 1) = (v >> 8).toByte
-        h(o + 2) = (v >> 16).toByte; h(o + 3) = (v >> 24).toByte
-      }
-      def put16(o: Int, v: Int): Unit = {
-        h(o) = v.toByte; h(o + 1) = (v >> 8).toByte
-      }
-      put32(0, segType)
-      put32(12, 1)             // c_volume
-      put32(20, ino)
-      put32(24, NfsMagic)
-      put16(32, mode)
-      put16(34, 1)             // nlink
-      put32(40, (size & 0xffffffffL).toInt)
-      put32(44, (size >>> 32).toInt)
-      put32(160, count)
+      putLe32(h, 0, segType)
+      putLe32(h, 12, 1)             // c_volume
+      putLe32(h, 20, ino)
+      putLe32(h, 24, NfsMagic)
+      putLe16(h, 32, mode)
+      putLe16(h, 34, 1)             // nlink
+      putLe32(h, 40, size)
+      putLe32(h, 44, size >>> 32)
+      putLe32(h, 160, count)
       System.arraycopy(addr, 0, h, 164, addr.length)
       extra.foreach { case (o, b) => System.arraycopy(b, 0, h, o, b.length) }
       // checksum: all 256 words must sum to CHECKSUM
       var sum = 0
       var i = 0
-      while (i < TpSize) { sum += le32(h, i); i += 4 }
-      put32(28, CheckSum - sum)
+      while (i < TpSize) { sum += leInt(h, i); i += 4 }
+      putLe32(h, 28, CheckSum - sum)
       h
     }
 

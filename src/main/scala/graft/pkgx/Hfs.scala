@@ -1,6 +1,7 @@
 package graft.pkgx
 
 import scala.collection.mutable.ArrayBuffer
+import graft.core.Endian
 
 /** HFS+ / HFSX volume reader for raw Apple disk images — from scratch
   * per Apple's public TN1150 ("HFS Plus Volume Format").
@@ -30,18 +31,10 @@ object Hfs {
   def isHfs(b: Array[Byte]): Boolean =
     b.length >= 1536 && b(1024) == 'H' && (b(1025) == '+' || b(1025) == 'X')
 
-  private def be32(b: Array[Byte], o: Int): Long = {
-    if (o < 0 || o + 4 > b.length) throw new HfsMalformed("short read")
-    var v = 0L; var i = 0
-    while (i < 4) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-    v
-  }
-  private def be64(b: Array[Byte], o: Int): Long = {
-    if (o < 0 || o + 8 > b.length) throw new HfsMalformed("short read")
-    var v = 0L; var i = 0
-    while (i < 8) { v = (v << 8) | (b(o + i) & 0xffL); i += 1 }
-    v
-  }
+  private def need(b: Array[Byte], o: Int, n: Int, what: String = "short read"): Unit =
+    if (o < 0 || o + n > b.length) throw new HfsMalformed(what)
+  private def be32(b: Array[Byte], o: Int): Long = { need(b, o, 4); Endian.be32(b, o) }
+  private def be64(b: Array[Byte], o: Int): Long = { need(b, o, 8); Endian.be64(b, o) }
 
   /** Parse a raw HFS+/HFSX volume into its catalog files. */
   def entries(bytes: Array[Byte], maxEntries: Int = 10000): Vector[Entry] = {
@@ -83,23 +76,14 @@ object Hfs {
     val catalog = readFork(bytes, vh + 272)
     if (catalog.length < 48) throw new HfsMalformed("catalog too small")
     // B-tree header node (node 0): descriptor(14) + BTHeaderRec
-    val nodeSize = ((catalog(32 + 0) & 0xff) << 8) | (catalog(33) & 0xff)
-    val firstLeaf = ((catalog(24) & 0xffL) << 24) | ((catalog(25) & 0xffL) << 16) |
-      ((catalog(26) & 0xffL) << 8) | (catalog(27) & 0xffL)
+    val nodeSize = Endian.be16(catalog, 32)
+    val firstLeaf = Endian.be32(catalog, 24)
     if (nodeSize < 512 || nodeSize > 32768 || catalog.length % nodeSize != 0)
       throw new HfsMalformed(s"bad catalog node size $nodeSize")
     val nodeCount = catalog.length / nodeSize
 
-    def cbe16(o: Int): Int = {
-      if (o < 0 || o + 2 > catalog.length) throw new HfsMalformed("catalog read")
-      ((catalog(o) & 0xff) << 8) | (catalog(o + 1) & 0xff)
-    }
-    def cbe32(o: Int): Long = {
-      if (o < 0 || o + 4 > catalog.length) throw new HfsMalformed("catalog read")
-      var v = 0L; var i = 0
-      while (i < 4) { v = (v << 8) | (catalog(o + i) & 0xffL); i += 1 }
-      v
-    }
+    def cbe16(o: Int): Int = { need(catalog, o, 2, "catalog read"); Endian.be16(catalog, o) }
+    def cbe32(o: Int): Long = { need(catalog, o, 4, "catalog read"); Endian.be32(catalog, o) }
 
     // walk the leaf chain; visited-set guards crafted fLink cycles
     val folders = scala.collection.mutable.Map[Long, (Long, String)]()

@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.Endian.{le16, le32Bytes, leInt}
+
 /** LZ4 frame codec — pure JDK, from the public LZ4 frame + block
   * specs. The reference routes .lz4 through commons-compress (tika
   * pkg-module CompressorParser.java); this gives the engine .lz4 /
@@ -20,11 +22,7 @@ object Lz4 {
   private val LegacyMagic = 0x184C2102
 
   def isLz4(b: Array[Byte]): Boolean =
-    b.length > 7 && (readLE32(b, 0) == Magic || readLE32(b, 0) == LegacyMagic)
-
-  private def readLE32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
+    b.length > 7 && (leInt(b, 0) == Magic || leInt(b, 0) == LegacyMagic)
 
   // ---- xxHash32 (public algorithm; used by the frame format's checksums)
   private val P1 = 0x9E3779B1
@@ -43,10 +41,10 @@ object Lz4 {
       var v3 = seed
       var v4 = seed - P1
       while (idx <= end - 16) {
-        v1 = Integer.rotateLeft(v1 + readLE32(data, idx) * P2, 13) * P1
-        v2 = Integer.rotateLeft(v2 + readLE32(data, idx + 4) * P2, 13) * P1
-        v3 = Integer.rotateLeft(v3 + readLE32(data, idx + 8) * P2, 13) * P1
-        v4 = Integer.rotateLeft(v4 + readLE32(data, idx + 12) * P2, 13) * P1
+        v1 = Integer.rotateLeft(v1 + leInt(data, idx) * P2, 13) * P1
+        v2 = Integer.rotateLeft(v2 + leInt(data, idx + 4) * P2, 13) * P1
+        v3 = Integer.rotateLeft(v3 + leInt(data, idx + 8) * P2, 13) * P1
+        v4 = Integer.rotateLeft(v4 + leInt(data, idx + 12) * P2, 13) * P1
         idx += 16
       }
       h = Integer.rotateLeft(v1, 1) + Integer.rotateLeft(v2, 7) +
@@ -54,7 +52,7 @@ object Lz4 {
     } else h = seed + P5
     h += len
     while (idx <= end - 4) {
-      h = Integer.rotateLeft(h + readLE32(data, idx) * P3, 17) * P4
+      h = Integer.rotateLeft(h + leInt(data, idx) * P3, 17) * P4
       idx += 4
     }
     while (idx < end) {
@@ -90,7 +88,7 @@ object Lz4 {
       i += litLen
       if (i >= end) return // last sequence has no match part
       if (i + 2 > end) throw new Lz4Malformed("truncated match offset")
-      val offset = (in(i) & 0xff) | ((in(i + 1) & 0xff) << 8)
+      val offset = le16(in, i)
       i += 2
       if (offset == 0) throw new Lz4Malformed("zero match offset")
       var matchLen = (token & 0x0f) + 4
@@ -131,12 +129,12 @@ object Lz4 {
   def decompress(bytes: Array[Byte]): Array[Byte] = {
     if (!isLz4(bytes)) throw new Lz4Malformed("bad lz4 magic")
     val window = new GrowBuf(MaxOutputBytes)
-    if (readLE32(bytes, 0) == LegacyMagic) {
+    if (leInt(bytes, 0) == LegacyMagic) {
       // legacy frame: 4-byte LE block sizes until EOF or another magic
       var pos = 4
       var stop = false
       while (!stop && pos + 4 <= bytes.length) {
-        val size = readLE32(bytes, pos)
+        val size = leInt(bytes, pos)
         if (size == Magic || size == LegacyMagic) stop = true // next frame
         else {
           pos += 4
@@ -167,7 +165,7 @@ object Lz4 {
     var done = false
     while (!done) {
       if (pos + 4 > bytes.length) throw new Lz4Malformed("truncated block size")
-      val raw = readLE32(bytes, pos)
+      val raw = leInt(bytes, pos)
       pos += 4
       if (raw == 0) done = true // EndMark
       else {
@@ -179,7 +177,7 @@ object Lz4 {
         if (uncompressed) window.write(bytes, pos, size)
         else decodeBlock(bytes, pos, size, window)
         if (blockChecksum) {
-          val c = readLE32(bytes, pos + size)
+          val c = leInt(bytes, pos + size)
           if (xxh32(bytes, pos, size, 0) != c)
             throw new Lz4Malformed("block checksum mismatch")
         }
@@ -188,7 +186,7 @@ object Lz4 {
     }
     if (contentChecksum) {
       if (pos + 4 > bytes.length) throw new Lz4Malformed("missing content checksum")
-      if (xxh32(window.buf, 0, window.len, 0) != readLE32(bytes, pos))
+      if (xxh32(window.buf, 0, window.len, 0) != leInt(bytes, pos))
         throw new Lz4Malformed("content checksum mismatch")
     }
     java.util.Arrays.copyOf(window.buf, window.len)
@@ -199,23 +197,19 @@ object Lz4 {
     */
   def compress(data: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def wle32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
-    wle32(Magic)
+    out.write(le32Bytes(Magic))
     val desc = Array[Byte](0x64, 0x40) // v1, independent blocks, content checksum; 64 KB
     out.write(desc(0)); out.write(desc(1))
     out.write((xxh32(desc, 0, 2, 0) >> 8) & 0xff)
     var off = 0
     while (off < data.length) {
       val n = math.min(0xFFFF, data.length - off)
-      wle32(n | 0x80000000)
+      out.write(le32Bytes(n | 0x80000000))
       out.write(data, off, n)
       off += n
     }
-    wle32(0) // EndMark
-    wle32(xxh32(data, 0, data.length, 0))
+    out.write(le32Bytes(0)) // EndMark
+    out.write(le32Bytes(xxh32(data, 0, data.length, 0)))
     out.toByteArray
   }
 }

@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.Endian
+
 /** LZX decoder for ITSS/CHM "LZXC" compressed sections, from the public
   * LZX format specification (Microsoft cabinet SDK / MS-PATCH; the
   * rendition by M. Russotto that libmspack and chmlib implement).
@@ -87,10 +89,8 @@ object Lzx {
 
     def readRawLE32(): Long = {
       if (pos + 4 > data.length) throw new Malformed("raw read past end")
-      var v = 0L; var i = 0
-      while (i < 4) { v |= (data(pos + i) & 0xffL) << (8 * i); i += 1 }
       pos += 4
-      v
+      Endian.le32(data, pos - 4)
     }
 
     def readRaw(dst: Array[Byte], dstOff: Int, n: Int): Unit = {

@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.Endian
+
 /** PPMd variant H ("PPMdH") adaptive context model with a Subbotin
   * carry-less range coder — the statistical codec RAR 3.x selects for
   * text-heavy blocks (stream bit 15 set at table-read time inside a
@@ -190,18 +192,10 @@ final class PpmdH(heapMB: Int, val maxOrder: Int) {
   // --- raw heap accessors (little-endian, unsigned reads) -----------
   @inline private def gb(o: Int): Int = mem(o) & 0xff
   @inline private def sb(o: Int, v: Int): Unit = mem(o) = v.toByte
-  @inline private def gs(o: Int): Int =
-    (mem(o) & 0xff) | ((mem(o + 1) & 0xff) << 8)
-  @inline private def ss(o: Int, v: Int): Unit = {
-    mem(o) = v.toByte; mem(o + 1) = (v >>> 8).toByte
-  }
-  @inline private def gi(o: Int): Int =
-    (mem(o) & 0xff) | ((mem(o + 1) & 0xff) << 8) |
-      ((mem(o + 2) & 0xff) << 16) | ((mem(o + 3) & 0xff) << 24)
-  @inline private def si(o: Int, v: Int): Unit = {
-    mem(o) = v.toByte; mem(o + 1) = (v >>> 8).toByte
-    mem(o + 2) = (v >>> 16).toByte; mem(o + 3) = (v >>> 24).toByte
-  }
+  @inline private def gs(o: Int): Int = Endian.le16(mem, o)
+  @inline private def ss(o: Int, v: Int): Unit = Endian.putLe16(mem, o, v)
+  @inline private def gi(o: Int): Int = Endian.leInt(mem, o)
+  @inline private def si(o: Int, v: Int): Unit = Endian.putLe32(mem, o, v)
 
   // --- context / state field views ----------------------------------
   @inline private def numStats(c: Int): Int = gs(c)

@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.Endian
+
 /** Shared RAR filter transforms (decode side), applied to written
   * output ranges after the LZ pass. RAR3's VM standard filters and
   * RAR5's declarative filters share the E8/E8E9 call-target and
@@ -21,14 +23,10 @@ private[pkgx] object RarFilters {
       cur += 1
       if (b == 0xe8 || (e8e9 && b == 0xe9)) {
         val o = start + cur
-        val addr = (out(o) & 0xff) | ((out(o + 1) & 0xff) << 8) |
-          ((out(o + 2) & 0xff) << 16) | ((out(o + 3) & 0xff) << 24)
+        val addr = Endian.leInt(out, o)
         val raw = cur + start // block offset within the file
         val offset = if (modOffset) (raw.toLong % fileSize).toInt else raw
-        def set(v: Int): Unit = {
-          out(o) = v.toByte; out(o + 1) = (v >> 8).toByte
-          out(o + 2) = (v >> 16).toByte; out(o + 3) = (v >> 24).toByte
-        }
+        def set(v: Int): Unit = Endian.putLe32(out, o, v)
         if (addr < 0) { if (addr + offset >= 0) set(addr + fileSize) }
         else if (addr < fileSize) set(addr - offset)
         cur += 4

@@ -1,6 +1,7 @@
 package graft.pkgx
 
 import java.nio.charset.StandardCharsets
+import graft.core.Endian.{le16, le16Bytes, le32, le32Bytes}
 
 /** RAR archive header walk (RAR 4.x and RAR 5.x container formats).
   *
@@ -29,11 +30,6 @@ object RarUtil {
       stored: Option[Array[Byte]], encrypted: Boolean)
 
   final case class Archive(entries: Vector[Entry], headersEncrypted: Boolean)
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], o: Int): Long =
-    (le16(b, o) & 0xffffL) | ((le16(b, o + 2) & 0xffffL) << 16)
 
   def isRar4(b: Array[Byte]): Boolean =
     b.length > 7 && b(0) == 'R' && b(1) == 'a' && b(2) == 'r' &&
@@ -214,8 +210,7 @@ object RarUtil {
           // deterministically (covers everything after the crc field)
           val hc = new java.util.zip.CRC32
           hc.update(full, 4, (totalPlain - 4).toInt)
-          val storedCrc = (full(0) & 0xffL) | ((full(1) & 0xffL) << 8) |
-            ((full(2) & 0xffL) << 16) | ((full(3) & 0xffL) << 24)
+          val storedCrc = le32(full, 0)
           if (hc.getValue != storedCrc) throw new RarMalformed("hp crc")
           // minimal parse for the data-area size and block type
           var y = 4 + hlen
@@ -482,7 +477,7 @@ object RarUtil {
         case 1 => sb.append(((enc(pos) & 0xff) | (highByte << 8)).toChar); pos += 1
         case 2 =>
           if (pos + 1 < enc.length)
-            sb.append(((enc(pos) & 0xff) | ((enc(pos + 1) & 0xff) << 8)).toChar)
+            sb.append(le16(enc, pos).toChar)
           pos += 2
         case 3 =>
           val len = enc(pos) & 0xff; pos += 1
@@ -517,29 +512,29 @@ object RarUtil {
     */
   def write(entries: Seq[(String, Array[Byte])]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def w32(v: Long): Unit = { w16((v & 0xffff).toInt); w16(((v >> 16) & 0xffff).toInt) }
     out.write(Array[Byte]('R', 'a', 'r', '!', 0x1a, 0x07, 0x00))
-    w16(0x6152); out.write(0x73); w16(0); w16(13); out.write(new Array[Byte](6))
+    out.write(le16Bytes(0x6152)); out.write(0x73); out.write(le16Bytes(0))
+    out.write(le16Bytes(13)); out.write(new Array[Byte](6))
     for ((name, data) <- entries) {
       val nameB = name.getBytes(StandardCharsets.ISO_8859_1)
       val crc = new java.util.zip.CRC32
       crc.update(data)
-      w16(0) // header crc (not verified by the walk)
-      out.write(0x74); w16(0x8000); w16(32 + nameB.length)
-      w32(data.length) // packSize
-      w32(data.length) // unpSize
+      out.write(le16Bytes(0)) // header crc (not verified by the walk)
+      out.write(0x74); out.write(le16Bytes(0x8000)); out.write(le16Bytes(32 + nameB.length))
+      out.write(le32Bytes(data.length)) // packSize
+      out.write(le32Bytes(data.length)) // unpSize
       out.write(0) // hostOS
-      w32(crc.getValue) // fileCRC
-      w32(0) // ftime
+      out.write(le32Bytes(crc.getValue)) // fileCRC
+      out.write(le32Bytes(0)) // ftime
       out.write(20) // unpVer
       out.write(0x30) // method: stored
-      w16(nameB.length)
-      w32(0x20) // attributes
+      out.write(le16Bytes(nameB.length))
+      out.write(le32Bytes(0x20)) // attributes
       out.write(nameB)
       out.write(data)
     }
-    w16(0x3dc4); out.write(0x7b); w16(0x4000); w16(7)
+    out.write(le16Bytes(0x3dc4)); out.write(0x7b); out.write(le16Bytes(0x4000))
+    out.write(le16Bytes(7))
     out.toByteArray
   }
 

@@ -1,6 +1,7 @@
 package graft.pkgx
 
 import java.util.zip.{CRC32, Inflater}
+import graft.core.Endian
 
 /** 7z container reader — pure JDK + the from-scratch LZMA family in this
   * package, implemented from the public 7z format documentation
@@ -101,12 +102,7 @@ object SevenZ {
       if (n < 0 || n > Int.MaxValue) throw new SevenZMalformed("number out of range")
       n.toInt
     }
-    def uint32(): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 4) { v |= byte().toLong << (8 * i); i += 1 }
-      v
-    }
+    def uint32(): Long = { skip(4); Endian.le32(buf, pos - 4) }
     /** Bit vector, MSB-first within each byte. */
     def bits(n: Int): Array[Boolean] = {
       val out = new Array[Boolean](n)
@@ -551,13 +547,8 @@ object SevenZ {
   def entries(bytes: Array[Byte], maxEntries: Int = 10000,
       password: Option[String] = None): Vector[Entry] = {
     if (!isSevenZ(bytes)) throw new SevenZMalformed("not a 7z archive")
-    def le64(off: Int): Long = {
-      var v = 0L
-      for (i <- 0 until 8) v |= (bytes(off + i) & 0xffL) << (8 * i)
-      v
-    }
-    val nextHeaderOffset = le64(12)
-    val nextHeaderSize = le64(20)
+    val nextHeaderOffset = Endian.le64(bytes, 12)
+    val nextHeaderSize = Endian.le64(bytes, 20)
     if (nextHeaderOffset < 0 || nextHeaderSize <= 0 ||
         32 + nextHeaderOffset + nextHeaderSize > bytes.length)
       throw new SevenZMalformed("bad next-header bounds")

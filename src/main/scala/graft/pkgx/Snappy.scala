@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.Endian
+
 /** Snappy framing format (github.com/google/snappy framing_format.txt)
   * and the raw block format — the CompressorParser's snappy-framed
   * route, from scratch.
@@ -93,14 +95,13 @@ object Snappy {
         case 2 => // copy, 2-byte offset
           if (p + 2 > end) throw new SnappyMalformed("truncated copy2")
           val len = (tag >> 2) + 1
-          val off = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
+          val off = Endian.le16(b, p)
           p += 2
           copy(win, w, off, len); w += len
         case _ => // copy, 4-byte offset
           if (p + 4 > end) throw new SnappyMalformed("truncated copy4")
           val len = (tag >> 2) + 1
-          val off = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-            ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
+          val off = Endian.leInt(b, p)
           p += 4
           copy(win, w, off, len); w += len
       }

@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.Endian.{be16, le32, le32Bytes}
+
 /** XZ / LZMA2 codec — pure JDK, implemented from the public formats
   * (tukaani xz-file-format spec + the LZMA specification's reference
   * decoder). The reference routes .xz through commons-compress /
@@ -57,10 +59,6 @@ object Xz {
     c.getValue
   }
 
-  private def readLE32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-
   /** Check field size per check-type id (spec §2.1.1.2 ranges). */
   private def checkSize(id: Int): Int = id match {
     case 0 => 0
@@ -91,7 +89,7 @@ object Xz {
   def decompress(bytes: Array[Byte]): Array[Byte] = {
     if (!isXz(bytes)) throw new XzMalformed("bad xz magic")
     val checkType = bytes(7) & 0x0f
-    if (crc32(bytes, 6, 2) != readLE32(bytes, 8))
+    if (crc32(bytes, 6, 2) != le32(bytes, 8))
       throw new XzMalformed("stream header CRC mismatch")
     val window = new Lzma2.Window(MaxOutputBytes)
     var pos = 12
@@ -104,7 +102,7 @@ object Xz {
         val headerSize = (first + 1) * 4
         if (pos + headerSize > bytes.length)
           throw new XzMalformed("truncated block header")
-        if (crc32(bytes, pos, headerSize - 4) != readLE32(bytes, pos + headerSize - 4))
+        if (crc32(bytes, pos, headerSize - 4) != le32(bytes, pos + headerSize - 4))
           throw new XzMalformed("block header CRC mismatch")
         val flags = bytes(pos + 1) & 0xff
         val nFilters = (flags & 3) + 1
@@ -142,7 +140,7 @@ object Xz {
             BcjFilters.deltaDecode(window.buf, before, n0, dist)
           } else {
             val startIp =
-              if (props.length >= 4) readLE32(props, 0) else 0L
+              if (props.length >= 4) le32(props, 0) else 0L
             BcjFilters.x86Decode(window.buf, before, n0, startIp)
           }
         }
@@ -157,7 +155,7 @@ object Xz {
         checkType match {
           case 0 => ()
           case 1 =>
-            if (crc32(window.buf, before, n) != readLE32(bytes, q))
+            if (crc32(window.buf, before, n) != le32(bytes, q))
               throw new XzMalformed("block CRC32 mismatch")
           case 4 =>
             var c = 0L
@@ -186,9 +184,6 @@ object Xz {
   def compress(data: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     def w(bs: Int*): Unit = bs.foreach(out.write)
-    def wle32(v: Long): Unit =
-      w((v & 0xff).toInt, ((v >> 8) & 0xff).toInt, ((v >> 16) & 0xff).toInt,
-        ((v >> 24) & 0xff).toInt)
     def varintBytes(v0: Long): Array[Byte] = {
       var v = v0
       val b = Array.newBuilder[Byte]
@@ -202,7 +197,7 @@ object Xz {
     // stream header: magic + flags (check = CRC32) + CRC32 of flags
     out.write(HeaderMagic)
     w(0x00, 0x01)
-    wle32(crc32(Array[Byte](0x00, 0x01), 0, 2))
+    out.write(le32Bytes(crc32(Array[Byte](0x00, 0x01), 0, 2)))
     // block header: 1 filter = LZMA2 (props: dict-size code 0x10 = 1 MiB)
     val bh = new java.io.ByteArrayOutputStream()
     bh.write(0) // size byte placeholder
@@ -214,7 +209,7 @@ object Xz {
     val bhb = bh.toByteArray
     bhb(0) = (((bhb.length + 4) / 4) - 1).toByte
     out.write(bhb)
-    wle32(crc32(bhb, 0, bhb.length))
+    out.write(le32Bytes(crc32(bhb, 0, bhb.length)))
     // LZMA2 uncompressed chunks (first resets the dict) + end marker
     val chunks = new java.io.ByteArrayOutputStream()
     var off = 0
@@ -235,7 +230,7 @@ object Xz {
     val unpadded = (bhb.length + 4) + cb.length + 4
     var padding = (4 - ((bhb.length + 4 + cb.length) & 3)) & 3
     while (padding > 0) { out.write(0); padding -= 1 }
-    wle32(crc32(data, 0, data.length)) // block check (CRC32 of plain data)
+    out.write(le32Bytes(crc32(data, 0, data.length))) // block check (CRC32 of plain data)
     // index
     val idx = new java.io.ByteArrayOutputStream()
     idx.write(0x00)
@@ -245,14 +240,14 @@ object Xz {
     while ((idx.size() & 3) != 0) idx.write(0)
     val idxb = idx.toByteArray
     out.write(idxb)
-    wle32(crc32(idxb, 0, idxb.length))
+    out.write(le32Bytes(crc32(idxb, 0, idxb.length)))
     // footer: CRC32(backwardSize LE32 + flags), backwardSize, flags, "YZ"
     val backward = ((idxb.length + 4) / 4) - 1
     val tail = Array[Byte](
       (backward & 0xff).toByte, ((backward >> 8) & 0xff).toByte,
       ((backward >> 16) & 0xff).toByte, ((backward >> 24) & 0xff).toByte,
       0x00, 0x01)
-    wle32(crc32(tail, 0, 6))
+    out.write(le32Bytes(crc32(tail, 0, 6)))
     out.write(tail)
     out.write('Y'); out.write('Z')
     out.toByteArray
@@ -303,7 +298,7 @@ object Lzma2 {
       if (c == 0x00) done = true
       else if (c == 0x01 || c == 0x02) {
         if (pos + 2 > in.length) throw new XzMalformed("truncated copy header")
-        val n = (((in(pos) & 0xff) << 8) | (in(pos + 1) & 0xff)) + 1
+        val n = be16(in, pos) + 1
         pos += 2
         if (pos + n > in.length) throw new XzMalformed("truncated copy chunk")
         window.write(in, pos, n)
@@ -311,9 +306,8 @@ object Lzma2 {
         lzma = null // an uncompressed chunk invalidates LZMA state
       } else if (c >= 0x80) {
         if (pos + 4 > in.length) throw new XzMalformed("truncated lzma header")
-        val unpacked = (((c & 0x1f) << 16) |
-          ((in(pos) & 0xff) << 8) | (in(pos + 1) & 0xff)) + 1
-        val packed = (((in(pos + 2) & 0xff) << 8) | (in(pos + 3) & 0xff)) + 1
+        val unpacked = (((c & 0x1f) << 16) | be16(in, pos)) + 1
+        val packed = be16(in, pos + 2) + 1
         pos += 4
         val mode = (c >> 5) & 3
         if (mode >= 2) {

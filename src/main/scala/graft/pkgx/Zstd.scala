@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.Endian.{le16, le64, leInt}
+
 /** Zstandard decoder — pure JDK, implemented from the public format
   * (RFC 8878). The reference routes .zst through commons-compress /
   * zstd-jni (tika pkg-module CompressorParser.java); this gives the
@@ -20,23 +22,12 @@ object Zstd {
 
   private val Magic = 0xFD2FB528
 
-  private def readLE32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
   // ==== xxHash64 (public algorithm) — content checksum ================
   private val P1 = 0x9E3779B185EBCA87L
   private val P2 = 0xC2B2AE3D27D4EB4FL
   private val P3 = 0x165667B19E3779F9L
   private val P4 = 0x85EBCA77C2B2AE63L
   private val P5 = 0x27D4EB2F165667C5L
-
-  private def readLE64(b: Array[Byte], off: Int): Long = {
-    var v = 0L
-    var i = 7
-    while (i >= 0) { v = (v << 8) | (b(off + i) & 0xffL); i -= 1 }
-    v
-  }
 
   def xxh64(data: Array[Byte], from: Int, len: Int, seed: Long): Long = {
     var idx = from
@@ -50,10 +41,10 @@ object Zstd {
       var v3 = seed
       var v4 = seed - P1
       while (idx <= end - 32) {
-        v1 = round(v1, readLE64(data, idx))
-        v2 = round(v2, readLE64(data, idx + 8))
-        v3 = round(v3, readLE64(data, idx + 16))
-        v4 = round(v4, readLE64(data, idx + 24))
+        v1 = round(v1, le64(data, idx))
+        v2 = round(v2, le64(data, idx + 8))
+        v3 = round(v3, le64(data, idx + 16))
+        v4 = round(v4, le64(data, idx + 24))
         idx += 32
       }
       h = java.lang.Long.rotateLeft(v1, 1) + java.lang.Long.rotateLeft(v2, 7) +
@@ -63,11 +54,11 @@ object Zstd {
     } else h = seed + P5
     h += len
     while (idx <= end - 8) {
-      h = java.lang.Long.rotateLeft(h ^ round(0, readLE64(data, idx)), 27) * P1 + P4
+      h = java.lang.Long.rotateLeft(h ^ round(0, le64(data, idx)), 27) * P1 + P4
       idx += 8
     }
     if (idx <= end - 4) {
-      h = java.lang.Long.rotateLeft(h ^ ((readLE32(data, idx) & 0xffffffffL) * P1), 23) *
+      h = java.lang.Long.rotateLeft(h ^ ((leInt(data, idx) & 0xffffffffL) * P1), 23) *
         P2 + P3
       idx += 4
     }
@@ -418,10 +409,10 @@ object Zstd {
     var pos = 0
     var sawFrame = false
     while (pos + 4 <= bytes.length) {
-      val magic = readLE32(bytes, pos)
+      val magic = leInt(bytes, pos)
       if ((magic & 0xFFFFFFF0) == 0x184D2A50) {
         // skippable frame
-        val size = readLE32(bytes, pos + 4)
+        val size = leInt(bytes, pos + 4)
         pos += 8 + size
       } else if (magic == Magic) {
         sawFrame = true
@@ -487,7 +478,7 @@ object Zstd {
     }
     if (hasChecksum) {
       if (pos + 4 > bytes.length) throw new ZstdMalformed("missing content checksum")
-      val expect = readLE32(bytes, pos) & 0xffffffffL
+      val expect = leInt(bytes, pos) & 0xffffffffL
       pos += 4
       val got = xxh64(out.buf, frameStartLen, out.len - frameStartLen, 0) & 0xffffffffL
       if (got != expect) throw new ZstdMalformed("content checksum mismatch")
@@ -552,9 +543,9 @@ object Zstd {
         hufDecodeStream(huf, b, pos, sectionEnd - pos, regen, litOut)
       } else {
         // jump table: 3 LE16 sizes; 4th stream = remainder
-        val s1 = (b(pos) & 0xff) | ((b(pos + 1) & 0xff) << 8)
-        val s2 = (b(pos + 2) & 0xff) | ((b(pos + 3) & 0xff) << 8)
-        val s3 = (b(pos + 4) & 0xff) | ((b(pos + 5) & 0xff) << 8)
+        val s1 = le16(b, pos)
+        val s2 = le16(b, pos + 2)
+        val s3 = le16(b, pos + 4)
         var sp = pos + 6
         val s4 = sectionEnd - sp - s1 - s2 - s3
         if (s4 <= 0) throw new ZstdMalformed("bad literals jump table")

@@ -4,6 +4,7 @@ import java.nio.charset.{Charset, StandardCharsets}
 import java.util.Base64
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian.{le16, le32, le32Bytes, le64, leInt}
 
 /** Outlook PST (MS-PST) extraction: NDB block/node B-trees, the
   * permutative-encoding decode, heap-on-node / BTH / property contexts,
@@ -99,13 +100,6 @@ object PstExtractor {
 
   private val MaxValueBytes = 64 << 20 // per-property budget
   private val MaxBlocks = 1 << 20
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], o: Int): Long =
-    (le16(b, o) & 0xffffL) | ((le16(b, o + 2) & 0xffffL) << 16)
-  private def le64(b: Array[Byte], o: Int): Long =
-    (le32(b, o) & 0xffffffffL) | (le32(b, o + 4) << 32)
 
   // --- NDB ----------------------------------------------------------
 
@@ -409,10 +403,7 @@ object PstExtractor {
 
     private def resolve(ptype: Int, v: Long): Array[Byte] = ptype match {
       case 0x02 | 0x03 | 0x0b | 0x0a | 0x01 | 0x00 => // inline ≤4 bytes
-        val b = new Array[Byte](4)
-        b(0) = v.toByte; b(1) = (v >> 8).toByte
-        b(2) = (v >> 16).toByte; b(3) = (v >> 24).toByte
-        b
+        le32Bytes(v)
       case _ => resolveHnid(ndb, heap, subs, v)
     }
 
@@ -423,7 +414,7 @@ object PstExtractor {
         .map(_.bytes).filter(_.nonEmpty)
 
     def int32(pid: Int): Option[Int] =
-      props.get(pid).filter(_.ptype == 0x03).map(p => le32(p.bytes, 0).toInt)
+      props.get(pid).filter(_.ptype == 0x03).map(p => leInt(p.bytes, 0))
 
     def time(pid: Int): Option[Long] = // FILETIME
       props.get(pid).filter(p => p.ptype == 0x40 && p.bytes.length >= 8)

@@ -1,6 +1,7 @@
 package graft.sci
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian.{be16, be32, be64}
 
 /** GRIB edition 1/2 metadata extraction (WMO FM 92).
   *
@@ -38,16 +39,7 @@ object GribExtractor {
     case _   => None
   }
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def u16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-  private def u24(b: Array[Byte], i: Int): Int =
-    (u8(b, i) << 16) | (u8(b, i + 1) << 8) | u8(b, i + 2)
-  private def u32(b: Array[Byte], i: Int): Long = {
-    ((u8(b, i).toLong << 24) | (u8(b, i + 1).toLong << 16) |
-      (u8(b, i + 2).toLong << 8) | u8(b, i + 3).toLong)
-  }
-  private def u64(b: Array[Byte], i: Int): Long =
-    (u32(b, i) << 32) | u32(b, i + 4)
+  private def u24(b: Array[Byte], i: Int): Int = (be16(b, i) << 8) | (b(i + 2) & 0xff)
 
   private def need(b: Array[Byte], off: Int, n: Int): Unit =
     if (off < 0 || n < 0 || off.toLong + n > b.length)
@@ -74,17 +66,17 @@ object GribExtractor {
     val pdsLen = u24(b, pds)
     if (pdsLen < 28 || pds + pdsLen > off + msgLen)
       throw new GribMalformed("bad PDS length")
-    val table = u8(b, pds + 3)
-    val centre = u8(b, pds + 4)
-    val flags = u8(b, pds + 7)
-    val param = u8(b, pds + 8)
-    val levelType = u8(b, pds + 9)
-    val yearC = u8(b, pds + 12)
-    val month = u8(b, pds + 13)
-    val day = u8(b, pds + 14)
-    val hour = u8(b, pds + 15)
-    val minute = u8(b, pds + 16)
-    val century = u8(b, pds + 24)
+    val table = b(pds + 3) & 0xff
+    val centre = b(pds + 4) & 0xff
+    val flags = b(pds + 7) & 0xff
+    val param = b(pds + 8) & 0xff
+    val levelType = b(pds + 9) & 0xff
+    val yearC = b(pds + 12) & 0xff
+    val month = b(pds + 13) & 0xff
+    val day = b(pds + 14) & 0xff
+    val hour = b(pds + 15) & 0xff
+    val minute = b(pds + 16) & 0xff
+    val century = b(pds + 24) & 0xff
     val refTime =
       if (month >= 1 && month <= 12 && day >= 1 && day <= 31 && hour <= 23 &&
         minute <= 59 && century >= 1) {
@@ -98,8 +90,8 @@ object GribExtractor {
       val gdsLen = u24(b, gds)
       if (gdsLen < 11 || gds + gdsLen > off + msgLen)
         throw new GribMalformed("bad GDS length")
-      ni = u16(b, gds + 6)
-      nj = u16(b, gds + 8)
+      ni = be16(b, gds + 6)
+      nj = be16(b, gds + 8)
       if (ni == 0xffff) ni = -1 // quasi-regular grids code Ni as missing
       if (nj == 0xffff) nj = -1
     }
@@ -111,7 +103,7 @@ object GribExtractor {
   /** GRIB2: 16-byte indicator, then self-describing numbered sections
     * (length u32 + number u8) until the 7777 end marker. */
   private def parseGrib2(b: Array[Byte], off: Int, msgLen: Long): MsgInfo = {
-    val discipline = u8(b, off + 6)
+    val discipline = b(off + 6) & 0xff
     var centre = -1
     var refTime: Option[String] = None
     var ni = -1L; var nj = -1L; var dataPoints = -1L
@@ -119,35 +111,35 @@ object GribExtractor {
     var p = off + 16
     val end = off + msgLen
     var sections = 0
-    while (p + 4 <= end && !(u8(b, p) == '7' && u8(b, p + 1) == '7' &&
-      u8(b, p + 2) == '7' && u8(b, p + 3) == '7')) {
+    while (p + 4 <= end && !(b(p) == '7' && b(p + 1) == '7' && b(p + 2) == '7' &&
+      b(p + 3) == '7')) {
       need(b, p, 5)
-      val sLen = u32(b, p)
-      val sNum = u8(b, p + 4)
+      val sLen = be32(b, p)
+      val sNum = b(p + 4) & 0xff
       if (sLen < 5 || p + sLen > end) throw new GribMalformed("bad section length")
       sections += 1
       if (sections > 10000) throw new GribMalformed("section bomb")
       sNum match {
         case 1 if sLen >= 21 =>
-          centre = u16(b, p + 5)
-          val year = u16(b, p + 12); val month = u8(b, p + 14)
-          val day = u8(b, p + 15); val hour = u8(b, p + 16)
-          val minute = u8(b, p + 17); val second = u8(b, p + 18)
+          centre = be16(b, p + 5)
+          val year = be16(b, p + 12); val month = b(p + 14) & 0xff
+          val day = b(p + 15) & 0xff; val hour = b(p + 16) & 0xff
+          val minute = b(p + 17) & 0xff; val second = b(p + 18) & 0xff
           if (month >= 1 && month <= 12 && day >= 1 && day <= 31 && hour <= 23)
             refTime = Some(f"$year%04d-$month%02d-$day%02d" +
               f"T$hour%02d:$minute%02d:$second%02dZ")
         case 3 if sLen >= 14 =>
-          dataPoints = u32(b, p + 6)
-          val template = u16(b, p + 12)
+          dataPoints = be32(b, p + 6)
+          val template = be16(b, p + 12)
           // lat/lon family (0-3) and rotated variants share Ni/Nj octets
           if (template <= 3 && sLen >= 38) {
-            ni = u32(b, p + 30)
-            nj = u32(b, p + 34)
+            ni = be32(b, p + 30)
+            nj = be32(b, p + 34)
           }
         case 4 if sLen >= 11 =>
           if (params.size < MaxVariableLines) {
-            val category = u8(b, p + 9)
-            val number = u8(b, p + 10)
+            val category = b(p + 9) & 0xff
+            val number = b(p + 10) & 0xff
             params += s"discipline $discipline category $category parameter $number"
           }
         case _ => ()
@@ -169,7 +161,7 @@ object GribExtractor {
     while (off + 8 <= bytes.length && isGrib(bytes, off)) {
       count += 1
       if (count > MaxMessages) throw new GribMalformed("message bomb")
-      val edition = u8(bytes, off + 7)
+      val edition = bytes(off + 7) & 0xff
       val msgLen: Long = edition match {
         case 1 =>
           val raw = u24(bytes, off + 4).toLong
@@ -186,7 +178,7 @@ object GribExtractor {
           } else raw
         case 2 =>
           need(bytes, off, 16)
-          u64(bytes, off + 8)
+          be64(bytes, off + 8)
         case e => throw new GribMalformed(s"unknown GRIB edition $e")
       }
       if (msgLen < 16 || off + msgLen > bytes.length)

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 
 import graft.engine.MetaSink
+import graft.core.Endian
 
 /** HDF4 / HDF5 metadata extraction.
   *
@@ -55,15 +56,12 @@ object HdfExtractor {
   private val Undef = -1L // 0xFF..FF offsets render as -1 in a signed long
 
   private final class H5(val b: Array[Byte]) {
-    def u8(o: Long): Int = {
-      if (o < 0 || o >= b.length) throw new HdfMalformed("oob")
-      b(o.toInt) & 0xff
-    }
-    def u16(o: Long): Int = u8(o) | (u8(o + 1) << 8)
-    def u32(o: Long): Long = u16(o).toLong | (u16(o + 2).toLong << 16)
-    def u64(o: Long): Long = u32(o) | (u32(o + 4) << 32)
     def need(o: Long, n: Long): Unit =
-      if (o < 0 || n < 0 || o + n > b.length) throw new HdfMalformed("oob")
+      if (o < 0 || n < 0 || o > b.length - n) throw new HdfMalformed("oob")
+    def u8(o: Long): Int = { need(o, 1); b(o.toInt) & 0xff }
+    def u16(o: Long): Int = { need(o, 2); Endian.le16(b, o.toInt) }
+    def u32(o: Long): Long = { need(o, 4); Endian.le32(b, o.toInt) }
+    def u64(o: Long): Long = { need(o, 8); Endian.le64(b, o.toInt) }
     def cstr(o: Long): String = {
       need(o, 1)
       var e = o.toInt
@@ -252,12 +250,11 @@ object HdfExtractor {
   // ==== HDF4 (tag/ref DD list, Vgroup-scoped Vdata attributes) ========
 
   private final class H4(val b: Array[Byte]) {
-    def u8(o: Int): Int = {
-      if (o < 0 || o >= b.length) throw new HdfMalformed("oob")
-      b(o) & 0xff
-    }
-    def u16(o: Int): Int = (u8(o) << 8) | u8(o + 1) // big-endian
-    def i32(o: Int): Int = (u16(o) << 16) | u16(o + 2)
+    private def need(o: Int, n: Int): Unit =
+      if (o < 0 || o.toLong + n > b.length) throw new HdfMalformed("oob")
+    def u8(o: Int): Int = { need(o, 1); b(o) & 0xff }
+    def u16(o: Int): Int = { need(o, 2); Endian.be16(b, o) }
+    def i32(o: Int): Int = { need(o, 4); Endian.beInt(b, o) }
     def str(o: Int, n: Int): String = {
       if (o < 0 || n < 0 || o + n > b.length) throw new HdfMalformed("oob")
       new String(b, o, n, StandardCharsets.UTF_8)

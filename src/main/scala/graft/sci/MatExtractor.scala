@@ -3,6 +3,7 @@ package graft.sci
 import java.nio.charset.StandardCharsets
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian
 
 /** MATLAB Level-5 MAT-file extraction.
   *
@@ -46,12 +47,7 @@ object MatExtractor {
       if (n < 0 || p + n > end) throw new MatMalformed("truncated element")
     def i32(o: Int): Int = {
       if (o + 4 > end) throw new MatMalformed("truncated word")
-      if (le)
-        (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-          ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-      else
-        ((b(o) & 0xff) << 24) | ((b(o + 1) & 0xff) << 16) |
-          ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
+      if (le) Endian.leInt(b, o) else Endian.beInt(b, o)
     }
     /** Next tagged element: (miType, dataOffset, dataLen); advances past
       * the element including its 8-byte padding (4-byte for small). */

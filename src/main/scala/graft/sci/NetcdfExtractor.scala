@@ -3,6 +3,7 @@ package graft.sci
 import java.nio.charset.StandardCharsets
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian.{be16, be32, be64, beInt}
 
 /** NetCDF classic (CDF-1/CDF-2/CDF-5) header extraction.
   *
@@ -37,12 +38,7 @@ object NetcdfExtractor {
   private final case class Rd(b: Array[Byte], var p: Int, wide: Boolean = false) {
     def need(n: Int): Unit =
       if (p < 0 || n < 0 || p + n > b.length) throw new NcMalformed("truncated header")
-    def u32(): Long = {
-      need(4)
-      val v = ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |
-        ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
-      p += 4; v
-    }
+    def u32(): Long = { need(4); p += 4; be32(b, p - 4) }
     def i64(): Long = { val hi = u32(); val lo = u32(); (hi << 32) | lo }
     def nonNeg(): Long = if (wide) i64() else u32()
     def name(): String = {
@@ -85,7 +81,6 @@ object NetcdfExtractor {
     val width = typeSize(t)
     r.need(count * width + pad4(count * width))
     val b = r.b; val base = r.p
-    def u8(i: Int) = b(base + i) & 0xff
     val (text, firstInt): (String, Option[Int]) = t match {
       case 2 => // NC_CHAR: one string, trailing NULs trimmed
         var end = count
@@ -95,42 +90,30 @@ object NetcdfExtractor {
         val vals = (0 until count).map { i =>
           val o = i * width
           t match {
-            case 1 => u8(o).toByte.toString + "b"
-            case 7 => u8(o).toString + "ub"
+            case 1 => b(base + o).toString + "b"
+            case 7 => (b(base + o) & 0xff).toString + "ub"
             case 3 | 8 =>
-              val v = (u8(o) << 8) | u8(o + 1)
+              val v = be16(b, base + o)
               (if (t == 3) v.toShort.toInt else v).toString + "s"
             case 4 | 9 =>
-              val v = (u8(o).toLong << 24) | (u8(o + 1).toLong << 16) |
-                (u8(o + 2).toLong << 8) | u8(o + 3).toLong
+              val v = be32(b, base + o)
               (if (t == 4) v.toInt.toLong else v).toString
             case 5 =>
-              val bits = ((u8(o) << 24) | (u8(o + 1) << 16) |
-                (u8(o + 2) << 8) | u8(o + 3))
-              java.lang.Float.intBitsToFloat(bits).toString + "f"
+              java.lang.Float.intBitsToFloat(beInt(b, base + o)).toString + "f"
             case 6 | 10 | 11 =>
-              var v = 0L
-              var j = 0
-              while (j < 8) { v = (v << 8) | u8(o + j); j += 1 }
+              val v = be64(b, base + o)
               if (t == 6) java.lang.Double.longBitsToDouble(v).toString
               else v.toString
           }
         }
         val first: Option[Int] = if (count == 0) None else Some(t match {
-          case 1 => u8(0).toByte.toInt
-          case 7 => u8(0)
-          case 3 => (((u8(0) << 8) | u8(1)).toShort).toInt
-          case 8 => (u8(0) << 8) | u8(1)
-          case 5 =>
-            java.lang.Float.intBitsToFloat(
-              (u8(0) << 24) | (u8(1) << 16) | (u8(2) << 8) | u8(3)).toInt
-          case 6 =>
-            var v = 0L; var j = 0
-            while (j < 8) { v = (v << 8) | u8(j); j += 1 }
-            java.lang.Double.longBitsToDouble(v).toInt
-          case _ =>
-            (((u8(0).toLong << 24) | (u8(1).toLong << 16) |
-              (u8(2).toLong << 8) | u8(3).toLong)).toInt
+          case 1 => b(base).toInt
+          case 7 => b(base) & 0xff
+          case 3 => be16(b, base).toShort.toInt
+          case 8 => be16(b, base)
+          case 5 => java.lang.Float.intBitsToFloat(beInt(b, base)).toInt
+          case 6 => java.lang.Double.longBitsToDouble(be64(b, base)).toInt
+          case _ => beInt(b, base)
         })
         (vals.mkString(", "), first)
     }

@@ -2,6 +2,7 @@ package graft.sci
 
 import java.nio.charset.Charset
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian
 
 /** SAS7BDAT dataset extraction — header metadata, column metadata, and
   * the row values rendered as a tab-separated table.
@@ -52,20 +53,14 @@ object SasExtractor {
     val le = bytes(37) == 1
     val intLen = if (u64) 8 else 4
 
-    def u8(o: Int): Int = bytes(o) & 0xff
-    def u16(o: Int): Int =
-      if (le) u8(o) | (u8(o + 1) << 8) else (u8(o) << 8) | u8(o + 1)
-    def i32(o: Int): Int =
-      if (le) u8(o) | (u8(o + 1) << 8) | (u8(o + 2) << 16) | (u8(o + 3) << 24)
-      else (u8(o) << 24) | (u8(o + 1) << 16) | (u8(o + 2) << 8) | u8(o + 3)
-    def i64(o: Int): Long =
-      if (le) (i32(o) & 0xffffffffL) | (i32(o + 4).toLong << 32)
-      else (i32(o).toLong << 32) | (i32(o + 4) & 0xffffffffL)
+    def u16(o: Int): Int = if (le) Endian.le16(bytes, o) else Endian.be16(bytes, o)
+    def i32(o: Int): Int = if (le) Endian.leInt(bytes, o) else Endian.beInt(bytes, o)
+    def i64(o: Int): Long = if (le) Endian.le64(bytes, o) else Endian.be64(bytes, o)
     def iptr(o: Int): Long = if (u64) i64(o) else i32(o).toLong
     def dbl(o: Int): Double = java.lang.Double.longBitsToDouble(i64(o))
 
     val charset =
-      try Charset.forName(Encodings.getOrElse(u8(70), "windows-1252"))
+      try Charset.forName(Encodings.getOrElse(bytes(70) & 0xff, "windows-1252"))
       catch { case _: Exception => Charset.forName("windows-1252") }
     def str(o: Int, len: Int): String = {
       var end = o + len
@@ -115,7 +110,7 @@ object SasExtractor {
         val p = ptrBase + i * ptrSize
         if (p + ptrSize <= bytes.length) {
           val off = iptr(p); val len = iptr(p + intLen)
-          val comp = u8(p + 2 * intLen)
+          val comp = bytes(p + 2 * intLen) & 0xff
           if (len > 0) f(off, len, comp)
         }
         i += 1
@@ -153,7 +148,7 @@ object SasExtractor {
                 var p = off + intLen + 8
                 while (p + entry <= off + len - 8) {
                   attrEntries += ((iptr(p).toInt, i32(p + intLen),
-                    u8(p + intLen + 6)))
+                    (bytes(p + intLen + 6) & 0xff)))
                   p += entry
                 }
               case 0xfffffbfeL => // column format + label

@@ -2,6 +2,7 @@ package graft.sci
 
 import graft.engine.{MetaSink, SpanSink}
 import java.nio.charset.StandardCharsets
+import graft.core.Endian
 
 /** Stata .dta dataset metadata — from scratch per the public Stata
   * dta_117/118 documentation (the XML-tagged binary layout) plus the
@@ -112,20 +113,13 @@ object StataExtractor {
     val ver = bytes(0) & 0xff
     if (ver < 0x66 || ver > 0x73) return
     val lsf = (bytes(1) & 0xff) == 2
-    def le16(o: Int): Int =
-      if (lsf) (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-      else ((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)
-    def le32(o: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < 4) {
-        v |= (bytes(o + (if (lsf) i else 3 - i)) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
     if (bytes.length < 110) return
     meta.set("stata:release", ver.toString)
     meta.set("stata:byteorder", if (lsf) "LSF" else "MSF")
-    meta.set("stata:variables", le16(4).toString)
-    meta.set("stata:observations", le32(6).toString)
+    val nvar = if (lsf) Endian.le16(bytes, 4) else Endian.be16(bytes, 4)
+    val nobs = if (lsf) Endian.le32(bytes, 6) else Endian.be32(bytes, 6)
+    meta.set("stata:variables", nvar.toString)
+    meta.set("stata:observations", nobs.toString)
     val labelW = if (ver >= 108) 81 else 32
     val label = cstr(bytes, 10, math.min(labelW, bytes.length - 10))
     if (label.nonEmpty) {

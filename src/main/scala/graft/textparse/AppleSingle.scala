@@ -1,5 +1,7 @@
 package graft.textparse
 
+import graft.core.Endian.{be16, be32}
+
 /** AppleSingle (RFC 1740) wrapper: magic 0x00051600, version, 16 filler
   * bytes, u16 entry count, then (id, offset, length) u32BE descriptors.
   * The data fork (id 1) is the wrapped document; the real-name entry
@@ -21,10 +23,7 @@ object AppleSingle {
   /** (originalName, dataFork) */
   def unwrap(b: Array[Byte]): (Option[String], Array[Byte]) = {
     if (!isAppleSingle(b)) throw new AppleSingleMalformed("bad magic")
-    def u32(o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    val numEntries = ((b(24) & 0xff) << 8) | (b(25) & 0xff)
+    val numEntries = be16(b, 24)
     if (numEntries <= 0 || numEntries > 64)
       throw new AppleSingleMalformed(s"bad entry count $numEntries")
     var name: Option[String] = None
@@ -33,9 +32,9 @@ object AppleSingle {
     while (i < numEntries) {
       val e = 26 + i * 12
       if (e + 12 > b.length) throw new AppleSingleMalformed("truncated entries")
-      val id = u32(e)
-      val off = u32(e + 4)
-      val len = u32(e + 8)
+      val id = be32(b, e)
+      val off = be32(b, e + 4)
+      val len = be32(b, e + 8)
       if (off >= 0 && len >= 0 && off + len <= b.length) {
         if (id == 1) // data fork
           data = java.util.Arrays.copyOfRange(b, off.toInt, (off + len).toInt)

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import graft.engine.{MetaSink, SpanSink}
 import graft.mime.EncodingDetector
+import graft.core.Endian
 
 /** dBASE/FoxPro .dbf table extraction.
   *
@@ -34,25 +35,20 @@ object DbfExtractor {
 
   def extract(bytes: Array[Byte], sink: SpanSink, meta: MetaSink): Unit = {
     if (bytes.length < 33) throw new DbfMalformed("too short")
-    def u8(o: Int) = bytes(o) & 0xff
-    def le16(o: Int) = u8(o) | (u8(o + 1) << 8)
-    def le32(o: Int) = u8(o).toLong | (u8(o + 1).toLong << 8) |
-      (u8(o + 2).toLong << 16) | (u8(o + 3).toLong << 24)
-
-    val version = u8(0)
+    val version = bytes(0) & 0xff
     val format = Versions.getOrElse(version,
       throw new DbfMalformed(f"unrecognized version byte 0x$version%02x"))
     meta.set("dbf:version", format)
     // last-modified yy/mm/dd with the reference's century pivot
-    val yy = u8(1); val mm = u8(2); val dd = u8(3)
+    val yy = bytes(1) & 0xff; val mm = bytes(2) & 0xff; val dd = bytes(3) & 0xff
     val year = if (yy + 2000 > java.time.Year.now(java.time.ZoneOffset.UTC).getValue)
       yy + 1900 else yy + 2000
     if (mm >= 1 && mm <= 12 && dd >= 1 && dd <= 31)
       meta.set("dcterms:modified", f"$year%04d-$mm%02d-$dd%02dT00:00:00Z")
 
-    val numRecords = le32(4)
-    val headerBytes = le16(8)
-    val recordBytes = le16(10)
+    val numRecords = Endian.le32(bytes, 4)
+    val headerBytes = Endian.le16(bytes, 8)
+    val recordBytes = Endian.le16(bytes, 10)
     if (recordBytes <= 0) throw new DbfMalformed("record size <= 0")
 
     // column descriptors: 32 bytes each until field lengths cover the record
@@ -65,8 +61,8 @@ object DbfExtractor {
       var nameEnd = p
       while (nameEnd < p + 10 && bytes(nameEnd) != 0) nameEnd += 1
       val name = new String(bytes, p, nameEnd - p, StandardCharsets.US_ASCII)
-      val colType = u8(p + 11).toChar
-      val len = u8(p + 16)
+      val colType = (bytes(p + 11) & 0xff).toChar
+      val len = bytes(p + 16) & 0xff
       if (len > MaxFieldLength) throw new DbfMalformed("field too long")
       cols += Col(name, colType, len)
       accounted += len
@@ -74,7 +70,7 @@ object DbfExtractor {
       if (accounted >= recordBytes - 1) going = false
       if (p > bytes.length) throw new DbfMalformed("runaway header")
     }
-    if (p >= bytes.length || u8(p) != 13)
+    if (p >= bytes.length || (bytes(p) & 0xff) != 13)
       throw new DbfMalformed("missing header terminator")
     val columns = cols.result()
 
@@ -84,7 +80,7 @@ object DbfExtractor {
     var n = 0L
     var more = true
     while (more && rp < bytes.length && n < math.max(numRecords, 0) + 1000000L) {
-      val flag = u8(rp)
+      val flag = bytes(rp) & 0xff
       if (flag == 26) more = false // end-of-file marker
       else if (flag != 32 && flag != 42)
         throw new DbfMalformed(s"bad record flag $flag")

@@ -2,6 +2,7 @@ package graft.textparse
 
 import graft.engine.{MetaSink, SpanSink}
 import scala.collection.mutable.ArrayBuffer
+import graft.core.Endian.{le16, le64}
 
 /** Lotus 1-2-3 worksheets (.wk1/.wk3/.wk4) — from scratch per the
   * public Lotus file-format notes (the same record stream the
@@ -39,7 +40,7 @@ object LotusExtractor {
           case 0x0001 => records = 2000000 // EOF record
           case 0x0D if len >= 7 && isWk1(version) =>
             cells += ((0, le16(bytes, bo + 3), le16(bytes, bo + 1),
-              trimNum(le16s(bytes, bo + 5).toDouble)))
+              trimNum(le16(bytes, bo + 5).toShort.toDouble)))
           case 0x0E if len >= 13 && isWk1(version) =>
             cells += ((0, le16(bytes, bo + 3), le16(bytes, bo + 1),
               trimNum(java.lang.Double.longBitsToDouble(le64(bytes, bo + 5)))))
@@ -112,14 +113,4 @@ object LotusExtractor {
   private def trimNum(d: Double): String =
     if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString
     else d.toString
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def le16s(b: Array[Byte], o: Int): Short =
-    ((b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)).toShort
-  private def le64(b: Array[Byte], o: Int): Long = {
-    var v = 0L; var i = 0
-    while (i < 8) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
-  }
 }

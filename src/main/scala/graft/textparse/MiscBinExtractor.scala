@@ -2,6 +2,7 @@ package graft.textparse
 
 import graft.engine.{MetaSink, SpanSink}
 import java.nio.charset.StandardCharsets
+import graft.core.Endian
 
 /** Small metadata routes for developer artifacts the reference only
   * detects: Java hprof heap dumps and JKS keystores. Both formats are
@@ -20,13 +21,8 @@ object MiscBinExtractor {
     if (!banner.startsWith("JAVA PROFILE")) return
     meta.set("hprof:version", banner)
     if (bytes.length >= e + 13) {
-      def be32(o: Int): Long = {
-        var v = 0L; var i = 0
-        while (i < 4) { v = (v << 8) | (bytes(o + i) & 0xffL); i += 1 }
-        v
-      }
-      val idSize = be32(e + 1)
-      val millis = (be32(e + 5) << 32) | be32(e + 9)
+      val idSize = Endian.be32(bytes, e + 1)
+      val millis = Endian.be64(bytes, e + 5)
       meta.set("hprof:identifier-size", idSize.toString)
       if (millis > 0 && millis < 4102444800000L)
         meta.set("dcterms:created", java.time.Instant.ofEpochMilli(millis)
@@ -93,16 +89,10 @@ object MiscBinExtractor {
     * explicit), only aliases/types/dates become metadata.
     */
   def extractJks(bytes: Array[Byte], sink: SpanSink, meta: MetaSink): Unit = {
-    def be32(o: Int): Long = {
-      if (o + 4 > bytes.length) throw new IllegalStateException("short jks")
-      var v = 0L; var i = 0
-      while (i < 4) { v = (v << 8) | (bytes(o + i) & 0xffL); i += 1 }
-      v
-    }
-    def be16(o: Int): Int = {
-      if (o + 2 > bytes.length) throw new IllegalStateException("short jks")
-      ((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)
-    }
+    def need(o: Int, n: Int): Unit =
+      if (o + n > bytes.length) throw new IllegalStateException("short jks")
+    def be32(o: Int): Long = { need(o, 4); Endian.be32(bytes, o) }
+    def be16(o: Int): Int = { need(o, 2); Endian.be16(bytes, o) }
     if (bytes.length < 12 || be32(0) != 0xfeedfeedL) return
     val version = be32(4)
     val count = be32(8)

@@ -2,6 +2,7 @@ package graft.textparse
 
 import graft.engine.{MetaSink, SpanSink}
 import graft.ole2.Cfb
+import graft.core.Endian.{le16, le32, le64}
 
 /** QuattroPro 9+ (.qpw) text extraction.
   *
@@ -22,13 +23,11 @@ object QpwExtractor {
     val data = cfb.stream("NativeContent_MAIN")
       .getOrElse(throw new QpwMalformed("no NativeContent_MAIN stream"))
     var p = 0
-    def u16(o: Int): Int = (data(o) & 0xff) | ((data(o + 1) & 0xff) << 8)
-    def u32(o: Int): Long = (u16(o).toLong) | (u16(o + 2).toLong << 16)
 
     // QSTR at offset o → (string, next offset)
     def qstr(o: Int): (String, Int) = {
       if (o + 3 > data.length) throw new QpwMalformed("qstr overrun")
-      val count = u16(o)
+      val count = le16(data, o)
       val start = o + 3
       if (start + count + 1 > data.length) throw new QpwMalformed("qstr overrun")
       val sb = new StringBuilder(count + 1)
@@ -44,8 +43,8 @@ object QpwExtractor {
     // the record scan wherever parsing ended (NOT at body+len) — string
     // tables can exceed the u16 record length; mirror that exactly.
     while (p + 4 <= data.length) {
-      val typ = u16(p)
-      val len = u16(p + 2)
+      val typ = le16(data, p)
+      val len = le16(data, p + 2)
       val body = p + 4
       if (body + len > data.length) return
       var next = body + len
@@ -53,8 +52,8 @@ object QpwExtractor {
         typ match {
           case 0x0001 => // BOF: id(4) version(2) build(2) saved(2) lowest(2) pages(2)
             if (len >= 14) {
-              meta.set("qpw:version", u16(body + 4).toString)
-              meta.set("meta:page-count", u16(body + 12).toString)
+              meta.set("qpw:version", le16(data, body + 4).toString)
+              meta.set("meta:page-count", le16(data, body + 12).toString)
             }
           case 0x0005 => // USER: creator + modifier
             val (creator, n1) = qstr(body)
@@ -65,7 +64,7 @@ object QpwExtractor {
           case 0x0403 => // external link: idx(2) first(2) last(2) + name
             val (s, n1) = qstr(body + 6); emit(s); next = n1
           case 0x0407 => // string table: entries(4) used(4) saved(4), QSTRs
-            val entries = u32(body)
+            val entries = le32(data, body)
             var q = body + 12
             var i = 0L
             while (i < entries && q < data.length) {
@@ -108,13 +107,8 @@ object QpwExtractor {
     */
   def extractLegacy(bytes: Array[Byte], sink: SpanSink, meta: MetaSink): Unit = {
     if (bytes.length < 8) return
-    def u16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-    def f64(o: Int): Double = {
-      var v = 0L; var i = 0
-      while (i < 8) { v |= (bytes(o + i) & 0xffL) << (8 * i); i += 1 }
-      java.lang.Double.longBitsToDouble(v)
-    }
-    val version = if (u16(0) == 0 && u16(2) == 2) u16(4) else return
+    def f64(o: Int): Double = java.lang.Double.longBitsToDouble(le64(bytes, o))
+    val version = if (le16(bytes, 0) == 0 && le16(bytes, 2) == 2) le16(bytes, 4) else return
     val wk1Style = version == 0x5120
     val pascalLabel = version == 0x5120 || version == 0x5121
     meta.set("qpw:bof-version", f"0x$version%04x")
@@ -128,19 +122,19 @@ object QpwExtractor {
     var off = 0
     var n = 0
     while (off + 4 <= bytes.length && n < 2000000) {
-      val typ = u16(off)
-      val len = u16(off + 2)
+      val typ = le16(bytes, off)
+      val len = le16(bytes, off + 2)
       val bo = off + 4
       if (bo + len > bytes.length) { off = bytes.length }
       else {
         // address: wk1-style has a leading format byte
         val ao = if (wk1Style) bo + 1 else bo
-        def col = u16(ao)
-        def row = u16(ao + 2)
+        def col = le16(bytes, ao)
+        def row = le16(bytes, ao + 2)
         val vo = if (wk1Style) bo + 5 else bo + 6 // value offset past attr
         typ match {
           case 0x0D if bo + len >= vo + 2 =>
-            cells += ((row, col, num(((u16(vo) << 16) >> 16).toDouble)))
+            cells += ((row, col, num(((le16(bytes, vo) << 16) >> 16).toDouble)))
           case 0x0E | 0x10 if bo + len >= vo + 8 =>
             cells += ((row, col, num(f64(vo))))
           case 0x0F if len > (vo - bo) =>

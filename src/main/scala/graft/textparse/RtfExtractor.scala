@@ -1,6 +1,7 @@
 package graft.textparse
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian
 
 /** RTF text extraction.
   *
@@ -250,27 +251,22 @@ private object RtfObjData {
 
   private def parse(b: Array[Byte], meta: MetaSink,
       child: (String, Array[Byte]) => Unit, nextName: () => String): Unit = {
-    var p = 0
-    def u32(): Long = {
-      val v = (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-        ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-      p += 4; v
-    }
+    val c = new Endian.Cursor(b)
     def lenAnsi(): String = {
-      val len = u32()
-      if (len < 0 || len > b.length - p) throw new IllegalArgumentException("len")
-      val s = new String(b, p, len.toInt, Cp1252).takeWhile(_ != 0.toChar).trim
-      p += len.toInt; s
+      val len = c.le32()
+      if (len < 0 || len > b.length - c.pos) throw new IllegalArgumentException("len")
+      val s = new String(b, c.pos, len.toInt, Cp1252).takeWhile(_ != 0.toChar).trim
+      c.pos += len.toInt; s
     }
     def bytesOf(len: Long): Array[Byte] = {
-      if (len < 0 || len > b.length - p) throw new IllegalArgumentException("sz")
-      val r = java.util.Arrays.copyOfRange(b, p, p + len.toInt); p += len.toInt; r
+      if (len < 0 || len > b.length - c.pos) throw new IllegalArgumentException("sz")
+      val r = java.util.Arrays.copyOfRange(b, c.pos, c.pos + len.toInt); c.pos += len.toInt; r
     }
 
     if (b.length < 8) return
-    val version = u32()
+    val version = c.le32()
     meta.add("rtf:emb_app_version", version.toString)
-    val formatId = u32()
+    val formatId = c.le32()
     if (formatId != 2L) return // 1 = linked object: nothing embedded
     val className = lenAnsi()
     val topicName = lenAnsi()
@@ -278,7 +274,7 @@ private object RtfObjData {
     if (className.nonEmpty) meta.add("rtf:emb_class", className)
     if (topicName.nonEmpty) meta.add("rtf:emb_topic", topicName)
     if (itemName.nonEmpty) meta.add("rtf:emb_item", itemName)
-    val data = bytesOf(u32())
+    val data = bytesOf(c.le32())
 
     val lower = className.toLowerCase(java.util.Locale.ROOT)
     if (lower == "package") handlePackage(data, meta, child, nextName)
@@ -292,42 +288,35 @@ private object RtfObjData {
 
   private def handlePackage(pkg: Array[Byte], meta: MetaSink,
       child: (String, Array[Byte]) => Unit, nextName: () => String): Unit = {
-    var p = 0
-    def u16be(): Int = { val v = ((pkg(p) & 0xff) << 8) | (pkg(p + 1) & 0xff); p += 2; v }
-    def u32(): Long = {
-      val v = (pkg(p) & 0xffL) | ((pkg(p + 1) & 0xffL) << 8) |
-        ((pkg(p + 2) & 0xffL) << 16) | ((pkg(p + 3) & 0xffL) << 24)
-      p += 4; v
-    }
+    val c = new Endian.Cursor(pkg)
     def asciiz(): String = {
-      val start = p
-      while (p < pkg.length && pkg(p) != 0) p += 1
-      val s = new String(pkg, start, p - start, Cp1252)
-      p += 1; s
+      val start = c.pos
+      while (c.pos < pkg.length && pkg(c.pos) != 0) c.pos += 1
+      val s = new String(pkg, start, c.pos - start, Cp1252)
+      c.pos += 1; s
     }
     if (pkg.length < 8) return
-    p += 2 // stream header
+    c.pos += 2 // stream header
     val displayName = asciiz()
     asciiz() // icon file path
-    u16be()  // icon index
-    val typ = (pkg(p) & 0xff) | ((pkg(p + 1) & 0xff) << 8); p += 2
+    c.be16()  // icon index
+    val typ = c.le16()
     if (typ != 3) return // 1 = link
-    u32() // file path length (redundant with the asciiz)
+    c.le32() // file path length (redundant with the asciiz)
     val ansiPath = asciiz()
-    val dataLen = u32()
-    if (dataLen < 0 || dataLen > pkg.length - p) return
-    val data = java.util.Arrays.copyOfRange(pkg, p, p + dataLen.toInt)
-    p += dataLen.toInt
+    val dataLen = c.le32()
+    if (dataLen < 0 || dataLen > pkg.length - c.pos) return
+    val data = java.util.Arrays.copyOfRange(pkg, c.pos, c.pos + dataLen.toInt)
+    c.pos += dataLen.toInt
     // optional UTF-16LE long path after the payload
     var unicodePath = ""
-    if (p + 4 <= pkg.length) {
-      val uLen = u32()
-      if (uLen > 0 && uLen * 2 <= pkg.length - p) {
+    if (c.pos + 4 <= pkg.length) {
+      val uLen = c.le32()
+      if (uLen > 0 && uLen * 2 <= pkg.length - c.pos) {
         val sb = new StringBuilder
         var k = 0
         while (k < uLen) {
-          sb.append((((pkg(p + 2 * k + 1) & 0xff) << 8) |
-            (pkg(p + 2 * k) & 0xff)).toChar)
+          sb.append(Endian.le16(pkg, c.pos + 2 * k).toChar)
           k += 1
         }
         unicodePath = sb.toString

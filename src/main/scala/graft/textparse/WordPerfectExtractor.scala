@@ -1,6 +1,7 @@
 package graft.textparse
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian
 
 /** WordPerfect 5.x / 6.x (.wpd/.wp) text extraction.
   *
@@ -36,11 +37,10 @@ object WordPerfectExtractor {
     if (bytes.length < 16 || (bytes(0) & 0xff) != 0xff ||
         bytes(1) != 'W' || bytes(2) != 'P' || bytes(3) != 'C')
       throw new WpMalformed("not a WPC file")
-    val docPtr = ((bytes(4) & 0xffL) | ((bytes(5) & 0xffL) << 8) |
-      ((bytes(6) & 0xffL) << 16) | ((bytes(7) & 0xffL) << 24)).toInt
+    val docPtr = Endian.leInt(bytes, 4)
     val major = bytes(10) & 0xff
     val minor = bytes(11) & 0xff
-    val encrypted = ((bytes(12) & 0xff) | ((bytes(13) & 0xff) << 8)) != 0
+    val encrypted = Endian.le16(bytes, 12) != 0
     if (major != 0 && major != 2)
       throw new WpMalformed(s"unsupported WP major version $major")
     if (encrypted) throw new WpMalformed("document is encrypted")

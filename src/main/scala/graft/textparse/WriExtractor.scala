@@ -1,6 +1,7 @@
 package graft.textparse
 
 import graft.engine.{MetaSink, SpanSink}
+import graft.core.Endian.{le16, le32}
 
 /** Microsoft Write (.wri) text — from scratch per the public Windows
   * 3.x Write format notes (wIdent 0xBE31/0xBE32, header paragraph at
@@ -45,13 +46,5 @@ object WriExtractor {
       i += 1
     }
     if (sb.nonEmpty) { sink.chars(sb.toString); sink.newline() }
-  }
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], o: Int): Long = {
-    var v = 0L; var i = 0
-    while (i < 4) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
   }
 }

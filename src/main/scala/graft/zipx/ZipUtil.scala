@@ -3,6 +3,7 @@ package graft.zipx
 import java.io.ByteArrayInputStream
 import java.util.zip.{GZIPInputStream, ZipInputStream}
 import scala.collection.mutable.ArrayBuffer
+import graft.core.Endian.{le16, le32}
 
 /** In-row ZIP / gzip access over byte-array payloads.
   *
@@ -243,14 +244,6 @@ object ZipUtil {
       case None => new String(nameBytes, cp437Charset)
     }
 
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], o: Int): Long = {
-    var v = 0L; var i = 0
-    while (i < 4) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
-  }
-
   private def findEocd(b: Array[Byte]): Int = {
     // EOCD (PK\5\6) sits within the last 64 KB + 22 bytes
     val lo = math.max(0, b.length - 65557)
@@ -311,7 +304,7 @@ object ZipUtil {
       try {
         if (len < 9) null
         else {
-          val propsSize = (src(off + 2) & 0xff) | ((src(off + 3) & 0xff) << 8)
+          val propsSize = le16(src, off + 2)
           if (propsSize < 5 || 4 + propsSize > len) null
           else {
             val w = new graft.pkgx.Lzma2.Window(uncompSize.toLong)

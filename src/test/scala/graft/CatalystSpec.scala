@@ -146,8 +146,10 @@ class PlanShapeSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("q37: repetition signals are a pure per-row map — no key shuffle") {
     val q = SparkEntry.queries("q37_repetition")(spark, TestSpark.SfDir)
     val plan = q.queryExecution.executedPlan.toString
-    // only the conditional round-robin input spread may appear (no-op
-    // at real corpus scale); the signals themselves never shuffle by key
+    // only the conditional round-robin input spread may appear, at most
+    // once (no-op at real corpus scale); the signals themselves never
+    // shuffle by key
+    assert("RoundRobinPartitioning".r.findAllIn(plan).length <= 1, plan)
     assert(!plan.contains("Exchange hashpartitioning"), plan)
     assert(!plan.contains("rangepartitioning"), plan)
     // native array expressions, not interpreted lambdas

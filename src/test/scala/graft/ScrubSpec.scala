@@ -84,8 +84,9 @@ class ScrubSpec extends AnyFunSuite {
     val plan = PiiScrub.profile(d).queryExecution.executedPlan.toString
     // the only permitted exchange is the conditional round-robin input
     // spread (a no-op whenever the scan yields >= defaultParallelism
-    // splits, i.e. at any real corpus scale); the scrub itself must
-    // never shuffle by key
+    // splits, i.e. at any real corpus scale), at most once; the scrub
+    // itself must never shuffle by key
+    assert("RoundRobinPartitioning".r.findAllIn(plan).length <= 1, plan)
     assert(!plan.contains("Exchange hashpartitioning"), plan)
     assert(!plan.contains("rangepartitioning"), plan)
     assert(!plan.toLowerCase.contains("batchevalpython"))

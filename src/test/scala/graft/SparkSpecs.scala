@@ -196,6 +196,40 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("an empty-delta rerun reads its outDir without a schema-inference job") {
+    val dir = java.nio.file.Files.createTempDirectory("graftrerun").toString
+    Corpus.docRows(spark, 200, 4).write.parquet(s"$dir/in")
+    val cli = Array(s"$dir/in", s"$dir/out", "spans", s"$dir/metrics")
+    Main.run(cli, spark)
+    def rows = spark.read.parquet(s"$dir/out").collect().map(_.toString).sorted.toSeq
+    val before = rows
+    val (jobs, failure) = jobsOf(s"rerun-$dir") { Main.run(cli, spark) }
+    assert(failure.isEmpty, failure)
+    // reading outDir back with schema inference made this rerun 5 jobs;
+    // read with the doc_id schema it is at least one fewer (3 measured)
+    assert(jobs <= 4, s"$jobs jobs")
+    assert(rows == before)
+    assert(visible(s"$dir/out").size == 1)
+    assert(visible(s"$dir/metrics").size == 1)
+  }
+
+  test("a committed file without a string doc_id fails the rerun before any job runs") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graftbadout").toString
+    Corpus.docRows(spark, 20, 2).write.parquet(s"$dir/in")
+    Seq(1L).toDF("doc_id").write.parquet(s"$dir/long/run_id=old")
+    Seq("d1").toDF("id").write.parquet(s"$dir/noid/run_id=old")
+    for (out <- Seq("long", "noid")) {
+      val (jobs, failure) = jobsOf(s"bad-out-$dir-$out") {
+        Main.run(Array(s"$dir/in", s"$dir/$out", "spans", s"$dir/m-$out"), spark)
+      }
+      assert(failure.isDefined, out)
+      assert(jobs == 0, out)
+      assert(visible(s"$dir/$out") == Seq("run_id=old"), out)
+      assert(!new java.io.File(s"$dir/m-$out").exists, out)
+    }
+  }
+
   test("resume surfaces an unreadable outDir instead of re-extracting") {
     val dir = java.nio.file.Files.createTempDirectory("graftgarbage").toString
     val part = java.nio.file.Paths.get(dir, "out", "run_id=x", "part-0.parquet")
