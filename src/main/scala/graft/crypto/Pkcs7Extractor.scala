@@ -1,5 +1,7 @@
 package graft.crypto
 
+import graft.core.OutBuf
+
 /** PKCS#7 / CMS unwrapping — a minimal BER/DER walker (definite AND
   * indefinite lengths, constructed octet strings) over the public CMS
   * structure (RFC 5652): ContentInfo → signedData encapContentInfo
@@ -237,25 +239,15 @@ object Pkcs7Extractor {
     * as a truncation warning with the prefix kept.
     */
   private def inflate(deflated: Array[Byte]): (Array[Byte], Boolean) = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(deflated)
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](65536)
-    try {
-      while (!inf.finished() && out.size() < MaxDecompressed) {
-        val n = inf.inflate(buf)
-        if (n == 0) {
-          if (inf.finished()) return (out.toByteArray, false)
-          throw new Pkcs7Malformed(
-            if (inf.needsInput()) "truncated zlib stream in compressedData"
-            else "zlib preset dictionary unsupported in compressedData")
-        }
-        out.write(buf, 0, n)
-      }
-      (out.toByteArray, !inf.finished())
-    } catch {
-      case _: java.util.zip.DataFormatException =>
-        throw new Pkcs7Malformed("bad zlib stream in compressedData")
-    } finally inf.end()
+    val out = new OutBuf(MaxDecompressed, deflated.length * 4)
+    val end =
+      try out.inflate(deflated, 0, deflated.length, raw = false)
+      catch { case _: java.util.zip.DataFormatException =>
+        throw new Pkcs7Malformed("bad zlib stream in compressedData") }
+    if (end == OutBuf.NeedsInput)
+      throw new Pkcs7Malformed("truncated zlib stream in compressedData")
+    if (end == OutBuf.NeedsDict)
+      throw new Pkcs7Malformed("zlib preset dictionary unsupported in compressedData")
+    (out.result, end == OutBuf.Capped)
   }
 }

@@ -75,19 +75,12 @@ object Extractor {
     * "deflate" route).
     */
   private def inflateZlib(b: Array[Byte]): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(b)
-    val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 20))
-    val buf = new Array[Byte](65536)
-    try {
-      while (!inf.finished() && !inf.needsInput() && out.size < (256 << 20)) {
-        val n = inf.inflate(buf)
-        if (n == 0 && !inf.finished()) throw new IllegalArgumentException("zlib stall")
-        out.write(buf, 0, n)
-      }
-    } finally inf.end()
-    if (out.size >= (256 << 20)) throw new ZipBombDetected
-    out.toByteArray
+    val out = new OutBuf(OutBuf.MaxBytes, math.min(b.length * 4, 1 << 20))
+    val end = out.inflate(b, 0, b.length, raw = false)
+    if (end == OutBuf.Capped) throw new ZipBombDetected
+    if (end == OutBuf.NeedsDict || end == OutBuf.NeedsInput && out.len == 0)
+      throw new IllegalArgumentException("zlib stall")
+    out.result
   }
 
   /** Raw .lzma file: props byte, u32 dict size, u64 uncompressed size,
@@ -97,15 +90,10 @@ object Extractor {
     */
   private def decodeLzmaFile(b: Array[Byte]): Array[Byte] = {
     if (b.length < 14) throw new IllegalArgumentException("truncated lzma")
-    val props = b(0) & 0xff
-    var size = 0L
-    var i = 0
-    while (i < 8) { size |= (b(5 + i) & 0xffL) << (8 * i); i += 1 }
-    if (size < 0 || size > (256 << 20))
+    val size = Endian.le64(b, 5)
+    if (size < 0 || size > OutBuf.MaxBytes)
       throw new IllegalArgumentException(s"lzma size $size out of budget")
-    val win = new graft.pkgx.Lzma2.Window(size)
-    graft.pkgx.Lzma2.decodeLzma1(props, b, 13, b.length - 13, size.toInt, win)
-    java.util.Arrays.copyOf(win.buf, win.len)
+    graft.pkgx.Lzma2.decodeLzma1(b(0) & 0xff, b, 13, b.length - 13, size.toInt)
   }
 
   /** Codec wrappers — CompressorParser analog (pkg/CompressorStreamFactory

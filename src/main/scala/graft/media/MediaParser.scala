@@ -1,6 +1,6 @@
 package graft.media
 
-import graft.core.Endian
+import graft.core.{Endian, OutBuf}
 import graft.core.Endian.{be16, be32, be64, beInt, le16, le32}
 
 /** Image/audio/video metadata extraction from payload bytes — the
@@ -96,18 +96,11 @@ object MediaParser {
     val body: Array[Byte] =
       if (b(0) == 'F') java.util.Arrays.copyOfRange(b, 8, b.length)
       else if (b(0) == 'C') {
-        val inf = new java.util.zip.Inflater()
-        try {
-          inf.setInput(b, 8, b.length - 8)
-          val out = new Array[Byte](64)
-          var o = 0
-          while (o < out.length && !inf.finished()) {
-            val r = inf.inflate(out, o, out.length - o)
-            if (r == 0) o = out.length else o += r
-          }
-          out
-        } catch { case _: Exception => return None }
-        finally inf.end()
+        // the header fits in 64 bytes; a shorter body reads as zeros
+        val out = new OutBuf(64, 64)
+        try out.inflate(b, 8, b.length - 8, raw = false)
+        catch { case _: Exception => return None }
+        java.util.Arrays.copyOf(out.result, 64)
       } else return Some(Meta("application/x-shockwave-flash", "video",
         tags = Map("swf:version" -> version.toString))) // ZWS: header only
     if (body.length < 10) return None

@@ -1,5 +1,7 @@
 package graft.ole2
 
+import graft.core.OutBuf
+
 /** ActiveMime (.mso) — the container Office uses for HTML-exported
   * editing data, wrapping a zlib-deflated CFB that carries a VBA
   * project.
@@ -13,8 +15,6 @@ package graft.ole2
   */
 object ActiveMimeExtractor {
 
-  private val MaxInflated = 256L << 20
-
   def extract(bytes: Array[Byte], meta: graft.engine.MetaSink,
       child: (String, Array[Byte]) => Unit): Unit = {
     require(bytes.length > 46, "activemime too short")
@@ -22,19 +22,12 @@ object ActiveMimeExtractor {
     val start = 46L + zlibOffset
     require(start < bytes.length, "zlib offset past end")
 
-    val inflater = new java.util.zip.Inflater()
-    inflater.setInput(bytes, start.toInt, bytes.length - start.toInt)
-    val out = new java.io.ByteArrayOutputStream(64 << 10)
-    val buf = new Array[Byte](64 << 10)
-    while (!inflater.finished() && !inflater.needsInput()) {
-      val n = inflater.inflate(buf)
-      if (n == 0 && !inflater.finished()) throw new java.io.IOException("stalled inflate")
-      out.write(buf, 0, n)
-      if (out.size.toLong > MaxInflated)
-        throw new graft.engine.ZipBombDetected
-    }
-    inflater.end()
-    val cfbBytes = out.toByteArray
+    val out = new OutBuf(OutBuf.MaxBytes, 64 << 10)
+    val end = out.inflate(bytes, start.toInt, bytes.length - start.toInt, raw = false)
+    if (end == OutBuf.Capped) throw new graft.engine.ZipBombDetected
+    if (end == OutBuf.NeedsDict || end == OutBuf.NeedsInput && out.len == 0)
+      throw new java.io.IOException("stalled inflate")
+    val cfbBytes = out.result
     meta.add("activemime:length", cfbBytes.length.toString)
 
     val cfb = Cfb.parse(cfbBytes)

@@ -3,6 +3,7 @@ package graft.ole2
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
+import graft.core.OutBuf
 import graft.engine.{MetaSink, SpanSink}
 
 /** HWP v5 (Hangul word processor, CFB-based) text extractor.
@@ -69,19 +70,10 @@ object HwpExtractor {
   }
 
   private def inflateRaw(data: Array[Byte]): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(true)
-    try {
-      inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(math.min(data.length * 4, 1 << 20))
-      val buf = new Array[Byte](8192)
-      var n = inf.inflate(buf)
-      while (n > 0 || (!inf.finished() && !inf.needsInput())) {
-        out.write(buf, 0, n)
-        if (out.size > 256 * 1024 * 1024) throw new graft.engine.ZipBombDetected
-        n = inf.inflate(buf)
-      }
-      out.toByteArray
-    } finally inf.end()
+    val out = new OutBuf(OutBuf.MaxBytes, math.min(data.length * 4, 1 << 20))
+    if (out.inflate(data, 0, data.length, raw = true) == OutBuf.Capped)
+      throw new graft.engine.ZipBombDetected
+    out.result
   }
 
   /** Distributed ("ViewText") section: 4-byte header + 256-byte block

@@ -3,7 +3,7 @@ package graft.ole2
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.{Charset, StandardCharsets}
 import graft.engine.{MetaSink, SpanSink}
-import graft.core.Endian
+import graft.core.{Endian, OutBuf}
 
 /** Legacy binary Office text extraction over [[Cfb]] containers.
   *
@@ -456,18 +456,11 @@ object PptExtractor {
         try {
           val payload =
             if ((verInst >> 4) == 1) { // compressed: u32 size + zlib
-              val inf = new java.util.zip.Inflater()
-              inf.setInput(d, p + 12, len - 4)
-              val out = new java.io.ByteArrayOutputStream()
-              val tmp = new Array[Byte](65536)
-              while (!inf.finished() && !inf.needsInput() &&
-                  out.size < (64 << 20)) {
-                val k = inf.inflate(tmp)
-                if (k == 0 && !inf.finished()) throw new IllegalArgumentException("stall")
-                out.write(tmp, 0, k)
-              }
-              inf.end()
-              out.toByteArray
+              val out = new OutBuf(64 << 20, len * 4)
+              val end = out.inflate(d, p + 12, len - 4, raw = false)
+              if (end == OutBuf.NeedsDict || end == OutBuf.NeedsInput && out.len == 0)
+                throw new IllegalArgumentException("stall")
+              out.result
             } else java.util.Arrays.copyOfRange(d, p + 8, p + 8 + len)
           if (payload.length > 8) child(s"ole-object-$n", payload)
         } catch { case _: Exception => () } // best-effort, like pictures

@@ -1,6 +1,6 @@
 package graft.pdf
 
-import java.util.zip.Inflater
+import graft.core.OutBuf
 import scala.collection.mutable.ArrayBuffer
 
 /** PDF object model + lexer, from scratch on the JDK.
@@ -789,7 +789,7 @@ final class PdfDoc(data: Array[Byte], password: Option[String] = None) {
     */
   private def pdfLzw(data: Array[Byte], parms: Option[PDict]): Array[Byte] = {
     val early = parmInt(parms, "EarlyChange", 1)
-    val out = new java.io.ByteArrayOutputStream(data.length * 3)
+    val out = new OutBuf(ZipBudget, data.length * 3)
     val dict = new Array[Array[Byte]](4096)
     var dictSize = 258
     var width = 9
@@ -816,7 +816,6 @@ final class PdfDoc(data: Array[Byte], password: Option[String] = None) {
             else if (prev != null) prev :+ prev(0)
             else throw new PdfParseException("corrupt lzw stream")
           out.write(entry, 0, entry.length)
-          if (out.size() > ZipBudget) throw new graft.engine.ZipBombDetected
           if (prev != null && dictSize < 4096) {
             dict(dictSize) = prev :+ entry(0)
             dictSize += 1
@@ -826,7 +825,7 @@ final class PdfDoc(data: Array[Byte], password: Option[String] = None) {
         }
       }
     }
-    out.toByteArray
+    out.result
   }
 
   private def asciiHex(data: Array[Byte]): Array[Byte] = {
@@ -882,7 +881,7 @@ final class PdfDoc(data: Array[Byte], password: Option[String] = None) {
   }
 
   private def runLength(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(data.length * 2)
+    val out = new OutBuf(ZipBudget, data.length * 2)
     var i = 0
     var done = false
     while (!done && i < data.length) {
@@ -895,29 +894,19 @@ final class PdfDoc(data: Array[Byte], password: Option[String] = None) {
       } else if (i < data.length) {
         val b = data(i); i += 1
         var k = 0
-        while (k < 257 - l) { out.write(b); k += 1 }
+        while (k < 257 - l) { out.put(b); k += 1 }
       }
-      if (out.size() > ZipBudget) throw new graft.engine.ZipBombDetected
     }
-    out.toByteArray
+    out.result
   }
 
-  private def inflate(raw: Array[Byte]): Array[Byte] = {
-    val inf = new Inflater()
-    inf.setInput(raw)
-    val out = new java.io.ByteArrayOutputStream(raw.length * 4)
-    val buf = new Array[Byte](8192)
-    try {
-      while (!inf.finished() && !inf.needsInput()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && !inf.finished()) return out.toByteArray
-        out.write(buf, 0, n)
-        if (out.size() > ZipBudget) throw new graft.engine.ZipBombDetected
-      }
-      out.toByteArray
-    } catch {
-      case _: java.util.zip.DataFormatException => out.toByteArray
-    } finally inf.end()
+  /** A truncated or corrupt stream keeps what inflated. */
+  private def inflate(data: Array[Byte]): Array[Byte] = {
+    val out = new OutBuf(ZipBudget, data.length * 4)
+    try if (out.inflate(data, 0, data.length, raw = false) == OutBuf.Capped)
+      throw new graft.engine.ZipBombDetected
+    catch { case _: java.util.zip.DataFormatException => }
+    out.result
   }
 
   def objectCount: Int = objects.size

@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.OutBuf
+
 /** Brotli decoder — pure JDK, implemented from the public format
   * (RFC 7932). The reference routes .br through the external
   * brotli-dec library (tika pkg-module CompressorParser.java:129-140);
@@ -22,8 +24,6 @@ package graft.pkgx
 object Brotli {
 
   final class BrotliMalformed(msg: String) extends RuntimeException(msg)
-
-  val MaxOutputBytes: Long = 256L * 1024 * 1024
 
   private def fail(msg: String): Nothing = throw new BrotliMalformed(msg)
 
@@ -640,21 +640,10 @@ object Brotli {
         }
       }
     val window = (1 << wbits) - 16
-    // growable flat output buffer for backward copies
-    var buf = new Array[Byte](math.max(1024, math.min(bytes.length * 4L, 1 << 20).toInt))
-    var pos = 0
-
-    def ensureCap(extra: Int): Unit = {
-      // budget overflow is a decompression BOMB, not a malformed stream —
-      // classify like every other codec route (zlib/bzip2/lz4/7z)
-      if (pos.toLong + extra > MaxOutputBytes)
-        throw new graft.engine.ZipBombDetected
-      if (pos + extra > buf.length) {
-        var n = buf.length.toLong * 2
-        while (n < pos.toLong + extra) n *= 2
-        buf = java.util.Arrays.copyOf(buf, math.min(n, MaxOutputBytes).toInt)
-      }
-    }
+    // flat output for backward copies; each metablock reserves its length
+    // up front, so a budget overflow is a bomb before anything decodes
+    val out = new OutBuf(OutBuf.MaxBytes,
+      math.max(1024, math.min(bytes.length * 4L, 1 << 20).toInt))
 
     val distRb = Array(16, 15, 11, 4)
     var distRbIdx = 3 // most recent initial distance (4) lives in slot 3
@@ -693,10 +682,8 @@ object Brotli {
           val uncompressed = !isLast && br.readBit() == 1
           if (uncompressed) {
             br.align()
-            ensureCap(mlen)
-            val raw = br.copyBytes(mlen)
-            System.arraycopy(raw, 0, buf, pos, mlen)
-            pos += mlen
+            out.ensure(mlen)
+            out.write(br.copyBytes(mlen), 0, mlen)
           } else {
             // ---- compressed metablock ----
             val litBlocks = new BlockState(br, readVarLen256(br), 256)
@@ -717,9 +704,9 @@ object Brotli {
             val distAlphabet = 16 + ndirect + (48 << npostfix)
             val distCodes = Array.fill(ntreesD)(readHuffman(br, distAlphabet))
 
-            val end = pos + mlen
-            ensureCap(mlen)
-            while (pos < end) {
+            val end = out.len + mlen
+            out.ensure(mlen)
+            while (out.len < end) {
               cmdBlocks.maybeSwitch(br)
               cmdBlocks.remaining -= 1
               val cmdSym = cmdCodes(cmdBlocks.cur).decode(br)
@@ -733,9 +720,9 @@ object Brotli {
 
               // literals
               if (insLen > 0) {
-                if (pos + insLen > end) fail("insert run overruns metablock")
-                var p1 = if (pos > 0) buf(pos - 1) & 0xff else 0
-                var p2 = if (pos > 1) buf(pos - 2) & 0xff else 0
+                if (out.len + insLen > end) fail("insert run overruns metablock")
+                var p1 = if (out.len > 0) out.at(0) else 0
+                var p2 = if (out.len > 1) out.at(1) else 0
                 var k = 0
                 while (k < insLen) {
                   litBlocks.maybeSwitch(br)
@@ -745,14 +732,13 @@ object Brotli {
                     (CtxLut((mode << 9) + 256 + p2) & 0xff)
                   val tree = litCodes(cmapL(litBlocks.cur * 64 + ctx) & 0xff)
                   val lit = tree.decode(br)
-                  buf(pos) = lit.toByte
-                  pos += 1
+                  out.put(lit)
                   p2 = p1
                   p1 = lit
                   k += 1
                 }
               }
-              if (pos < end) {
+              if (out.len < end) {
                 // distance
                 var distance = 0
                 var dcode = 0
@@ -781,17 +767,10 @@ object Brotli {
                       postfix + ndirect + 1
                   }
                 }
-                val maxDist = math.min(window, pos)
+                val maxDist = math.min(window, out.len)
                 if (distance <= maxDist) {
-                  if (pos + copyLen > end) fail("copy run overruns metablock")
-                  var k = 0
-                  var src = pos - distance
-                  while (k < copyLen) {
-                    buf(pos) = buf(src)
-                    pos += 1
-                    src += 1
-                    k += 1
-                  }
+                  if (out.len + copyLen > end) fail("copy run overruns metablock")
+                  out.copyBack(distance - 1, copyLen)
                   if (dcode != 0) {
                     distRbIdx = (distRbIdx + 1) & 3
                     distRb(distRbIdx & 3) = distance
@@ -808,9 +787,8 @@ object Brotli {
                   val base = OffsetsByLength(copyLen) + copyLen * wordId
                   val word = java.util.Arrays.copyOfRange(Dict, base, base + copyLen)
                   val xf = transformWord(word, tid)
-                  if (pos + xf.length > end) fail("dictionary word overruns metablock")
-                  System.arraycopy(xf, 0, buf, pos, xf.length)
-                  pos += xf.length
+                  if (out.len + xf.length > end) fail("dictionary word overruns metablock")
+                  out.write(xf, 0, xf.length)
                 }
               }
             }
@@ -818,6 +796,6 @@ object Brotli {
         }
       }
     }
-    java.util.Arrays.copyOf(buf, pos)
+    out.result
   }
 }

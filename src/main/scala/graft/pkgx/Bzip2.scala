@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.OutBuf
+
 /** bzip2 codec — pure JDK, implemented from the public format
   * (Huffman-coded MTF/RLE2 over a BWT; the informal spec is the
   * canonical bzip2 source's documented layout). The reference routes
@@ -18,11 +20,6 @@ package graft.pkgx
 object Bzip2 {
 
   final class Bzip2Malformed(msg: String) extends RuntimeException(msg)
-
-  /** Decompressed-size cap: like TarUtil.MaxTotalBytes, a forged stream
-    * must fail the document, not OOM the executor.
-    */
-  val MaxOutputBytes: Long = 256L * 1024 * 1024
 
   // ---- CRC-32/BZIP2 (poly 0x04c11db7, MSB-first, init/final 0xffffffff)
   private val crcTable: Array[Int] = {
@@ -86,7 +83,7 @@ object Bzip2 {
     */
   def decompress(bytes: Array[Byte]): Array[Byte] = {
     if (!isBzip2(bytes)) throw new Bzip2Malformed("bad BZh header")
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new OutBuf(OutBuf.MaxBytes)
     var start = 0
     while (start + 4 < bytes.length && bytes(start) == 'B' &&
         bytes(start + 1) == 'Z' && bytes(start + 2) == 'h' &&
@@ -107,17 +104,15 @@ object Bzip2 {
         } else if (magicHi == 0x314159 && magicLo == 0x265359) {
           val blockCrc = decodeBlock(in, blockMax, out)
           combined = ((combined << 1) | (combined >>> 31)) ^ blockCrc
-          if (out.size() > MaxOutputBytes) throw new graft.engine.ZipBombDetected
         } else throw new Bzip2Malformed(f"bad block magic $magicHi%06x$magicLo%06x")
       }
       start = in.alignedPos
     }
-    out.toByteArray
+    out.result
   }
 
   /** One block: returns the block CRC after appending plain bytes. */
-  private def decodeBlock(in: BitReader, blockMax: Int,
-      out: java.io.ByteArrayOutputStream): Int = {
+  private def decodeBlock(in: BitReader, blockMax: Int, out: OutBuf): Int = {
     val storedCrc = (in.bits(16) << 16) | in.bits(16)
     if (in.bit() != 0)
       throw new Bzip2Malformed("deprecated randomized blocks unsupported")
@@ -320,13 +315,12 @@ object Bzip2 {
         // byte after 4 equal bytes = extra repeat count
         val extra = c & 0xff
         var k = 0
-        while (k < extra) { out.write(runByte); crc.update(runByte.toByte); k += 1 }
-        if (out.size() > MaxOutputBytes) throw new graft.engine.ZipBombDetected
+        while (k < extra) { out.put(runByte); crc.update(runByte.toByte); k += 1 }
         pendingCount = false
         runByte = -1
         runLen = 0
       } else {
-        out.write(c)
+        out.put(c)
         crc.update(c)
         if ((c & 0xff) == runByte) {
           runLen += 1

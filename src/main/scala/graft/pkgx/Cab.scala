@@ -1,8 +1,7 @@
 package graft.pkgx
 
-import java.util.zip.Inflater
 import scala.collection.mutable.ArrayBuffer
-import graft.core.Endian
+import graft.core.{Endian, OutBuf}
 
 /** Microsoft Cabinet (.cab) reader — from scratch per the public
   * [MS-CAB] / cabinet SDK format documentation.
@@ -26,9 +25,6 @@ object Cab {
   final class CabMalformed(msg: String) extends Exception(msg)
 
   final case class Entry(name: String, data: Array[Byte])
-
-  /** Same aggregate ceiling as SevenZ/ZipUtil (bomb guard). */
-  val MaxOutputBytes: Long = 256L * 1024 * 1024
 
   def isCab(b: Array[Byte]): Boolean =
     b.length >= 36 && b(0) == 'M' && b(1) == 'S' && b(2) == 'C' && b(3) == 'F'
@@ -121,7 +117,7 @@ object Cab {
               csum(bytes, p + 4, 4, 0)) != sum)
             throw new CabMalformed("CFDATA checksum mismatch")
           totalOut += cbUncomp
-          if (totalOut > MaxOutputBytes) throw new graft.engine.ZipBombDetected
+          if (totalOut > OutBuf.MaxBytes) throw new graft.engine.ZipBombDetected
           val u: Array[Byte] =
             if (comp == 0) {
               if (cbData != cbUncomp)
@@ -130,25 +126,13 @@ object Cab {
             } else {
               if (cbData < 2 || bytes(dataOff) != 'C' || bytes(dataOff + 1) != 'K')
                 throw new CabMalformed("bad MSZIP block signature")
-              val inf = new Inflater(true)
-              try {
-                // the DEFLATE history window spans blocks: prior output
-                // is this block's preset dictionary
-                if (prev != null) inf.setDictionary(prev)
-                inf.setInput(bytes, dataOff + 2, cbData - 2)
-                val ub = new Array[Byte](cbUncomp)
-                var o = 0
-                while (o < cbUncomp && !inf.finished()) {
-                  val r = inf.inflate(ub, o, cbUncomp - o)
-                  if (r == 0) {
-                    if (inf.needsDictionary() && prev != null) inf.setDictionary(prev)
-                    else if (inf.needsInput()) throw new CabMalformed("truncated MSZIP block")
-                    else if (!inf.finished()) throw new CabMalformed("stalled MSZIP block")
-                  } else o += r
-                }
-                if (o != cbUncomp) throw new CabMalformed("short MSZIP block")
-                ub
-              } finally inf.end()
+              // the DEFLATE history window spans blocks: prior output
+              // is this block's preset dictionary
+              val ub = new OutBuf(cbUncomp, cbUncomp)
+              if (ub.inflate(bytes, dataOff + 2, cbData - 2, raw = true, prev) == OutBuf.NeedsInput)
+                throw new CabMalformed("truncated MSZIP block")
+              if (ub.len != cbUncomp) throw new CabMalformed("short MSZIP block")
+              ub.result
             }
           prev =
             if (u.length >= 32768) java.util.Arrays.copyOfRange(u, u.length - 32768, u.length)
@@ -187,7 +171,7 @@ object Cab {
         if (iFolderRaw == 0xfffd || iFolderRaw == 0xffff) 0
         else if (iFolderRaw == 0xfffe) cFolders - 1
         else iFolderRaw
-      if (iFolder < cFolders && cbFile <= MaxOutputBytes) {
+      if (iFolder < cFolders && cbFile <= OutBuf.MaxBytes) {
         val fd = folderData(iFolder)
         if (uoff + cbFile <= fd.length)
           outEntries += Entry(name,

@@ -1,5 +1,6 @@
 package graft.pkgx
 
+import graft.core.OutBuf
 import graft.core.Endian.{le16, le64, leInt, putLe16, putLe32}
 
 /** BSD `dump(8)` backup archives — pure JDK, from the public on-tape
@@ -80,7 +81,7 @@ object DumpArchive {
     * any directory falls back to `ino-N`.
     */
   def entries(bytes: Array[Byte], maxEntries: Int = 10000,
-      maxTotalBytes: Long = 256L * 1024 * 1024): Vector[Entry] = {
+      maxTotalBytes: Long = OutBuf.MaxBytes): Vector[Entry] = {
     if (bytes.length < TpSize) throw new DumpMalformed("shorter than one record")
     val magic = leInt(bytes, 24)
     if (magic == OfsMagic) throw new DumpMalformed("old-filesystem dump layout")

@@ -1,7 +1,7 @@
 package graft.pkgx
 
 import scala.collection.mutable.ArrayBuffer
-import graft.core.Endian
+import graft.core.{Endian, OutBuf}
 
 /** HFS+ / HFSX volume reader for raw Apple disk images — from scratch
   * per Apple's public TN1150 ("HFS Plus Volume Format").
@@ -23,9 +23,6 @@ object Hfs {
   final class HfsMalformed(msg: String) extends Exception(msg)
 
   final case class Entry(name: String, data: Array[Byte])
-
-  /** Same aggregate ceiling as SevenZ/Cab (bomb guard). */
-  val MaxOutputBytes: Long = 256L * 1024 * 1024
 
   /** Volume signature at offset 1024: "H+" (HFS+) or "HX" (HFSX). */
   def isHfs(b: Array[Byte]): Boolean =
@@ -50,7 +47,7 @@ object Hfs {
       * record), the extents always address the volume. */
     def readFork(desc: Array[Byte], forkOff: Int): Array[Byte] = {
       val logical = be64(desc, forkOff)
-      if (logical > MaxOutputBytes) throw new graft.engine.ZipBombDetected
+      if (logical > OutBuf.MaxBytes) throw new graft.engine.ZipBombDetected
       val out = new java.io.ByteArrayOutputStream()
       var i = 0
       var got = 0L
@@ -150,7 +147,7 @@ object Hfs {
         if (forkOff + 80 > catalog.length)
           throw new HfsMalformed("file record out of range")
         total += be64(catalog, forkOff)
-        if (total > MaxOutputBytes) throw new graft.engine.ZipBombDetected
+        if (total > OutBuf.MaxBytes) throw new graft.engine.ZipBombDetected
         Some(Entry(fullPath, readFork(catalog, forkOff)))
       }
     }.toVector

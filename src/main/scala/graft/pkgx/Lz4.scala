@@ -1,6 +1,7 @@
 package graft.pkgx
 
 import graft.core.Endian.{le16, le32Bytes, leInt}
+import graft.core.OutBuf
 
 /** LZ4 frame codec — pure JDK, from the public LZ4 frame + block
   * specs. The reference routes .lz4 through commons-compress (tika
@@ -15,8 +16,6 @@ import graft.core.Endian.{le16, le32Bytes, leInt}
 object Lz4 {
 
   final class Lz4Malformed(msg: String) extends RuntimeException(msg)
-
-  val MaxOutputBytes: Long = 256L * 1024 * 1024
 
   private val Magic = 0x184D2204
   private val LegacyMagic = 0x184C2102
@@ -69,7 +68,7 @@ object Lz4 {
 
   /** LZ4 block decompression (the raw block format). */
   def decodeBlock(in: Array[Byte], from: Int, len: Int,
-      window: GrowBuf): Unit = {
+      window: OutBuf): Unit = {
     var i = from
     val end = from + len
     while (i < end) {
@@ -99,36 +98,15 @@ object Lz4 {
           b = in(i) & 0xff; i += 1; matchLen += b
         }
       }
-      var k = 0
-      while (k < matchLen) { window.put(window.at(offset - 1)); k += 1 }
-    }
-  }
-
-  /** Growable window shared across blocks (linked blocks reference
-    * earlier output).
-    */
-  final class GrowBuf(maxLen: Long) {
-    var buf = new Array[Byte](1 << 16)
-    var len = 0
-    private def ensure(extra: Int): Unit = {
-      if (len + extra > maxLen) throw new graft.engine.ZipBombDetected
-      while (len + extra > buf.length)
-        buf = java.util.Arrays.copyOf(buf, buf.length * 2)
-    }
-    def put(b: Int): Unit = { ensure(1); buf(len) = b.toByte; len += 1 }
-    def write(src: Array[Byte], off: Int, n: Int): Unit = {
-      ensure(n); System.arraycopy(src, off, buf, len, n); len += n
-    }
-    def at(dist: Int): Int = {
-      val idx = len - dist - 1
-      if (idx < 0) throw new Lz4Malformed("match offset before output start")
-      buf(idx) & 0xff
+      window.copyBack(offset - 1, matchLen)
     }
   }
 
   def decompress(bytes: Array[Byte]): Array[Byte] = {
     if (!isLz4(bytes)) throw new Lz4Malformed("bad lz4 magic")
-    val window = new GrowBuf(MaxOutputBytes)
+    // one window across blocks: linked blocks reference earlier output
+    val window = new OutBuf(OutBuf.MaxBytes, 1 << 16,
+      () => new Lz4Malformed("match offset before output start"))
     if (leInt(bytes, 0) == LegacyMagic) {
       // legacy frame: 4-byte LE block sizes until EOF or another magic
       var pos = 4
@@ -144,7 +122,7 @@ object Lz4 {
           pos += size
         }
       }
-      return java.util.Arrays.copyOf(window.buf, window.len)
+      return window.result
     }
     val flg = bytes(4) & 0xff
     val version = (flg >> 6) & 3
@@ -189,7 +167,7 @@ object Lz4 {
       if (xxh32(window.buf, 0, window.len, 0) != leInt(bytes, pos))
         throw new Lz4Malformed("content checksum mismatch")
     }
-    java.util.Arrays.copyOf(window.buf, window.len)
+    window.result
   }
 
   /** Fixture writer: standard frame of uncompressed blocks with a

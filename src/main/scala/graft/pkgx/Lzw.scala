@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.OutBuf
+
 /** compress(1) `.Z` decoder — pure JDK, from the public LZW/compress
   * format (magic 1f 9d, header bits = maxbits + block-mode flag,
   * variable-width codes 9..maxbits, CLEAR code 256 in block mode, and
@@ -15,8 +17,6 @@ package graft.pkgx
 object Lzw {
 
   final class LzwMalformed(msg: String) extends RuntimeException(msg)
-
-  val MaxOutputBytes: Long = 256L * 1024 * 1024
 
   def isZ(b: Array[Byte]): Boolean =
     b.length > 3 && (b(0) & 0xff) == 0x1f && (b(1) & 0xff) == 0x9d
@@ -35,7 +35,7 @@ object Lzw {
     var i = 0
     while (i < 256) { suffix(i) = i.toByte; i += 1 }
 
-    val out = new java.io.ByteArrayOutputStream(bytes.length * 3)
+    val out = new OutBuf(OutBuf.MaxBytes, bytes.length * 3)
     val stackBuf = new Array[Byte](maxMaxCode + 64)
 
     var nBits = 9
@@ -102,11 +102,10 @@ object Lzw {
           }
           finChar = cur & 0xff
           stackBuf(sp) = finChar.toByte; sp += 1
-          if (out.size().toLong + sp > MaxOutputBytes)
-            throw new graft.engine.ZipBombDetected
+          out.ensure(sp)
           // stack holds the string reversed
           var j = sp - 1
-          while (j >= 0) { out.write(stackBuf(j)); j -= 1 }
+          while (j >= 0) { out.put(stackBuf(j)); j -= 1 }
 
           if (oldCode >= 0 && freeEnt < maxMaxCode) {
             prefix(freeEnt) = oldCode
@@ -122,6 +121,6 @@ object Lzw {
         }
       }
     }
-    out.toByteArray
+    out.result
   }
 }

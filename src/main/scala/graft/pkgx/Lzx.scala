@@ -211,7 +211,7 @@ object Lzx {
     */
   def decodeSection(comp: Array[Byte], frameOffsets: Array[Long],
       resetInterval: Int, windowBytes: Long, outLen: Long): Array[Byte] = {
-    if (outLen > 256L * 1024 * 1024) throw new graft.engine.ZipBombDetected
+    if (outLen > graft.core.OutBuf.MaxBytes) throw new graft.engine.ZipBombDetected
     if (outLen < 0) throw new Malformed("negative length")
     var winBits = 0
     while ((1L << winBits) < windowBytes) winBits += 1
@@ -371,14 +371,11 @@ object Lzx {
         var i = start
         while (i < end) {
           if (out(i.toInt) == 0xe8.toByte) {
-            var abs = 0L; var k = 0
-            while (k < 4) { abs |= (out((i + 1 + k).toInt) & 0xffL) << (8 * k); k += 1 }
-            val absS = abs.toInt.toLong // signed 32-bit
+            val absS = Endian.leInt(out, (i + 1).toInt).toLong // signed 32-bit
             val curpos = i
             if (absS >= -curpos && absS < fileSize) {
               val rel = if (absS >= 0) absS - curpos else absS + fileSize
-              var v = rel; k = 0
-              while (k < 4) { out((i + 1 + k).toInt) = (v & 0xff).toByte; v >>= 8; k += 1 }
+              Endian.putLe32(out, (i + 1).toInt, rel)
             }
             i += 5
           } else i += 1

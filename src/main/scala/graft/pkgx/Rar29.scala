@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.OutBuf
+
 /** RAR version-29 (RAR 3.x "unpack29") LZ decoder, written from the
   * publicly documented format (RARLAB technote block layout; the LZ
   * alphabet, canonical-Huffman table serialization, and base/extra-bit
@@ -142,10 +144,6 @@ object Rar29 {
     }
   }
 
-  /** Cap on any single decompressed entry (bomb guard, same ceiling the
-    * 7z reader uses). */
-  val MaxOutput: Long = 256L * 1024 * 1024
-
   /** The PPMd model walks its own heap; corrupt streams surface as
     * model guards or (worst case) heap-bound overruns — both are
     * stream corruption, not crashes. Scoped to the PPM call sites so
@@ -234,7 +232,11 @@ object Rar29 {
     private var escChar = 2
     private var isPpm = false
 
-    /** append one entry's packed segment to the continuous input */
+    /** Append one member's packed segment to the continuous input.
+      * Exactly one `append` per member, in member order: the n-th
+      * `decodeNext` starts at the n-th appended segment, so a member
+      * appended in two pieces would desync every later one, and a
+      * `decodeNext` with no segment of its own left throws. */
     def append(data: Array[Byte], off: Int, packSize: Int): Unit = {
       val len = math.max(0, math.min(packSize.toLong,
         data.length.toLong - off).toInt)
@@ -469,7 +471,7 @@ object Rar29 {
       if (broken) throw new Malformed("stream poisoned by earlier entry")
       // both checks needed: unpSize alone may be a crafted 2^63-scale
       // value whose sum with op would wrap
-      if (unpSize < 0 || unpSize > MaxOutput || op + unpSize > MaxOutput)
+      if (unpSize < 0 || unpSize > OutBuf.MaxBytes || op + unpSize > OutBuf.MaxBytes)
         throw new Unsupported(s"rar entry too large: $unpSize")
       if (op + unpSize > 1L * 1024 * 1024 &&
           (op + unpSize) / math.max(1L, totalPacked) > 1000)
@@ -487,8 +489,9 @@ object Rar29 {
       // reads bytes through its own continuous channel (ModelPPM pulls
       // from the unpack read stream directly, not the LZ bit input),
       // so a mid-PPM member boundary must not disturb the byte cursor.
-      if (segIdx < segStarts.length && !isPpm)
-        br.seek(segStarts(segIdx), 0, ex = false)
+      if (segIdx >= segStarts.length)
+        throw new Malformed("decodeNext without an appended segment")
+      if (!isPpm) br.seek(segStarts(segIdx), 0, ex = false)
       segIdx += 1
       val entryStart = op
       val targetEnd = (op + unpSize).toInt
@@ -496,7 +499,7 @@ object Rar29 {
         // geometric growth keeps many-entry solid groups linear; the
         // logical write limit stays outCap (= this entry's end)
         val cap = math.max(targetEnd,
-          math.min(MaxOutput, out.length * 2L).toInt)
+          math.min(OutBuf.MaxBytes, out.length * 2L).toInt)
         val no = new Array[Byte](cap)
         System.arraycopy(out, 0, no, 0, op)
         out = no

@@ -1,5 +1,7 @@
 package graft.pkgx
 
+import graft.core.OutBuf
+
 /** RAR 5.0 ("unpack50") LZ decoder, written from the public format
   * notes (the RARLAB rar5 file-format description and the block layout
   * as documented by independent readers — The Unarchiver, 7-Zip's Rar5
@@ -205,8 +207,8 @@ object Rar50 {
     def decodeEntry(data: Array[Byte], off: Int, packSize: Int,
         unpSize: Long): Array[Byte] = {
       if (broken) throw new Malformed("rar5 stream poisoned")
-      if (unpSize < 0 || unpSize > Rar29.MaxOutput ||
-          op + unpSize > Rar29.MaxOutput)
+      if (unpSize < 0 || unpSize > OutBuf.MaxBytes ||
+          op + unpSize > OutBuf.MaxBytes)
         throw new Unsupported(s"rar5 entry too large: $unpSize")
       totalPacked += packSize
       if (op + unpSize > 1L * 1024 * 1024 &&
@@ -223,7 +225,7 @@ object Rar50 {
       val targetEnd = (op + unpSize).toInt
       if (targetEnd > out.length) {
         val cap = math.max(targetEnd,
-          math.min(Rar29.MaxOutput, out.length * 2L).toInt)
+          math.min(OutBuf.MaxBytes, out.length * 2L).toInt)
         val no = new Array[Byte](cap)
         System.arraycopy(out, 0, no, 0, op)
         out = no

@@ -1,6 +1,7 @@
 package graft.pkgx
 
 import java.nio.charset.StandardCharsets
+import graft.core.OutBuf
 import graft.core.Endian.{le16, le16Bytes, le32, le32Bytes}
 
 /** RAR archive header walk (RAR 4.x and RAR 5.x container formats).
@@ -424,7 +425,7 @@ object RarUtil {
   private def decryptAndDecode(b: Array[Byte], off: Int, packSize: Int,
       unpSize: Long, method: Int,
       fileCrc: Long, password: String, salt: Array[Byte]): Option[Array[Byte]] = {
-    if (unpSize < 0 || unpSize > Rar29.MaxOutput) return None
+    if (unpSize < 0 || unpSize > OutBuf.MaxBytes) return None
     if (method != 0x30) return None // v29 members route through the job chain
     val encLen = packSize & ~15
     if (encLen <= 0) {

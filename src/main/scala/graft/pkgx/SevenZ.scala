@@ -1,7 +1,7 @@
 package graft.pkgx
 
-import java.util.zip.{CRC32, Inflater}
-import graft.core.Endian
+import java.util.zip.CRC32
+import graft.core.{Endian, OutBuf}
 
 /** 7z container reader — pure JDK + the from-scratch LZMA family in this
   * package, implemented from the public 7z format documentation
@@ -29,9 +29,6 @@ object SevenZ {
   final class SevenZMalformed(msg: String) extends RuntimeException(msg)
 
   final case class Entry(name: String, data: Array[Byte])
-
-  /** Shared decompressed-size cap across all folders of one archive. */
-  val MaxOutputBytes: Long = 256L * 1024 * 1024
 
   private val Signature = Array[Byte]('7', 'z', 0xbc.toByte, 0xaf.toByte, 0x27, 0x1c)
 
@@ -281,21 +278,12 @@ object SevenZ {
   }
 
   private def inflateRaw(in: Array[Byte], unpackSize: Long): Array[Byte] = {
-    if (unpackSize > MaxOutputBytes) throw new graft.engine.ZipBombDetected
-    val inf = new Inflater(true)
-    try {
-      inf.setInput(in)
-      val out = new Array[Byte](unpackSize.toInt)
-      var off = 0
-      while (off < out.length && !inf.finished()) {
-        val n = inf.inflate(out, off, out.length - off)
-        if (n == 0 && inf.needsInput())
-          throw new SevenZMalformed("truncated deflate stream")
-        off += n
-      }
-      if (off != out.length) throw new SevenZMalformed("deflate size mismatch")
-      out
-    } finally inf.end()
+    if (unpackSize > OutBuf.MaxBytes) throw new graft.engine.ZipBombDetected
+    val out = new OutBuf(unpackSize, unpackSize.toInt)
+    if (out.inflate(in, 0, in.length, raw = true) == OutBuf.NeedsInput)
+      throw new SevenZMalformed("truncated deflate stream")
+    if (out.len != unpackSize) throw new SevenZMalformed("deflate size mismatch")
+    out.result
   }
 
   /** 7zAES (coder 0x06F10701) key schedule + CBC decrypt. Properties:
@@ -359,7 +347,7 @@ object SevenZ {
 
   private def runCoder(c: Coder, in: Array[Byte], unpackSize: Long,
       password: Option[String]): Array[Byte] = {
-    if (unpackSize > MaxOutputBytes || unpackSize < 0)
+    if (unpackSize > OutBuf.MaxBytes || unpackSize < 0)
       throw new graft.engine.ZipBombDetected
     c.id match {
       case IdCopy =>
@@ -367,15 +355,13 @@ object SevenZ {
         java.util.Arrays.copyOfRange(in, 0, unpackSize.toInt)
       case IdLzma =>
         if (c.props.length < 1) throw new SevenZMalformed("missing lzma props")
-        val w = new Lzma2.Window(unpackSize)
-        Lzma2.decodeLzma1(c.props(0) & 0xff, in, 0, in.length, unpackSize.toInt, w)
-        java.util.Arrays.copyOfRange(w.buf, 0, w.len)
+        Lzma2.decodeLzma1(c.props(0) & 0xff, in, 0, in.length, unpackSize.toInt)
       case IdLzma2 =>
-        val w = new Lzma2.Window(unpackSize)
+        val w = Lzma2.window(unpackSize, 1 << 16)
         Lzma2.decode(in, 0, w) // 7z LZMA2 streams carry the 0x00 end marker
         if (w.len.toLong != unpackSize)
           throw new SevenZMalformed("lzma2 size mismatch")
-        java.util.Arrays.copyOfRange(w.buf, 0, w.len)
+        w.result
       case IdDelta =>
         val dist = if (c.props.nonEmpty) (c.props(0) & 0xff) + 1 else 1
         deltaDecode(in, dist)
@@ -620,7 +606,7 @@ object SevenZ {
         si.folders.indices.toVector.flatMap { i =>
           val folderOut = decodeFolder(si.folders(i), packs(i), password)
           total += folderOut.length
-          if (total > MaxOutputBytes) throw new graft.engine.ZipBombDetected
+          if (total > OutBuf.MaxBytes) throw new graft.engine.ZipBombDetected
           var off = 0L
           si.substreamSizes(i).map { sz =>
             if (sz < 0 || off + sz > folderOut.length)

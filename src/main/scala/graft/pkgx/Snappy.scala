@@ -1,6 +1,6 @@
 package graft.pkgx
 
-import graft.core.Endian
+import graft.core.{Endian, OutBuf}
 
 /** Snappy framing format (github.com/google/snappy framing_format.txt)
   * and the raw block format — the CompressorParser's snappy-framed
@@ -19,11 +19,13 @@ object Snappy {
 
   final class SnappyMalformed(msg: String) extends RuntimeException(msg)
 
-  private val MaxOut = 256 << 20
+  /** Uncompressed bytes one framed chunk may hold (framing format §4.2). */
+  private val MaxChunk = 65536
 
   /** Decompress a framed stream. */
   def decompressFramed(b: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new OutBuf(OutBuf.MaxBytes, 1 << 16,
+      () => new SnappyMalformed("copy out of bounds"))
     var p = 0
     while (p + 4 <= b.length) {
       val tpe = b(p) & 0xff
@@ -42,15 +44,16 @@ object Snappy {
         case t if t >= 0x80 => () // skippable
         case t => throw new SnappyMalformed(f"unskippable chunk 0x$t%02x")
       }
-      if (out.size > MaxOut) throw new SnappyMalformed("output over budget")
       p += len
     }
-    out.toByteArray
+    out.result
   }
 
-  /** Decompress one raw snappy block into `out`. */
-  private[pkgx] def decompressBlock(b: Array[Byte], from: Int, n: Int,
-      out: java.io.ByteArrayOutputStream): Unit = {
+  /** Decompress one raw snappy block onto `out`; its copies reach back
+    * only into the block itself.
+    */
+  private def decompressBlock(b: Array[Byte], from: Int, n: Int,
+      out: OutBuf): Unit = {
     var p = from
     val end = from + n
     // uvarint expected length
@@ -64,10 +67,15 @@ object Snappy {
       shift += 7
       more = (c & 0x80) != 0
     }
-    if (expect > MaxOut) throw new SnappyMalformed("declared size over budget")
-    val win = new Array[Byte](expect.toInt)
-    var w = 0
-    while (p < end && w < win.length) {
+    if (expect > MaxChunk) throw new SnappyMalformed("declared size over chunk limit")
+    val start = out.len
+    val stop = start + expect.toInt
+    def copy(off: Int, len: Int): Unit = {
+      if (off <= 0 || off > out.len - start || out.len + len > stop)
+        throw new SnappyMalformed("copy out of bounds")
+      out.copyBack(off - 1, len)
+    }
+    while (p < end && out.len < stop) {
       val tag = b(p) & 0xff
       p += 1
       (tag & 3) match {
@@ -82,40 +90,31 @@ object Snappy {
             litLen = v + 1
             p += extra
           }
-          if (p + litLen > end || w + litLen > win.length)
+          if (p + litLen > end || out.len + litLen > stop)
             throw new SnappyMalformed("literal out of bounds")
-          System.arraycopy(b, p, win, w, litLen)
-          p += litLen; w += litLen
+          out.write(b, p, litLen)
+          p += litLen
         case 1 => // copy, 1-byte offset, len 4-11
           if (p >= end) throw new SnappyMalformed("truncated copy1")
           val len = ((tag >> 2) & 0x7) + 4
           val off = ((tag >> 5) << 8) | (b(p) & 0xff)
           p += 1
-          copy(win, w, off, len); w += len
+          copy(off, len)
         case 2 => // copy, 2-byte offset
           if (p + 2 > end) throw new SnappyMalformed("truncated copy2")
           val len = (tag >> 2) + 1
           val off = Endian.le16(b, p)
           p += 2
-          copy(win, w, off, len); w += len
+          copy(off, len)
         case _ => // copy, 4-byte offset
           if (p + 4 > end) throw new SnappyMalformed("truncated copy4")
           val len = (tag >> 2) + 1
           val off = Endian.leInt(b, p)
           p += 4
-          copy(win, w, off, len); w += len
+          copy(off, len)
       }
     }
-    if (w != win.length) throw new SnappyMalformed("short block")
-    out.write(win, 0, w)
-  }
-
-  private def copy(win: Array[Byte], w0: Int, off: Int, len: Int): Unit = {
-    if (off <= 0 || off > w0 || w0 + len > win.length)
-      throw new SnappyMalformed("copy out of bounds")
-    var w = w0
-    var i = 0
-    while (i < len) { win(w) = win(w - off); w += 1; i += 1 }
+    if (out.len != stop) throw new SnappyMalformed("short block")
   }
 
   /** Framed-format compressor (uncompressed chunks — valid output for

@@ -1,6 +1,7 @@
 package graft.pkgx
 
 import java.nio.charset.StandardCharsets
+import graft.core.OutBuf
 
 /** USTAR (POSIX tar) archive reader — pure JDK, header-only format.
   *
@@ -68,12 +69,6 @@ object TarUtil {
     bytes.length >= 263 && bytes(257) == 'u' && bytes(258) == 's' &&
       bytes(259) == 't' && bytes(260) == 'a' && bytes(261) == 'r'
 
-  /** Total-extraction budget: like the zip path's bomb guard, a tar
-    * whose headers forge huge sizes must fail the DOCUMENT (caught as
-    * ZipBombDetected by the engine), not OOM the executor.
-    */
-  val MaxTotalBytes: Long = 256L * 1024 * 1024
-
   def entries(bytes: Array[Byte], maxEntries: Int = 10000): Vector[Entry] = {
     val out = Vector.newBuilder[Entry]
     var p = 0L
@@ -108,7 +103,7 @@ object TarUtil {
             // forging absurd sizes is failed as hostile (like the zip
             // guard) instead of silently yielding truncated members
             extracted += size
-            if (extracted > MaxTotalBytes) throw new graft.engine.ZipBombDetected
+            if (extracted > OutBuf.MaxBytes) throw new graft.engine.ZipBombDetected
             out += Entry(name,
               java.util.Arrays.copyOfRange(bytes, dataStart.toInt, dataEnd.toInt))
           }

@@ -1,6 +1,7 @@
 package graft.pkgx
 
-import graft.core.Endian.{be16, le32, le32Bytes}
+import graft.core.Endian.{be16, le32, le64, le32Bytes}
+import graft.core.OutBuf
 
 /** XZ / LZMA2 codec — pure JDK, implemented from the public formats
   * (tukaani xz-file-format spec + the LZMA specification's reference
@@ -17,9 +18,6 @@ import graft.core.Endian.{be16, le32, le32Bytes}
 object Xz {
 
   final class XzMalformed(msg: String) extends RuntimeException(msg)
-
-  /** Decompressed-size cap — forged streams fail the document. */
-  val MaxOutputBytes: Long = 256L * 1024 * 1024
 
   private val HeaderMagic = Array[Byte](0xfd.toByte, '7', 'z', 'X', 'Z', 0)
 
@@ -91,7 +89,7 @@ object Xz {
     val checkType = bytes(7) & 0x0f
     if (crc32(bytes, 6, 2) != le32(bytes, 8))
       throw new XzMalformed("stream header CRC mismatch")
-    val window = new Lzma2.Window(MaxOutputBytes)
+    val window = Lzma2.window(OutBuf.MaxBytes, 1 << 16)
     var pos = 12
     var done = false
     while (!done) {
@@ -158,10 +156,7 @@ object Xz {
             if (crc32(window.buf, before, n) != le32(bytes, q))
               throw new XzMalformed("block CRC32 mismatch")
           case 4 =>
-            var c = 0L
-            var i = 0
-            while (i < 8) { c |= (bytes(q + i) & 0xffL) << (8 * i); i += 1 }
-            if (crc64(window.buf, before, n) != c)
+            if (crc64(window.buf, before, n) != le64(bytes, q))
               throw new XzMalformed("block CRC64 mismatch")
           case 10 =>
             val d = java.security.MessageDigest.getInstance("SHA-256")
@@ -175,7 +170,7 @@ object Xz {
       }
     }
     // index + footer carry no content; extraction stops here
-    java.util.Arrays.copyOf(window.buf, window.len)
+    window.result
   }
 
   /** Fixture writer: one block of uncompressed LZMA2 chunks, CRC32
@@ -262,31 +257,14 @@ object Xz {
 object Lzma2 {
   import Xz.XzMalformed
 
-  /** Growable output window with O(1) back-references. */
-  final class Window(maxLen: Long) {
-    var buf = new Array[Byte](1 << 16)
-    var len = 0
-    def ensure(extra: Int): Unit = {
-      if (len + extra > maxLen) throw new graft.engine.ZipBombDetected
-      while (len + extra > buf.length)
-        buf = java.util.Arrays.copyOf(buf, buf.length * 2)
-    }
-    def put(b: Int): Unit = { ensure(1); buf(len) = b.toByte; len += 1 }
-    def write(src: Array[Byte], off: Int, n: Int): Unit = {
-      ensure(n); System.arraycopy(src, off, buf, len, n); len += n
-    }
-    /** Byte at back-distance `dist` (0 = last written). */
-    def at(dist: Int): Int = {
-      val idx = len - dist - 1
-      if (idx < 0 || dist < 0) throw new XzMalformed("lzma distance out of range")
-      buf(idx) & 0xff
-    }
-  }
+  /** An output window of at most `cap` bytes. */
+  def window(cap: Long, hint: Int): OutBuf =
+    new OutBuf(cap, hint, () => new XzMalformed("lzma distance out of range"))
 
   /** Decode chunks starting at `pos0` into `window`; returns the offset
     * just past the 0x00 end marker.
     */
-  def decode(in: Array[Byte], pos0: Int, window: Window): Int = {
+  def decode(in: Array[Byte], pos0: Int, window: OutBuf): Int = {
     var pos = pos0
     var lzma: LzmaDecoder = null
     var lc = 0; var lp = 0; var pb = 0
@@ -326,7 +304,7 @@ object Lzma2 {
     pos
   }
 
-  /** Decode one raw LZMA1 stream of known unpacked size into `window` —
+  /** Decode one raw LZMA1 stream of known unpacked size —
     * the 7z folder-coder shape (id 0x030101): a single range-coded stream
     * with the classic `(pb*5 + lp)*9 + lc` props byte, no chunking, no end
     * marker needed when the size is known. Shares the LZMA2 chunk
@@ -334,10 +312,12 @@ object Lzma2 {
     * stream with reset state).
     */
   def decodeLzma1(propsByte: Int, in: Array[Byte], from: Int, packed: Int,
-      unpacked: Int, window: Window): Unit = {
+      unpacked: Int): Array[Byte] = {
     if (propsByte > 224) throw new XzMalformed("bad lzma props")
     val lc = propsByte % 9; val lp = (propsByte / 9) % 5; val pb = propsByte / 45
-    new LzmaDecoder(lc, lp, pb).decodeChunk(in, from, packed, unpacked, window)
+    val w = window(unpacked, unpacked)
+    new LzmaDecoder(lc, lp, pb).decodeChunk(in, from, packed, unpacked, w)
+    w.result
   }
 
   /** One LZMA probability-model decoder (survives across mode-0 chunks). */
@@ -452,7 +432,7 @@ object Lzma2 {
       else 18 + rcBitTree(high, 8)
 
     def decodeChunk(in: Array[Byte], from: Int, packed: Int, unpacked: Int,
-        w: Window): Unit = {
+        w: OutBuf): Unit = {
       rcInit(in, from, packed)
       w.ensure(unpacked)
       var produced = 0
@@ -528,8 +508,7 @@ object Lzma2 {
           if (len > 0) {
             if (produced + len > unpacked)
               throw new XzMalformed("lzma overrun past chunk size")
-            var i = 0
-            while (i < len) { w.put(w.at(rep0)); i += 1 }
+            w.copyBack(rep0, len)
             produced += len
           }
         }

@@ -1,6 +1,7 @@
 package graft.pkgx
 
 import graft.core.Endian.{le16, le64, leInt}
+import graft.core.OutBuf
 
 /** Zstandard decoder — pure JDK, implemented from the public format
   * (RFC 8878). The reference routes .zst through commons-compress /
@@ -17,8 +18,6 @@ import graft.core.Endian.{le16, le64, leInt}
 object Zstd {
 
   final class ZstdMalformed(msg: String) extends RuntimeException(msg)
-
-  val MaxOutputBytes: Long = 256L * 1024 * 1024
 
   private val Magic = 0xFD2FB528
 
@@ -299,7 +298,7 @@ object Zstd {
 
   /** Huffman-decode one backward stream into out (exactly n symbols). */
   private def hufDecodeStream(t: HufTable, b: Array[Byte], start: Int,
-      len: Int, n: Int, out: GrowOut): Unit = {
+      len: Int, n: Int, out: OutBuf): Unit = {
     val bits = new BackBits(b, start, len)
     var state = bits.read(t.maxBits)
     var produced = 0
@@ -377,35 +376,13 @@ object Zstd {
       (63 - java.lang.Long.numberOfLeadingZeros(rest)).toInt + 1
   }
 
-  // ==== output window ==================================================
-
-  private final class GrowOut(maxLen: Long) {
-    var buf = new Array[Byte](1 << 16)
-    var len = 0
-    def ensure(extra: Int): Unit = {
-      if (len.toLong + extra > maxLen) throw new graft.engine.ZipBombDetected
-      while (len + extra > buf.length)
-        buf = java.util.Arrays.copyOf(buf, buf.length * 2)
-    }
-    def put(b: Int): Unit = { ensure(1); buf(len) = b.toByte; len += 1 }
-    def write(src: Array[Byte], off: Int, n: Int): Unit = {
-      ensure(n); System.arraycopy(src, off, buf, len, n); len += n
-    }
-    def copyMatch(dist: Int, n: Int): Unit = {
-      if (dist <= 0 || dist > len) throw new ZstdMalformed("match distance out of range")
-      ensure(n)
-      var i = 0
-      while (i < n) { buf(len) = buf(len - dist); len += 1; i += 1 }
-    }
-  }
-
   // ==== frame / block decode ===========================================
 
   private final class SeqTables(
       var ll: FseTable, var of: FseTable, var ml: FseTable)
 
   def decompress(bytes: Array[Byte]): Array[Byte] = {
-    val out = new GrowOut(MaxOutputBytes)
+    val out = newOut(OutBuf.MaxBytes, 1 << 16)
     var pos = 0
     var sawFrame = false
     while (pos + 4 <= bytes.length) {
@@ -422,10 +399,13 @@ object Zstd {
       } else throw new ZstdMalformed(f"bad zstd magic 0x$magic%08x")
     }
     if (!sawFrame) throw new ZstdMalformed("no zstd frame")
-    java.util.Arrays.copyOf(out.buf, out.len)
+    out.result
   }
 
-  private def decodeFrame(bytes: Array[Byte], start: Int, out: GrowOut): Int = {
+  private def newOut(cap: Long, hint: Int) =
+    new OutBuf(cap, hint, () => new ZstdMalformed("match distance out of range"))
+
+  private def decodeFrame(bytes: Array[Byte], start: Int, out: OutBuf): Int = {
     var pos = start
     val fhd = bytes(pos) & 0xff
     pos += 1
@@ -490,7 +470,7 @@ object Zstd {
     * literals in later blocks).
     */
   private def decodeCompressedBlock(b: Array[Byte], start: Int, size: Int,
-      out: GrowOut, seqTables: SeqTables, prevHuf0: HufTable): HufTable = {
+      out: OutBuf, seqTables: SeqTables, prevHuf0: HufTable): HufTable = {
     var prevHuf = prevHuf0
     var pos = start
     val end = start + size
@@ -538,7 +518,7 @@ object Zstd {
           prevHuf
         }
       prevHuf = huf
-      val litOut = new GrowOut(regen.toLong max 16L)
+      val litOut = newOut(regen max 16, regen max 16)
       if (nStreams == 1) {
         hufDecodeStream(huf, b, pos, sectionEnd - pos, regen, litOut)
       } else {
@@ -559,7 +539,7 @@ object Zstd {
           k += 1
         }
       }
-      literals = java.util.Arrays.copyOf(litOut.buf, litOut.len)
+      literals = litOut.result
       pos = sectionEnd
     }
 
@@ -637,7 +617,7 @@ object Zstd {
       if (litPos + ll > literals.length) throw new ZstdMalformed("literal overrun")
       out.write(literals, litPos, ll)
       litPos += ll
-      out.copyMatch(offset, ml)
+      out.copyBack(offset - 1, ml)
       seq += 1
       if (seq < nbSeq) { // states do not update after the final sequence
         llState = llT.baseline(llState) + bits.read(llT.nbBits(llState))

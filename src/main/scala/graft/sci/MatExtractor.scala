@@ -3,7 +3,7 @@ package graft.sci
 import java.nio.charset.StandardCharsets
 
 import graft.engine.{MetaSink, SpanSink}
-import graft.core.Endian
+import graft.core.{Endian, OutBuf}
 
 /** MATLAB Level-5 MAT-file extraction.
   *
@@ -159,24 +159,16 @@ object MatExtractor {
         val (t, off, n) = r.element()
         t match {
           case 15 => // miCOMPRESSED: inflate, parse the single inner element
-            val inf = new java.util.zip.Inflater()
-            inf.setInput(r.b, off, n)
-            val out = new java.io.ByteArrayOutputStream(math.min(n * 4, 1 << 20))
-            val buf = new Array[Byte](8192)
-            try {
-              while (!inf.finished() && !inf.needsInput()) {
-                val k = inf.inflate(buf)
-                if (k == 0 && !inf.finished()) throw new MatMalformed("zlib stall")
-                inflatedBudget -= k
-                if (inflatedBudget < 0) throw new MatMalformed("inflate budget exceeded")
-                out.write(buf, 0, k)
-              }
-            } catch {
-              case e: java.util.zip.DataFormatException =>
-                throw new MatMalformed(s"bad zlib stream: ${e.getMessage}")
-            } finally inf.end()
-            val inner = out.toByteArray
-            walk(new Rd(inner, 0, inner.length, le))
+            val out = new OutBuf(inflatedBudget, math.min(n * 4, 1 << 20))
+            val end =
+              try out.inflate(r.b, off, n, raw = false)
+              catch { case e: java.util.zip.DataFormatException =>
+                throw new MatMalformed(s"bad zlib stream: ${e.getMessage}") }
+            if (end == OutBuf.Capped) throw new MatMalformed("inflate budget exceeded")
+            if (end == OutBuf.NeedsDict || end == OutBuf.NeedsInput && out.len == 0 && n > 0)
+              throw new MatMalformed("zlib stall")
+            inflatedBudget -= out.len
+            walk(new Rd(out.result, 0, out.len, le))
           case 14 =>
             val a = matrix(new Rd(r.b, off, off + n, le), 0)
             emit(a, sink)

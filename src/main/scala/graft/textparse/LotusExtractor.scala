@@ -94,9 +94,7 @@ object LotusExtractor {
 
   /** 80-bit x87 extended float, little-endian (WK3/WK4 NUMBER cells). */
   private def ext80(b: Array[Byte], off: Int): Double = {
-    var mant = 0L
-    var i = 0
-    while (i < 8) { mant |= (b(off + i) & 0xffL) << (8 * i); i += 1 }
+    val mant = le64(b, off)
     val se = le16(b, off + 8)
     val sign = if ((se & 0x8000) != 0) -1.0 else 1.0
     val exp = se & 0x7fff

@@ -41,10 +41,7 @@ object MiscBinExtractor {
       meta.set("stl:header", header)
       sink.chars(header); sink.newline()
     }
-    var tris = 0L
-    var i = 0
-    while (i < 4) { tris |= (bytes(80 + i) & 0xffL) << (8 * i); i += 1 }
-    meta.set("stl:triangles", tris.toString)
+    meta.set("stl:triangles", Endian.le32(bytes, 80).toString)
   }
 
   /** PostScript / AI DSC comments (%%Title, %%Creator, %%Pages, ...) —

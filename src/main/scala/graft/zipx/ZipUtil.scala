@@ -4,6 +4,7 @@ import java.io.ByteArrayInputStream
 import java.util.zip.{GZIPInputStream, ZipInputStream}
 import scala.collection.mutable.ArrayBuffer
 import graft.core.Endian.{le16, le32}
+import graft.core.OutBuf
 
 /** In-row ZIP / gzip access over byte-array payloads.
   *
@@ -38,10 +39,9 @@ object ZipUtil {
     * buffers. CEN records may all point at the same (or overlapping)
     * local data, so per-entry caps alone let a ~70 KB crafted archive
     * with 65535 CEN entries × 64 MB claims inflate terabytes; past this
-    * budget the read aborts as a detected bomb (same 256 MB ceiling as
-    * SevenZ.MaxOutputBytes).
+    * budget the read aborts as a detected bomb.
     */
-  val MaxTotalBytes: Long = 256L * 1024 * 1024
+  val MaxTotalBytes: Long = OutBuf.MaxBytes
 
   /** Every file member with its decompressed bytes. */
   def entries(zipBytes: Array[Byte]): Vector[Entry] =
@@ -148,10 +148,9 @@ object ZipUtil {
       java.util.Arrays.copyOfRange(b, at + 46, at + 46 + nameLen)
     lazy val name: String = decodeName(flags, nameBytes)
 
-    /** (uncompressed size, compressed size, local header offset); the
-      * zip64 extended-info extra field (id 0x0001) overrides each field
-      * stored as 0xFFFFFFFF. */
-    lazy val sizes: (Long, Long, Long) = {
+    /** The zip64 extended-info extra field (id 0x0001) overrides each
+      * field stored as 0xFFFFFFFF. */
+    def sizes: Sizes = {
       var compSize = le32(b, at + 20)
       var uncompSize = le32(b, at + 24)
       var localOff = le32(b, at + 42)
@@ -173,9 +172,11 @@ object ZipUtil {
         }
         xp += 4 + sz
       }
-      (uncompSize, compSize, localOff)
+      Sizes(uncompSize, compSize, localOff)
     }
   }
+
+  private final case class Sizes(uncomp: Long, comp: Long, localOff: Long)
 
   /** The records read, whether they are every declared record with each
     * name inside the bytes, and the prepended-prefix shift. */
@@ -267,22 +268,12 @@ object ZipUtil {
       // inflate errors PROPAGATE (like the pre-crypto walk): a corrupt
       // deflate stream in a plain archive must surface as a recorded
       // zip-read exception, not a silently missing entry; the decrypted
-      // call site catches and reports the member as encrypted instead
-      val inf = new java.util.zip.Inflater(true)
-      try {
-        inf.setInput(src, off, len)
-        // the declared size bounds the output; a member that inflates to
-        // less (over-declared, or truncated) returns only what inflated
-        val outB = new Array[Byte](uncompSize)
-        var o = 0
-        var stalled = false
-        while (o < outB.length && !inf.finished() && !stalled) {
-          val r = inf.inflate(outB, o, outB.length - o)
-          stalled = r == 0 && inf.needsInput()
-          o += r
-        }
-        if (o == outB.length) outB else java.util.Arrays.copyOf(outB, o)
-      } finally inf.end()
+      // call site catches and reports the member as encrypted instead.
+      // The declared size bounds the output; a member that inflates to
+      // less (over-declared, or truncated) returns only what inflated
+      val out = new OutBuf(uncompSize, uncompSize)
+      out.inflate(src, off, len, raw = true)
+      out.result
     // legacy PKZIP methods (reference: commons-compress
     // Unshrinking/ExplodingInputStream; ZipParserTest moby.zip)
     case 1 =>
@@ -306,12 +297,8 @@ object ZipUtil {
         else {
           val propsSize = le16(src, off + 2)
           if (propsSize < 5 || 4 + propsSize > len) null
-          else {
-            val w = new graft.pkgx.Lzma2.Window(uncompSize.toLong)
-            graft.pkgx.Lzma2.decodeLzma1(src(off + 4) & 0xff, src,
-              off + 4 + propsSize, len - 4 - propsSize, uncompSize, w)
-            java.util.Arrays.copyOfRange(w.buf, 0, w.len)
-          }
+          else graft.pkgx.Lzma2.decodeLzma1(src(off + 4) & 0xff, src,
+            off + 4 + propsSize, len - 4 - propsSize, uncompSize)
         }
       } catch { case _: Exception => null }
     case 93 => // zstd
@@ -475,7 +462,10 @@ object ZipUtil {
       val p = r.at
       val flags = r.flags
       val method = le16(b, p + 10)
-      val (uncompSize, compSize, localOff) = r.sizes
+      val sizes = r.sizes
+      val uncompSize = sizes.uncomp
+      val compSize = sizes.comp
+      val localOff = sizes.localOff
       val nameLen = r.nameLen
       val extraLen = r.extraLen
       val nameBytes = r.nameBytes

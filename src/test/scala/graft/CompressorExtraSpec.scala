@@ -48,6 +48,50 @@ class CompressorExtraSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(back, payload))
   }
 
+  test("snappy: a compressed chunk declaring over 65,536 bytes fails before allocating") {
+    // stream identifier, then a compressed chunk: masked CRC (unchecked)
+    // and a block whose uvarint length declares 256 MiB
+    val framed = Array[Byte](0xff.toByte, 6, 0, 0, 's', 'N', 'a', 'P', 'p', 'Y',
+      0, 9, 0, 0, 0, 0, 0, 0, 0x80.toByte, 0x80.toByte, 0x80.toByte, 0x80.toByte, 1)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread.getId
+    val before = mx.getThreadAllocatedBytes(tid)
+    val e = intercept[graft.pkgx.Snappy.SnappyMalformed](
+      graft.pkgx.Snappy.decompressFramed(framed))
+    assert(e.getMessage.contains("chunk limit"), e.getMessage)
+    val allocated = mx.getThreadAllocatedBytes(tid) - before
+    assert(allocated < (4L << 20), s"allocated $allocated bytes")
+    // the limit itself still decodes: one literal, then copies of it
+    val ok = snappyChunk(65536)
+    assert(graft.pkgx.Snappy.decompressFramed(ok).toSeq == Seq.fill(65536)('z'.toByte))
+    intercept[graft.pkgx.Snappy.SnappyMalformed](
+      graft.pkgx.Snappy.decompressFramed(snappyChunk(65537)))
+  }
+
+  /** A framed stream of one compressed chunk whose block is `n` bytes of
+    * 'z': a one-byte literal, then 2-byte-offset copies of 64 bytes and a
+    * last shorter one; the block length is declared as `n`, so a caller
+    * may declare more than the framing format allows.
+    */
+  private def snappyChunk(n: Int): Array[Byte] = {
+    val blk = new java.io.ByteArrayOutputStream()
+    var v = n
+    while (v >= 0x80) { blk.write((v & 0x7f) | 0x80); v >>>= 7 }
+    blk.write(v)
+    blk.write(0); blk.write('z') // literal of length 1
+    var left = n - 1
+    while (left > 0) {
+      val k = math.min(64, left)
+      blk.write(((k - 1) << 2) | 2); blk.write(1); blk.write(0) // copy2, offset 1
+      left -= k
+    }
+    val body = blk.toByteArray
+    val len = body.length + 4
+    Array[Byte](0xff.toByte, 6, 0, 0, 's', 'N', 'a', 'P', 'p', 'Y',
+      0, len.toByte, (len >> 8).toByte, (len >> 16).toByte, 0, 0, 0, 0) ++ body
+  }
+
   test("testLZMA_oom: crafted size header fails cleanly") {
     val d = extract("testLZMA_oom")
     assert(d.status == Status.ParseException ||

@@ -496,4 +496,20 @@ class RarSolidSpec extends AnyFunSuite {
       catch { case _: RarUtil.RarMalformed => () }
     }
   }
+
+  test("one append per member: a second decodeNext after one append throws Malformed") {
+    val part = "one member, one packed segment. " * 4
+    val w = new Rar29Writer
+    w.writeTables()
+    w.text(part)
+    w.endFile(nextTables = false)
+    val seg = w.cutSegment()
+    val s = new graft.pkgx.Rar29.Stream
+    s.append(seg, 0, seg.length)
+    assert(new String(s.decodeNext(part.length), "ISO-8859-1") === part)
+    // no segment of its own left: fail instead of decoding on from
+    // wherever the first member's bits ended
+    val e = intercept[graft.pkgx.Rar29.Malformed](s.decodeNext(4))
+    assert(e.getMessage.contains("without an appended segment"))
+  }
 }
