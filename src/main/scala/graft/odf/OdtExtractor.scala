@@ -80,8 +80,6 @@ object OdtExtractor {
     private var inModule = false
     private var emitted = false
     private val buf = new StringBuilder
-    private def local(q: String) =
-      if (q.contains(':')) q.substring(q.indexOf(':') + 1) else q
 
     private def emit(): Unit = {
       val src = buf.toString
@@ -95,7 +93,7 @@ object OdtExtractor {
     }
 
     override def startElement(u: String, l: String, q: String, a: Attributes): Unit =
-      local(q) match {
+      NsSax.local(l, q) match {
         case "module" =>
           // zipped shape: <script:module script:name="..">SOURCE</..>
           inModule = true; emitted = false; buf.setLength(0)
@@ -114,7 +112,7 @@ object OdtExtractor {
       if (inModule) buf.appendAll(ch, s, n)
 
     override def endElement(u: String, l: String, q: String): Unit =
-      local(q) match {
+      NsSax.local(l, q) match {
         case "source-code" => emit()
         case "module" =>
           if (!emitted) emit()

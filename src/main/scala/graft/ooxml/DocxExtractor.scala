@@ -23,17 +23,6 @@ import graft.xmlx.NsSax
   */
 object DocxExtractor {
 
-  /** Relationships part for a given content part: word/X.xml has its ids
-    * resolved in word/_rels/X.xml.rels — hyperlinks in footnotes/headers
-    * must NOT resolve against the main document's rels.
-    */
-  private def relsFor(parts: Map[String, Array[Byte]], partName: String): Map[String, String] = {
-    val dir = partName.substring(0, partName.lastIndexOf('/') + 1)
-    val base = partName.substring(partName.lastIndexOf('/') + 1)
-    parts.get(dir + "_rels/" + base + ".rels").map(parseRels).getOrElse(Map.empty)
-  }
-
-
   /** OOXML embedded objects (word/xl/ppt `embeddings/` parts): each
     * payload recurses as a child document — CFB parts route through
     * subtype detection, OPC parts through zip recursion
@@ -48,60 +37,18 @@ object DocxExtractor {
         child(n.substring(n.lastIndexOf('/') + 1), d)
       }
 
-  def parseRels(bytes: Array[Byte]): Map[String, String] = {
-    val rels = scala.collection.mutable.Map[String, String]()
-    val handler = new DefaultHandler {
-      override def startElement(uri: String, local: String, qName: String,
-          atts: Attributes): Unit = {
-        val name = if (local != null && local.nonEmpty) local else qName
-        if (name == "Relationship") {
-          val id = atts.getValue("Id")
-          val target = atts.getValue("Target")
-          if (id != null && target != null) rels(id) = target
-        }
-      }
-    }
-    NsSax.parsePlain(bytes, handler)
-    rels.toMap
-  }
-
-  /** altChunk targets (`<w:altChunk r:id>` → relationship Type
-    * `.../aFChunk`): imported HTML/MHT sub-documents. The reference
-    * parses each as an embedded document
-    * (OOXMLDocxSAXPackageTest.testAltFileHTMLChunk expects the chunk's
-    * table text in metadataList[1]). Returns zip part names.
-    */
-  private def altChunkParts(relsBytes: Option[Array[Byte]]): Seq[String] = {
-    val targets = scala.collection.mutable.ArrayBuffer[String]()
-    relsBytes.foreach { bytes =>
-      val handler = new DefaultHandler {
-        override def startElement(uri: String, local: String, qName: String,
-            atts: Attributes): Unit = {
-          val name = if (local != null && local.nonEmpty) local else qName
-          if (name == "Relationship" &&
-              Option(atts.getValue("Type")).exists(_.endsWith("/aFChunk"))) {
-            Option(atts.getValue("Target")).foreach { t =>
-              targets += (if (t.startsWith("/")) t.substring(1) else "word/" + t)
-            }
-          }
-        }
-      }
-      try NsSax.parsePlain(bytes, handler) catch { case _: Exception => () }
-    }
-    targets.toSeq
-  }
-
   def extract(zipBytes: Array[Byte], sink: SpanSink, meta: MetaSink,
       child: (String, Array[Byte]) => Unit = (_, _) => ()): Unit = {
     // one pass over the archive (xml/rels parts + embedded-object
     // payloads — media blobs are never read by text extraction and
     // must not be buffered)
-    val parts = ZipUtil.entriesMap(zipBytes,
-      n => ZipUtil.XmlParts(n) || n.contains("/embeddings/"))
+    val opc = new Opc(ZipUtil.entriesMap(zipBytes,
+      n => ZipUtil.XmlParts(n) || n.contains("/embeddings/")))
+    val parts = opc.parts
     embeddedParts(parts, child)
     val doc = parts.getOrElse("word/document.xml",
       throw new IllegalArgumentException("no word/document.xml"))
-    corePropsFrom(parts, meta)
+    opc.coreProps(meta)
     // part order mirrors the reference's story walk
     // (SXWPFWordExtractorDecorator MAIN_PART_RELATIONS + aux parts,
     // :73-78): headers, main document, footnotes, endnotes, comments,
@@ -118,31 +65,36 @@ object DocxExtractor {
     // increment their list counters in story order (reference:
     // XWPFListManager shared across the decorator's part walk)
     val numbering = DocxNumbering.from(parts)
+    // each part resolves its ids through its own rels — a footnote's or
+    // header's hyperlinks never use the main document's
     def parsePart(name: String): Unit =
       parts.get(name).foreach(b =>
-        NsSax.parsePlain(b, new DocumentHandler(sink, meta, relsFor(parts, name), numbering)))
+        NsSax.parsePlain(b, new DocumentHandler(sink, meta, opc.byId(name), numbering)))
     named("header").foreach(parsePart)
     NsSax.parsePlain(doc, new DocumentHandler(sink, meta,
-      relsFor(parts, "word/document.xml"), numbering))
+      opc.byId("word/document.xml"), numbering))
     Seq("footnotes.xml", "endnotes.xml", "comments.xml")
       .map("word/" + _).foreach(parsePart)
     // end-of-document dump of diagram-data and chart parts (reference
     // SXWPFWordExtractorDecorator:300-306 walks DIAGRAM_DATA, CHART,
     // FOOTER rels after the main story)
-    val docRels = XlsxDrawings.relsOf(parts, "word/_rels/document.xml.rels")
-    for (rel <- docRels if rel.tpe.endsWith("/diagramData"))
-      XlsxDrawings.scrapeRunText(parts,
-        XlsxDrawings.resolve("word/document.xml", rel.target), sink)
-    for (rel <- docRels if rel.tpe.endsWith("/chart"))
-      XlsxDrawings.scrapeRunText(parts,
-        XlsxDrawings.resolve("word/document.xml", rel.target), sink)
+    val docRels = opc.rels("word/document.xml")
+    for (suffix <- Seq("/diagramData", "/chart"); rel <- docRels
+        if rel.tpe.endsWith(suffix); p <- opc.part("word/document.xml", rel))
+      XlsxDrawings.scrapeRunText(parts, p, sink)
     named("footer").foreach(parsePart)
-    // altChunk imported sub-documents recurse as children. XML/XHTML
-    // chunks are already in the XmlParts map — recurse them from the
-    // in-memory bytes; non-XML chunks (HTML/MHT/RTF) need a second
-    // targeted zip read of only those entries. The reference embeds
-    // EVERY aFChunk regardless of its content type.
-    val allAlt = altChunkParts(parts.get("word/_rels/document.xml.rels"))
+    // altChunk imported sub-documents (`<w:altChunk r:id>` → relationship
+    // Type `.../aFChunk`, HTML/MHT/RTF/XHTML) recurse as children: the
+    // reference embeds EVERY aFChunk regardless of its content type
+    // (OOXMLDocxSAXPackageTest.testAltFileHTMLChunk expects the chunk's
+    // table text in metadataList[1]). XML/XHTML chunks are already in the
+    // XmlParts map — recurse them from the in-memory bytes; the others
+    // need a second targeted zip read of only those entries.
+    val allAlt =
+      try opc.rels("word/document.xml").collect {
+        case r if r.tpe.endsWith("/aFChunk") && !r.external =>
+          Opc.resolve("word/document.xml", r.target)
+      } catch { case _: Exception => Nil }
     val (inMem, needFetch) = allAlt.partition(parts.contains)
     inMem.sorted.foreach { n =>
       val d = parts(n)
@@ -156,42 +108,9 @@ object DocxExtractor {
           if (d.nonEmpty) child(n.substring(n.lastIndexOf('/') + 1), d) }
   }
 
-  /** docProps/core.xml → title/creator (reference maps OPC core props to
-    * DublinCore metadata). Shared by all OOXML extractors.
-    */
-  def corePropsFrom(parts: Map[String, Array[Byte]], meta: MetaSink): Unit = {
-    parts.get("docProps/core.xml").foreach { bytes =>
-      val buf = new StringBuilder
-      var field: String = null
-      NsSax.parsePlain(bytes, new DefaultHandler {
-        override def startElement(u: String, l: String, q: String, a: Attributes): Unit = {
-          val name = localName(l, q)
-          if (name == "title" || name == "creator" || name == "subject") {
-            field = name; buf.setLength(0)
-          }
-        }
-        override def characters(ch: Array[Char], start: Int, length: Int): Unit =
-          if (field != null) buf.appendAll(ch, start, length)
-        override def endElement(u: String, l: String, q: String): Unit = {
-          val name = localName(l, q)
-          if (name == field) {
-            val key = if (name == "creator") "dc:creator"
-                      else if (name == "title") "dc:title" else "dc:subject"
-            meta.set(key, buf.toString.trim)
-            field = null
-          }
-        }
-      })
-    }
-  }
-
-  private def localName(local: String, qName: String): String =
-    if (local != null && local.nonEmpty) local
-    else qName.substring(qName.indexOf(':') + 1)
-
   /** The WordprocessingML state machine. */
   private final class DocumentHandler(
-      sink: SpanSink, meta: MetaSink, rels: Map[String, String],
+      sink: SpanSink, meta: MetaSink, rels: Map[String, Opc.Rel],
       numbering: DocxNumbering.Manager = DocxNumbering.Empty
   ) extends DefaultHandler {
     private var inText = false        // inside w:t
@@ -205,7 +124,7 @@ object DocxExtractor {
 
     override def startElement(uri: String, local: String, qName: String,
         atts: Attributes): Unit = {
-      localName(local, qName) match {
+      NsSax.local(local, qName) match {
         case "footnote" | "endnote" =>
           // separator pseudo-notes carry no content (reference skips them)
           val t = attByLocal(atts, "type").getOrElse("")
@@ -224,10 +143,10 @@ object DocxExtractor {
         case "tc" => if (tableDepth > 0) sink.tab() // INDENT td rule
         case "hyperlink" =>
           val rid = Option(atts.getValue("r:id")).orElse(attByLocal(atts, "id"))
-          rid.flatMap(rels.get).foreach(t => meta.add("links", t))
+          rid.flatMap(rels.get).foreach(r => meta.add("links", r.target))
         case "blip" => // a:blip r:embed → picture relationship
           val rid = Option(atts.getValue("r:embed")).orElse(attByLocal(atts, "embed"))
-          rid.flatMap(rels.get).foreach(t => sink.media("embedded:" + t))
+          rid.flatMap(rels.get).foreach(r => sink.media("embedded:" + r.target))
         case _ => ()
       }
     }
@@ -249,7 +168,7 @@ object DocxExtractor {
     }
 
     override def endElement(uri: String, local: String, qName: String): Unit = {
-      localName(local, qName) match {
+      NsSax.local(local, qName) match {
         case "footnote" | "endnote" => skipNote = false
         case "numPr" =>
           // number prefix before the paragraph's first run, like the

@@ -20,16 +20,16 @@ import graft.core.Endian
 object XlsbExtractor {
 
   def extract(zipBytes: Array[Byte], sink: SpanSink, meta: MetaSink): Unit = {
-    val parts = ZipUtil.entriesMap(zipBytes,
-      n => n.endsWith(".bin") || n.endsWith(".xml") || n.endsWith(".rels"))
-    DocxExtractor.corePropsFrom(parts, meta)
+    val opc = new Opc(ZipUtil.entriesMap(zipBytes,
+      n => n.endsWith(".bin") || n.endsWith(".xml") || n.endsWith(".rels")))
+    val parts = opc.parts
+    opc.coreProps(meta)
     val shared = sharedStringsFrom(parts)
     val (xfs, customFmts) = stylesFrom(parts)
-    val rels = parts.get("xl/_rels/workbook.bin.rels")
-      .map(DocxExtractor.parseRels).getOrElse(Map.empty)
-    val wb = parts.getOrElse("xl/workbook.bin", return)
+    val rels = opc.byId(Workbook)
+    val wb = parts.getOrElse(Workbook, return)
     // workbook.bin: sheet bundles in tab order + the AbsPath15 original dir
-    val sheets = Vector.newBuilder[(String, String)]
+    val sheets = Vector.newBuilder[(String, Opc.Rel)]
     records(wb) { (id, data) =>
       id match {
         case BrtBundleSh =>
@@ -37,7 +37,7 @@ object XlsbExtractor {
           // in header width (8 vs 12 bytes observed); locate the string
           // pair by validating both lengths against the record bounds
           bundleSheet(data).foreach { case (relId, name) =>
-            rels.get(relId).foreach(t => sheets += ((name, t)))
+            rels.get(relId).foreach(r => sheets += ((name, r)))
           }
         case BrtAbsPath15 =>
           // XSSFBReader.getAbsPathMetadata → ORIGINAL_RESOURCE_NAME
@@ -47,36 +47,26 @@ object XlsbExtractor {
       }
       true
     }
-    sheets.result().foreach { case (name, target) =>
+    sheets.result().foreach { case (name, rel) =>
       meta.add("sheet:name", name)
-      val path =
-        if (target.startsWith("/")) target.substring(1) else "xl/" + target
-      parts.get(path).foreach { bytes =>
+      opc.part(Workbook, rel).foreach { path =>
         // hyperlink rel ids resolve through the sheet's own rels part
-        val slash = path.lastIndexOf('/')
-        val relsPath = path.substring(0, slash + 1) + "_rels/" +
-          path.substring(slash + 1) + ".rels"
-        val sheetRels = parts.get(relsPath)
-          .map(DocxExtractor.parseRels).getOrElse(Map.empty)
-        sheetText(bytes, shared, xfs, customFmts, sheetRels, sink, meta)
+        sheetText(parts(path), shared, xfs, customFmts, opc.byId(path), sink, meta)
         // cell comments render after the table (TikaXSSFBCommentsTable)
-        for (rel <- XlsxDrawings.relsOf(parts, relsPath)
-            if rel.tpe.endsWith("/comments")) {
-          val cPath = if (rel.target.startsWith("/")) rel.target.substring(1)
-            else "xl/" + rel.target.stripPrefix("../")
-          parts.get(cPath).foreach { c =>
-            XlsxComments.emit(
-              if (cPath.endsWith(".bin")) XlsxComments.fromBin(c)
-              else XlsxComments.fromXml(c), sink)
-          }
-        }
+        for (rel <- opc.rels(path) if rel.tpe.endsWith("/comments");
+             c <- opc.part(path, rel))
+          XlsxComments.emit(
+            if (c.endsWith(".bin")) XlsxComments.fromBin(parts(c))
+            else XlsxComments.fromXml(parts(c)), sink)
         // textboxes/WordArt/diagram/chart text hang off the drawing parts,
         // which stay XML even in binary workbooks
-        XlsxDrawings.processSheet(parts, path, sink, meta)
+        XlsxDrawings.processSheet(opc, path, sink, meta)
         sink.newline() // sheet (table) end
       }
     }
   }
+
+  private val Workbook = "xl/workbook.bin"
 
   // --- MS-XLSB record framing (spec §2.1.4) -------------------------------
 
@@ -265,7 +255,7 @@ object XlsbExtractor {
     */
   private def sheetText(bytes: Array[Byte], shared: Vector[String],
       xfs: Vector[Int], customFmts: Map[Int, String],
-      sheetRels: Map[String, String], sink: SpanSink,
+      sheetRels: Map[String, Opc.Rel], sink: SpanSink,
       meta: MetaSink): Unit = {
     var rowOpen = false
     val headerFooters = Vector.newBuilder[String]
@@ -319,7 +309,7 @@ object XlsbExtractor {
           r.skip(16) // rwFirst rwLast colFirst colLast
           val relId = r.nullableWideString()
           val location = r.wideString()
-          val target = relId.flatMap(sheetRels.get).getOrElse(location)
+          val target = relId.flatMap(sheetRels.get).map(_.target).getOrElse(location)
           if (target.nonEmpty) meta.add("links", target)
         case BrtBeginHeaderFooter =>
           val r = new Reader(data)

@@ -65,10 +65,9 @@ object XlsxComments {
     var ref = ""
     var authorId = -1
     val text = new StringBuilder
-    def local(q: String): String = q.substring(q.indexOf(':') + 1)
     NsSax.parsePlain(data, new DefaultHandler {
       override def startElement(u: String, l: String, q: String,
-          a: Attributes): Unit = local(q) match {
+          a: Attributes): Unit = NsSax.local(l, q) match {
         case "author" => inAuthor = true; buf.setLength(0)
         case "comment" =>
           ref = Option(a.getValue("ref")).getOrElse("")
@@ -81,7 +80,7 @@ object XlsxComments {
       override def characters(ch: Array[Char], s: Int, n: Int): Unit =
         if (inAuthor || inText) buf.appendAll(ch, s, n)
       override def endElement(u: String, l: String, q: String): Unit =
-        local(q) match {
+        NsSax.local(l, q) match {
           case "author" => inAuthor = false; authors += buf.toString; ()
           case "t" => if (inText) { text.append(buf); inText = false }
           case "comment" =>

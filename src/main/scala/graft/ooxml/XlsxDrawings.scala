@@ -18,51 +18,8 @@ import graft.xmlx.NsSax
   */
 object XlsxDrawings {
 
-  private[ooxml] final case class Rel(id: String, tpe: String, target: String)
-
-  private[ooxml] def relsOf(parts: Map[String, Array[Byte]],
-      relsPath: String): Vector[Rel] = {
-    parts.get(relsPath).map { bytes =>
-      val out = Vector.newBuilder[Rel]
-      NsSax.parsePlain(bytes, new DefaultHandler {
-        override def startElement(u: String, l: String, q: String,
-            a: Attributes): Unit =
-          if (q.endsWith("Relationship")) {
-            val id = Option(a.getValue("Id")).getOrElse("")
-            val t = Option(a.getValue("Type")).getOrElse("")
-            val tgt = Option(a.getValue("Target")).getOrElse("")
-            if (id.nonEmpty && tgt.nonEmpty) out += Rel(id, t, tgt)
-          }
-      })
-      out.result()
-    }.getOrElse(Vector.empty)
-  }
-
-  private[ooxml] def relsPathFor(partPath: String): String = {
-    val slash = partPath.lastIndexOf('/')
-    partPath.substring(0, slash + 1) + "_rels/" +
-      partPath.substring(slash + 1) + ".rels"
-  }
-
-  /** Resolve a (possibly ../-relative) rel target against the dir of
-    * `fromPart` — "xl/worksheets/sheet1.bin" + "../drawings/drawing1.xml"
-    * → "xl/drawings/drawing1.xml".
-    */
-  private[ooxml] def resolve(fromPart: String, target: String): String = {
-    if (target.startsWith("/")) return target.substring(1)
-    val dir = fromPart.substring(0, fromPart.lastIndexOf('/'))
-      .split('/').toVector
-    val segs = target.split('/').toVector
-    val out = segs.foldLeft(dir) {
-      case (acc, "..") => if (acc.nonEmpty) acc.init else acc
-      case (acc, ".") => acc
-      case (acc, s) => acc :+ s
-    }
-    out.mkString("/")
-  }
-
-  /** SAX the part at `target` (resolved against `fromPart`) through the
-    * chart/diagram run-text scraper — shared by XLSX drawings, PPTX
+  /** SAX the part at `partPath` through the chart/diagram run-text
+    * scraper — shared by XLSX drawings, PPTX
     * slides, and DOCX's end-of-document chart/diagram dump (reference:
     * SXWPFWordExtractorDecorator:300-306 and
     * SXSLFPowerPointExtractorDecorator:258-265 route these parts through
@@ -78,28 +35,20 @@ object XlsxDrawings {
   /** Process every drawing rel of `sheetPath`: shape text + links, then
     * the drawing's diagram-data and chart children.
     */
-  def processSheet(parts: Map[String, Array[Byte]], sheetPath: String,
-      sink: SpanSink, meta: MetaSink): Unit = {
-    val sheetRels = relsOf(parts, relsPathFor(sheetPath))
-    for (rel <- sheetRels if rel.tpe.endsWith("/drawing")) {
-      val dPath = resolve(sheetPath, rel.target)
-      parts.get(dPath).foreach { xml =>
-        val dRels = relsOf(parts, relsPathFor(dPath))
-        val links = dRels.filter(_.tpe.endsWith("/hyperlink"))
-          .map(r => r.id -> r.target).toMap
-        try NsSax.parsePlain(xml, new ShapeHandler(sink, meta, links))
-        catch { case _: Exception => () } // drawing text is best-effort
-        for (child <- dRels
-            if child.tpe.endsWith("/diagramData") || child.tpe.endsWith("/chart")) {
-          val cPath = resolve(dPath, child.target)
-          parts.get(cPath).foreach { cxml =>
-            try NsSax.parsePlain(cxml, new RunTextHandler(sink))
-            catch { case _: Exception => () }
-          }
-        }
-      }
+  def processSheet(opc: Opc, sheetPath: String,
+      sink: SpanSink, meta: MetaSink): Unit =
+    for (rel <- opc.rels(sheetPath) if rel.tpe.endsWith("/drawing");
+         dPath <- opc.part(sheetPath, rel)) {
+      val dRels = opc.rels(dPath)
+      val links = dRels.filter(_.tpe.endsWith("/hyperlink"))
+        .map(r => r.id -> r.target).toMap
+      try NsSax.parsePlain(opc.parts(dPath), new ShapeHandler(sink, meta, links))
+      catch { case _: Exception => () } // drawing text is best-effort
+      for (child <- dRels
+          if child.tpe.endsWith("/diagramData") || child.tpe.endsWith("/chart");
+          cPath <- opc.part(dPath, child))
+        scrapeRunText(opc.parts, cPath, sink)
     }
-  }
 
   /** Drawing XML: `a:t` runs inside `txBody` accumulate per shape
     * (paragraph breaks keep newlines); `hlinkClick`/`hlinkHover` r:id
@@ -111,10 +60,8 @@ object XlsxDrawings {
     private var inT = false
     private val shape = new StringBuilder
 
-    private def local(q: String): String = q.substring(q.indexOf(':') + 1)
-
     override def startElement(u: String, l: String, q: String,
-        a: Attributes): Unit = local(q) match {
+        a: Attributes): Unit = NsSax.local(l, q) match {
       case "txBody" => inTxBody = true; shape.setLength(0)
       case "t" if inTxBody => inT = true
       case "hlinkClick" | "hlinkHover" =>
@@ -132,7 +79,7 @@ object XlsxDrawings {
       if (inT) shape.appendAll(ch, s, n)
 
     override def endElement(u: String, l: String, q: String): Unit =
-      local(q) match {
+      NsSax.local(l, q) match {
         case "t" => inT = false
         case "p" if inTxBody && shape.nonEmpty => shape.append('\n')
         case "txBody" =>

@@ -21,38 +21,30 @@ object XlsxExtractor {
 
   def extract(zipBytes: Array[Byte], sink: SpanSink, meta: MetaSink,
       child: (String, Array[Byte]) => Unit = (_, _) => ()): Unit = {
-    val parts = ZipUtil.entriesMap(zipBytes,
-      n => ZipUtil.XmlParts(n) || n.contains("/embeddings/"))
+    val opc = new Opc(ZipUtil.entriesMap(zipBytes,
+      n => ZipUtil.XmlParts(n) || n.contains("/embeddings/")))
+    val parts = opc.parts
     DocxExtractor.embeddedParts(parts, child)
     val shared = sharedStringsFrom(parts)
-    val sheets = sheetTargetsFrom(parts)
+    val sheets = sheetsFrom(opc)
     val (xfs, customFmts) = XlsxNumFormat.stylesFrom(parts)
-    DocxExtractor.corePropsFrom(parts, meta)
-    sheets.foreach { case (name, target) =>
+    opc.coreProps(meta)
+    sheets.foreach { case (name, rel) =>
       meta.add("sheet:name", name)
-      val path =
-        if (parts.contains("xl/" + target.stripPrefix("/xl/").stripPrefix("xl/")))
-          "xl/" + target.stripPrefix("/xl/").stripPrefix("xl/")
-        else target.stripPrefix("/")
-      parts.get(path).foreach { bytes =>
-        NsSax.parsePlain(bytes, new SheetHandler(shared, xfs, customFmts, sink))
+      opc.part(Workbook, rel).foreach { path =>
+        NsSax.parsePlain(parts(path), new SheetHandler(shared, xfs, customFmts, sink))
         // cell comments render after the table ("author: text" lines)
-        val slash = path.lastIndexOf('/')
-        val relsPath = path.substring(0, slash + 1) + "_rels/" +
-          path.substring(slash + 1) + ".rels"
-        for (rel <- XlsxDrawings.relsOf(parts, relsPath)
-            if rel.tpe.endsWith("/comments")) {
-          val cPath = if (rel.target.startsWith("/")) rel.target.substring(1)
-            else "xl/" + rel.target.stripPrefix("../")
-          parts.get(cPath).foreach(c =>
-            XlsxComments.emit(XlsxComments.fromXml(c), sink))
-        }
+        for (rel <- opc.rels(path) if rel.tpe.endsWith("/comments");
+             c <- opc.part(path, rel))
+          XlsxComments.emit(XlsxComments.fromXml(parts(c)), sink)
         // shape/diagram/chart text from the sheet's drawing parts
-        XlsxDrawings.processSheet(parts, path, sink, meta)
+        XlsxDrawings.processSheet(opc, path, sink, meta)
         sink.newline() // sheet (table) end
       }
     }
   }
+
+  private val Workbook = "xl/workbook.xml"
 
   /** xl/sharedStrings.xml → indexed string pool. */
   def sharedStringsFrom(parts: Map[String, Array[Byte]]): Vector[String] = {
@@ -63,7 +55,7 @@ object XlsxExtractor {
       var inT = false
       NsSax.parsePlain(bytes, new DefaultHandler {
         override def startElement(u: String, l: String, q: String, a: Attributes): Unit =
-          localName(q) match {
+          NsSax.local(l, q) match {
             case "si" => inSi = true; buf.setLength(0)
             case "t" => inT = true
             case _ => ()
@@ -71,7 +63,7 @@ object XlsxExtractor {
         override def characters(ch: Array[Char], s: Int, n: Int): Unit =
           if (inSi && inT) buf.appendAll(ch, s, n)
         override def endElement(u: String, l: String, q: String): Unit =
-          localName(q) match {
+          NsSax.local(l, q) match {
             case "si" => inSi = false; out += buf.toString
             case "t" => inT = false
             case _ => ()
@@ -81,15 +73,14 @@ object XlsxExtractor {
     }.getOrElse(Vector.empty)
   }
 
-  /** workbook.xml sheet order + workbook rels → (name, worksheet target). */
-  def sheetTargetsFrom(parts: Map[String, Array[Byte]]): Vector[(String, String)] = {
-    val rels = parts.get("xl/_rels/workbook.xml.rels")
-      .map(DocxExtractor.parseRels).getOrElse(Map.empty)
-    parts.get("xl/workbook.xml").map { bytes =>
-      val out = new ArrayBuffer[(String, String)]()
+  /** Workbook sheet order + workbook rels → (name, worksheet relationship). */
+  private def sheetsFrom(opc: Opc): Vector[(String, Opc.Rel)] = {
+    val rels = opc.byId(Workbook)
+    opc.parts.get(Workbook).map { bytes =>
+      val out = new ArrayBuffer[(String, Opc.Rel)]()
       NsSax.parsePlain(bytes, new DefaultHandler {
         override def startElement(u: String, l: String, q: String, a: Attributes): Unit =
-          if (localName(q) == "sheet") {
+          if (NsSax.local(l, q) == "sheet") {
             val name = Option(a.getValue("name")).getOrElse("")
             var rid: String = null
             var i = 0
@@ -97,14 +88,12 @@ object XlsxExtractor {
               if (a.getQName(i).endsWith("id")) rid = a.getValue(i)
               i += 1
             }
-            Option(rid).flatMap(rels.get).foreach(t => out += ((name, t)))
+            Option(rid).flatMap(rels.get).foreach(r => out += ((name, r)))
           }
       })
       out.toVector
     }.getOrElse(Vector.empty)
   }
-
-  private def localName(q: String): String = q.substring(q.indexOf(':') + 1)
 
   /** Sheet XML → cells/rows (TikaSheetXMLHandler analog). Numeric cells
     * format through the style table like the reference's DataFormatter
@@ -120,7 +109,7 @@ object XlsxExtractor {
     private val v = new StringBuilder
 
     override def startElement(u: String, l: String, q: String, a: Attributes): Unit =
-      localName(q) match {
+      NsSax.local(l, q) match {
         case "c" =>
           cellType = Option(a.getValue("t")).getOrElse("n")
           styleIdx = Option(a.getValue("s")).flatMap(_.toIntOption).getOrElse(-1)
@@ -140,7 +129,7 @@ object XlsxExtractor {
     }
 
     override def endElement(u: String, l: String, q: String): Unit =
-      localName(q) match {
+      NsSax.local(l, q) match {
         case "v" | "t" if inV || inIsT =>
           val raw = v.toString
           val text = cellType match {
@@ -174,59 +163,50 @@ object PptxExtractor {
 
   def extract(zipBytes: Array[Byte], sink: SpanSink, meta: MetaSink,
       child: (String, Array[Byte]) => Unit = (_, _) => ()): Unit = {
-    val parts = ZipUtil.entriesMap(zipBytes,
-      n => ZipUtil.XmlParts(n) || n.contains("/embeddings/"))
+    val opc = new Opc(ZipUtil.entriesMap(zipBytes,
+      n => ZipUtil.XmlParts(n) || n.contains("/embeddings/")))
+    val parts = opc.parts
     DocxExtractor.embeddedParts(parts, child)
-    DocxExtractor.corePropsFrom(parts, meta)
-    val presRels = XlsxDrawings.relsOf(parts, "ppt/_rels/presentation.xml.rels")
-    val authors = commentAuthorsFrom(parts, presRels)
-    slideTargetsFrom(parts).foreach { target =>
-      val path = XlsxDrawings.resolve("ppt/presentation.xml", target)
-      parts.get(path).foreach { bytes =>
-        val rels = XlsxDrawings.relsOf(parts, XlsxDrawings.relsPathFor(path))
-        NsSax.parsePlain(bytes, new SlideHandler(sink,
-          rels.map(r => r.id -> r.target).toMap))
-        def each(suffix: String)(f: String => Unit): Unit =
-          for (rel <- rels if rel.tpe.endsWith(suffix))
-            f(XlsxDrawings.resolve(path, rel.target))
-        // layout text right after the slide's own (placeholder shapes
-        // suppressed — "Click to edit…" boilerplate lives in <p:ph> shapes)
-        each("/slideLayout")(p => parts.get(p).foreach(b =>
-          NsSax.parsePlain(b,
-            new PlaceholderSkipHandler(new SlideHandler(sink)))))
-        // speaker notes follow (includeSlideNotes defaults true), then
-        // the notes master when the slide links one directly
-        each("/notesSlide")(p => parts.get(p).foreach(b =>
-          NsSax.parsePlain(b, new SlideHandler(sink))))
-        each("/notesMaster")(p => parts.get(p).foreach(b =>
-          NsSax.parsePlain(b,
-            new PlaceholderSkipHandler(new SlideHandler(sink)))))
-        each("/comments")(p => parts.get(p).foreach(b =>
-          NsSax.parsePlain(b, new CommentsHandler(sink, authors))))
-        each("/diagramData")(p => XlsxDrawings.scrapeRunText(parts, p, sink))
-        each("/chart")(p => XlsxDrawings.scrapeRunText(parts, p, sink))
-        sink.newline() // slide end
-      }
+    opc.coreProps(meta)
+    val presRels = opc.rels(Presentation)
+    def presParts(suffix: String): Vector[String] =
+      presRels.filter(_.tpe.endsWith(suffix)).flatMap(opc.part(Presentation, _))
+    val authors = commentAuthorsFrom(parts, presParts("/commentAuthors"))
+    slidesFrom(opc).foreach { path =>
+      val rels = opc.rels(path)
+      NsSax.parsePlain(parts(path), new SlideHandler(sink, opc.byId(path)))
+      def each(suffix: String)(f: String => Unit): Unit =
+        for (rel <- rels if rel.tpe.endsWith(suffix); p <- opc.part(path, rel))
+          f(p)
+      // layout text right after the slide's own (placeholder shapes
+      // suppressed — "Click to edit…" boilerplate lives in <p:ph> shapes)
+      each("/slideLayout")(p => NsSax.parsePlain(parts(p),
+        new PlaceholderSkipHandler(new SlideHandler(sink))))
+      // speaker notes follow (includeSlideNotes defaults true), then
+      // the notes master when the slide links one directly
+      each("/notesSlide")(p => NsSax.parsePlain(parts(p), new SlideHandler(sink)))
+      each("/notesMaster")(p => NsSax.parsePlain(parts(p),
+        new PlaceholderSkipHandler(new SlideHandler(sink))))
+      each("/comments")(p => NsSax.parsePlain(parts(p), new CommentsHandler(sink, authors)))
+      each("/diagramData")(p => XlsxDrawings.scrapeRunText(parts, p, sink))
+      each("/chart")(p => XlsxDrawings.scrapeRunText(parts, p, sink))
+      sink.newline() // slide end
     }
     // master text after all slides (reference buildXHTML:139-151);
     // handout master is NOT placeholder-skipped there
-    for (rel <- presRels if rel.tpe.endsWith("/slideMaster"))
-      parts.get(XlsxDrawings.resolve("ppt/presentation.xml", rel.target))
-        .foreach(b => NsSax.parsePlain(b,
-          new PlaceholderSkipHandler(new SlideHandler(sink))))
-    for (rel <- presRels if rel.tpe.endsWith("/handoutMaster"))
-      parts.get(XlsxDrawings.resolve("ppt/presentation.xml", rel.target))
-        .foreach(b => NsSax.parsePlain(b, new SlideHandler(sink)))
+    presParts("/slideMaster").foreach(p => NsSax.parsePlain(parts(p),
+      new PlaceholderSkipHandler(new SlideHandler(sink))))
+    presParts("/handoutMaster").foreach(p => NsSax.parsePlain(parts(p), new SlideHandler(sink)))
   }
+
+  private val Presentation = "ppt/presentation.xml"
 
   /** authorId → (name, initials) from ppt/commentAuthors.xml. */
   private def commentAuthorsFrom(parts: Map[String, Array[Byte]],
-      presRels: Vector[XlsxDrawings.Rel]): Map[String, (String, String)] = {
+      authorParts: Vector[String]): Map[String, (String, String)] = {
     val out = Map.newBuilder[String, (String, String)]
-    for (rel <- presRels if rel.tpe.endsWith("/commentAuthors");
-         bytes <- parts.get(
-           XlsxDrawings.resolve("ppt/presentation.xml", rel.target)))
-      NsSax.parsePlain(bytes, new DefaultHandler {
+    for (p <- authorParts)
+      NsSax.parsePlain(parts(p), new DefaultHandler {
         override def startElement(u: String, l: String, q: String,
             a: Attributes): Unit =
           if (q.endsWith(":cmAuthor")) {
@@ -291,10 +271,10 @@ object PptxExtractor {
     }
   }
 
-  def slideTargetsFrom(parts: Map[String, Array[Byte]]): Vector[String] = {
-    val rels = parts.get("ppt/_rels/presentation.xml.rels")
-      .map(DocxExtractor.parseRels).getOrElse(Map.empty)
-    parts.get("ppt/presentation.xml").map { bytes =>
+  /** presentation.xml sldIdLst order + presentation rels → slide parts. */
+  private def slidesFrom(opc: Opc): Vector[String] = {
+    val rels = opc.byId(Presentation)
+    opc.parts.get(Presentation).map { bytes =>
       val out = new ArrayBuffer[String]()
       NsSax.parsePlain(bytes, new org.xml.sax.helpers.DefaultHandler {
         override def startElement(u: String, l: String, q: String,
@@ -304,7 +284,8 @@ object PptxExtractor {
             while (i < a.getLength) {
               if (a.getQName(i).endsWith(":id") &&
                   a.getQName(i).startsWith("r")) {
-                rels.get(a.getValue(i)).foreach(out += _)
+                rels.get(a.getValue(i)).flatMap(opc.part(Presentation, _))
+                  .foreach(out += _)
               }
               i += 1
             }
@@ -315,7 +296,7 @@ object PptxExtractor {
   }
 
   private final class SlideHandler(sink: SpanSink,
-      rels: Map[String, String] = Map.empty) extends DefaultHandler {
+      rels: Map[String, Opc.Rel] = Map.empty) extends DefaultHandler {
     private var inT = false
     private def mediaRef(a: Attributes, attr: String): Unit = {
       var rid: String = null
@@ -325,8 +306,8 @@ object PptxExtractor {
         if (q == s"r:$attr" || q.endsWith(s":$attr")) rid = a.getValue(i)
         i += 1
       }
-      Option(rid).flatMap(rels.get).foreach(t =>
-        sink.media("embedded:" + t.stripPrefix("../")))
+      Option(rid).flatMap(rels.get).foreach(r =>
+        sink.media("embedded:" + r.target.stripPrefix("../")))
     }
     override def startElement(u: String, l: String, q: String, a: Attributes): Unit =
       if (q == "a:t") inT = true

@@ -10,7 +10,7 @@ import graft.xmlx.NsSax
   *
   * Reference semantics (apache/tika):
   *  - package walk: tika-parsers .../microsoft/ooxml/xps/
-  *    XPSExtractorDecorator.java:92-121 — `_rels/.rels` relationship of
+  *    XPSExtractorDecorator.java:92-121 — the package relationship of
   *    type `.../fixedrepresentation` → FixedDocSeq.fdseq, whose
   *    DocumentReference/@Source points at FixedDoc.fdoc parts, whose
   *    PageContent/@Source points at the .fpage parts (paths resolved
@@ -54,27 +54,29 @@ object XpsExtractor {
 
   def extract(bytes: Array[Byte], sink: SpanSink, meta: MetaSink,
       child: (String, Array[Byte]) => Unit): Unit = {
-    val parts = ZipUtil.entriesMap(bytes, n =>
+    val opc = new Opc(ZipUtil.entriesMap(bytes, n =>
       n.endsWith(".fdseq") || n.endsWith(".fdoc") || n.endsWith(".fpage") ||
-      n.endsWith(".rels") || n.endsWith(".xml"))
-    corePropsWithDates(parts, meta)
+      n.endsWith(".rels") || n.endsWith(".xml")))
+    val parts = opc.parts
+    opc.coreProps(meta, dates = true)
+    // package relationships of type .../fixedrepresentation and
+    // .../metadata/thumbnail, read package-absolute
+    // (XPSExtractorDecorator.java:52-56,92-97)
+    def packageTarget(typeSuffix: String): Option[String] =
+      opc.rels("").find(r => r.tpe.endsWith(typeSuffix) && !r.external)
+        .map(r => Opc.resolve("", r.target))
 
-    val fdseqPath = fixedRepresentationTarget(parts)
+    val fdseqPath = packageTarget("/fixedrepresentation")
       .orElse(parts.keys.find(_.endsWith(".fdseq")))
     val images = scala.collection.mutable.LinkedHashSet[String]()
 
     fdseqPath.foreach { seq =>
       for (fdoc <- sourcesOf(parts.getOrElse(seq, Array.emptyByteArray),
                              "DocumentReference")) {
-        val fdocPath = stripSlash(fdoc)
-        val relativeRoot = {
-          val i = fdocPath.lastIndexOf('/')
-          if (i > 0) fdocPath.substring(0, i) else ""
-        }
+        val fdocPath = Opc.resolve("", fdoc)
         for (page <- sourcesOf(parts.getOrElse(fdocPath, Array.emptyByteArray),
                                "PageContent")) {
-          val pagePath = stripSlash(
-            if (page.startsWith("/")) page else relativeRoot + "/" + page)
+          val pagePath = Opc.resolve(fdocPath, page)
           // .fpage parts are already in the single-pass parts map —
           // re-walking the archive per page would be O(pages × size)
           parts.get(pagePath).foreach { fp =>
@@ -87,78 +89,13 @@ object XpsExtractor {
     // Embedded images (ImageBrush sources in page order, then the package
     // thumbnail) become child documents, like the reference's
     // EmbeddedDocumentUtil.parseEmbedded calls.
-    for (img <- images; data <- ZipUtil.entry(bytes, stripSlash(img)))
+    for (img <- images; data <- ZipUtil.entry(bytes, Opc.resolve("", img)))
       child(img.substring(img.lastIndexOf('/') + 1), data)
-    // package thumbnail: the OPC `relationships/metadata/thumbnail`
-    // relationship (AbstractOOXMLExtractor's package-part walk surfaces
-    // it as an embedded doc in the reference)
-    for (thumb <- relTargets(parts, "/thumbnail").headOption;
-         data <- ZipUtil.entry(bytes, stripSlash(thumb)))
+    // package thumbnail: the package's `relationships/metadata/thumbnail`
+    // relationship (AbstractOOXMLExtractor.handleThumbnail surfaces it as
+    // an embedded doc in the reference)
+    for (thumb <- packageTarget("/thumbnail"); data <- ZipUtil.entry(bytes, thumb))
       child(thumb.substring(thumb.lastIndexOf('/') + 1), data)
-  }
-
-  /** Targets of relationships whose Type ends with the given suffix,
-    * across every .rels part.
-    */
-  private def relTargets(parts: Map[String, Array[Byte]],
-      typeSuffix: String): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    for ((name, b) <- parts if name.endsWith(".rels"))
-      NsSax.parsePlain(b, new DefaultHandler {
-        override def startElement(u: String, l: String, q: String,
-            a: Attributes): Unit =
-          if (local(l, q) == "Relationship" &&
-              Option(a.getValue("Type")).exists(_.endsWith(typeSuffix)))
-            Option(a.getValue("Target")).foreach(out += _)
-      })
-    out.result()
-  }
-
-  /** OPC core properties incl. creation/modification dates
-    * (XPS docProps/core.xml uses the same schema as OOXML).
-    */
-  private def corePropsWithDates(parts: Map[String, Array[Byte]],
-      meta: MetaSink): Unit = {
-    DocxExtractor.corePropsFrom(parts, meta)
-    parts.get("docProps/core.xml").foreach { b =>
-      val buf = new StringBuilder
-      var field: String = null
-      NsSax.parsePlain(b, new DefaultHandler {
-        override def startElement(u: String, l: String, q: String,
-            a: Attributes): Unit = {
-          val n = local(l, q)
-          if (n == "created" || n == "modified") { field = n; buf.setLength(0) }
-        }
-        override def characters(ch: Array[Char], s: Int, len: Int): Unit =
-          if (field != null) buf.appendAll(ch, s, len)
-        override def endElement(u: String, l: String, q: String): Unit = {
-          if (local(l, q) == field) {
-            meta.set("dcterms:" + field, buf.toString.trim)
-            field = null
-          }
-        }
-      })
-    }
-  }
-
-  /** `_rels/.rels` Relationship of the XPS/OpenXPS fixedrepresentation
-    * type → its Target (XPSExtractorDecorator.java:52-56,92-97).
-    */
-  private def fixedRepresentationTarget(
-      parts: Map[String, Array[Byte]]): Option[String] = {
-    var target: Option[String] = None
-    parts.get("_rels/.rels").foreach { b =>
-      NsSax.parsePlain(b, new DefaultHandler {
-        override def startElement(u: String, l: String, q: String,
-            a: Attributes): Unit =
-          if (local(l, q) == "Relationship") {
-            val t = Option(a.getValue("Type")).getOrElse("")
-            if (t.endsWith("/fixedrepresentation") && target.isEmpty)
-              target = Option(a.getValue("Target")).map(stripSlash)
-          }
-      })
-    }
-    target
   }
 
   /** All @Source values of the named element in a part. */
@@ -168,17 +105,11 @@ object XpsExtractor {
     NsSax.parsePlain(bytes, new DefaultHandler {
       override def startElement(u: String, l: String, q: String,
           a: Attributes): Unit =
-        if (local(l, q) == element)
+        if (NsSax.local(l, q) == element)
           Option(a.getValue("Source")).foreach(out += _)
     })
     out.result()
   }
-
-  private def stripSlash(s: String): String =
-    if (s.startsWith("/")) s.substring(1) else s
-
-  private def local(l: String, q: String): String =
-    if (l != null && l.nonEmpty) l else q.substring(q.indexOf(':') + 1)
 
   /** One .fpage: buffer glyph runs per canvas, lay out rows, dump urls. */
   private def extractPage(fpage: Array[Byte], sink: SpanSink,
@@ -190,7 +121,7 @@ object XpsExtractor {
 
     NsSax.parsePlain(fpage, new DefaultHandler {
       override def startElement(u: String, l: String, q: String,
-          a: Attributes): Unit = local(l, q) match {
+          a: Attributes): Unit = NsSax.local(l, q) match {
         case "Canvas" =>
           canvasStack.push(Option(a.getValue("Clip")).getOrElse("NULL_CLIP"))
         case "VisualBrush" =>
@@ -221,7 +152,7 @@ object XpsExtractor {
         // reference parity: only Canvas ends pop the stack — a
         // VisualBrush transform stays on it for the glyphs that follow
         // (XPSPageContentHandler.endElement:283-287 pops CANVAS only)
-        if (local(l, q) == "Canvas") {
+        if (NsSax.local(l, q) == "Canvas") {
           if (canvasStack.nonEmpty) canvasStack.pop()
         }
     })

@@ -150,6 +150,8 @@ object Xz {
           q += 1
         }
         val n = window.len - before
+        if (q + checkSize(checkType) > bytes.length)
+          throw new XzMalformed("truncated block check")
         checkType match {
           case 0 => ()
           case 1 =>

@@ -22,10 +22,8 @@ object FeedExtractor {
     private val buf = new StringBuilder
     private var feedTitleSeen = false
 
-    private def local(q: String): String = q.substring(q.indexOf(':') + 1)
-
     override def startElement(u: String, l: String, q: String, a: Attributes): Unit =
-      local(q) match {
+      NsSax.local(l, q) match {
         case "entry" | "item" => inEntry = true
         case n @ ("title" | "summary" | "description" | "subtitle") =>
           field = n; buf.setLength(0)
@@ -38,7 +36,7 @@ object FeedExtractor {
       if (field != null) buf.appendAll(ch, s, n)
 
     override def endElement(u: String, l: String, q: String): Unit =
-      local(q) match {
+      NsSax.local(l, q) match {
         case "entry" | "item" => inEntry = false
         case "title" =>
           val t = buf.toString.trim

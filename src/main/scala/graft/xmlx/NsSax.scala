@@ -85,6 +85,13 @@ object NsSax {
     try run(p, bytes, handler) finally depth.set(d)
   }
 
+  /** An element's local name: `l` where the parser reports one
+    * ([[parse]]), else `q` without its prefix ([[parsePlain]] reports an
+    * empty `l`).
+    */
+  def local(l: String, q: String): String =
+    if (l != null && l.nonEmpty) l else q.substring(q.indexOf(':') + 1)
+
   /** Namespace-aware parse. */
   def parse(bytes: Array[Byte], handler: DefaultHandler): Unit =
     runGuarded(nsDepth, nsParser.get(), nsAware = true, bytes, handler)

@@ -61,11 +61,8 @@ object Word2006MlExtractor {
     private val b64 = new StringBuilder
     private var cellOpen = false
 
-    private def local(l: String, q: String): String =
-      if (l != null && l.nonEmpty) l else q.substring(q.indexOf(':') + 1)
-
     override def startElement(u: String, l: String, q: String, a: Attributes): Unit = {
-      val name = local(l, q)
+      val name = NsSax.local(l, q)
       name match {
         case "part" =>
           partName = Option(a.getValue("pkg:name")).getOrElse(
@@ -97,7 +94,7 @@ object Word2006MlExtractor {
     }
 
     override def endElement(u: String, l: String, q: String): Unit = {
-      val name = local(l, q)
+      val name = NsSax.local(l, q)
       name match {
         case "part" => inDoc = false; inCore = false; inApp = false
         case "binaryData" =>

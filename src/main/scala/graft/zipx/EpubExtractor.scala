@@ -107,11 +107,8 @@ object EpubExtractor {
       "date" -> "dcterms:created", "subject" -> "dc:subject",
       "rights" -> "dc:rights", "contributor" -> "dc:contributor")
 
-    private def local(l: String, q: String): String =
-      if (l != null && l.nonEmpty) l else q.substring(q.indexOf(':') + 1)
-
     override def startElement(u: String, l: String, q: String, a: Attributes): Unit =
-      local(l, q) match {
+      NsSax.local(l, q) match {
         case "package" =>
           Option(a.getValue("version")).filter(_.nonEmpty)
             .foreach(meta.set("epub:version", _))
@@ -134,7 +131,7 @@ object EpubExtractor {
       if (dcField != null || inRenditionLayout) buf.appendAll(ch, s, n)
 
     override def endElement(u: String, l: String, q: String): Unit = {
-      val name = local(l, q)
+      val name = NsSax.local(l, q)
       if (name == "meta" && inRenditionLayout) {
         if (buf.toString.trim == "pre-paginated")
           meta.set("epub:rendition-layout", "pre-paginated")

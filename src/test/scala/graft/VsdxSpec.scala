@@ -65,11 +65,11 @@ class VsdxSpec extends AnyFunSuite {
   }
 
   test("OPC target resolution normalizes ../ and leading-/ segments") {
-    import graft.ooxml.VsdxExtractor.resolveTarget
-    assert(resolveTarget("visio", "../visio/pages/pages.xml") == "visio/pages/pages.xml")
-    assert(resolveTarget("visio/pages", "page1.xml") == "visio/pages/page1.xml")
-    assert(resolveTarget("visio", "/visio/document.xml") == "visio/document.xml")
-    assert(resolveTarget("", "./visio/document.xml") == "visio/document.xml")
+    import graft.ooxml.Opc.resolve
+    assert(resolve("visio/document.xml", "../visio/pages/pages.xml") == "visio/pages/pages.xml")
+    assert(resolve("visio/pages/pages.xml", "page1.xml") == "visio/pages/page1.xml")
+    assert(resolve("visio/document.xml", "/visio/document.xml") == "visio/document.xml")
+    assert(resolve("", "./visio/document.xml") == "visio/document.xml")
   }
 
   test("relative ../ rel targets still reach page text; foreign-ns Text excluded") {

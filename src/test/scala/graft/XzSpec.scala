@@ -53,6 +53,21 @@ class XzSpec extends AnyFunSuite {
     }
   }
 
+  test("a stream cut inside its block check throws XzMalformed") {
+    val plain = "check me".getBytes(UTF_8)
+    val enc = Xz.compress(plain)
+    // stream header 12 + block header 12 + one chunk (3 + payload) +
+    // end marker 1, padded to 4; the CRC32 check follows
+    val checkAt = 12 + 12 + ((3 + plain.length + 1 + 3) & ~3)
+    assert(java.util.Arrays.equals(Xz.decompress(enc), plain))
+    for (cut <- checkAt until checkAt + 4) {
+      val e = intercept[Xz.XzMalformed] {
+        Xz.decompress(java.util.Arrays.copyOfRange(enc, 0, cut))
+      }
+      assert(e.getMessage == "truncated block check", s"cut at $cut")
+    }
+  }
+
   test("tar.xz recurses through the engine like tar.gz/tar.bz2") {
     val tar = TarUtil.write(Seq(
       "doc.txt" -> "xz member text content".getBytes(UTF_8),
