@@ -260,84 +260,21 @@ object Brotli {
     }
   }
 
-  // ==== canonical prefix codes (DEFLATE convention, max len 15) =======
+  // ==== prefix codes (canonical, max len 15) ===========================
 
-  /** Decoder over canonical code lengths: count/first-code per length
-    * plus symbols sorted by (length, symbol). 0-entry = degenerate
-    * single-symbol code read with zero bits. */
-  private final class Huff(lengths: Array[Int], alphabet: Int) {
-    private val count = new Array[Int](16)
-    private val firstCode = new Array[Int](16)
-    private val firstIdx = new Array[Int](16)
-    private val syms: Array[Int] = {
-      var n = 0
-      var i = 0
-      while (i < alphabet) { if (lengths(i) > 0) { count(lengths(i)) += 1; n += 1 }; i += 1 }
-      val s = new Array[Int](n)
-      val next = new Array[Int](16)
-      var code = 0
-      var idx = 0
-      var len = 1
-      while (len <= 15) {
-        firstCode(len) = code
-        firstIdx(len) = idx
-        next(len) = idx
-        code = (code + count(len)) << 1
-        idx += count(len)
-        len += 1
-      }
-      i = 0
-      while (i < alphabet) {
-        val l = lengths(i)
-        if (l > 0) { s(next(l)) = i; next(l) += 1 }
-        i += 1
-      }
-      s
-    }
-    val single: Int = if (syms.length == 1) syms(0) else -1
+  private def code(lengths: Array[Int]): PrefixCode =
+    new PrefixCode(lengths, 15, () => new BrotliMalformed("bad code length"))
 
-    /** 8-bit LSB-first peek table: entry = (len << 16) | symbol for
-      * codes of length ≤ 8; 0 = fall back to bit-by-bit (longer code).
-      * Codes are canonical MSB-first values reversed into stream order.
-      */
-    private val fast: Array[Int] = {
-      val t = new Array[Int](256)
-      var len = 1
-      while (len <= 8) {
-        var k = 0
-        while (k < count(len)) {
-          val code = firstCode(len) + k
-          val sym = syms(firstIdx(len) + k)
-          // reverse the len-bit code into LSB-first stream order
-          var rev = 0
-          var b = 0
-          while (b < len) { rev |= ((code >>> b) & 1) << (len - 1 - b); b += 1 }
-          var j = rev
-          while (j < 256) { t(j) = (len << 16) | sym; j += 1 << len }
-          k += 1
-        }
-        len += 1
-      }
-      t
-    }
-
-    def decode(br: Br): Int = {
-      if (single >= 0) return single
-      val e = fast(br.peekBits(8))
-      if (e != 0) {
-        val l = e >>> 16
-        if (l <= br.bitCnt) { br.drop(l); return e & 0xffff }
-      }
-      var code = 0
-      var len = 0
-      while (len < 15) {
-        code = (code << 1) | br.readBit()
-        len += 1
-        if (count(len) > 0 && code - firstCode(len) < count(len))
-          return syms(firstIdx(len) + (code - firstCode(len)))
-      }
-      fail("invalid prefix code word")
-    }
+  /** One symbol: a one-symbol code reads no bits (RFC 7932 §3.4); the
+    * others read their code from the LSB-first peek, reversed. */
+  private def decode(c: PrefixCode, br: Br): Int = {
+    if (c.single >= 0) return c.single
+    val e = c.decode(Integer.reverse(br.peekBits(15)) >>> 17)
+    if (e < 0) fail("invalid prefix code word")
+    val l = PrefixCode.len(e)
+    if (l > br.bitCnt) fail("unexpected end of brotli stream")
+    br.drop(l)
+    PrefixCode.sym(e)
   }
 
   private val CodeLengthOrder =
@@ -349,7 +286,7 @@ object Brotli {
   private val ClcBits = Array(2, 2, 2, 3, 2, 2, 2, 4, 2, 2, 2, 3, 2, 2, 2, 4)
 
   /** Read a prefix code over `alphabet` symbols (RFC 7932 section 3). */
-  private def readHuffman(br: Br, alphabet: Int): Huff = {
+  private def readHuffman(br: Br, alphabet: Int): PrefixCode = {
     val kind = br.readBits(2)
     if (kind == 1) {
       // simple code: 1-4 symbols listed explicitly
@@ -393,7 +330,7 @@ object Brotli {
             while (k < 4) { lengths(sym(k)) = 2; k += 1 }
           }
       }
-      new Huff(lengths, alphabet)
+      code(lengths)
     } else {
       // complex code; kind = HSKIP (0, 2 or 3)
       val clcLen = new Array[Int](18)
@@ -416,7 +353,7 @@ object Brotli {
           var j = 0
           while (j < 18) { if (clcLen(j) > 0) s = j; j += 1 }
           singletonCode(s, 18)
-        } else new Huff(clcLen, 18)
+        } else code(clcLen)
 
       val lengths = new Array[Int](alphabet)
       var symIdx = 0
@@ -425,7 +362,7 @@ object Brotli {
       var repCode = 0     // 16 or 17; 0 = no active run
       var total = 0       // space in 1/32768 units
       while (symIdx < alphabet && total < 32768) {
-        val s = clc.decode(br)
+        val s = decode(clc, br)
         if (s < 16) {
           lengths(symIdx) = s
           symIdx += 1
@@ -455,15 +392,15 @@ object Brotli {
         }
       }
       if (total != 32768) fail("prefix code over/under-subscribed")
-      new Huff(lengths, alphabet)
+      code(lengths)
     }
   }
 
-  private def singletonCode(sym: Int, alphabet: Int): Huff = {
-    // a Huff whose decode never consumes bits
+  private def singletonCode(sym: Int, alphabet: Int): PrefixCode = {
+    // one symbol with a code: `decode` reads it with no bits
     val l = new Array[Int](alphabet)
-    l(sym) = 15 // any nonzero; `single` short-circuits decode
-    new Huff(l, alphabet)
+    l(sym) = 15
+    code(l)
   }
 
   // ==== static tables ==================================================
@@ -559,7 +496,7 @@ object Brotli {
     val code = readHuffman(br, ntrees + rleMax)
     var i = 0
     while (i < size) {
-      val s = code.decode(br)
+      val s = decode(code, br)
       if (s == 0) { map(i) = 0; i += 1 }
       else if (s <= rleMax) {
         val reps = (1 << s) + br.readBits(s)
@@ -592,8 +529,8 @@ object Brotli {
   // ==== block category state ===========================================
 
   private final class BlockState(br: Br, val nbltypes: Int, alphabetHint: Int) {
-    var typeCode: Huff = null
-    var countCode: Huff = null
+    var typeCode: PrefixCode = null
+    var countCode: PrefixCode = null
     var cur: Int = 0
     var prev: Int = 1
     var remaining: Int = 1 << 28 // effectively unbounded when nbltypes == 1
@@ -604,13 +541,13 @@ object Brotli {
     }
 
     private def readCount(br: Br): Int = {
-      val s = countCode.decode(br)
+      val s = decode(countCode, br)
       BlkLenBase(s) + br.readBits(BlkLenExtra(s))
     }
 
     def maybeSwitch(br: Br): Unit = {
       if (remaining == 0) {
-        val s = typeCode.decode(br)
+        val s = decode(typeCode, br)
         val nt =
           if (s == 0) prev
           else if (s == 1) (cur + 1) % nbltypes
@@ -709,7 +646,7 @@ object Brotli {
             while (out.len < end) {
               cmdBlocks.maybeSwitch(br)
               cmdBlocks.remaining -= 1
-              val cmdSym = cmdCodes(cmdBlocks.cur).decode(br)
+              val cmdSym = decode(cmdCodes(cmdBlocks.cur), br)
               var rangeIdx = cmdSym >> 6
               val implicitZero = rangeIdx < 2
               if (rangeIdx >= 2) rangeIdx -= 2
@@ -731,7 +668,7 @@ object Brotli {
                   val ctx = (CtxLut((mode << 9) + p1) & 0xff) |
                     (CtxLut((mode << 9) + 256 + p2) & 0xff)
                   val tree = litCodes(cmapL(litBlocks.cur * 64 + ctx) & 0xff)
-                  val lit = tree.decode(br)
+                  val lit = decode(tree, br)
                   out.put(lit)
                   p2 = p1
                   p1 = lit
@@ -750,7 +687,7 @@ object Brotli {
                   dstBlocks.remaining -= 1
                   val dctx = math.min(copyLen - 2, 3)
                   val tree = distCodes(cmapD(dstBlocks.cur * 4 + dctx) & 0xff)
-                  dcode = tree.decode(br)
+                  dcode = decode(tree, br)
                   if (dcode < 16) {
                     distance = distRb((distRbIdx + DistShortIdx(dcode)) & 3) +
                       DistShortDelta(dcode)

@@ -56,17 +56,28 @@ object Bzip2 {
   private final class BitReader(data: Array[Byte], var pos: Int) {
     private var cur = 0L
     private var nBits = 0
-    def bits(n: Int): Int = {
-      while (nBits < n) {
-        if (pos >= data.length) throw new Bzip2Malformed("truncated stream")
+    /** the next n bits; past the end of the input they read as zero */
+    def peek(n: Int): Int = {
+      while (nBits < n && pos < data.length) {
         cur = (cur << 8) | (data(pos) & 0xffL)
         pos += 1
         nBits += 8
       }
-      nBits -= n
-      ((cur >>> nBits) & ((1L << n) - 1)).toInt
+      val v = if (nBits >= n) cur >>> (nBits - n) else cur << (n - nBits)
+      (v & ((1L << n) - 1)).toInt
     }
+    def skip(n: Int): Unit = {
+      if (n > nBits) throw new Bzip2Malformed("truncated stream")
+      nBits -= n
+    }
+    def bits(n: Int): Int = { val v = peek(n); skip(n); v }
     def bit(): Int = bits(1)
+    def decode(c: PrefixCode): Int = {
+      val e = c.decode(peek(c.maxLen))
+      if (e < 0) throw new Bzip2Malformed("corrupt Huffman code")
+      skip(PrefixCode.len(e))
+      PrefixCode.sym(e)
+    }
     /** Byte offset of the first unconsumed whole byte (drops the
       * sub-byte padding remainder) — multi-stream restart point.
       */
@@ -183,50 +194,9 @@ object Bzip2 {
       g += 1
     }
 
-    // decode tables (canonical: limit/base/perm per group)
-    val limit = Array.ofDim[Int](nGroups, MaxCodeLen + 2)
-    val base = Array.ofDim[Int](nGroups, MaxCodeLen + 2)
-    val perm = Array.ofDim[Int](nGroups, alphaSize)
-    val minLens = new Array[Int](nGroups)
-    g = 0
-    while (g < nGroups) {
-      var minLen = MaxCodeLen; var maxLen = 1
-      var i = 0
-      while (i < alphaSize) {
-        if (lens(g)(i) < minLen) minLen = lens(g)(i)
-        if (lens(g)(i) > maxLen) maxLen = lens(g)(i)
-        i += 1
-      }
-      var pp = 0
-      var l = minLen
-      while (l <= maxLen) {
-        i = 0
-        while (i < alphaSize) {
-          if (lens(g)(i) == l) { perm(g)(pp) = i; pp += 1 }
-          i += 1
-        }
-        l += 1
-      }
-      i = 0
-      while (i < alphaSize) { base(g)(lens(g)(i) + 1) += 1; i += 1 }
-      i = 1
-      while (i < MaxCodeLen + 2) { base(g)(i) += base(g)(i - 1); i += 1 }
-      var vec = 0
-      l = minLen
-      while (l <= maxLen) {
-        vec += base(g)(l + 1) - base(g)(l)
-        limit(g)(l) = vec - 1
-        vec <<= 1
-        l += 1
-      }
-      l = minLen + 1
-      while (l <= maxLen) {
-        base(g)(l) = ((limit(g)(l - 1) + 1) << 1) - base(g)(l)
-        l += 1
-      }
-      minLens(g) = minLen
-      g += 1
-    }
+    // a group's widest code bounds its peek
+    val codes = lens.map(l => new PrefixCode(l, l.max,
+      () => new Bzip2Malformed("code length out of range")))
 
     // Huffman symbols -> RLE2/MTF decode into the BWT column
     val mtf = seqToByte.clone()
@@ -242,17 +212,7 @@ object Bzip2 {
         groupPos = 50
       }
       groupPos -= 1
-      val gg = selectors(groupNo)
-      var l = minLens(gg)
-      var vec = in.bits(l)
-      while (l <= MaxCodeLen && vec > limit(gg)(l)) {
-        l += 1
-        vec = (vec << 1) | in.bit()
-      }
-      if (l > MaxCodeLen) throw new Bzip2Malformed("corrupt Huffman code")
-      val idx = vec - base(gg)(l)
-      if (idx < 0 || idx >= alphaSize) throw new Bzip2Malformed("corrupt symbol")
-      perm(gg)(idx)
+      in.decode(codes(selectors(groupNo)))
     }
     var sym = nextSym()
     while (sym != eob) {
@@ -485,26 +445,8 @@ object Bzip2 {
     while (t < syms.size) { freq(syms.get(t).intValue) += 1; t += 1 }
     val lens = huffmanLengths(freq, 17)
 
-    // canonical codes (assigned by increasing length, symbol order kept)
-    val codes = new Array[Int](alphaSize)
-    var minLen = 32; var maxLen = 0
-    i = 0
-    while (i < alphaSize) {
-      if (lens(i) < minLen) minLen = lens(i)
-      if (lens(i) > maxLen) maxLen = lens(i)
-      i += 1
-    }
-    var vec = 0
-    var l = minLen
-    while (l <= maxLen) {
-      i = 0
-      while (i < alphaSize) {
-        if (lens(i) == l) { codes(i) = vec; vec += 1 }
-        i += 1
-      }
-      vec <<= 1
-      l += 1
-    }
+    val codes = new PrefixCode(lens, 17,
+      () => new IllegalStateException("code length over 17"))
 
     // ---- emit the block
     bw.bits(0x314159, 24); bw.bits(0x265359, 24)
@@ -548,7 +490,7 @@ object Bzip2 {
     t = 0
     while (t < syms.size) {
       val sym = syms.get(t).intValue
-      bw.bits(codes(sym), lens(sym))
+      bw.bits(codes.code(sym), lens(sym))
       t += 1
     }
     blockCrc

@@ -51,14 +51,17 @@ object Lzx {
     var pos = 0          // next byte to load
     private var bitbuf = 0L
     private var bitsLeft = 0
+    private var pastEnd = 0 // buffered bits of words that start past the input
 
     def seekByte(off: Long): Unit = {
       if (off < 0 || off > data.length) throw new Malformed("seek out of range")
-      pos = off.toInt; bitbuf = 0L; bitsLeft = 0
+      pos = off.toInt; bitbuf = 0L; bitsLeft = 0; pastEnd = 0
     }
 
+    /** one word; a word that starts at or before the end reads missing
+      * bytes as zero, one past it only fills a peek */
     private def loadWord(): Unit = {
-      if (pos > data.length) throw new Malformed("read past end")
+      if (pos > data.length) pastEnd += 16
       val lo = if (pos < data.length) data(pos) & 0xff else 0
       val hi = if (pos + 1 < data.length) data(pos + 1) & 0xff else 0
       pos += 2
@@ -66,26 +69,40 @@ object Lzx {
       bitsLeft += 16
     }
 
-    def read(n: Int): Int = {
-      if (n == 0) return 0
+    def peek(n: Int): Int = {
       while (bitsLeft < n) loadWord()
-      val v = (bitbuf >>> (64 - n)).toInt
+      (bitbuf >>> (64 - n)).toInt
+    }
+
+    def skip(n: Int): Unit = {
+      if (n > bitsLeft - pastEnd) throw new Malformed("read past end")
       bitbuf <<= n
       bitsLeft -= n
+    }
+
+    def read(n: Int): Int = {
+      if (n == 0) return 0
+      val v = peek(n)
+      skip(n)
       v
+    }
+
+    def decode(c: PrefixCode): Int = {
+      val e = c.decode(peek(c.maxLen))
+      if (e < 0) throw new Malformed("invalid huffman code")
+      skip(PrefixCode.len(e))
+      PrefixCode.sym(e)
     }
 
     /** uncompressed-block alignment: discard to the next 16-bit
       * boundary; a stream already at a boundary skips a full 16 bits.
-      * After any `read`, bitsLeft is in [0,15], so this is exact.
+      * Whole words a peek loaded ahead go back to the input first.
       */
     def alignUncompressed(): Unit = {
-      if (bitsLeft == 0) pos += 2
-      bitbuf = 0L; bitsLeft = 0
+      pos -= (bitsLeft >> 4) << 1
+      if ((bitsLeft & 15) == 0) pos += 2
+      bitbuf = 0L; bitsLeft = 0; pastEnd = 0
     }
-
-    /** current byte offset when the bit buffer is empty */
-    def bytePos: Int = pos - (bitsLeft >> 3)
 
     def readRawLE32(): Long = {
       if (pos + 4 > data.length) throw new Malformed("raw read past end")
@@ -102,66 +119,8 @@ object Lzx {
     def skipRaw(n: Int): Unit = { pos += n }
   }
 
-  /** Canonical MSB-first Huffman decoder (codes assigned by ascending
-    * length then symbol order, as in Deflate).
-    */
-  private final class Huff(lens: Array[Int], maxLen: Int = 16) {
-    private val count = new Array[Int](maxLen + 1)
-    locally {
-      var i = 0
-      while (i < lens.length) {
-        val l = lens(i)
-        if (l < 0 || l > maxLen) throw new Malformed("bad code length")
-        if (l > 0) count(l) += 1
-        i += 1
-      }
-    }
-    val nonEmpty: Boolean = {
-      var t = 0; var l = 1
-      while (l <= maxLen) { t += count(l); l += 1 }
-      t > 0
-    }
-    private val firstCode = new Array[Int](maxLen + 1)
-    private val firstIdx = new Array[Int](maxLen + 1)
-    private val syms = {
-      val total = {
-        var t = 0; var l = 1
-        while (l <= maxLen) { t += count(l); l += 1 }
-        t
-      }
-      val s = new Array[Int](total)
-      var code = 0
-      var idx = 0
-      var l = 1
-      while (l <= maxLen) {
-        firstCode(l) = code
-        firstIdx(l) = idx
-        code = (code + count(l)) << 1
-        idx += count(l)
-        l += 1
-      }
-      val next = firstIdx.clone()
-      var sym = 0
-      while (sym < lens.length) {
-        val ln = lens(sym)
-        if (ln > 0) { s(next(ln)) = sym; next(ln) += 1 }
-        sym += 1
-      }
-      s
-    }
-
-    def decode(br: BitReader): Int = {
-      var code = 0
-      var len = 0
-      while (len < maxLen) {
-        code = (code << 1) | br.read(1)
-        len += 1
-        val ci = code - firstCode(len)
-        if (ci >= 0 && ci < count(len)) return syms(firstIdx(len) + ci)
-      }
-      throw new Malformed("invalid huffman code")
-    }
-  }
+  private def code(lens: Array[Int], maxLen: Int = 16): PrefixCode =
+    new PrefixCode(lens, maxLen, () => new Malformed("bad code length"))
 
   /** LZX code lengths are DELTA-coded against the previous block's
     * lengths via a 20-symbol pretree: sym 0-16 = (prev + 17 - sym) % 17,
@@ -173,10 +132,10 @@ object Lzx {
     val preLens = new Array[Int](20)
     var i = 0
     while (i < 20) { preLens(i) = br.read(4); i += 1 }
-    val pre = new Huff(preLens)
+    val pre = code(preLens)
     var x = first
     while (x < last) {
-      val z = pre.decode(br)
+      val z = br.decode(pre)
       if (z == 17) {
         var n = 4 + br.read(4)
         while (n > 0 && x < last) { lens(x) = 0; x += 1; n -= 1 }
@@ -185,7 +144,7 @@ object Lzx {
         while (n > 0 && x < last) { lens(x) = 0; x += 1; n -= 1 }
       } else if (z == 19) {
         var n = 4 + br.read(1)
-        val z2 = pre.decode(br)
+        val z2 = br.decode(pre)
         if (z2 > 16) throw new Malformed("bad pretree run symbol")
         val v = (lens(x) + 17 - z2) % 17
         while (n > 0 && x < last) { lens(x) = v; x += 1; n -= 1 }
@@ -232,9 +191,9 @@ object Lzx {
       br.seekByte(frameOffsets(f0))
       val mainLens = new Array[Int](mainElems)
       val lenLens = new Array[Int](249)
-      var main: Huff = null
-      var lenTree: Huff = null
-      var aligned: Huff = null
+      var main: PrefixCode = null
+      var lenTree: PrefixCode = null
+      var aligned: PrefixCode = null
       var r0 = 1L; var r1 = 1L; var r2 = 1L
       var headerRead = false
       var blockType = 0
@@ -273,18 +232,18 @@ object Lzx {
               val aLens = new Array[Int](8)
               var i = 0
               while (i < 8) { aLens(i) = br.read(3); i += 1 }
-              aligned = new Huff(aLens, 7)
+              aligned = code(aLens, 7)
               readLengths(br, mainLens, 0, 256)
               readLengths(br, mainLens, 256, mainElems)
-              main = new Huff(mainLens)
+              main = code(mainLens)
               readLengths(br, lenLens, 0, 249)
-              lenTree = new Huff(lenLens)
+              lenTree = code(lenLens)
             case BlockVerbatim =>
               readLengths(br, mainLens, 0, 256)
               readLengths(br, mainLens, 256, mainElems)
-              main = new Huff(mainLens)
+              main = code(mainLens)
               readLengths(br, lenLens, 0, 249)
-              lenTree = new Huff(lenLens)
+              lenTree = code(lenLens)
             case BlockUncompressed =>
               br.alignUncompressed()
               r0 = br.readRawLE32(); r1 = br.readRawLE32(); r2 = br.readRawLE32()
@@ -302,11 +261,11 @@ object Lzx {
           // an odd-sized uncompressed block carries one pad byte
           if (blockRemaining == 0 && (blockSize & 1) == 1) br.skipRaw(1)
         } else {
-          if (main == null || !main.nonEmpty)
+          if (main == null || main.isEmpty)
             throw new Malformed("empty main tree")
           var produced = 0L
           while (produced < run) {
-            val sym = main.decode(br)
+            val sym = br.decode(main)
             if (sym < 256) {
               out(outPos.toInt) = sym.toByte
               outPos += 1
@@ -317,9 +276,9 @@ object Lzx {
               val lenHdr = s & 7
               var matchLen = lenHdr + 2
               if (lenHdr == 7) {
-                if (lenTree == null || !lenTree.nonEmpty)
+                if (lenTree == null || lenTree.isEmpty)
                   throw new Malformed("empty length tree")
-                matchLen += lenTree.decode(br)
+                matchLen += br.decode(lenTree)
               }
               var off = 0L
               if (slot == 0) off = r0
@@ -330,7 +289,7 @@ object Lzx {
                 val extra = ExtraBits(slot)
                 if (blockType == BlockAligned && extra >= 3)
                   off = PositionBase(slot) - 2 +
-                    (br.read(extra - 3).toLong << 3) + aligned.decode(br)
+                    (br.read(extra - 3).toLong << 3) + br.decode(aligned)
                 else
                   off = PositionBase(slot) - 2 + br.read(extra)
                 r2 = r1; r1 = r0; r0 = off

@@ -98,51 +98,68 @@ object Rar29 {
     def bits(n: Int): Int =
       if (n == 0) 0
       else { val v = peek16 >>> (16 - n); skip(n); v }
+    def decode(c: PrefixCode): Int = {
+      val e = c.decode(peek16 >>> 1)
+      if (e < 0) throw new Malformed("huffman code overrun")
+      skip(PrefixCode.len(e))
+      PrefixCode.sym(e)
+    }
   }
 
-  /** Canonical Huffman decoder from code lengths (0 = absent, 1..15). */
-  private[pkgx] final class Huff(lengths: Array[Int]) {
-    // left-justified 16-bit upper bounds per length, first code and
-    // first ordered-symbol index per length, symbols in canonical order
-    private val lim = new Array[Int](16)
-    private val first = new Array[Int](16)
-    private val firstIdx = new Array[Int](16)
-    private val syms: Array[Int] = {
-      val cnt = new Array[Int](16)
-      lengths.foreach(l => if (l > 0) cnt(l) += 1)
-      var code = 0
-      var idx = 0
-      var len = 1
-      while (len < 16) {
-        first(len) = code
-        firstIdx(len) = idx
-        idx += cnt(len)
-        code += cnt(len)
-        lim(len) = code << (16 - len)
-        code <<= 1
-        len += 1
-      }
-      val out = new Array[Int](idx)
-      val next = new Array[Int](16)
-      var i = 0
-      while (i < lengths.length) {
-        val l = lengths(i)
-        if (l > 0) { out(firstIdx(l) + next(l)) = i; next(l) += 1 }
-        i += 1
-      }
-      out
+  /** The four codes an LZ block decodes with: main, distance, low
+    * distance and rep length (v2.9 and v5.0 alike).
+    */
+  private[pkgx] final class Codes(val ld: PrefixCode, val dd: PrefixCode,
+      val ldd: PrefixCode, val rd: PrefixCode)
+
+  /** Read the pre-code and the four code tables after it, the same
+    * serialization in v2.9 and v5.0: a length below 16 is added, mod 16,
+    * to the one at its index in `old` (v5.0 passes zeros), 16/17 repeat
+    * the previous length and 18/19 write zeros. `old` takes the new
+    * lengths; `sizes` are the alphabets of `Codes`, in order.
+    */
+  private[pkgx] def readCodes(br: BitReader, old: Array[Int],
+      sizes: Array[Int]): Codes = {
+    val bitLength = new Array[Int](BC)
+    var i = 0
+    while (i < BC) {
+      val len = br.bits(4)
+      if (len == 15) {
+        val zc = br.bits(4)
+        if (zc == 0) { bitLength(i) = 15; i += 1 }
+        else {
+          var n = zc + 2
+          while (n > 0 && i < BC) { bitLength(i) = 0; i += 1; n -= 1 }
+        }
+      } else { bitLength(i) = len; i += 1 }
     }
-    def decode(br: BitReader): Int = {
-      val v = br.peek16
-      var len = 1
-      while (len < 16 && v >= lim(len)) len += 1
-      if (len == 16) throw new Malformed("huffman code overrun")
-      val idx = firstIdx(len) + ((v >>> (16 - len)) - first(len))
-      if (idx < 0 || idx >= syms.length) throw new Malformed("huffman index")
-      br.skip(len)
-      syms(idx)
+    val bd = code(bitLength)
+    val table = new Array[Int](old.length)
+    i = 0
+    while (i < table.length) {
+      if (br.exhausted) throw new Malformed("table underrun")
+      val num = br.decode(bd)
+      if (num < 16) { table(i) = (num + old(i)) & 0xf; i += 1 }
+      else if (num < 18) {
+        if (i == 0) throw new Malformed("repeat at table start")
+        var n = if (num == 16) br.bits(3) + 3 else br.bits(7) + 11
+        while (n > 0 && i < table.length) {
+          table(i) = table(i - 1); i += 1; n -= 1
+        }
+      } else {
+        var n = if (num == 18) br.bits(3) + 3 else br.bits(7) + 11
+        while (n > 0 && i < table.length) { table(i) = 0; i += 1; n -= 1 }
+      }
     }
+    System.arraycopy(table, 0, old, 0, table.length)
+    val from = sizes.scanLeft(0)(_ + _)
+    val c = Array.tabulate(4)(k =>
+      code(java.util.Arrays.copyOfRange(table, from(k), from(k + 1))))
+    new Codes(c(0), c(1), c(2), c(3))
   }
+
+  private def code(lengths: Array[Int]): PrefixCode =
+    new PrefixCode(lengths, 15, () => new Malformed("bad code length"))
 
   /** The PPMd model walks its own heap; corrupt streams surface as
     * model guards or (worst case) heap-bound overruns — both are
@@ -202,10 +219,7 @@ object Rar29 {
     private var broken = false
 
     private val oldTable = new Array[Int](NC + DC + LDC + RC)
-    private var ld: Huff = null
-    private var dd: Huff = null
-    private var ldd: Huff = null
-    private var rd: Huff = null
+    private var codes: Codes = null
     private val oldDist = new Array[Int](4)
     private var lastDist = 0
     private var lastLength = 0
@@ -408,44 +422,7 @@ object Rar29 {
       // low-distance repeat run crossing a block boundary continues
       if ((bf & 0x4000) == 0) java.util.Arrays.fill(oldTable, 0)
       br.skip(2)
-      val bitLength = new Array[Int](BC)
-      var i = 0
-      while (i < BC) {
-        val len = br.bits(4)
-        if (len == 15) {
-          val zc = br.bits(4)
-          if (zc == 0) { bitLength(i) = 15; i += 1 }
-          else {
-            var n = zc + 2
-            while (n > 0 && i < BC) { bitLength(i) = 0; i += 1; n -= 1 }
-          }
-        } else { bitLength(i) = len; i += 1 }
-      }
-      val bd = new Huff(bitLength)
-      val table = new Array[Int](NC + DC + LDC + RC)
-      i = 0
-      while (i < table.length) {
-        if (br.exhausted) throw new Malformed("table underrun")
-        val num = bd.decode(br)
-        if (num < 16) { table(i) = (num + oldTable(i)) & 0xf; i += 1 }
-        else if (num < 18) {
-          if (i == 0) throw new Malformed("repeat at table start")
-          var n = if (num == 16) br.bits(3) + 3 else br.bits(7) + 11
-          while (n > 0 && i < table.length) {
-            table(i) = table(i - 1); i += 1; n -= 1
-          }
-        } else {
-          var n = if (num == 18) br.bits(3) + 3 else br.bits(7) + 11
-          while (n > 0 && i < table.length) { table(i) = 0; i += 1; n -= 1 }
-        }
-      }
-      ld = new Huff(java.util.Arrays.copyOfRange(table, 0, NC))
-      dd = new Huff(java.util.Arrays.copyOfRange(table, NC, NC + DC))
-      ldd = new Huff(java.util.Arrays.copyOfRange(table, NC + DC,
-        NC + DC + LDC))
-      rd = new Huff(java.util.Arrays.copyOfRange(table, NC + DC + LDC,
-        table.length))
-      System.arraycopy(table, 0, oldTable, 0, table.length)
+      codes = readCodes(br, oldTable, Array(NC, DC, LDC, RC))
       tablesRead = true
     }
 
@@ -536,7 +513,7 @@ object Rar29 {
             val sb = br.bitPos
             val se = br.exhausted
             try {
-              val num = ld.decode(br)
+              val num = br.decode(codes.ld)
               if (num == 256) {
                 val bf = br.peek16
                 if ((bf & 0x8000) != 0) { br.skip(1); readTables() }
@@ -581,7 +558,7 @@ object Rar29 {
             }
           } else { out(op) = ch.toByte; op += 1 }
         } else {
-          val num = ld.decode(br)
+          val num = br.decode(codes.ld)
           if (num < 256) { out(op) = num.toByte; op += 1 }
           else if (num == 256) {
             // end of block: high bit set -> same file, new tables
@@ -605,7 +582,7 @@ object Rar29 {
             var j = dn
             while (j > 0) { oldDist(j) = oldDist(j - 1); j -= 1 }
             oldDist(0) = dist
-            val ln = rd.decode(br)
+            val ln = br.decode(codes.rd)
             val length = LDecode(ln) + 2 + br.bits(LBits(ln))
             lastLength = length; lastDist = dist
             copyString(length, dist)
@@ -620,7 +597,7 @@ object Rar29 {
           else {
             val ln = num - 271
             var length = LDecode(ln) + 3 + br.bits(LBits(ln))
-            val dn = dd.decode(br)
+            val dn = br.decode(codes.dd)
             var dist = DDecode(dn) + 1
             if (DBits(dn) > 0) {
               if (dn > 9) {
@@ -628,7 +605,7 @@ object Rar29 {
                 if (lowDistRepCount > 0) {
                   lowDistRepCount -= 1; dist += prevLowDist
                 } else {
-                  val lowDist = ldd.decode(br)
+                  val lowDist = br.decode(codes.ldd)
                   if (lowDist == 16) { lowDistRepCount = 15; dist += prevLowDist }
                   else { dist += lowDist; prevLowDist = lowDist }
                 }

@@ -31,7 +31,7 @@ import graft.core.OutBuf
   * recorded in PLANS.md.
   */
 object Rar50 {
-  import Rar29.{BitReader, Huff, Malformed, Unsupported}
+  import Rar29.{BitReader, Codes, Malformed, Unsupported}
 
   val NC = 306 // main alphabet
   val DC = 64 // distance slots
@@ -70,10 +70,7 @@ object Rar50 {
     private var broken = false
     private var br: BitReader = null
 
-    private var ld: Huff = null
-    private var dd: Huff = null
-    private var ldd: Huff = null
-    private var rd: Huff = null
+    private var codes: Codes = null
     private val oldDist = new Array[Int](4)
     private var lastLength = 0
     private val filters = scala.collection.mutable.ArrayBuffer.empty[Filter]
@@ -100,47 +97,9 @@ object Rar50 {
       if (blockSize <= 0) throw new Malformed("rar5 empty block")
       blockLastByte = br.bytePos + blockSize - 1
       lastBlock = (flags & 0x40) != 0
-      if ((flags & 0x80) != 0) readTables()
-    }
-
-    def readTables(): Unit = {
-      val bitLength = new Array[Int](BC)
-      var i = 0
-      while (i < BC) {
-        val len = br.bits(4)
-        if (len == 15) {
-          val zc = br.bits(4)
-          if (zc == 0) { bitLength(i) = 15; i += 1 }
-          else {
-            var n = zc + 2
-            while (n > 0 && i < BC) { bitLength(i) = 0; i += 1; n -= 1 }
-          }
-        } else { bitLength(i) = len; i += 1 }
-      }
-      val bd = new Huff(bitLength)
-      val table = new Array[Int](NC + DC + LDC + RC)
-      i = 0
-      while (i < table.length) {
-        if (br.exhausted) throw new Malformed("rar5 table underrun")
-        val num = bd.decode(br)
-        if (num < 16) { table(i) = num; i += 1 }
-        else if (num < 18) {
-          if (i == 0) throw new Malformed("rar5 repeat at table start")
-          var n = if (num == 16) br.bits(3) + 3 else br.bits(7) + 11
-          while (n > 0 && i < table.length) {
-            table(i) = table(i - 1); i += 1; n -= 1
-          }
-        } else {
-          var n = if (num == 18) br.bits(3) + 3 else br.bits(7) + 11
-          while (n > 0 && i < table.length) { table(i) = 0; i += 1; n -= 1 }
-        }
-      }
-      ld = new Huff(java.util.Arrays.copyOfRange(table, 0, NC))
-      dd = new Huff(java.util.Arrays.copyOfRange(table, NC, NC + DC))
-      ldd = new Huff(java.util.Arrays.copyOfRange(table, NC + DC,
-        NC + DC + LDC))
-      rd = new Huff(java.util.Arrays.copyOfRange(table, NC + DC + LDC,
-        table.length))
+      if ((flags & 0x80) != 0) // v5.0 lengths are absolute: a zero old table
+        codes = Rar29.readCodes(br, new Array[Int](NC + DC + LDC + RC),
+          Array(NC, DC, LDC, RC))
     }
 
     def pastBlockEnd: Boolean =
@@ -234,7 +193,7 @@ object Rar50 {
       val end = math.min(off.toLong + packSize, data.length).toInt
       br = new BitReader(data, off, end)
       readBlockHeader()
-      if (ld == null) throw new Malformed("rar5 first block without tables")
+      if (codes == null) throw new Malformed("rar5 first block without tables")
       var done = false
       while (!done && op < outCap) {
       if (br.exhausted) throw new Malformed("rar5 bitstream underrun")
@@ -246,7 +205,7 @@ object Rar50 {
         }
         if (fileDone) done = true
       } else {
-        val slot = ld.decode(br)
+        val slot = br.decode(codes.ld)
         if (slot < 256) { out(op) = slot.toByte; op += 1 }
         else if (slot == 256) readFilter()
         else if (slot == 257) {
@@ -257,12 +216,12 @@ object Rar50 {
           var j = dn
           while (j > 0) { oldDist(j) = oldDist(j - 1); j -= 1 }
           oldDist(0) = dist
-          val length = slotToLength(rd.decode(br))
+          val length = slotToLength(br.decode(codes.rd))
           lastLength = length
           copyString(length, dist)
         } else {
           var length = slotToLength(slot - 262)
-          val distSlot = dd.decode(br)
+          val distSlot = br.decode(codes.dd)
           // Long arithmetic: the top slots address up to ~3 GB (the
           // format's 1 GB dictionaries) — far past this reader's
           // 256 MB entry cap, but the math must not wrap
@@ -274,7 +233,7 @@ object Rar50 {
             if (dBits > 0) {
               if (dBits >= 4) {
                 if (dBits > 4) dist += bitsWide(dBits - 4).toLong << 4
-                dist += ldd.decode(br)
+                dist += br.decode(codes.ldd)
               } else dist += br.bits(dBits)
             }
           }

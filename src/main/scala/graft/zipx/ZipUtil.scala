@@ -484,7 +484,10 @@ object ZipUtil {
         // written without the data-descriptor bytes — the reference's
         // integrity-check fixture does exactly this). Verify the local
         // header actually carries THIS entry's name; when it doesn't,
-        // resync by scanning forward for the matching local header.
+        // resync by scanning forward for the matching local header. When
+        // no header matches (a damaged signature or name), read at the
+        // record's offset and take only the name and extra lengths from
+        // there, as commons-compress ZipFile does.
         def localMatches(o: Long): Boolean = {
           if (o < 0 || o + 30 + nameLen > b.length) return false
           val oi = o.toInt
@@ -508,6 +511,8 @@ object ZipUtil {
             if (localMatches(scan)) loL = scan
             scan += 1
           }
+          val at = localOff + shift
+          if (loL < 0 && at >= 0 && at + 30 <= b.length) loL = at
         }
         val lo = loL.toInt
         if (loL >= 0) {

@@ -50,6 +50,24 @@ class Bzip2Spec extends AnyFunSuite {
     assert(samples.last.length > 79000)
   }
 
+  private def res(name: String): Array[Byte] = {
+    val in = getClass.getResourceAsStream(s"/bzip2/$name")
+    assert(in != null, s"missing fixture $name")
+    try in.readAllBytes() finally in.close()
+  }
+
+  test("decodes bzip2 CLI (libbz2) fixtures: -1 and -9, empty, two streams") {
+    // text-1 holds two 100k blocks, text-9 one; every block has six code groups
+    val expect = Seq(
+      "random-1" -> res("random.raw"), "random-9" -> res("random.raw"),
+      "text-1" -> res("text.raw"), "text-9" -> res("text.raw"),
+      "empty" -> Array.emptyByteArray,
+      "two-streams" -> (res("text.raw") ++ res("random.raw")))
+    expect.foreach { case (name, plain) =>
+      assert(java.util.Arrays.equals(Bzip2.decompress(res(s"$name.bz2")), plain), name)
+    }
+  }
+
   test("decodes the reference's real-world bz2 fixtures (incl. lbzip2)") {
     val dir = java.nio.file.Path.of("/root/reference/tika-core/src/test/" +
       "resources/test-documents/bz2")

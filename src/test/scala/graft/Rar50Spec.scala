@@ -11,56 +11,9 @@ import graft.pkgx.{Rar29, Rar50, RarUtil}
   * transform.
   */
 class Rar50Spec extends AnyFunSuite {
+  import TestCodes.{BitWriter, HuffEnc}
 
   // --- minimal v5.0 encoder ------------------------------------------
-
-  private final class BitWriter {
-    private val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    private var cur = 0
-    private var n = 0
-    def put(v: Int, bits: Int): Unit = {
-      var i = bits - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >>> i) & 1)
-        n += 1
-        if (n == 8) { buf += cur.toByte; cur = 0; n = 0 }
-        i -= 1
-      }
-    }
-    def bitLength: Int = buf.length * 8 + n
-    def toBytes: Array[Byte] = {
-      val b = buf.toArray
-      if (n > 0) b :+ (cur << (8 - n)).toByte else b
-    }
-  }
-
-  /** canonical code emitter matching Rar29.Huff's assignment */
-  private final class HuffEnc(lengths: Array[Int]) {
-    private val codes = new Array[Int](lengths.length)
-    locally {
-      val cnt = new Array[Int](16)
-      lengths.foreach(l => if (l > 0) cnt(l) += 1)
-      val first = new Array[Int](16)
-      var code = 0
-      var len = 1
-      while (len < 16) {
-        first(len) = code
-        code = (code + cnt(len)) << 1
-        len += 1
-      }
-      val next = new Array[Int](16)
-      var i = 0
-      while (i < lengths.length) {
-        val l = lengths(i)
-        if (l > 0) { codes(i) = first(l) + next(l); next(l) += 1 }
-        i += 1
-      }
-    }
-    def emit(bw: BitWriter, sym: Int): Unit = {
-      require(lengths(sym) > 0, s"symbol $sym has no code")
-      bw.put(codes(sym), lengths(sym))
-    }
-  }
 
   // literals at 9 bits, all 50 control/length-slot symbols at 10:
   // Kraft 256/512 + 50/1024 < 1 (incomplete codes are fine — the

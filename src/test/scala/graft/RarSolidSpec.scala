@@ -11,51 +11,9 @@ import graft.pkgx.{PpmdH, RarUtil}
   * the properties under test.
   */
 class RarSolidSpec extends AnyFunSuite {
+  import TestCodes.{BitWriter, HuffEnc}
 
   // --- minimal v29 LZ encoder ----------------------------------------
-
-  private final class BitWriter {
-    private val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    private var cur = 0
-    private var n = 0
-    def put(v: Int, bits: Int): Unit = {
-      var i = bits - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >>> i) & 1)
-        n += 1
-        if (n == 8) { buf += cur.toByte; cur = 0; n = 0 }
-        i -= 1
-      }
-    }
-    def align(): Unit = if (n != 0) put(0, 8 - n)
-    def toBytes: Array[Byte] = {
-      val b = buf.toArray
-      if (n > 0) b :+ (cur << (8 - n)).toByte else b
-    }
-  }
-
-  private final class HuffEnc(lengths: Array[Int]) {
-    private val codes = new Array[Int](lengths.length)
-    locally {
-      val cnt = new Array[Int](16)
-      lengths.foreach(l => if (l > 0) cnt(l) += 1)
-      val first = new Array[Int](16)
-      var code = 0
-      var len = 1
-      while (len < 16) { first(len) = code; code = (code + cnt(len)) << 1; len += 1 }
-      val next = new Array[Int](16)
-      var i = 0
-      while (i < lengths.length) {
-        val l = lengths(i)
-        if (l > 0) { codes(i) = first(l) + next(l); next(l) += 1 }
-        i += 1
-      }
-    }
-    def emit(bw: BitWriter, sym: Int): Unit = {
-      require(lengths(sym) > 0, s"symbol $sym has no code")
-      bw.put(codes(sym), lengths(sym))
-    }
-  }
 
   // v29 decode tables (mirror of Rar29's constants, needed for slot
   // inversion in the encoder)
